@@ -120,7 +120,7 @@ final class ControlApi(
       (if (hasCode) Seq(col("code")) else Nil)
     // latest-wins on warc_ts: a re-crawled corpus can hold several
     // versions of the url, and an arbitrary collect() head could hand
-    // refreshPages a stale version (IndexStream.ingestBatch dedupes the
+    // refreshPages a stale version (Refresh.latestPerUrl dedupes the
     // same way)
     val row = corpus.filter(col("url") === u).select(cols: _*)
       .orderBy(col("warc_ts").desc).limit(1).collect().headOption

@@ -108,6 +108,22 @@ object IndexBuild {
       pages.filter(col("code").isin(ValidHttpCodes: _*))
     else pages
 
+  /** One analyzed row per valid page (F1: non-200/308 never indexed):
+    * (doc_id, url, site, lang, dl, terms = lemma → tf), lemmatized from
+    * the raw html. Shared by the build and the refresh delta. */
+  def analyze(pages: Dataset[PageRow]): DataFrame = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    filterValidCode(pages)
+      .select(col("url"), col("html"), col("lang"))
+      .as[(String, Array[Byte], String)]
+      .map { case (url, html, lang) =>
+        val counts = Lemmatizer.lemmaCountsFromHtml(html)
+        (stableDocId(url), url, siteOf(url), lang, counts.valuesIterator.sum, counts)
+      }
+      .toDF("doc_id", "url", "site", "lang", "dl", "terms")
+  }
+
   /** pages → typed postings via one pass per doc (SURVEY.md §2.9):
     * tokenize (F2/F4) + particle drop (F3) + lemmatize (U5) + tf count (A1).
     * Emits one row per DISTINCT (doc, lemma) with its tf — the flatMap does
@@ -456,8 +472,8 @@ object IndexBuild {
     * (term STRING, shard INT, doc_id LONG, tf LONG, dl LONG), ALREADY
     * repartitioned by (term, shard) and sorted by (term, shard, doc_id)
     * within partitions: one SegmentRow per (term, shard) run. Shared by
-    * the initial build (buildSegments) and the refresh merge
-    * (Refresh.mergeWithTombstones).
+    * the initial build (buildSegments) and the bucket rebuild of
+    * compaction and the engine's delta overlay (Refresh.reencode).
     *
     * Runs over the physical plan's InternalRows with primitive-array
     * accumulators: the deserializer alternative (`.as[Tuple5]` +
@@ -687,15 +703,7 @@ object IndexBuild {
     // (input_hint invariant, asserted in EngineSpec), and the fused
     // byte-scan kernel is equivalence-tested against the two-stage
     // clean-then-lemmatize spec path (LemmatizerEquivalenceSpec).
-    val analyzed = filterValidCode(pages) // F1: non-200/308 never indexed
-      .select(col("url"), col("html"), col("lang"))
-      .as[(String, Array[Byte], String)]
-      .map { case (url, html, lang) =>
-        val counts = Lemmatizer.lemmaCountsFromHtml(html)
-        val dl = counts.valuesIterator.sum
-        (stableDocId(url), url, siteOf(url), lang, dl, counts)
-      }
-      .toDF("doc_id", "url", "site", "lang", "dl", "terms")
+    val analyzed = analyze(pages)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Materialize the cache FIRST (cache-then-write: fusing the heavy
     // extract+lemmatize map into the parquet-writer stage serializes
@@ -791,7 +799,9 @@ object IndexBuild {
       lit(cfg.shards).as("shards"),
       lit(cfg.nBatches).as("n_batches"),
       lit(cfg.siteGroups).as("site_groups"),
-      lit(cfg.buckets).as("buckets"))
+      lit(cfg.buckets).as("buckets"),
+      // highest refresh batch whose corpus delta is applied (Refresh)
+      lit(0).as("stats_as_of"))
     // stats is a derived dimension, not the commit point — write it in the
     // background and join before the first lineage commit below
     val statsWriteF = Future(phase("stats write")(
@@ -1041,7 +1051,7 @@ object IndexBuild {
       }
       .toDF
     store.write(merged, "index", SaveMode.Overwrite, partitionBy = Seq("bucket"))
-    // high-water mark for incremental refresh (Refresh.mergeWithTombstones)
+    // high-water mark for incremental refresh (Refresh.indexAsOf)
     val maxBatch = store.read("segments")
       .agg(max(col("batch"))).collect()(0).getInt(0)
     store.write(spark.range(1).select(lit(maxBatch).as("as_of_batch")),

@@ -1,9 +1,10 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Lemmatizer, PostingCodec}
+import graft.core.PostingCodec
 import graft.corpus.PageRow
 import graft.store.TableStore
 
@@ -12,12 +13,14 @@ import graft.store.TableStore
   * cascade-deletes the page's postings, decrements lemma dfs and
   * re-inserts (SiteServiceImpl.java:118-141); the immutable Spark design
   * replaces row-level delete+decrement with Iceberg-style EQUALITY
-  * DELETES (SURVEY.md §2.1 S6):
+  * DELETES (SURVEY.md §2.1 S6). A delete is a refresh with no new
+  * version, so both run ONE delta commit (`commitDelta`):
   *
   *  - a refresh appends (a) a delta segment batch holding the new
   *    version's postings and (b) a tombstone row (doc_id, as_of_batch)
   *    meaning "postings of doc_id from any batch < as_of_batch are dead";
-  *  - EVERY table the refresh maintains is O(touched), not O(corpus):
+  *    a delete appends only the tombstones;
+  *  - EVERY table the commit maintains is O(touched), not O(corpus):
   *    docs/doc_terms are bucket-partitioned by doc id (`db`) and only the
   *    partitions holding the affected ids are rewritten; lemma_stats is
   *    bucket-partitioned by term and updated by an exact ±df delta over
@@ -37,7 +40,7 @@ import graft.store.TableStore
 object Refresh {
 
   /** Disambiguates a delete's dim-delta snapshot key from a refresh's
-    * over the same doc_ids (see the delete path's key comment). */
+    * over the same doc_ids (see the key comment in `commitDelta`). */
   private val DeleteKeySalt = 0x64656c6574655f21L // "delete_!"
 
   /** High-water batch id the current `index` dir is merged up to. */
@@ -68,328 +71,193 @@ object Refresh {
     * built with buckets=32 would otherwise hash deltas, touched_log rows
     * and lemma_stats partitions mod 16 while the base tables use mod 32,
     * silently corrupting the overlay/compaction bucket math. Non-layout
-    * knobs (saltThresholdDf) stay the caller's. A stats row predating a
-    * column falls back to the caller's value for that field only. */
-  private[graft] def layoutCfg(store: TableStore,
-      cfg: IndexBuild.Config): IndexBuild.Config =
-    store.readOpt("stats").map { df =>
-      val r = df.collect()(0)
-      def get(k: String, d: Int): Int =
-        try r.getAs[Int](k) catch { case scala.util.control.NonFatal(_) => d }
-      val shards = get("shards", cfg.shards)
-      // joint fallback: a stats row that carries shards but predates the
-      // site_groups column must not mix persisted shards with the
-      // caller's siteGroups — Config requires shards % siteGroups == 0,
-      // and e.g. shards=6 with a caller default of 4 would throw and
-      // brick every refresh/delete/compaction on that index. When the
-      // caller's value doesn't divide the persisted shards, fall back to
-      // 1 (always valid; pre-site_groups indexes had no site routing).
-      val siteGroups = get("site_groups",
-        if (shards % cfg.siteGroups == 0) cfg.siteGroups else 1)
-      cfg.copy(
-        shards = shards,
-        nBatches = get("n_batches", cfg.nBatches),
-        siteGroups = siteGroups,
-        buckets = get("buckets", cfg.buckets))
-    }.getOrElse(cfg)
+    * knobs (saltThresholdDf) stay the caller's. */
+  private def layoutCfg(store: TableStore,
+      cfg: IndexBuild.Config): IndexBuild.Config = {
+    val r = store.read("stats").collect()(0)
+    cfg.copy(
+      shards = r.getAs[Int]("shards"),
+      nBatches = r.getAs[Int]("n_batches"),
+      siteGroups = r.getAs[Int]("site_groups"),
+      buckets = r.getAs[Int]("buckets"))
+  }
 
-  /** The O(touched) paths need the forward doc_terms table AND the
-    * bucket-partitioned dims (docs.db, lemma_stats.bucket) — all written
-    * by current builds. An index predating any of them takes the legacy
-    * full-merge path below (which also UPGRADES the dims it rewrites, so
-    * one legacy refresh converts the index in place). */
-  private[graft] def incrementalLayout(store: TableStore): Boolean =
-    store.exists("doc_terms") && store.exists("docs") &&
-      store.read("docs").columns.contains("db") &&
-      store.read("lemma_stats").columns.contains("bucket")
+  /** One version per url: the latest `warc_ts`, then the longest html. A
+    * feed trigger or a refresh batch may carry several versions of one
+    * url (rapid re-crawl); they would all land under one doc_id in one
+    * delta batch, where latest-batch-wins cannot order them. */
+  def latestPerUrl(pages: Dataset[PageRow]): Dataset[PageRow] = {
+    val w = Window.partitionBy(col("url"))
+      .orderBy(col("warc_ts").desc, length(col("html")).desc)
+    pages.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
+      .as[PageRow](Encoders.product[PageRow])
+  }
 
-  /** Re-index (or newly index) the given pages; appends a delta batch +
-    * tombstones, maintains every dimension O(touched), then compacts the
+  /** Re-index (or newly index) the given pages: one delta commit that
+    * retires their old versions and adds the new ones, then compacts the
     * touched index buckets (or defers it when `compact = false`). */
   def refreshPages(spark: SparkSession, outDir: String, pages: Dataset[PageRow],
       cfg0: IndexBuild.Config = IndexBuild.Config(),
       compact: Boolean = true): Unit = {
+    val analyzed = IndexBuild.analyze(latestPerUrl(pages)).cache()
+    commitDelta(spark, outDir, cfg0, analyzed.select("doc_id"), Some(analyzed),
+      batch => s"refresh batch $batch", compact)
+  }
+
+  /** Delete docs by url: the same delta commit with no new version. */
+  def deletePages(spark: SparkSession, outDir: String, urls: Seq[String],
+      cfg0: IndexBuild.Config = IndexBuild.Config(),
+      compact: Boolean = true): Unit = {
+    import spark.implicits._
+    commitDelta(spark, outDir, cfg0,
+      urls.map(IndexBuild.stableDocId).distinct.toDF("doc_id"), None,
+      batch => s"delete batch $batch (${urls.size} urls)", compact)
+  }
+
+  /** The one delta commit behind refresh and delete. `ids` are the doc
+    * ids whose indexed version dies; `added` holds the analyzed new
+    * versions (a refresh — its `ids` are exactly these rows' doc ids,
+    * and it is unpersisted once committed) or is None (a delete).
+    * Every table is maintained O(touched); see [[persistDimDelta]] for
+    * the crash-replay protocol the steps follow. */
+  private def commitDelta(spark: SparkSession, outDir: String,
+      cfg0: IndexBuild.Config, ids: DataFrame, added: Option[DataFrame],
+      label: Int => String, compact: Boolean): Unit = {
     import spark.implicits._
     val store = TableStore.open(spark, outDir)
     val cfg = layoutCfg(store, cfg0)
     val batch = nextBatch(spark, outDir)
 
-    val analyzed = IndexBuild.filterValidCode(pages) // F1, as in the build
-      .select(col("url"), col("html"), col("lang"))
-      .as[(String, Array[Byte], String)]
-      .map { case (url, html, lang) =>
-        val counts = Lemmatizer.lemmaCountsFromHtml(html)
-        (IndexBuild.stableDocId(url), url, IndexBuild.siteOf(url), lang,
-          counts.valuesIterator.sum, counts)
-      }
-      .toDF("doc_id", "url", "site", "lang", "dl", "terms")
-      .cache()
-
-    // tombstones FIRST would orphan the old version on a crash before the
+    // the new versions' segment batch lands BEFORE the tombstones:
+    // tombstones first would orphan the old version on a crash before the
     // delta lands; delta-then-tombstone means a crash re-runs the refresh
-    // idempotently (same doc_ids, same batch semantics).
-    val post = analyzed.select(col("doc_id"), col("site"), col("dl"),
-        explode(col("terms")).as(Seq("term", "tf")))
-      .select("term", "doc_id", "tf", "dl", "site")
-    val headDf = store.readOpt("head_terms")
-      .getOrElse(Seq.empty[String].toDF("term"))
-    store.write(
-      IndexBuild.buildSegments(post, headDf, cfg,
-        spark.sparkContext.defaultParallelism).toDF,
-      s"segments/batch=$batch", SaveMode.Overwrite, partitionBy = Seq("bucket"))
-
-    store.write(analyzed.select(col("doc_id"), lit(batch).as("as_of_batch")),
+    // idempotently (same doc_ids, same batch semantics)
+    added.foreach { a =>
+      val post = a.select(col("doc_id"), col("site"), col("dl"),
+          explode(col("terms")).as(Seq("term", "tf")))
+        .select("term", "doc_id", "tf", "dl", "site")
+      store.write(
+        IndexBuild.buildSegments(post, store.read("head_terms"), cfg,
+          spark.sparkContext.defaultParallelism).toDF,
+        s"segments/batch=$batch", SaveMode.Overwrite, partitionBy = Seq("bucket"))
+    }
+    store.write(ids.select(col("doc_id"), lit(batch).as("as_of_batch")),
       "tombstones", SaveMode.Append)
 
-    val incremental = incrementalLayout(store)
-    val newIds = analyzed.select("doc_id")
-    // doc buckets touched by this batch — tiny by construction (≤ batch
-    // size, ≤ bucket count); collected to prune the dim partition reads
-    val dbs: Seq[Int] =
-      if (!incremental) Nil
-      else newIds.select(IndexBuild.docBucketCol(cfg.buckets).as("db"))
-        .distinct().as[Int].collect().toSeq
-    def pruneDb(df: DataFrame): DataFrame =
-      if (incremental) df.filter(col("db").isin(dbs: _*)) else df
+    // ONE agg over the batch: the touched doc buckets (tiny — they prune
+    // the dim partition reads), the added doc/token counts, and the
+    // batch content key (order-independent hash — drives snapshot reuse
+    // on replay). A delete adds no version, so its dl is null. pmod
+    // before the sum: ANSI mode (Spark 4 default) overflows a sum of
+    // full-range xxhash64 values; 2^31-1 keys are plenty for a
+    // replay-detection content hash.
+    val (dbs, nAdded, addedTokens, idHash) =
+      added.getOrElse(ids.withColumn("dl", lit(null).cast("long")))
+        .agg(collect_set(IndexBuild.docBucketCol(cfg.buckets)), count(col("dl")),
+          sum(col("dl")), sum(pmod(xxhash64(col("doc_id")), lit(2147483647L))))
+        .as[(Seq[Int], Long, Option[Long], Option[Long])].collect()(0)
+    // a crashed refresh of doc set S followed by a delete of the SAME set
+    // reuses the crashed batch id (nextBatch moves only at the lineage
+    // row); without the salt the delete would key-match the refresh's
+    // snapshot and apply the wrong delta (ghost dfs for a deleted doc,
+    // n_docs one too high, permanently). A replay of the SAME op still
+    // key-matches its own snapshot.
+    val key = idHash.getOrElse(0L) ^ (if (added.isEmpty) DeleteKeySalt else 0L)
+    def touchedDbs(table: String): DataFrame =
+      store.read(table).filter(col("db").isin(dbs: _*))
 
-    // touched terms = OLD version's terms (from the forward doc_terms
-    // table, partition-pruned to the touched doc buckets) ∪ NEW version's
-    // terms. Materialized BEFORE doc_terms is rewritten below
-    // (localCheckpoint = lineage cut, survives its source's replacement).
-    val hadForward = store.exists("doc_terms")
-    val touched = (store.readOpt("doc_terms") match {
-      case Some(dt) => pruneDb(dt).join(newIds, Seq("doc_id"))
-        .select(explode(col("terms")).as("term"))
-      case None => analyzed.limit(0).select(lit("").as("term"))
-    }).union(analyzed.select(explode(map_keys(col("terms"))).as("term")))
+    // touched terms = OLD versions' terms (forward doc_terms lookup,
+    // partition-pruned to the touched doc buckets) ∪ NEW versions' terms,
+    // read BEFORE doc_terms is rewritten below. Per-batch touched-bucket
+    // log: deferred compaction and the engine's delta-overlay read path
+    // derive their bucket set from this tiny table (rows with batch >
+    // index_meta's as_of are pending).
+    val oldTerms = touchedDbs("doc_terms").join(ids, Seq("doc_id"))
+      .select(explode(col("terms")).as("term"))
+    val (nTouched, touchedBuckets) = added
+      .fold(oldTerms)(a => oldTerms.union(
+        a.select(explode(map_keys(col("terms"))).as("term"))))
       .distinct()
-      .localCheckpoint(true)
-
-    // per-batch touched-bucket log: deferred compaction and the engine's
-    // delta-overlay read path derive their bucket set from this tiny
-    // table (rows with batch > index_meta's as_of are pending)
-    val touchedBuckets: Seq[Int] = touched
-      .select(IndexBuild.termBucketCol(cfg.buckets).as("bucket"))
-      .distinct().as[Int].collect().toSeq.sorted
-    store.write(Seq((batch, touchedBuckets)).toDF("batch", "buckets"),
+      .agg(count(lit(1)), collect_set(IndexBuild.termBucketCol(cfg.buckets)))
+      .as[(Long, Seq[Int])].collect()(0)
+    store.write(Seq((batch, touchedBuckets.sorted)).toDF("batch", "buckets"),
       "touched_log", SaveMode.Append)
 
-    if (incremental) {
-      // batch content key + added scalars in ONE agg over the cached
-      // analyze output (order-independent hash — drives snapshot reuse
-      // on replay, see applyDimDeltas' protocol doc)
-      // pmod before the sum: ANSI mode (Spark 4 default) overflows a sum
-      // of full-range xxhash64 values; 2^31-1 keys are plenty for a
-      // replay-detection content hash
-      val addedRow = analyzed.agg(count(lit(1)), sum(col("dl")),
-          sum(pmod(xxhash64(col("doc_id")), lit(2147483647L))))
-        .as[(Long, Option[Long], Option[Long])].collect()(0)
-      val key = addedRow._3.getOrElse(0L)
-
-      if (!dimDeltaKey(store, batch).contains(key)) {
-        // old versions of the replaced docs — pruned partition read,
-        // snapshotted BEFORE the dims are overwritten; feeds the stats
-        // delta and the lemma_stats decrement
-        val oldDocs = pruneDb(store.read("docs"))
-          .join(newIds, Seq("doc_id"), "leftsemi")
-          .select("doc_id", "site", "dl")
-          .localCheckpoint(true)
-        val oldTermRows = pruneDb(store.read("doc_terms"))
-          .join(newIds, Seq("doc_id"), "leftsemi")
-          .select(col("doc_id"), explode(col("terms")).as("term"))
-          .join(oldDocs.select("doc_id", "site"), Seq("doc_id"))
-          .localCheckpoint(true)
-        // lemma_stats delta: df(term, site) += new-version counts −
-        // old-version counts, over ONLY the touched term buckets (exact —
-        // df is a count of distinct docs per (term, site), and each doc
-        // contributes one per distinct term, which is precisely what
-        // doc_terms stores)
-        val plus = analyzed
-          .select(col("site"), explode(map_keys(col("terms"))).as("term"))
-          .groupBy("term", "site").agg(count(lit(1)).as("d"))
-        val minus = oldTermRows.groupBy("term", "site")
-          .agg((-count(lit(1))).as("d"))
-        val removed = oldDocs.agg(count(lit(1)), sum(col("dl")))
-          .as[(Long, Option[Long])].collect()(0)
-        persistDimDelta(spark, store, batch, plus.unionByName(minus),
-          addedRow._1 - removed._1,
-          addedRow._2.getOrElse(0L) - removed._2.getOrElse(0L), key)
-      }
-
-      // docs / doc_terms: rewrite ONLY the touched doc buckets
-      val newDocs = analyzed.select("doc_id", "url", "site", "lang", "dl")
-        .withColumn("db", IndexBuild.docBucketCol(cfg.buckets))
-      rewriteDocBuckets(store,
-        pruneDb(store.read("docs")).join(newIds, Seq("doc_id"), "left_anti")
-          .unionByName(newDocs),
-        "docs", dbs)
-      val newDocTerms = analyzed
-        .select(col("doc_id"), map_keys(col("terms")).as("terms"))
-        .withColumn("db", IndexBuild.docBucketCol(cfg.buckets))
-      rewriteDocBuckets(store,
-        pruneDb(store.read("doc_terms")).join(newIds, Seq("doc_id"), "left_anti")
-          .unionByName(newDocTerms),
-        "doc_terms", dbs)
-
-      // batch-gated application from the persisted snapshot (idempotent
-      // on replay), then snapshot cleanup
-      applyDimDeltas(spark, store, batch, cfg)
-    } else {
-      // legacy layout: full dim rewrites — and the rewrite UPGRADES the
-      // dims to the bucket-partitioned layout, so the next refresh on
-      // this index is O(touched)
-      val newDocs = analyzed.select("doc_id", "url", "site", "lang", "dl")
-      val oldDocs = store.read("docs")
-        .select("doc_id", "url", "site", "lang", "dl")
-      store.replace(
-        oldDocs.join(newIds, Seq("doc_id"), "left_anti").unionByName(newDocs)
-          .withColumn("db", IndexBuild.docBucketCol(cfg.buckets)),
-        "docs", partitionBy = Seq("db"))
-      if (hadForward) {
-        val newDocTerms = analyzed
-          .select(col("doc_id"), map_keys(col("terms")).as("terms"))
-        store.replace(
-          store.read("doc_terms").select("doc_id", "terms")
-            .join(newIds, Seq("doc_id"), "left_anti")
-            .unionByName(newDocTerms)
-            .withColumn("db", IndexBuild.docBucketCol(cfg.buckets)),
-          "doc_terms", partitionBy = Seq("db"))
-      }
+    if (!dimDeltaKey(store, batch).contains(key)) {
+      // ±df delta over only the touched terms: df(term, site) += new
+      // versions' counts − old versions' counts (exact — df counts
+      // distinct docs per (term, site), and each doc contributes one per
+      // distinct term, which is precisely what doc_terms stores). Old
+      // rows are read BEFORE the dims are overwritten.
+      val oldDocs = touchedDbs("docs").join(ids, Seq("doc_id"), "leftsemi")
+        .select("doc_id", "site", "dl")
+      val minus = touchedDbs("doc_terms").join(ids, Seq("doc_id"), "leftsemi")
+        .select(col("doc_id"), explode(col("terms")).as("term"))
+        .join(oldDocs.select("doc_id", "site"), Seq("doc_id"))
+        .groupBy("term", "site").agg((-count(lit(1))).as("d"))
+      val plus = added.map(_
+        .select(col("site"), explode(map_keys(col("terms"))).as("term"))
+        .groupBy("term", "site").agg(count(lit(1)).as("d")))
+      val (nRemoved, removedTokens) = oldDocs.agg(count(lit(1)), sum(col("dl")))
+        .as[(Long, Option[Long])].collect()(0)
+      persistDimDelta(spark, store, batch, plus.fold(minus)(_.unionByName(minus)),
+        nAdded - nRemoved,
+        addedTokens.getOrElse(0L) - removedTokens.getOrElse(0L), key)
     }
 
-    // lineage commit row for the delta — REAL metrics (north_star: per-
-    // partition lineage carries posting bytes + term count): bytes from
-    // the store, term/posting counts from one small agg over the cached
-    // analyze output (term_count = distinct terms in the delta,
-    // posting_count = Σ per-doc distinct terms = delta posting rows)
-    val deltaAgg = analyzed
-      .select(explode(map_keys(col("terms"))).as("term"))
-      .agg(countDistinct(col("term")).as("term_count"),
-        count(lit(1)).as("posting_count"))
-      .collect()(0)
+    // docs / doc_terms: rewrite ONLY the touched doc buckets
+    val fresh = Seq(
+      "docs" -> added.map(_.select("doc_id", "url", "site", "lang", "dl")),
+      "doc_terms" -> added.map(_.select(col("doc_id"), map_keys(col("terms")).as("terms"))))
+    for ((table, rows) <- fresh) {
+      val kept = touchedDbs(table).join(ids, Seq("doc_id"), "left_anti")
+      rewriteDocBuckets(store, rows.fold(kept)(r =>
+        kept.unionByName(r.withColumn("db", IndexBuild.docBucketCol(cfg.buckets)))),
+        table, dbs)
+    }
+
+    // batch-gated application from the persisted snapshot (idempotent
+    // on replay), then snapshot cleanup
+    applyDimDeltas(spark, store, batch, cfg)
+
+    // lineage commit row — AFTER the dim maintenance: the batch commit
+    // point (a crash before it hands the replay the same batch id, which
+    // the dim-delta protocol converges; nextBatch derives from
+    // max(lineage, index_meta)). REAL metrics: a refresh records its
+    // segment bytes, the distinct terms of the delta and its posting rows
+    // (Σ per-doc distinct terms); a delete records its touched terms.
+    val (postingBytes, termCount, postingCount) = added match {
+      case Some(a) =>
+        val (terms, postings) = a.select(explode(map_keys(col("terms"))).as("term"))
+          .agg(countDistinct(col("term")), count(lit(1)))
+          .as[(Long, Long)].collect()(0)
+        (store.sizeInBytes(s"segments/batch=$batch"), terms, postings)
+      case None => (0L, nTouched, 0L)
+    }
     store.write(spark.range(1).select(
       lit(batch).as("partition_id"),
-      lit(s"refresh batch $batch").as("doc_range"),
-      lit(store.sizeInBytes(s"segments/batch=$batch")).as("posting_bytes"),
-      lit(deltaAgg.getAs[Long]("term_count")).as("term_count"),
-      lit(deltaAgg.getAs[Long]("posting_count")).as("posting_count"),
+      lit(label(batch)).as("doc_range"),
+      lit(postingBytes).as("posting_bytes"),
+      lit(termCount).as("term_count"),
+      lit(postingCount).as("posting_count"),
       lit("COMPLETE").as("status"),
       lit(null).cast("string").as("error"),
       current_timestamp().as("ts")),
       "lineage", SaveMode.Append)
     // per-site lifecycle: stamp the refreshed sites' status_time (the
     // reference's updateStatusOnSite path, SiteServiceImpl.java:83-91)
-    store.write(
-      analyzed.select("site").distinct()
-        .select(col("site"), lit(IndexBuild.SiteStatus.Indexed).as("status"),
-          lit(null).cast("string").as("error"), current_timestamp().as("ts")),
-      "site_status", SaveMode.Append)
-    analyzed.unpersist()
-
-    if (!incremental) mergeWithTombstones(spark, outDir, cfg)
-    else if (compact) compactTouched(spark, outDir, cfg)
-  }
-
-  /** Delete docs by url (no replacement). */
-  def deletePages(spark: SparkSession, outDir: String, urls: Seq[String],
-      cfg0: IndexBuild.Config = IndexBuild.Config(),
-      compact: Boolean = true): Unit = {
-    import spark.implicits._
-    val store = TableStore.open(spark, outDir)
-    val cfg = layoutCfg(store, cfg0)
-    val batch = nextBatch(spark, outDir)
-    val ids = urls.map(IndexBuild.stableDocId)
-    val idsDf = ids.toDF("doc_id")
-    val incremental = incrementalLayout(store)
-    val dbs: Seq[Int] =
-      ids.map(IndexBuild.docBucketOf(_, cfg.buckets)).distinct.sorted
-    def pruneDb(df: DataFrame): DataFrame =
-      if (incremental) df.filter(col("db").isin(dbs: _*)) else df
-    val hadForward = store.exists("doc_terms")
-    // the deleted docs' terms (forward lookup, partition-pruned) name the
-    // buckets to compact; lineage-cut snapshot — doc_terms is rewritten
-    val touched = (store.readOpt("doc_terms") match {
-      case Some(dt) => pruneDb(dt).join(idsDf, Seq("doc_id"))
-        .select(explode(col("terms")).as("term")).distinct()
-      case None => Seq.empty[String].toDF("term")
-    }).localCheckpoint(true)
-    store.write(
-      ids.map(id => (id, batch)).toDF("doc_id", "as_of_batch"),
-      "tombstones", SaveMode.Append)
-    val touchedBuckets: Seq[Int] = touched
-      .select(IndexBuild.termBucketCol(cfg.buckets).as("bucket"))
-      .distinct().as[Int].collect().toSeq.sorted
-    store.write(Seq((batch, touchedBuckets)).toDF("batch", "buckets"),
-      "touched_log", SaveMode.Append)
-    if (incremental) {
-      // content key: same order-independent hash as refreshPages, over
-      // the DELETED ids, XOR an op salt — a crashed refresh of doc set S
-      // followed by a delete of the SAME set S reuses the crashed batch
-      // id (nextBatch moves only at the lineage row), and without the
-      // salt it would key-match the refresh's snapshot and apply the
-      // wrong delta (ghost dfs for a deleted doc, n_docs one too high,
-      // permanently). The salt makes the two ops' keys disjoint; a
-      // replay of the SAME delete still key-matches its own snapshot.
-      val key = DeleteKeySalt ^
-        idsDf.agg(sum(pmod(xxhash64(col("doc_id")), lit(2147483647L))))
-        .as[Option[Long]].collect()(0).getOrElse(0L)
-      if (!dimDeltaKey(store, batch).contains(key)) {
-        val oldDocs = pruneDb(store.read("docs"))
-          .join(idsDf, Seq("doc_id"), "leftsemi")
-          .select("doc_id", "site", "dl")
-          .localCheckpoint(true)
-        val oldTermRows = pruneDb(store.read("doc_terms"))
-          .join(idsDf, Seq("doc_id"), "leftsemi")
-          .select(col("doc_id"), explode(col("terms")).as("term"))
-          .join(oldDocs.select("doc_id", "site"), Seq("doc_id"))
-          .localCheckpoint(true)
-        val removed = oldDocs.agg(count(lit(1)), sum(col("dl")))
-          .as[(Long, Option[Long])].collect()(0)
-        persistDimDelta(spark, store, batch,
-          oldTermRows.groupBy("term", "site").agg((-count(lit(1))).as("d")),
-          -removed._1, -removed._2.getOrElse(0L), key)
-      }
-      rewriteDocBuckets(store,
-        pruneDb(store.read("docs")).join(idsDf, Seq("doc_id"), "left_anti"),
-        "docs", dbs)
-      rewriteDocBuckets(store,
-        pruneDb(store.read("doc_terms")).join(idsDf, Seq("doc_id"), "left_anti"),
-        "doc_terms", dbs)
-      applyDimDeltas(spark, store, batch, cfg)
-    } else {
-      store.replace(
-        store.read("docs").select("doc_id", "url", "site", "lang", "dl")
-          .join(idsDf, Seq("doc_id"), "left_anti")
-          .withColumn("db", IndexBuild.docBucketCol(cfg.buckets)),
-        "docs", partitionBy = Seq("db"))
-      if (hadForward)
-        store.replace(
-          store.read("doc_terms").select("doc_id", "terms")
-            .join(idsDf, Seq("doc_id"), "left_anti")
-            .withColumn("db", IndexBuild.docBucketCol(cfg.buckets)),
-          "doc_terms", partitionBy = Seq("db"))
+    added.foreach { a =>
+      store.write(
+        a.select("site").distinct()
+          .select(col("site"), lit(IndexBuild.SiteStatus.Indexed).as("status"),
+            lit(null).cast("string").as("error"), current_timestamp().as("ts")),
+        "site_status", SaveMode.Append)
+      a.unpersist()
     }
 
-    // lineage commit row for the delete — AFTER the dim maintenance (the
-    // batch commit point, symmetric with refreshPages: a crash before
-    // this line hands the replay the same batch id, which the dim-delta
-    // protocol above converges). Keeps the high-water batch accounting
-    // right (nextBatch derives from max(lineage, index_meta) — a delete
-    // without a lineage row would leave index_meta one below its
-    // tombstone batch) and records the touched-term metric.
-    store.write(spark.range(1).select(
-      lit(batch).as("partition_id"),
-      lit(s"delete batch $batch (${urls.size} urls)").as("doc_range"),
-      lit(0L).as("posting_bytes"),
-      lit(touched.count()).as("term_count"),
-      lit(0L).as("posting_count"),
-      lit("COMPLETE").as("status"),
-      lit(null).cast("string").as("error"),
-      current_timestamp().as("ts")),
-      "lineage", SaveMode.Append)
-
-    if (!incremental) mergeWithTombstones(spark, outDir, cfg)
-    else if (compact) compactTouched(spark, outDir, cfg)
+    if (compact) compactTouched(spark, outDir, cfg)
   }
 
   /** Rewrite ONLY the given doc-bucket partitions of a dim table with
@@ -443,9 +311,7 @@ object Refresh {
   private def applyStatsDelta(spark: SparkSession, store: TableStore,
       dDocs: Long, dTokens: Long, asOfBatch: Int): Unit = {
     val prev = store.read("stats").collect()(0)
-    def carried(name: String, dflt: Int): Int =
-      try prev.getAs[Int](name) catch { case _: Exception => dflt }
-    if (carried("stats_as_of", 0) >= asOfBatch) return
+    if (prev.getAs[Int]("stats_as_of") >= asOfBatch) return
     val n = prev.getAs[Long]("n_docs") + dDocs
     val tt = prev.getAs[Long]("total_tokens") + dTokens
     store.replace(spark.range(1).select(
@@ -454,9 +320,9 @@ object Refresh {
       lit(if (n > 0) tt.toDouble / n else 0.0).as("avgdl"),
       lit(tt).as("total_tokens"),
       lit(prev.getAs[Int]("shards")).as("shards"),
-      lit(carried("n_batches", 1)).as("n_batches"),
-      lit(carried("site_groups", IndexBuild.Config().siteGroups)).as("site_groups"),
-      lit(carried("buckets", IndexBuild.Config().buckets)).as("buckets"),
+      lit(prev.getAs[Int]("n_batches")).as("n_batches"),
+      lit(prev.getAs[Int]("site_groups")).as("site_groups"),
+      lit(prev.getAs[Int]("buckets")).as("buckets"),
       lit(asOfBatch).as("stats_as_of")),
       "stats")
   }
@@ -493,8 +359,9 @@ object Refresh {
     *     the lemma_stats partition-overwrite commit and the meta stamp
     *     re-applies the df delta once on replay (the Iceberg production
     *     mapping folds both into one commit).
-    *  4. the caller drops the snapshot, then writes the lineage row —
-    *     the batch commit point, after which nextBatch moves on. */
+    *  4. applyDimDeltas drops the snapshot; the caller then writes the
+    *     lineage row — the batch commit point, after which nextBatch
+    *     moves on. */
   private def persistDimDelta(spark: SparkSession, store: TableStore,
       batch: Int, deltaRows: DataFrame, dDocs: Long, dTokens: Long,
       key: Long): Unit = {
@@ -557,6 +424,24 @@ object Refresh {
       .localCheckpoint(true)
   }
 
+  /** The one bucket rebuild: re-encode decoded [[aliveRows]] into segment
+    * rows, with the build's shuffle keys and in-partition sort. Compaction
+    * writes the result; the engine's delta-overlay read path serves it
+    * from memory. */
+  private[graft] def reencode(alive: DataFrame,
+      buckets: Int): Dataset[SegmentRow] = {
+    val spark = alive.sparkSession
+    val numPartitions = math.max(
+      spark.sessionState.conf.numShufflePartitions,
+      spark.sparkContext.defaultParallelism)
+    IndexBuild.encodeSortedRows(
+      alive
+        .repartition(numPartitions,
+          IndexBuild.segShuffleKeys(buckets, numPartitions): _*)
+        .sortWithinPartitions("term", "shard", "doc_id"),
+      buckets)
+  }
+
   /** Pending touched buckets: union of touched_log entries newer than the
     * index's as_of — exactly the partitions where `index` is stale. */
   private[graft] def pendingTouchedBuckets(spark: SparkSession,
@@ -572,8 +457,8 @@ object Refresh {
   /** BUCKET-PRUNED compaction — folds EVERY pending delta batch into the
     * index by rewriting only the term buckets their refreshes touched
     * (from `touched_log`); untouched bucket partitions keep their files
-    * byte-identical. Dimensions are NOT touched here — refreshPages/
-    * deletePages maintain them incrementally per batch, so a deferred
+    * byte-identical. Dimensions are NOT touched here — every delta commit
+    * (refresh or delete) maintains them per batch, so a deferred
     * compaction leaves them exact throughout.
     *
     * Granularity note: pruning is per storage partition (`bucket`), so
@@ -584,8 +469,8 @@ object Refresh {
     * exists only to keep tiny test indexes from fragmenting.
     *
     * Crash recovery: tombstones and delta batches are retained until the
-    * index_meta bump, so re-running the compaction (or a full
-    * mergeWithTombstones) after a crash mid-overwrite converges — the
+    * index_meta bump, so re-running the compaction after a crash
+    * mid-overwrite converges — the
     * Iceberg production mapping makes the partition overwrite a single
     * atomic commit instead. Spent tombstones (≤ the new as_of) are GC'd
     * after the commit point. */
@@ -604,20 +489,10 @@ object Refresh {
     }
 
     val alive = aliveRows(spark, store, buckets, asOf)
-    val numPartitions = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      spark.sparkContext.defaultParallelism)
-    val merged = IndexBuild.encodeSortedRows(
-      alive
-        .repartition(numPartitions,
-          IndexBuild.segShuffleKeys(cfg.buckets, numPartitions): _*)
-        .sortWithinPartitions("term", "shard", "doc_id"),
-      cfg.buckets)
-
     // overwrite ONLY the touched partitions; a bucket whose postings all
     // died produces no rows — dynamic overwrite won't touch it, so its
     // stale partition dir is dropped explicitly
-    store.overwritePartitions(merged.toDF, "index", Seq("bucket"))
+    store.overwritePartitions(reencode(alive, cfg.buckets).toDF, "index", Seq("bucket"))
     val aliveBuckets = alive
       .select(IndexBuild.termBucketCol(cfg.buckets).as("bucket"))
       .distinct().as[Int].collect().toSet
@@ -637,100 +512,11 @@ object Refresh {
     // runs when the as_of advance crosses a HintEvery boundary — bounded
     // staleness (≤ HintEvery batches) at any compactEvery, including the
     // debt-cap / crashed-compactor recovery folds. Ordering hint only;
-    // the engine re-reads current dfs exactly. A missing table (index
-    // built before the hint existed) is written on the first compaction.
-    if (asOf / HintEvery != maxBatch / HintEvery || !store.exists("mid_terms"))
+    // the engine re-reads current dfs exactly.
+    if (asOf / HintEvery != maxBatch / HintEvery)
       IndexBuild.writeMidTerms(store)
   }
 
   /** Prefetch-hint (mid_terms) refresh cadence, in ingest batches. */
   private val HintEvery = 8
-
-  /** LEGACY full sort-merge: base index + every delta batch with equality
-    * deletes applied, then the derived aggregates rebuilt from scratch —
-    * the path for indexes predating the forward doc_terms table or the
-    * partitioned dim layout (their rewrite also upgrades lemma_stats to
-    * the bucket-partitioned layout). Current indexes take the O(touched)
-    * `compactTouched` path instead. */
-  def mergeWithTombstones(spark: SparkSession, outDir: String,
-      cfg0: IndexBuild.Config): Unit = {
-    import spark.implicits._
-    val store = TableStore.open(spark, outDir)
-    val cfg = layoutCfg(store, cfg0)
-    val asOf = indexAsOf(spark, outDir)
-    val maxBatch = nextBatch(spark, outDir) - 1
-
-    // all buckets — full merge
-    val allBuckets = store.read("index").select("bucket").distinct()
-      .as[Int].collect().toSeq ++
-      store.readOpt("segments").map(_.filter(col("batch") > asOf)
-        .select("bucket").distinct().as[Int].collect().toSeq).getOrElse(Nil)
-    val alive = aliveRows(spark, store, allBuckets.distinct, asOf)
-
-    val numPartitions = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      spark.sparkContext.defaultParallelism)
-    val merged = IndexBuild.encodeSortedRows(
-      alive
-        .repartition(numPartitions,
-          IndexBuild.segShuffleKeys(cfg.buckets, numPartitions): _*)
-        .sortWithinPartitions("term", "shard", "doc_id"),
-      cfg.buckets)
-
-    // atomic replace (parquet: write-aside + swap; iceberg: RTAS commit)
-    store.replace(merged.toDF, "index", partitionBy = Seq("bucket"))
-    store.write(spark.range(1).select(lit(maxBatch).as("as_of_batch")),
-      "index_meta", SaveMode.Overwrite)
-
-    // derived aggregates from the SAME alive rows (exact df for the 80%
-    // pruning rule) — no second decode of the merged index; written in
-    // the bucket-partitioned layout (part of the legacy upgrade)
-    val docsDim = store.read("docs")
-    store.replace(
-      alive.join(docsDim.select("doc_id", "site"), Seq("doc_id"))
-        .groupBy("term", "site").agg(count(lit(1)).as("df"))
-        .withColumn("bucket", IndexBuild.termBucketCol(cfg.buckets)),
-      "lemma_stats", partitionBy = Seq("bucket"))
-    // forward doc_terms from the SAME alive rows when the index predates
-    // the table — without this the one-time legacy upgrade never
-    // completes (incrementalLayout requires doc_terms), and every later
-    // refresh would take this O(everything) path forever
-    if (!store.exists("doc_terms"))
-      store.replace(
-        alive.groupBy("doc_id").agg(collect_set(col("term")).as("terms"))
-          .withColumn("db", IndexBuild.docBucketCol(cfg.buckets)),
-        "doc_terms", partitionBy = Seq("db"))
-    // the full merge folds every batch ≤ maxBatch exactly — stamp both
-    // delta gates so a stale replayed batch can never re-apply over it
-    store.replace(spark.range(1).select(lit(maxBatch).as("as_of_batch")),
-      "lemma_stats_meta")
-    rebuildStats(spark, store, docsDim, cfg, maxBatch)
-    // the legacy path is already O(everything) — also (re)writing the
-    // prefetch hint here upgrades pre-hint indexes in the same pass
-    IndexBuild.writeMidTerms(store)
-  }
-
-  /** corpus-level stats (N, avgdl) from the docs dim — exact after any
-    * refresh/delete because docs is replaced latest-version-wins. Used
-    * only by the legacy full-merge path; the incremental paths adjust
-    * stats from the delta instead. */
-  private def rebuildStats(spark: SparkSession, store: TableStore,
-      docsDim: DataFrame, cfg: IndexBuild.Config, asOfBatch: Int): Unit = {
-    val prevStats = store.read("stats").collect()(0)
-    val shards = prevStats.getAs[Int]("shards")
-    def carried(name: String, dflt: Int): Int = // older indexes predate the column
-      try prevStats.getAs[Int](name) catch { case _: Exception => dflt }
-    store.replace(
-      docsDim.agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(col("doc_id")).as("n_distinct"),
-        avg(col("dl")).as("avgdl"),
-        sum(col("dl")).as("total_tokens"))
-        .withColumn("shards", lit(shards))
-        .withColumn("n_batches", lit(carried("n_batches", 1)))
-        .withColumn("site_groups", lit(carried("site_groups", cfg.siteGroups)))
-        .withColumn("buckets", lit(carried("buckets", cfg.buckets)))
-        .withColumn("stats_as_of", lit(asOfBatch)),
-      "stats")
-  }
 }

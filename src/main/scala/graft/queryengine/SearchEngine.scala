@@ -98,19 +98,9 @@ final class SearchEngine(
   private def confOrEnv(confKey: String, envKey: String): Option[String] =
     spark.conf.getOption(confKey).orElse(sys.env.get(envKey))
 
-  /** Size gate for the LEGACY mid-term prefetch sweep (indexes predating
-    * the persisted mid_terms hint table): an O(vocabulary) aggregation is
-    * acceptable only while lemma_stats is small; past this, old indexes
-    * simply skip the mid extension until their next compaction writes the
-    * hint table. */
-  private val midSweepLimit: Long =
-    confOrEnv("spark.graft.midSweepLimitBytes", "SPARK_GRAFT_MID_SWEEP_LIMIT_BYTES")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
-
   private def load(): IndexState = {
     val stats = store.read("stats").collect()(0)
-    val buckets =
-      try stats.getAs[Int]("buckets") catch { case _: Exception => IndexBuild.Config().buckets }
+    val buckets = stats.getAs[Int]("buckets")
     // Delta-overlay read path (deferred compaction, Refresh/IndexStream
     // `compact = false`): when delta batches are pending beyond the
     // index's as_of, the touched buckets are rebuilt IN MEMORY at load —
@@ -129,8 +119,7 @@ final class SearchEngine(
     // default 64 ≈ 8× IndexStream's default compactEvery.
     val maxPending = confOrEnv("spark.graft.maxPendingBatches",
       "SPARK_GRAFT_MAX_PENDING_BATCHES").map(_.toInt).getOrElse(64)
-    if (maxPending > 0 && store.exists("index_meta") &&
-        graft.index.Refresh.incrementalLayout(store)) {
+    if (maxPending > 0 && store.exists("index_meta")) {
       val n = graft.index.Refresh.pendingBatches(spark, indexDir)
       if (n > maxPending) {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -153,10 +142,7 @@ final class SearchEngine(
     val fpAtLoad = fingerprint()
     val docsDf = store.read("docs").cache()
     val lemmaStatsDf = store.read("lemma_stats").cache()
-    val asOf =
-      if (store.exists("index_meta"))
-        store.read("index_meta").collect()(0).getAs[Int]("as_of_batch")
-      else 0
+    val asOf = graft.index.Refresh.indexAsOf(spark, indexDir)
     val pending = graft.index.Refresh.pendingTouchedBuckets(spark, store, asOf)
     val segCols = Seq("bucket", "term", "shard", "part_id", "doc_count",
       "block_max", "postings").map(col)
@@ -164,13 +150,8 @@ final class SearchEngine(
     val segmentsPlan =
       if (pending.isEmpty) baseSegs
       else {
-        val alive = graft.index.Refresh.aliveRows(spark, store, pending, asOf)
-        val np = math.max(spark.sessionState.conf.numShufflePartitions,
-          spark.sparkContext.defaultParallelism)
-        val rebuilt = IndexBuild.encodeSortedRows(
-          alive.repartition(np, col("term"), col("shard"))
-            .sortWithinPartitions("term", "shard", "doc_id"),
-          buckets).toDF
+        val rebuilt = graft.index.Refresh.reencode(
+          graft.index.Refresh.aliveRows(spark, store, pending, asOf), buckets).toDF
         baseSegs.filter(!col("bucket").isin(pending: _*)).select(segCols: _*)
           .unionByName(rebuilt.select(segCols: _*))
       }
@@ -185,9 +166,7 @@ final class SearchEngine(
       nDocs = stats.getAs[Long]("n_docs"),
       avgdl = stats.getAs[Double]("avgdl"),
       shards = stats.getAs[Int]("shards"),
-      // 0 = index predates site-routed sharding → scoped pruning disabled
-      siteGroups = try stats.getAs[Int]("site_groups") catch { case _: Exception => 0 },
-      // older indexes predate the column → build-default bucket count
+      siteGroups = stats.getAs[Int]("site_groups"),
       buckets = buckets,
       docsDf = docsDf, lemmaStatsDf = lemmaStatsDf, segmentsDf = segmentsDf,
       headTerms = headTerms, fpAtLoad = fpAtLoad)
@@ -297,29 +276,14 @@ final class SearchEngine(
       // shuffled the whole vocabulary on every refresh-triggered reload).
       // Their dfs are re-derived through globalDf's exact bucket-pruned
       // lookups, so hint staleness between compactions cannot touch
-      // scoring. Legacy indexes without the table fall back to ONE sweep,
-      // gated on lemma_stats size (and via a broadcast anti-join, never a
-      // thousands-wide NOT-isin predicate).
+      // scoring.
       val midN = confOrEnv("spark.graft.prefetchMidTerms",
         "SPARK_GRAFT_PREFETCH_MID_TERMS").map(_.toInt).getOrElse(256)
       val budgetLeft = postingCache.budget - usedByHeads
       if (midN > 0 && budgetLeft > (1L << 20)) {
-        val mids: Seq[String] = store.readOpt("mid_terms") match {
-          case Some(mt) =>
-            mt.orderBy(col("df").desc, col("term")).limit(midN)
-              .select("term").as[String].collect().toSeq
-          case None =>
-            val sweepOk =
-              try store.sizeInBytes("lemma_stats") <= midSweepLimit
-              catch { case scala.util.control.NonFatal(_) => false }
-            if (!sweepOk) Seq.empty
-            else lemmaStatsDf
-              .groupBy("term").agg(sum("df").as("df"))
-              .join(broadcast(hs.toDF("term")), Seq("term"), "left_anti")
-              .orderBy(col("df").desc, col("term"))
-              .limit(midN)
-              .select("term").as[String].collect().toSeq
-        }
+        val mids = store.read("mid_terms")
+          .orderBy(col("df").desc, col("term")).limit(midN)
+          .select("term").as[String].collect().toSeq
         if (mids.nonEmpty) {
           globalDf(mids) // exact current dfs — one bucket-pruned agg, cached
           fetchInto(mids, budgetLeft, cacheAbsent = false)
@@ -417,11 +381,9 @@ final class SearchEngine(
   }
 
   /** lemma_stats restricted to the terms' storage buckets — partition
-    * pruning for the point lookups (the table is bucket-partitioned by
-    * term since round 4; older indexes lack the column and scan flat). */
+    * pruning for the point lookups. */
   private def lemmaStatsPruned(terms: Seq[String]): DataFrame =
-    if (!lemmaStatsDf.columns.contains("bucket")) lemmaStatsDf
-    else lemmaStatsDf.filter(col("bucket")
+    lemmaStatsDf.filter(col("bucket")
       .isin(terms.map(IndexBuild.termBucket(_, bucketCount)).distinct: _*))
 
   // Reference query-result cache: previous query's full ranked result is
@@ -515,11 +477,10 @@ final class SearchEngine(
     // a scoped query evaluates ONLY its site group's shard range — salted
     // postings of other groups are never fetched or scored. Residual
     // same-group sites are removed by the docs join below.
-    val siteShards: Option[Seq[Int]] = site.collect {
-      case s if siteGroups > 0 && shards % siteGroups == 0 =>
-        val sub = shards / siteGroups
-        val g = IndexBuild.siteGroupOf(s, siteGroups)
-        (g * sub until (g + 1) * sub).toSeq
+    val siteShards: Option[Seq[Int]] = site.map { s =>
+      val sub = shards / siteGroups
+      val g = IndexBuild.siteGroupOf(s, siteGroups)
+      (g * sub until (g + 1) * sub).toSeq
     }
 
     runWand(ordered, scoreDfMap, Int.MaxValue, exact = true, siteShards) match {

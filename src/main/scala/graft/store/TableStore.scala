@@ -22,7 +22,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *                      parquet write-aside/delete/rename dance
   *  - refresh (S6)    → MERGE INTO + equality-delete files; the
   *                      `tombstones` table becomes Iceberg's own equality
-  *                      deletes, and `mergeWithTombstones` its compaction
+  *                      deletes, and `Refresh.compactTouched` its
+  *                      compaction
   *  - cascade undo    → snapshot rollback (`CALL cat.system.rollback_to…`)
   *  - `fingerprint`   → the table's current snapshot id (exact, no mtime
   *                      heuristics)

@@ -59,22 +59,12 @@ object IndexStream {
     * empty, refresh-with-tombstones otherwise. Exposed for tests.
     *
     * A url appearing in SEVERAL feed files of one trigger (rapid
-    * re-crawl) is deduped to its latest `warc_ts` version here — both
-    * copies would otherwise land in one delta batch, where
-    * latest-batch-wins cannot order them. */
+    * re-crawl) resolves to its latest `warc_ts` version
+    * (`Refresh.latestPerUrl`, which the refresh path applies itself). */
   def ingestBatch(spark: SparkSession, indexDir: String,
       batch: Dataset[PageRow], cfg: IndexBuild.Config,
       compactEvery: Int = 1): Unit = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.expressions.Window
     if (batch.isEmpty) return // empty trigger — nothing to commit
-    val w = Window.partitionBy(col("url"))
-      .orderBy(col("warc_ts").desc, org.apache.spark.sql.functions.length(col("html")).desc)
-    val latest = batch.toDF
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang"))
-      .as[PageRow](Encoders.product[PageRow])
     val store = TableStore.open(spark, indexDir)
     // Bootstrap gate = the ACTUAL commit point (`index_meta`, written
     // strictly after docs/dims + index + lineage are durable), NOT the
@@ -92,7 +82,7 @@ object IndexStream {
       Seq("docs", "doc_terms", "lemma_stats", "stats", "head_terms",
         "site_status", "lineage", "index", "index_meta", "segments",
         "tombstones", "touched_log").foreach(store.drop)
-      IndexBuild.run(spark, latest, indexDir, cfg.copy(nBatches = 1))
+      IndexBuild.run(spark, Refresh.latestPerUrl(batch), indexDir, cfg.copy(nBatches = 1))
       IndexBuild.mergeSegments(spark, indexDir)
     } else {
       // AMORTIZED compaction: dims are maintained O(touched) every batch,
@@ -103,7 +93,7 @@ object IndexStream {
       // (lineage high-water vs index_meta), so it survives restarts.
       val compact = compactEvery <= 1 ||
         Refresh.pendingBatches(spark, indexDir) + 1 >= compactEvery
-      Refresh.refreshPages(spark, indexDir, latest, cfg, compact = compact)
+      Refresh.refreshPages(spark, indexDir, batch, cfg, compact = compact)
     }
   }
 

@@ -454,20 +454,152 @@ class RefreshSpec extends AnyFunSuite {
       "a deleted doc's new-version term must not survive as a ghost df")
   }
 
-  test("a legacy stats row lacking site_groups falls back to a layout that cannot brick refresh") {
+  /** Build a one-batch index over a generated corpus at `$work/idx` (the
+    * corpus is written to `$work/pages`); returns the pages. */
+  private def buildSmall(work: String, cfg: IndexBuild.Config,
+      perSite: Int): Seq[PageRow] = {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-layout-legacy").toString
-    val store = graft.store.TableStore.open(spark, work)
-    // persisted shards=6, no site_groups column; the caller default
-    // siteGroups=4 does not divide 6 — a per-field fallback would make
-    // Config's require throw and fail every refresh/delete/compaction
-    store.replace(Seq(6).toDF("shards"), "stats")
-    val out = Refresh.layoutCfg(store, IndexBuild.Config())
-    assert(out.shards == 6)
-    assert(out.siteGroups == 1, "non-dividing caller siteGroups must fall back to 1")
-    // when the caller's value DOES divide the persisted shards, keep it
-    store.replace(Seq(8).toDF("shards"), "stats")
-    assert(Refresh.layoutCfg(store, IndexBuild.Config()).siteGroups == 4)
+    val pages = CorpusGen.generate(spark, CorpusGen.Config(2, perSite)).collect().toSeq
+    spark.createDataset(pages).write.mode("overwrite").parquet(s"$work/pages")
+    IndexBuild.run(spark,
+      spark.read.parquet(s"$work/pages")
+        .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]),
+      s"$work/idx", cfg)
+    IndexBuild.mergeSegments(spark, s"$work/idx")
+    pages
+  }
+
+  /** lemma_stats as (term, site, df), and the same recomputed from the
+    * docs / doc_terms dims. */
+  private def lemmaStatsAndFresh(idx: String)
+      : (Set[(String, String, Long)], Set[(String, String, Long)]) = {
+    import org.apache.spark.sql.functions.{col, count, explode, lit}
+    import spark.implicits._
+    val got = spark.read.parquet(s"$idx/lemma_stats")
+      .select("term", "site", "df").as[(String, String, Long)].collect().toSet
+    val fresh = spark.read.parquet(s"$idx/doc_terms")
+      .select(col("doc_id"), explode(col("terms")).as("term"))
+      .join(spark.read.parquet(s"$idx/docs").select("doc_id", "site"), Seq("doc_id"))
+      .groupBy("term", "site").agg(count(lit(1)).as("df"))
+      .as[(String, String, Long)].collect().toSet
+    (got, fresh)
+  }
+
+  test("two versions of one url in one refresh batch: the newer wins, n_docs unchanged") {
+    spark.sparkContext.setLogLevel("WARN")
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-refresh-dup").toString
+    val idx = s"$work/idx"
+    val cfgP = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 1, buckets = 16)
+    val pages = buildSmall(work, cfgP, 40)
+
+    // two lemmas in NO existing doc: one per version of the target page
+    val statsTerms = spark.read.parquet(s"$idx/lemma_stats")
+      .select("term").as[String].collect().toSet
+    val l = RuDict.contentLemmas
+    val unused = (150 until 200).map(l).filterNot(statsTerms)
+    assert(unused.size >= 2, "fixture: two unused lemmas needed")
+    val (oldTerm, newTerm) = (unused(0), unused(1))
+    val targetUrl = spark.read.parquet(s"$idx/docs")
+      .filter(col("dl") > 0).orderBy("url").select("url").as[String].head()
+    val older = page(targetUrl, html(oldTerm, s"$oldTerm $oldTerm ${l(2)}"))
+    val newer = page(targetUrl, html(newTerm, s"$newTerm $newTerm ${l(2)}"))
+      .copy(warc_ts = new java.sql.Timestamp(CorpusGen.Epoch + 60000L))
+    Refresh.refreshPages(spark, idx, spark.createDataset(Seq(newer, older)), cfgP)
+
+    val st = spark.read.parquet(s"$idx/stats").collect()(0)
+    assert(st.getAs[Long]("n_docs") == pages.size.toLong,
+      "a re-crawled url must replace its doc, not add one")
+    assert(spark.read.parquet(s"$idx/docs").filter(col("url") === targetUrl).count() == 1,
+      "docs must hold one row for the url")
+    val (got, fresh) = lemmaStatsAndFresh(idx)
+    assert(got == fresh, "lemma_stats must stay exact")
+
+    val modified = pages.map(p => if (p.url == targetUrl) newer else p)
+    spark.createDataset(modified).write.mode("overwrite").parquet(s"$work/pages2")
+    val engine = new SearchEngine(spark, idx, s"$work/pages2", ReferenceTfSum)
+    assert(engine.search(newTerm, 0, 10, None).data.map(i => i.site + i.uri) == Seq(targetUrl),
+      "the newer version's terms must match")
+    assert(engine.search(oldTerm, 0, 10, None).count == 0,
+      "the older version's terms must not match")
+  }
+
+  test("a delete replayed after a crash between the dim rewrites and the delta apply converges exactly") {
+    spark.sparkContext.setLogLevel("WARN")
+    import scala.sys.process._
+    import org.apache.spark.sql.functions.{col, sum}
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-delete-replay").toString
+    val idx = s"$work/idx"
+    val cfgP = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 1, buckets = 16)
+    val pages = buildSmall(work, cfgP, 40)
+    val targetUrl = spark.read.parquet(s"$idx/docs")
+      .filter(col("dl") > 0).orderBy("url").select("url").as[String].head()
+    val statsBefore = lemmaStatsAndFresh(idx)._1
+
+    // CRASH INJECTION as in the refresh replay test: the dims are
+    // rewritten and the delta snapshot persisted, then the lemma_stats
+    // application dies
+    if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
+      cancel("chattr +i unsupported on this filesystem")
+    try intercept[Throwable] { Refresh.deletePages(spark, idx, Seq(targetUrl), cfgP) }
+    finally { Seq("chattr", "-i", s"$idx/lemma_stats").! : Unit }
+    assert(spark.read.parquet(s"$idx/docs").filter(col("url") === targetUrl).count() == 0,
+      "fixture: dims must be rewritten before the crash")
+    assert(lemmaStatsAndFresh(idx)._1 == statsBefore,
+      "fixture: the df delta must NOT be applied yet")
+
+    // REPLAY: the same batch id, the snapshot's TRUE delta applies
+    Refresh.deletePages(spark, idx, Seq(targetUrl), cfgP)
+
+    val (got, fresh) = lemmaStatsAndFresh(idx)
+    assert(got == fresh, "replayed delete must leave lemma_stats exact")
+    val st = spark.read.parquet(s"$idx/stats").collect()(0)
+    assert(st.getAs[Long]("n_docs") == pages.size - 1L)
+    assert(st.getAs[Long]("total_tokens") ==
+      spark.read.parquet(s"$idx/docs").agg(sum(col("dl"))).as[Long].head())
+    assert(!new java.io.File(idx).listFiles().exists(_.getName.startsWith("dim_delta")),
+      "applied snapshots must be dropped")
+  }
+
+  test("a deferred delete serves through the delta overlay, then compacts rank-identically") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-delete-deferred").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 60)
+    val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
+    val l = RuDict.contentLemmas
+    val victim = engine.search(l(5), 0, 100, None).data.head // warms the caches
+    val victimUrl = victim.site + victim.uri
+
+    Refresh.deletePages(spark, idx, Seq(victimUrl), idxCfg, compact = false)
+    assert(Refresh.pendingBatches(spark, idx) == 1, "the delete must stay pending")
+
+    val remaining = pages.filterNot(_.url == victimUrl)
+    val oracle = new RefOracle.Corpus(remaining.map { r =>
+      RefOracle.Doc(r.url, IndexBuild.siteOf(r.url), new String(r.html, StandardCharsets.UTF_8))
+    })
+    val queries = Seq(l(5), l(0), s"${l(0)} ${l(20)}", s"${l(1)} ${l(30)}")
+    def served(): Seq[Seq[(String, Double)]] = queries.map { q =>
+      engine.search(q, 0, 50, None).data.map(i => (i.site + i.uri, i.relevance))
+    }
+    // the SAME live engine reloads onto the overlay of the pending delete
+    for (q <- queries) {
+      val exp = RefOracle.search(oracle, q, None, ReferenceTfSum)
+      val got = engine.search(q, 0, 50, None)
+      assert(got.count == exp.count.toLong, s"count mismatch for '$q' under the overlay")
+      assert(got.data.map(i => i.site + i.uri) == exp.results.take(50).map(_.url),
+        s"ranking mismatch for '$q' under the overlay")
+    }
+    assert(engine.nDocs == remaining.size.toLong)
+    val overlay = served()
+    assert(!overlay.flatten.exists(_._1 == victimUrl), "deleted url must be absent")
+
+    Refresh.compactTouched(spark, idx, idxCfg)
+    assert(Refresh.pendingBatches(spark, idx) == 0)
+    assert(served() == overlay, "compaction must not change the served rankings")
   }
 
   test("merge with a LARGE tombstone set stays rank-identical (distributed tombstone join)") {
