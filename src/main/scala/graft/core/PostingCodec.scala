@@ -57,7 +57,6 @@ object PostingCodec extends Serializable {
       result
     }
     def skip(n: Long): Unit = pos += n.toInt
-    def hasMore: Boolean = pos < bytes.length
   }
 
   /** Encode a doc-id-sorted run. Strict sortedness enforced (the index

@@ -8,15 +8,6 @@ import graft.core.{Lemmatizer, PostingCodec}
 import graft.corpus.PageRow
 import graft.store.TableStore
 
-/** Logical posting row (reference `index_t`: lemma_id→page_id→rating;
-  * IndexEntity.java:9-27). dl = doc token count, carried into the encoded
-  * posting so BM25 is computable segment-locally at any scale (no
-  * doc-table broadcast on the query path). */
-final case class PostingRow(term: String, doc_id: Long, tf: Long, dl: Long)
-
-/** Doc dimension (reference `page`, Page.java:10-34): doc_id = xxhash64(url). */
-final case class DocRow(doc_id: Long, url: String, site: String, lang: String, dl: Long)
-
 /** Physical posting segment: delta+varint-encoded sorted run of one
   * (term, shard); `bucket` is the storage partition column used for
   * term-level partition pruning at query time (SURVEY.md §1.3).
@@ -57,16 +48,6 @@ final case class SegPartial(term: String, shard: Int, blob: Array[Byte])
   *    skipped on restart.
   */
 object IndexBuild {
-
-  /** Optional phase timing: set SPARK_GRAFT_PHASES=1 to print. */
-  private def phase[A](name: String)(f: => A): A = {
-    if (sys.env.contains("SPARK_GRAFT_PHASES")) {
-      val t0 = System.nanoTime()
-      val a = f
-      println(f"  [phase] $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      a
-    } else f
-  }
 
   final case class Config(
       shards: Int = 8, // total shards for salted head terms (= siteGroups × doc subshards)
@@ -124,26 +105,6 @@ object IndexBuild {
       .toDF("doc_id", "url", "site", "lang", "dl", "terms")
   }
 
-  /** pages → typed postings via one pass per doc (SURVEY.md §2.9):
-    * tokenize (F2/F4) + particle drop (F3) + lemmatize (U5) + tf count (A1).
-    * Emits one row per DISTINCT (doc, lemma) with its tf — the flatMap does
-    * the reference's in-memory per-page HashMap count
-    * (MorphologyServiceImpl.java:212-240) so the shuffle moves pre-combined
-    * rows, not raw tokens. */
-  def postings(pages: Dataset[PageRow]): Dataset[PostingRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages
-      .select(col("url"), col("text"))
-      .as[(String, String)]
-      .flatMap { case (url, text) =>
-        val counts = Lemmatizer.lemmaCounts(text)
-        val dl = counts.valuesIterator.sum.toLong
-        val docId = stableDocId(url)
-        counts.iterator.map { case (term, tf) => PostingRow(term, docId, tf.toLong, dl) }
-      }
-  }
-
   /** Deterministic 63-bit doc id from url: Catalyst's xxhash64(url)
     * (default seed 42) with the sign bit cleared — non-negative so the
     * delta+varint codec's first delta is always encodable, and SQL-side
@@ -169,26 +130,6 @@ object IndexBuild {
     * pmod(xxhash64(site), nBatches) batch key. */
   def siteBatchOf(site: String, nBatches: Int): Int = siteGroupOf(site, nBatches)
 
-  /** Composite shard of (site, doc) — the build-side expression in
-    * [[buildSegments]], re-derivable engine-side. */
-  def shardOf(site: String, docId: Long, cfg: Config): Int = {
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-      docId, org.apache.spark.sql.types.LongType, 42L)
-    val sub = cfg.docSubshards
-    siteGroupOf(site, cfg.siteGroups) * sub + (((h % sub) + sub) % sub).toInt
-  }
-
-  /** Docs dimension; used for presentation joins and statistics. */
-  def docs(pages: Dataset[PageRow]): Dataset[DocRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("url"), col("text"), col("lang")).as[(String, String, String)]
-      .map { case (url, text, lang) =>
-        val counts = Lemmatizer.lemmaCounts(text)
-        DocRow(stableDocId(url), url, siteOf(url), lang, counts.valuesIterator.sum.toLong)
-      }
-  }
-
   /** Site key from url (reference LinkToolsBox.extractRootDomain,
     * LinkToolsBox.java:43-60). */
   def siteOf(url: String): String = {
@@ -198,32 +139,21 @@ object IndexBuild {
     if (j >= 0) rest.substring(0, j) else rest
   }
 
-  /** lemma_stats: per-site df (reference `lemma.frequency` = per-site
-    * document frequency, MorphologyServiceImpl.java:96-99; exact count,
-    * NOT approximate — the 80% pruning rule reads it, F5). Postings are
-    * already distinct per (term, doc), so df = row count. */
-  def lemmaStats(post: Dataset[PostingRow], docsDim: DataFrame): DataFrame = {
-    post.toDF
-      .join(docsDim.select("doc_id", "site"), Seq("doc_id"))
-      .groupBy("term", "site")
-      .agg(count(lit(1)).as("df"))
-  }
-
   /** Build encoded segments from postings, given the globally-decided
     * salted head-term set. `post` must carry columns
     * (term, doc_id, tf, dl, site).
     *
     * Physical plan: ONE shuffle — `repartition(segShuffleKeys)`, which
     * co-locates (term, shard) groups bucket-major — and no
-    * driver collection anywhere. By default the shuffle's UNIT is a
+    * driver collection anywhere. The shuffle's UNIT is a
     * map-side partial posting list per (input partition, term, shard)
     * (see [[combinePartition]]): measured on the 400k-doc bench corpus
     * this cut the build's shuffle from one 64-byte-plus row per posting
     * (~80M rows) to ~2M packed partials and roughly quadrupled 4-core
     * build throughput — the posting-row external sort was the build's
-    * memory-bandwidth ceiling. SPARK_GRAFT_NO_COMBINE=1 selects the
-    * original row-shuffle + partition-local-sort plan (A/B reference;
-    * byte-identical output, SegmentCombineSpec).
+    * memory-bandwidth ceiling. The output is byte-identical to the
+    * original row-shuffle + partition-local-sort plan, which
+    * SegmentCombineSpec runs through [[encodeSortedRows]] as its oracle.
     *
     * Shard scheme (head terms only; tail terms keep shard = -1):
     *   shard = hash(site) % siteGroups × docSubshards
@@ -255,7 +185,7 @@ object IndexBuild {
       .select("term", "shard", "doc_id", "tf", "dl")
 
     val buckets = cfg.buckets
-    // Default path: MAP-SIDE COMBINE (MapReduce-era inverted-index
+    // MAP-SIDE COMBINE (MapReduce-era inverted-index
     // combiner, cf. Ivory/Nutch): each input partition pre-groups its
     // postings per (term, shard) into a packed 16-byte-per-posting blob,
     // so the shuffle moves a few thousand partial rows per partition
@@ -266,25 +196,15 @@ object IndexBuild {
     // the input partition's own posting count (maxPartitionBytes caps
     // it), so the shape holds at 100 TB. The final segment bytes are
     // IDENTICAL to the row-shuffle path (same sorted arrays into the
-    // same encodeRaw; asserted by SegmentCombineSpec), which stays
-    // available under SPARK_GRAFT_NO_COMBINE=1 as the A/B reference.
-    val segKeys = segShuffleKeys(buckets, numPartitions)
-    if (sys.env.get("SPARK_GRAFT_NO_COMBINE").contains("1"))
-      encodeSortedRows(
-        salted
-          .repartition(numPartitions, segKeys: _*)
-          .sortWithinPartitions("term", "shard", "doc_id"),
-        buckets)
-    else {
-      val partials = spark.createDataset(
-        salted.queryExecution.toRdd.mapPartitions(combinePartition))(
-        org.apache.spark.sql.Encoders.product[SegPartial])
-      mergePartials(
-        partials.toDF()
-          .repartition(numPartitions, segKeys: _*)
-          .sortWithinPartitions("term", "shard"),
-        buckets)
-    }
+    // same encodeRaw; asserted by SegmentCombineSpec).
+    val partials = spark.createDataset(
+      salted.queryExecution.toRdd.mapPartitions(combinePartition))(
+      org.apache.spark.sql.Encoders.product[SegPartial])
+    mergePartials(
+      partials.toDF()
+        .repartition(numPartitions, segShuffleKeys(buckets, numPartitions): _*)
+        .sortWithinPartitions("term", "shard"),
+      buckets)
   }
 
   /** Map-side combiner over InternalRows with schema exactly
@@ -582,21 +502,20 @@ object IndexBuild {
 
   def docBucketOf(docId: Long, buckets: Int): Int = (docId % buckets).toInt
 
-  /** Persist the top mid-df terms (hottest NON-head terms — heads are
-    * excluded by a broadcast anti-join against the persisted head set, so
-    * this stays correct whatever salt threshold a later compaction was
-    * configured with) as the engine's cold-start prefetch hint table. A
-    * bounded TakeOrdered over the tiny lemma_stats table — run once per
-    * build and once per compaction, so engine reloads never aggregate the
-    * vocabulary. `width` is generous (1024) so the engine's prefetch
-    * window slices a prefix without a rebuild; the stored df is an
-    * ORDERING hint only (the engine re-reads current dfs exactly). */
-  /** Width of the persisted mid_terms prefetch-hint table (see
-    * [[writeMidTerms]]) — generous so the engine's prefetch window slices
-    * a prefix without a rebuild. */
-  val MidTermsWidth = 1024
+  /** Width of the persisted mid_terms prefetch-hint table: the number of
+    * next-hottest non-head terms the engine prefetches after the head
+    * terms at every load. */
+  val MidTermsWidth = 256
 
-  def writeMidTerms(store: TableStore, width: Int = MidTermsWidth): Unit = {
+  /** Persist the top [[MidTermsWidth]] mid-df terms (hottest NON-head
+    * terms — heads are excluded by a broadcast anti-join against the
+    * persisted head set, so this stays correct whatever salt threshold a
+    * later compaction was configured with) as the engine's cold-start
+    * prefetch hint table. A bounded TakeOrdered over the tiny lemma_stats
+    * table — run once per build and once per compaction, so engine
+    * reloads never aggregate the vocabulary. The stored df is an ORDERING
+    * hint only (the engine re-reads current dfs exactly). */
+  def writeMidTerms(store: TableStore): Unit = {
     val heads = store.readOpt("head_terms")
       .getOrElse(store.spark.range(0).select(col("id").cast("string").as("term")))
     store.write(
@@ -604,7 +523,7 @@ object IndexBuild {
         .groupBy("term").agg(sum(col("df")).as("df"))
         .join(broadcast(heads.select("term")), Seq("term"), "left_anti")
         .orderBy(col("df").desc, col("term"))
-        .limit(width),
+        .limit(MidTermsWidth),
       "mid_terms", SaveMode.Overwrite)
   }
 
@@ -624,17 +543,12 @@ object IndexBuild {
     // other build-only setting.
     val writersWas = spark.conf.getOption("spark.sql.maxConcurrentOutputFileWriters")
     spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", cfg.buckets + 4)
-    // AQE stays ON for the build: measured same-window A/B on the
-    // 400k-doc bench corpus (pinned, steal-free) — AQE-on is ~9% faster
-    // at 1 core AND ~8% faster at 4 cores (its partition coalescing
-    // after the dim-table groupBys saves more task/file overhead than
-    // its re-planning costs; the build's explicit `repartition(N, …)`
-    // widths are respected either way). SPARK_GRAFT_NO_AQE=1 is the
-    // diagnostic escape hatch that re-runs a build with AQE off for
-    // future A/Bs; restored on exit either way.
-    val aqeWas = spark.conf.getOption("spark.sql.adaptive.enabled")
-    if (sys.env.get("SPARK_GRAFT_NO_AQE").contains("1"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // AQE stays on (Spark's default) for the build: measured same-window
+    // A/B on the 400k-doc bench corpus (pinned, steal-free) — AQE-on is
+    // ~9% faster at 1 core AND ~8% faster at 4 cores (its partition
+    // coalescing after the dim-table groupBys saves more task/file
+    // overhead than its re-planning costs; the build's explicit
+    // `repartition(N, …)` widths are respected either way).
     // committer v2 is a BUILD-scoped decision (its mid-commit caveat is
     // argued void only for the lineage-gated build below) — it must not
     // leak onto later same-session writes (compaction partition
@@ -645,10 +559,6 @@ object IndexBuild {
       hadoopConf.get("mapreduce.fileoutputcommitter.algorithm.version"))
     try runInner(spark, pages, outDir, cfg, stopAfter, clearStopMarker)
     finally {
-      aqeWas match {
-        case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-        case None => spark.conf.unset("spark.sql.adaptive.enabled")
-      }
       writersWas match {
         case Some(v) => spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", v)
         case None => spark.conf.unset("spark.sql.maxConcurrentOutputFileWriters")
@@ -711,11 +621,11 @@ object IndexBuild {
     // job IS the global-stats aggregation, so the corpus is scanned once
     // for both instead of count-then-agg. The doc-id uniqueness check
     // rides the same pass.
-    val st = phase("analyze")(analyzed.agg(
+    val st = analyzed.agg(
       count(lit(1)).as("n_docs"),
       countDistinct(col("doc_id")).as("n_distinct"),
       avg(col("dl")).as("avgdl"),
-      sum(col("dl")).as("total_tokens")).collect()(0))
+      sum(col("dl")).as("total_tokens")).collect()(0)
 
     // The three dimension/stat writes are INDEPENDENT jobs over the same
     // persisted analyze pass; submit them from separate threads so their
@@ -727,15 +637,8 @@ object IndexBuild {
     // before anything depends on the written tables.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    // SPARK_GRAFT_SEQUENTIAL=1 (diagnostics only): run every "background"
-    // write inline on the calling thread, so SPARK_GRAFT_PHASES timings
-    // measure each job alone instead of its queueing behind concurrent
-    // jobs — phase walls under the default overlapped execution include
-    // scheduler wait and cannot be used to attribute cost.
     implicit val ec: scala.concurrent.ExecutionContext =
-      if (sys.env.get("SPARK_GRAFT_SEQUENTIAL").contains("1"))
-        scala.concurrent.ExecutionContext.parasitic
-      else scala.concurrent.ExecutionContext.global
+      scala.concurrent.ExecutionContext.global
 
     // dims are BUCKET-PARTITIONED by doc id (`db`) / term (`bucket`):
     // that is what makes a later refresh/delete O(touched) — it rewrites
@@ -748,11 +651,11 @@ object IndexBuild {
     // collapses that to ~1 file per bucket; at cluster scale this is the
     // standard small-files compaction shape (files stay splittable, so
     // read parallelism is unchanged).
-    val docsF = Future(phase("docs write")(store.write(
+    val docsF = Future(store.write(
       analyzed.select("doc_id", "url", "site", "lang", "dl")
         .withColumn("db", docBucketCol(cfg.buckets))
         .repartition(cfg.buckets, col("db")),
-      "docs", SaveMode.Overwrite, partitionBy = Seq("db"))))
+      "docs", SaveMode.Overwrite, partitionBy = Seq("db")))
 
     // FORWARD index (doc -> its distinct terms): the structure that makes
     // a later single-page refresh/delete O(doc) instead of O(corpus) —
@@ -761,11 +664,11 @@ object IndexBuild {
     // The reference gets this for free from its relational index table
     // (IndexEntity rows by page_id); a posting-list engine must store it
     // explicitly (Lucene's analogue: per-doc term vectors).
-    val docTermsF = Future(phase("doc_terms write")(store.write(
+    val docTermsF = Future(store.write(
       analyzed.select(col("doc_id"), map_keys(col("terms")).as("terms"))
         .withColumn("db", docBucketCol(cfg.buckets))
         .repartition(cfg.buckets, col("db")),
-      "doc_terms", SaveMode.Overwrite, partitionBy = Seq("db"))))
+      "doc_terms", SaveMode.Overwrite, partitionBy = Seq("db")))
 
     val post = analyzed
       .select(col("doc_id"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
@@ -780,9 +683,9 @@ object IndexBuild {
     val lemmaStats = post.groupBy("term", "site").agg(count(lit(1)).as("df"))
       .withColumn("bucket", termBucketCol(cfg.buckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lemmaStatsF = Future(phase("lemma_stats write")(store.write(
+    val lemmaStatsF = Future(store.write(
       lemmaStats.repartition(cfg.buckets, col("bucket")),
-      "lemma_stats", SaveMode.Overwrite, partitionBy = Seq("bucket"))))
+      "lemma_stats", SaveMode.Overwrite, partitionBy = Seq("bucket")))
 
     // Global stats for BM25 (N, avgdl) + build config — one tiny row,
     // already collected by the analyze-materializing aggregation above
@@ -804,8 +707,7 @@ object IndexBuild {
       lit(0).as("stats_as_of"))
     // stats is a derived dimension, not the commit point — write it in the
     // background and join before the first lineage commit below
-    val statsWriteF = Future(phase("stats write")(
-      store.write(statsRow, "stats", SaveMode.Overwrite)))
+    val statsWriteF = Future(store.write(statsRow, "stats", SaveMode.Overwrite))
 
     // Global salted-term decision — identical across batches/restarts —
     // plus the single-batch lineage metrics, all from ONE aggregation job
@@ -823,20 +725,18 @@ object IndexBuild {
     // 10^12 docs — well inside executor storage either way.
     val termDf = statsDf.groupBy("term").agg(sum(col("df")).as("df"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val headAgg = phase("head/counts agg")(
-      termDf
-        .agg(
-          count(lit(1)).as("term_count"),
-          coalesce(sum(col("df")), lit(0L)).as("posting_count"),
-          collect_list(when(col("df") > cfg.saltThresholdDf, col("term")))
-            .as("head_terms"))
-        .collect()(0))
+    val headAgg = termDf
+      .agg(
+        count(lit(1)).as("term_count"),
+        coalesce(sum(col("df")), lit(0L)).as("posting_count"),
+        collect_list(when(col("df") > cfg.saltThresholdDf, col("term")))
+          .as("head_terms"))
+      .collect()(0)
     val headArr: Seq[String] = headAgg.getSeq[String](2)
     val headDf = headArr.toDF("term")
     // head_terms is persisted for the query engine / refresh path, but the
     // build itself salts from the in-memory literal — background the write
-    val headTermsWriteF = Future(phase("head_terms write")(
-      store.write(headDf, "head_terms", SaveMode.Overwrite)))
+    val headTermsWriteF = Future(store.write(headDf, "head_terms", SaveMode.Overwrite))
     // mid_terms: the next-hottest terms below the salt threshold, persisted
     // as a PREFETCH HINT so the engine's cold-start warm never has to run
     // an O(vocabulary) aggregation per reload (it did, until round 5's
@@ -850,11 +750,11 @@ object IndexBuild {
     // TakeOrdered over the cached per-term df instead of a second
     // lemma_stats scan + groupBy + broadcast anti-join chained behind the
     // head_terms write.
-    val midTermsWriteF = Future(phase("mid_terms write")(
+    val midTermsWriteF = Future(
       store.write(
         termDf.filter(col("df") <= cfg.saltThresholdDf)
           .orderBy(col("df").desc, col("term")).limit(MidTermsWidth),
-        "mid_terms", SaveMode.Overwrite)))
+        "mid_terms", SaveMode.Overwrite))
     midTermsWriteF.onComplete(_ => termDf.unpersist())
     // every dimension write must be durable before a lineage row declares
     // the batch COMPLETE (lineage is the commit point)
@@ -879,11 +779,11 @@ object IndexBuild {
     var statusChain: Future[Unit] = Future.successful(())
     def appendStatus(sites: DataFrame, status: String, error: String): Future[Unit] = {
       val f = statusChain.map { _ =>
-        phase(s"status $status")(store.write(
+        store.write(
           sites.select(col("site"), lit(status).as("status"),
             lit(error).cast("string").as("error"),
             current_timestamp().as("ts")),
-          "site_status", SaveMode.Append))
+          "site_status", SaveMode.Append)
       }
       statusFutures ::= f
       // a failed append must not wedge later chain links (its own failure
@@ -893,7 +793,7 @@ object IndexBuild {
     }
     // batch key = site hash (see the loop below)
     def siteBatch = pmod(xxhash64(col("site")), lit(cfg.nBatches)).cast("int")
-    val done: Set[Int] = phase("completedBatches")(completedBatches(spark, outDir))
+    val done: Set[Int] = completedBatches(spark, outDir)
     // persisted: the INDEXING append materializes it once; the INDEXED
     // append (and multi-batch slices) reuse it instead of re-scanning the
     // analyze cache — a measurable serial tail at high parallelism
@@ -930,8 +830,7 @@ object IndexBuild {
       try {
         val segs = buildSegments(batchPost, headDf, cfg, numPartitions)
         val segTable = if (singleBatch) "index" else s"segments/batch=$b"
-        phase(s"segments write b=$b")(store.write(segs.toDF, segTable,
-          SaveMode.Overwrite, partitionBy = Seq("bucket")))
+        store.write(segs.toDF, segTable, SaveMode.Overwrite, partitionBy = Seq("bucket"))
         awaitDims() // dimensions durable before the commit point
         // lineage LAST — the batch's commit point (north_rule).
         // posting_bytes from the store (no data re-read). Metric source:
@@ -940,7 +839,7 @@ object IndexBuild {
         // head/counts aggregation above (zero extra jobs); multi-batch
         // builds aggregate their own segment table (batch term sets are
         // proper subsets of the global one).
-        val bytes = phase("segment sizeInBytes")(store.sizeInBytes(segTable))
+        val bytes = store.sizeInBytes(segTable)
         val counts =
           if (singleBatch)
             spark.range(1).select(
@@ -964,7 +863,7 @@ object IndexBuild {
           lit("COMPLETE").as("status"),
           lit(null).cast("string").as("error"),
           current_timestamp().as("ts"))
-        phase("lineage")(store.write(lin, "lineage", SaveMode.Append))
+        store.write(lin, "lineage", SaveMode.Append)
         appendStatus(
           if (singleBatch) allSites else analyzed.filter(siteBatch === b).select("site").distinct(),
           SiteStatus.Indexed, null)
@@ -996,15 +895,12 @@ object IndexBuild {
     // engine fingerprints index_meta, so it must be durable by then)
     val indexMetaF =
       if (singleBatch && built > 0)
-        Some(Future(phase("index_meta write")(
-          store.write(spark.range(1).select(lit(0).as("as_of_batch")),
-            "index_meta", SaveMode.Overwrite))))
+        Some(Future(store.write(spark.range(1).select(lit(0).as("as_of_batch")),
+          "index_meta", SaveMode.Overwrite)))
       else None
-    phase("final joins")({
-      awaitDims() // loop may have run zero batches (resume/stop) — still join
-      statusFutures.foreach(Await.result(_, Duration.Inf))
-      indexMetaF.foreach(Await.result(_, Duration.Inf))
-    })
+    awaitDims() // loop may have run zero batches (resume/stop) — still join
+    statusFutures.foreach(Await.result(_, Duration.Inf))
+    indexMetaF.foreach(Await.result(_, Duration.Inf))
     lemmaStats.unpersist()
     allSites.unpersist()
     analyzed.unpersist()

@@ -368,31 +368,6 @@ object DocOps {
       .orderBy("a", "b")
   }
 
-  /** Per-doc MinHash signature columns sig0..sig{n-1}: 8 hash functions
-    * realized as the lexicographic MIN of md5(seed || ':' || shingle) —
-    * portable across engines (md5 is identical everywhere; lexicographic
-    * min of the hex digest is a valid uniform min-hash). The min is
-    * ROW-LOCAL (`array_min` over the doc's own shingle array — min over a
-    * multiset equals min over its set, so no dedup pass either): round
-    * 5's explode → corpus-wide distinct → wide SortAggregate (3 sorts +
-    * 2 exchanges before any banding) is now a pure scan. */
-  private def minhashWide(docs: DataFrame, nHashes: Int): DataFrame = {
-    val minCols = (0 until nHashes).map { s =>
-      array_min(transform(col("sharr"),
-        sh => md5(concat(lit(s.toString), lit(":"), sh).cast("binary")))).as(s"sig$s")
-    }
-    shingleDocs(docs).select(col("doc_id") +: minCols: _*)
-  }
-
-  /** MinHash signatures in the (doc, seed, sig) row form. */
-  def minhashSignatures(spark: SparkSession, dir: String, nHashes: Int = 8): DataFrame = {
-    val stackExpr = (0 until nHashes).map(s => s"$s, sig$s").mkString(", ")
-    minhashWide(documents(spark, dir), nHashes)
-      .select(col("doc_id"),
-        expr(s"stack($nHashes, $stackExpr)").as(Seq("seed", "sig")))
-      .orderBy("doc_id", "seed")
-  }
-
   /** MinHash LSH candidate pairs: 4 bands × 2 rows; a pair is a candidate
     * if any band's concatenated signature matches. Band signatures are
     * derived DIRECTLY from the doc's own shingle array (seed 2b, 2b+1 in
@@ -589,7 +564,17 @@ object DocOps {
     * window — a full exchange of the inflated rows that this removes
     * (guide §2.4); at 10^12 vectors that exchange carried 16 rows per
     * vector. Cosines are the same native codegen'd expression either
-    * way, so assignments are bit-identical. */
+    * way, so assignments are bit-identical.
+    *
+    * Two consequences of the row-local form, both deliberate:
+    *  - the centroid collect is EAGER: it runs a Spark job when this
+    *    DataFrame is built, not when it executes, so a caller that only
+    *    explains the plan still launches that job, and the centroids are
+    *    snapshotted at construction time;
+    *  - it emits one row per INPUT row, so equality with the oracle's
+    *    `row_number() OVER (PARTITION BY vec_id …) = 1` assumes vec_id is
+    *    unique. The embeddings table generates vec_id as a unique key;
+    *    IvfAssignSpec guards the equivalence on the fixture. */
   def annIvfCells(spark: SparkSession, dir: String, nCells: Int = 16): DataFrame = {
     import spark.implicits._
     withCosine(spark)

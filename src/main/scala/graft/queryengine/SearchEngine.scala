@@ -76,27 +76,15 @@ final class SearchEngine(
   private def fingerprint(): Long =
     store.fingerprint(Seq("index_meta", "docs", "lemma_stats"))
 
-  /** Cache budget for the merged index: within it the index is `.cache`d
-    * at load (in-sandbox it always fits); past it — or under
-    * SPARK_GRAFT_NO_INDEX_CACHE — queries read uncached parquet with
-    * bucket partition pruning + executor page cache, the 100 TB shape
-    * (the same gate pattern as the head-term prefetch). */
+  /** Cache budget for the merged index (`spark.graft.indexCacheBytes`,
+    * default 8 GiB): within it the index is `.cache`d at load (in-sandbox
+    * it always fits); past it — 0 turns caching off — queries read
+    * uncached parquet with bucket partition pruning + executor page
+    * cache, the 100 TB shape (the same gate pattern as the head-term
+    * prefetch). */
   private val indexCacheLimit: Long =
-    confOrEnv("spark.graft.indexCacheBytes", "SPARK_GRAFT_INDEX_CACHE_BYTES")
+    spark.conf.getOption("spark.graft.indexCacheBytes")
       .map(_.toLong).getOrElse(8L * 1024 * 1024 * 1024)
-
-  /** Flag gate readable from the session conf as well as the process env
-    * (`spark.graft.noIndexCache` ⇔ SPARK_GRAFT_NO_INDEX_CACHE): spark-conf
-    * is the spark-submit-native spelling AND makes the gate exercisable
-    * in-process by tests (the JVM env is immutable). */
-  private def flagSet(confKey: String, envKey: String): Boolean =
-    spark.conf.getOption(confKey).exists(v => v != "false") ||
-      sys.env.contains(envKey)
-
-  /** Valued flag, same dual spelling as [[flagSet]]: session conf wins
-    * (spark-submit-native and test-settable in-process), env second. */
-  private def confOrEnv(confKey: String, envKey: String): Option[String] =
-    spark.conf.getOption(confKey).orElse(sys.env.get(envKey))
 
   private def load(): IndexState = {
     val stats = store.read("stats").collect()(0)
@@ -115,10 +103,10 @@ final class SearchEngine(
     // the pending-batch list without bound and every reload re-pays it.
     // Past the cap the engine compacts ONCE up front (exactly the work
     // the next compaction interval owed) and serves the clean index.
-    // spark.graft.maxPendingBatches / SPARK_GRAFT_MAX_PENDING_BATCHES;
-    // default 64 ≈ 8× IndexStream's default compactEvery.
-    val maxPending = confOrEnv("spark.graft.maxPendingBatches",
-      "SPARK_GRAFT_MAX_PENDING_BATCHES").map(_.toInt).getOrElse(64)
+    // spark.graft.maxPendingBatches; default 64 ≈ 8× IndexStream's
+    // default compactEvery.
+    val maxPending = spark.conf.getOption("spark.graft.maxPendingBatches")
+      .map(_.toInt).getOrElse(64)
     if (maxPending > 0 && store.exists("index_meta")) {
       val n = graft.index.Refresh.pendingBatches(spark, indexDir)
       if (n > maxPending) {
@@ -155,9 +143,9 @@ final class SearchEngine(
         baseSegs.filter(!col("bucket").isin(pending: _*)).select(segCols: _*)
           .unionByName(rebuilt.select(segCols: _*))
       }
-    val cacheIndex = !flagSet("spark.graft.noIndexCache", "SPARK_GRAFT_NO_INDEX_CACHE") &&
-      (try store.sizeInBytes("index") <= indexCacheLimit
-      catch { case scala.util.control.NonFatal(_) => true })
+    val cacheIndex =
+      try store.sizeInBytes("index") <= indexCacheLimit
+      catch { case scala.util.control.NonFatal(_) => true }
     val segmentsDf = if (cacheIndex) segmentsPlan.cache() else segmentsPlan
     val headTerms: Set[String] =
       try store.read("head_terms").as[String].collect().toSet
@@ -221,12 +209,9 @@ final class SearchEngine(
     * is the principled generalization of "prefetch what cold queries
     * will touch", not a fixture-specific tune; and reading a hint table
     * keeps every reload O(bounded) instead of O(vocabulary)). About
-    * five load-time jobs total. Disable: SPARK_GRAFT_NO_PREFETCH /
-    * spark.graft.noPrefetch; mid-term width:
-    * SPARK_GRAFT_PREFETCH_MID_TERMS / spark.graft.prefetchMidTerms
-    * (0 disables). */
+    * five load-time jobs total. */
   private def prefetchHot(): Unit =
-    if (!flagSet("spark.graft.noPrefetch", "SPARK_GRAFT_NO_PREFETCH") && headTerms.nonEmpty) {
+    if (headTerms.nonEmpty) {
       val hs = headTerms.toSeq.sorted
       globalDf(hs) // df warm: one aggregation job
 
@@ -267,22 +252,20 @@ final class SearchEngine(
       // heads first (absent heads — all postings deleted — cache empty)
       val usedByHeads = fetchInto(hs, postingCache.budget, cacheAbsent = true)
 
-      // mid-term extension: next-hottest terms by global df, bounded
-      // width, into whatever prefetch budget the heads left over. The
-      // term LIST comes from the persisted `mid_terms` hint table
-      // (maintained by IndexBuild.writeMidTerms at build + compaction
-      // cadence) — a bounded tiny-table read, so engine reloads never run
-      // an O(vocabulary) aggregation (round-5 ADVICE: the former sweep
-      // shuffled the whole vocabulary on every refresh-triggered reload).
-      // Their dfs are re-derived through globalDf's exact bucket-pruned
-      // lookups, so hint staleness between compactions cannot touch
-      // scoring.
-      val midN = confOrEnv("spark.graft.prefetchMidTerms",
-        "SPARK_GRAFT_PREFETCH_MID_TERMS").map(_.toInt).getOrElse(256)
+      // mid-term extension: the IndexBuild.MidTermsWidth next-hottest
+      // terms by global df, into whatever prefetch budget the heads left
+      // over. The term LIST comes from the persisted `mid_terms` hint
+      // table (maintained by IndexBuild.writeMidTerms at build +
+      // compaction cadence) — a bounded tiny-table read, so engine reloads
+      // never run an O(vocabulary) aggregation (round-5 ADVICE: the former
+      // sweep shuffled the whole vocabulary on every refresh-triggered
+      // reload). Their dfs are re-derived through globalDf's exact
+      // bucket-pruned lookups, so hint staleness between compactions
+      // cannot touch scoring.
       val budgetLeft = postingCache.budget - usedByHeads
-      if (midN > 0 && budgetLeft > (1L << 20)) {
+      if (budgetLeft > (1L << 20)) {
         val mids = store.read("mid_terms")
-          .orderBy(col("df").desc, col("term")).limit(midN)
+          .orderBy(col("df").desc, col("term")).limit(IndexBuild.MidTermsWidth)
           .select("term").as[String].collect().toSeq
         if (mids.nonEmpty) {
           globalDf(mids) // exact current dfs — one bucket-pruned agg, cached
@@ -293,7 +276,7 @@ final class SearchEngine(
     }
 
   /** Whether the merged index plan is marked for caching (test hook for
-    * the `spark.graft.noIndexCache` / size gate). */
+    * the `spark.graft.indexCacheBytes` size gate). */
   private[graft] def indexCached: Boolean =
     state.segmentsDf.storageLevel != org.apache.spark.storage.StorageLevel.NONE
 
@@ -326,16 +309,16 @@ final class SearchEngine(
   // distinct-term stream must not accrete the vocabulary on the driver.
   private val dfCache = new SearchEngine.BoundedLruLong(1 << 18)
 
-  /** Hot-posting cache: collected segment rows per term, bounded by a
-    * RUNNING byte counter with loop-eviction (a single put may evict
-    * several eldest entries; a value larger than the whole limit is
-    * refused outright). A cache-hit query runs ZERO Spark jobs — pure
-    * driver WAND. Only terms whose segments were small enough to fetch
-    * locally are cached; the distributed path for huge terms bypasses
-    * it. */
+  /** Hot-posting cache: collected segment rows per term, bounded
+    * (`spark.graft.postingCacheBytes`, default 256 MiB) by a RUNNING byte
+    * counter with loop-eviction (a single put may evict several eldest
+    * entries; a value larger than the whole limit is refused outright).
+    * A cache-hit query runs ZERO Spark jobs — pure driver WAND. Only
+    * terms whose segments were small enough to fetch locally are cached;
+    * the distributed path for huge terms bypasses it. */
   private object postingCache {
     private val limit: Long =
-      confOrEnv("spark.graft.postingCacheBytes", "SPARK_GRAFT_POSTING_CACHE_BYTES")
+      spark.conf.getOption("spark.graft.postingCacheBytes")
         .map(_.toLong).getOrElse(256L * 1024 * 1024)
     private val map =
       new java.util.LinkedHashMap[String, Seq[(Int, Array[Byte])]](64, 0.75f, true)

@@ -74,17 +74,19 @@ trait TableStore {
 }
 
 object TableStore {
-  /** Format flag per SURVEY §7.3. `parquet` is the in-sandbox
-    * implementation; `iceberg` requires the iceberg-spark-runtime jars
-    * (not shipped here) and maps per the trait scaladoc. */
+  /** Format flag per SURVEY §7.3, the deployment setting
+    * `spark.graft.tableFormat` (default `parquet`). `parquet` is the
+    * in-sandbox implementation; `iceberg` requires the
+    * iceberg-spark-runtime jars (not shipped here) and maps per the trait
+    * scaladoc. */
   def open(spark: SparkSession, root: String): TableStore =
-    sys.env.getOrElse("SPARK_GRAFT_TABLE_FORMAT", "parquet") match {
+    spark.conf.getOption("spark.graft.tableFormat").getOrElse("parquet") match {
       case "parquet" => new ParquetStore(spark, root)
       case "iceberg" => throw new UnsupportedOperationException(
         "iceberg store: add iceberg-spark-runtime to the classpath and " +
           "implement via writeTo/replace per the TableStore scaladoc mapping")
       case other => throw new IllegalArgumentException(
-        s"unknown SPARK_GRAFT_TABLE_FORMAT '$other' (parquet|iceberg)")
+        s"unknown spark.graft.tableFormat '$other' (parquet|iceberg)")
     }
 }
 

@@ -33,8 +33,8 @@ object DebugPlans {
 
     println("===== segments build (expect ONE Exchange) =====")
     val head = spark.read.parquet(s"$work/idx/head_terms")
-    val post = IndexBuild.postings(ds).toDF
-      .withColumn("site", expr("xxhash64(doc_id)").cast("string")) // plan shape only
+    val post = IndexBuild.analyze(ds)
+      .select(col("doc_id"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
     val plan = IndexBuild.buildSegments(post, head, IndexBuild.Config(), 8)
       .queryExecution.executedPlan.toString
     println("Exchange count: " + "Exchange".r.findAllIn(plan).size)

@@ -265,7 +265,7 @@ class EngineSpec extends AnyFunSuite {
       .foreach(r => assert(r.getAs[String]("status") == "INDEXED"))
   }
 
-  test("index-cache gate: spark.graft.noIndexCache serves rank-identical results through the uncached read path") {
+  test("index-cache gate: spark.graft.indexCacheBytes=0 serves rank-identical results through the uncached read path") {
     built
     // distinct physical copy of the index: the shared-session CacheManager
     // matches by plan, so an engine over the ORIGINAL path could silently
@@ -280,7 +280,7 @@ class EngineSpec extends AnyFunSuite {
       if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
       else java.nio.file.Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
     }
-    spark.conf.set("spark.graft.noIndexCache", "true")
+    spark.conf.set("spark.graft.indexCacheBytes", "0")
     try {
       val uncached = new SearchEngine(spark, copy, pagesPath, Bm25())
       assert(!uncached.indexCached, "gate on: the index plan must not be cache-marked")
@@ -292,7 +292,7 @@ class EngineSpec extends AnyFunSuite {
           exp.data.map(i => (i.site + i.uri, i.relevance)),
           s"uncached read path must be rank- and score-identical for '$q'")
       }
-    } finally spark.conf.unset("spark.graft.noIndexCache")
+    } finally spark.conf.unset("spark.graft.indexCacheBytes")
     // and the default (in-budget) path really does cache
     assert(engineBm.indexCached, "default path must cache the in-budget index")
   }
@@ -357,7 +357,8 @@ class EngineSpec extends AnyFunSuite {
     val mid = spark.read.parquet(s"$indexDir/mid_terms")
       .orderBy(col("df").desc, col("term"))
       .collect().map(r => (r.getAs[String]("term"), r.getAs[Long]("df")))
-    assert(mid.nonEmpty && mid.length <= 1024, s"hint width out of bounds: ${mid.length}")
+    assert(mid.nonEmpty && mid.length <= IndexBuild.MidTermsWidth,
+      s"hint width out of bounds: ${mid.length}")
     assert(mid.forall { case (t, _) => !heads.contains(t) },
       "the hint table must exclude salted head terms (the engine prefetches those separately)")
     // the hint IS the global-df top of the non-head vocabulary

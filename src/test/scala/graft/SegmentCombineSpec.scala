@@ -13,9 +13,9 @@ import graft.index.IndexBuild
   * instead of posting rows) must be INVISIBLE in the output: every
   * segment it produces — term, shard, part_id, doc_count, block_max and
   * the encoded posting BYTES — equals the row-shuffle path's segment
-  * exactly. The row path stays reachable via SPARK_GRAFT_NO_COMBINE=1;
-  * here it is exercised directly through encodeSortedRows so the spec
-  * needs no env juggling. */
+  * exactly. The row path — row shuffle, partition-local sort, then
+  * encodeSortedRows, the same encoder Refresh.reencode runs — is built
+  * here as the byte-identity oracle. */
 class SegmentCombineSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()

@@ -22,35 +22,53 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (the sandbox stand-in for streaming off an Iceberg commit log);
   *    `DataStreamReader` has no table-store seam to route through, and
   *    each file carries exactly one such source declaration.
+  *
+  * A second walk over the same tree keeps environment reads (`sys.env`,
+  * `System.getenv`) in the process entry points: engine options are
+  * `spark.graft.*` conf keys only.
   */
 class StoreSeamSpec extends AnyFunSuite {
 
   private val allowed: Set[String] = Set(
     "store/TableStore.scala",
-    "Bench.scala", "BenchBuild.scala", "BenchProbe.scala", "BenchBurn.scala",
+    "Bench.scala", "BenchBuild.scala", "BenchBurn.scala",
     "Verify.scala",
     "streaming/IndexStream.scala", "streaming/EventsStream.scala")
 
-  test("no direct parquet read/write outside the TableStore seam") {
-    val root = Paths.get("src/main/scala/graft")
+  private val root = Paths.get("src/main/scala/graft")
+
+  /** Lines of main sources outside `allowedFiles` that contain any of
+    * `needles`, as `file:line: text`. */
+  private def offenders(allowedFiles: Set[String], needles: String*): Seq[String] = {
     assert(Files.isDirectory(root), s"source root missing: ${root.toAbsolutePath}")
     val sources: Seq[Path] = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq
     assert(sources.size > 10, "sanity: the walk must see the main tree")
-
-    val offenders = sources.flatMap { p =>
+    sources.flatMap { p =>
       val rel = root.relativize(p).toString.replace('\\', '/')
-      if (allowed.contains(rel)) Nil
+      if (allowedFiles.contains(rel)) Nil
       else {
         val lines = Files.readAllLines(p).asScala
         lines.zipWithIndex.collect {
-          case (l, i) if l.contains(".parquet(") => s"$rel:${i + 1}: ${l.trim}"
+          case (l, i) if needles.exists(l.contains) => s"$rel:${i + 1}: ${l.trim}"
         }
       }
     }
-    assert(offenders.isEmpty,
+  }
+
+  /** Process entry points: the only files that may read the environment.
+    * Everything else takes its options from the session's `spark.graft.*`
+    * conf, so `--conf` on spark-submit and `spark.conf.set` in a test
+    * reach every option the same way. */
+  private val entryPoints: Set[String] = Set(
+    "Bench.scala", "BenchBuild.scala", "BenchBurn.scala", "BenchExtra.scala",
+    "Verify.scala", "app/GraftCli.scala")
+
+  test("no direct parquet read/write outside the TableStore seam") {
+    val hits = offenders(allowed, ".parquet(")
+    assert(hits.isEmpty,
       "direct parquet call sites outside TableStore (route through the store seam):\n" +
-        offenders.mkString("\n"))
+        hits.mkString("\n"))
 
     // and the streaming allowance is exactly the declared file sources —
     // one DataStreamReader .parquet per streaming file, nothing more
@@ -60,5 +78,12 @@ class StoreSeamSpec extends AnyFunSuite {
       assert(n == 1, s"$s: expected exactly one streaming file-source .parquet( call, got $n")
       assert(text.contains("readStream"), s"$s: the allowed .parquet( must be a readStream source")
     }
+  }
+
+  test("only process entry points read environment variables") {
+    val hits = offenders(entryPoints, "sys.env", "System.getenv")
+    assert(hits.isEmpty,
+      "environment reads outside the entry points (read a spark.graft.* conf key instead):\n" +
+        hits.mkString("\n"))
   }
 }

@@ -135,4 +135,20 @@ class TableStoreSpec extends AnyFunSuite {
     val fp3 = store.fingerprint(Seq("t"))
     assert(fp2 != fp3)
   }
+
+  test("open: spark.graft.tableFormat picks the store (parquet by default)") {
+    val root = Files.createTempDirectory("graft-store").toString
+    val key = "spark.graft.tableFormat"
+    assert(spark.conf.getOption(key).isEmpty, s"$key must start unset")
+    assert(TableStore.open(spark, root).isInstanceOf[graft.store.ParquetStore])
+    try {
+      spark.conf.set(key, "parquet")
+      assert(TableStore.open(spark, root).isInstanceOf[graft.store.ParquetStore])
+      spark.conf.set(key, "iceberg")
+      intercept[UnsupportedOperationException](TableStore.open(spark, root))
+      spark.conf.set(key, "orc")
+      val e = intercept[IllegalArgumentException](TableStore.open(spark, root))
+      assert(e.getMessage.contains("'orc'"), s"the error must name the value: ${e.getMessage}")
+    } finally spark.conf.unset(key)
+  }
 }
