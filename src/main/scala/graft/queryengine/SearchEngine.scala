@@ -467,6 +467,11 @@ final class SearchEngine(
     }
 
     runWand(ordered, scoreDfMap, Int.MaxValue, exact = true, siteShards) match {
+      case LocalHits(hits, _) if hits.isEmpty =>
+        // empty conjunction: no docs join, no job, the same "0 results"
+        lastRanked = Seq.empty
+        SearchResponse(true, 0L, Seq.empty)
+
       case LocalHits(hits, totalCount) =>
         // small/moderate result: driver ranking (data already local)
         val hitsDf = hits.map(h => (h.docId, h.score, h.tfSum)).toSeq
@@ -592,18 +597,22 @@ final class SearchEngine(
 
     val cachedTerms = ordered.filter(t => postingCache.contains(t))
     val missing = ordered.filterNot(cachedTerms.contains)
-    val buckets = missing.map(IndexBuild.termBucket(_, bucketCount)).distinct
-    // scoped queries additionally prune salted segments to the site
-    // group's shard range at the SCAN (tail segments, shard = -1, always
-    // qualify); an unscoped query keeps the predicate trivially true
-    val shardPred = siteShards
-      .map(ss => col("shard") === -1 || col("shard").isin(ss: _*))
-      .getOrElse(lit(true))
-    val segs = segmentsDf
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(missing: _*)
-        && shardPred)
-      .select("term", "shard", "doc_count", "postings")
-      .as[(String, Int, Int, Array[Byte])]
+
+    /** Segment rows of `terms`, bucket-pruned; scoped queries additionally
+      * prune salted segments to the site group's shard range at the SCAN
+      * (tail segments, shard = -1, always qualify). Planning it costs a
+      * Catalyst analysis, so only a path that reads segments calls it. */
+    def segmentRows(terms: Seq[String]): Dataset[(String, Int, Array[Byte])] = {
+      val buckets = terms.map(IndexBuild.termBucket(_, bucketCount)).distinct
+      val shardPred = siteShards
+        .map(ss => col("shard") === -1 || col("shard").isin(ss: _*))
+        .getOrElse(lit(true))
+      segmentsDf
+        .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*)
+          && shardPred)
+        .select("term", "shard", "postings")
+        .as[(String, Int, Array[Byte])]
+    }
 
     val anySalted = ordered.exists(headTerms.contains)
     // Cheap cardinality estimate for the local-vs-distributed routing,
@@ -650,19 +659,19 @@ final class SearchEngine(
       // Local path (tail-only, moderate salted, or full cache hit):
       // fetch missing segments in at most ONE job, cache them, and
       // evaluate doc-shard groups on the driver. A repeated (or fully
-      // prefetched) query runs ZERO Spark jobs. A SCOPED fetch is
-      // shard-pruned and therefore partial — it must not populate the
-      // full-segment-set cache.
-      val fetched = if (missing.isEmpty) Seq.empty else segs.collect().toSeq
+      // prefetched) query plans nothing and runs ZERO Spark jobs. A
+      // SCOPED fetch is shard-pruned and therefore partial — it must not
+      // populate the full-segment-set cache.
+      val fetched =
+        if (missing.isEmpty) Seq.empty else segmentRows(missing).collect().toSeq
       if (siteShards.isEmpty) {
         fetched.groupBy(_._1).foreach { case (t, rs) =>
-          postingCache.put(t, rs.map(r => (r._2, r._4)))
+          postingCache.put(t, rs.map(r => (r._2, r._3)))
         }
         missing.filterNot(t => fetched.exists(_._1 == t))
           .foreach(t => postingCache.put(t, Seq.empty))
       }
-      val rows = cachedRows(cachedTerms) ++
-        fetched.map(r => (r._1, r._2, r._4))
+      val rows = cachedRows(cachedTerms) ++ fetched
       val results: Array[Wand.ShardResult] =
         if (!anySalted) Array(evalGroup(rows.map(r => (r._1, r._3))))
         else evalShards.map { g =>
@@ -674,16 +683,10 @@ final class SearchEngine(
     } else {
       // Large query: shard-local distributed WAND. Salted segments
       // stay on their doc shard; unsalted ones replicate to each
-      // evaluated shard. Re-scan ALL query terms here — the `segs` above
-      // covers only cache-missing terms, and driver-cached rows can't
-      // feed a distributed evaluation.
-      val allBuckets = ordered.map(IndexBuild.termBucket(_, bucketCount)).distinct
+      // evaluated shard. Scan ALL query terms here — driver-cached rows
+      // can't feed a distributed evaluation.
       val groupsArr = evalShards.toArray
-      val shardRows = segmentsDf
-        .filter(col("bucket").isin(allBuckets: _*) && col("term").isin(ordered: _*)
-          && shardPred)
-        .select("term", "shard", "postings")
-        .as[(String, Int, Array[Byte])]
+      val shardRows = segmentRows(ordered)
         .flatMap { case (t, sh, bytes) =>
           if (sh < 0) groupsArr.map(g => (g, t, bytes)).toSeq else Seq((sh, t, bytes))
         }

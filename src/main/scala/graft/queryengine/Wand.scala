@@ -27,14 +27,20 @@ object Wand {
   /** Per-query-term scoring context (df/idf fixed per term). */
   final case class TermCtx(term: String, df: Long)
 
-  /** Streaming cursor over one encoded segment with block-skip seek. */
+  /** Streaming cursor over one encoded segment with block-skip seek.
+    * A decoded block lives in three primitive arrays reused for every
+    * block (the codec caps a block at [[PostingCodec.BlockSize]]
+    * postings), so walking a list allocates nothing per posting. */
   final class TermCursor(bytes: Array[Byte]) {
     private val r = new PostingCodec.Reader(bytes, 0)
     private val totalEntries: Long = r.readVarLong()
     private var seen = 0L
     private var prevBlockLast = 0L
 
-    private var block: Array[PostingCodec.Posting] = null
+    private val docs = new Array[Long](PostingCodec.BlockSize)
+    private val tfs = new Array[Long](PostingCodec.BlockSize)
+    private val dls = new Array[Long](PostingCodec.BlockSize)
+    private var blockLen = 0
     private var blockPos = 0
     private var blockMaxOfCurrent = 0L
     // current undecoded block header
@@ -55,21 +61,19 @@ object Wand {
     }
 
     private def decodeHeaderBlock(): Unit = {
-      val out = new Array[PostingCodec.Posting](hdrCount)
       var prevDoc = prevBlockLast
       var j = 0
       while (j < hdrCount) {
-        val doc = prevDoc + r.readVarLong()
-        val tf = r.readVarLong()
-        val dl = r.readVarLong()
-        out(j) = PostingCodec.Posting(doc, tf, dl)
-        prevDoc = doc
+        prevDoc += r.readVarLong()
+        docs(j) = prevDoc
+        tfs(j) = r.readVarLong()
+        dls(j) = r.readVarLong()
         j += 1
       }
       seen += hdrCount
       prevBlockLast = hdrLastDoc
       blockMaxOfCurrent = hdrMaxTf
-      block = out
+      blockLen = hdrCount
       blockPos = 0
     }
 
@@ -79,12 +83,24 @@ object Wand {
       prevBlockLast = hdrLastDoc
     }
 
+    /** First position in [from, blockLen) with docId >= target; the
+      * caller guarantees the block's last docId is >= target. */
+    private def seekInBlock(from: Int, target: Long): Int = {
+      var lo = from
+      var hi = blockLen - 1
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (docs(mid) < target) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
     // position on first posting
     if (!exhausted) { if (loadHeader()) decodeHeaderBlock() else exhausted = true }
 
-    def doc: Long = block(blockPos).docId
-    def tf: Long = block(blockPos).tf
-    def dl: Long = block(blockPos).dl
+    def doc: Long = docs(blockPos)
+    def tf: Long = tfs(blockPos)
+    def dl: Long = dls(blockPos)
 
     /** Upper-bound info for block-max pruning: the decoded block's max tf
       * and its last docId. */
@@ -94,7 +110,7 @@ object Wand {
     /** Advance one posting. */
     def next(): Unit = {
       blockPos += 1
-      if (blockPos >= block.length) {
+      if (blockPos >= blockLen) {
         if (loadHeader()) decodeHeaderBlock() else exhausted = true
       }
     }
@@ -103,73 +119,71 @@ object Wand {
       * blocks via headers (no decode) where possible. */
     def advanceTo(target: Long): Unit = {
       if (exhausted) return
-      // fast path inside current block
-      if (block(block.length - 1).docId >= target) {
-        // binary search within block from blockPos
-        var lo = blockPos
-        var hi = block.length - 1
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (block(mid).docId < target) lo = mid + 1 else hi = mid
-        }
-        blockPos = lo
+      if (docs(blockLen - 1) >= target) {
+        blockPos = seekInBlock(blockPos, target)
         return
       }
-      // skip blocks
-      var found = false
-      while (!found) {
+      while (true) {
         if (!loadHeader()) { exhausted = true; return }
         if (hdrLastDoc >= target) {
           decodeHeaderBlock()
-          var lo = 0
-          var hi = block.length - 1
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (block(mid).docId < target) lo = mid + 1 else hi = mid
-          }
-          blockPos = lo
-          found = true
-        } else skipHeaderBlock()
+          blockPos = seekInBlock(0, target)
+          return
+        }
+        skipHeaderBlock()
       }
     }
   }
 
   /** Top-k buffer keeping ALL ties with the k-th score so the global
     * (score DESC, url ASC) pin (SURVEY.md §2.6 O4) stays exact after the
-    * driver merge. */
+    * driver merge. The first k hits are appended, then heapified into a
+    * min-heap whose root is the k-th score: the pruning threshold holds
+    * from the k-th hit on. Later hits scoring exactly the root wait in
+    * `ties`, which empties when the root rises above their score. */
   final class TopK(k: Int) {
-    private var buf = scala.collection.mutable.ArrayBuffer.empty[Hit]
-    private var thresholdValid = false
-    private var kth = Double.NegativeInfinity
-    // compaction trigger; grows when ties keep the buffer large so a tie-
-    // heavy stream doesn't re-sort on every add
-    private var cap: Int = math.max(256, math.min(k, 1 << 20) * 4)
+    private val heap = scala.collection.mutable.ArrayBuffer.empty[Hit]
+    private val ties = scala.collection.mutable.ArrayBuffer.empty[Hit]
+    private def full: Boolean = k > 0 && heap.length >= k
 
-    def threshold: Double = if (thresholdValid) kth else Double.NegativeInfinity
+    def threshold: Double = if (full) heap(0).score else Double.NegativeInfinity
 
-    def add(h: Hit): Unit = {
-      if (thresholdValid && h.score < kth) return
-      buf += h
-      if (buf.length > cap) {
-        compact()
-        if (buf.length * 2 > cap) cap = buf.length * 2
+    def add(docId: Long, score: Double, tfSum: Double): Unit =
+      if (!full) {
+        heap += Hit(docId, score, tfSum)
+        if (full) (k / 2 - 1 to 0 by -1).foreach(siftDown)
+      } else {
+        val kth = heap(0).score
+        if (score == kth) ties += Hit(docId, score, tfSum)
+        else if (score > kth) {
+          // the root leaves the top k; it stays as a tie only while the
+          // new root still scores the same
+          val out = heap(0)
+          heap(0) = Hit(docId, score, tfSum)
+          siftDown(0)
+          if (heap(0).score == kth) ties += out else ties.clear()
+        }
       }
+
+    private def siftDown(i0: Int): Unit = {
+      val h = heap(i0)
+      val n = heap.length
+      var i = i0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        if (l >= n) done = true
+        else {
+          val c = if (l + 1 < n && heap(l + 1).score < heap(l).score) l + 1 else l
+          if (heap(c).score < h.score) { heap(i) = heap(c); i = c }
+          else done = true
+        }
+      }
+      heap(i) = h
     }
 
-    private def compact(): Unit = {
-      val sorted = buf.sortBy(-_.score)
-      if (sorted.length >= k && k > 0) {
-        val cut = sorted(k - 1).score
-        buf = sorted.takeWhile(_.score >= cut)
-        kth = cut
-        thresholdValid = true
-      } else buf = sorted
-    }
-
-    def result(): Array[Hit] = {
-      compact()
-      buf.toArray
-    }
+    /** Every kept hit, unordered: the top k plus all ties with the k-th. */
+    def result(): Array[Hit] = (heap ++ ties).toArray
   }
 
   /** Evaluate one doc shard: conjunctive AND of all terms, rarest first
@@ -226,7 +240,7 @@ object Wand {
           j += 1
         }
         count += 1L
-        topk.add(Hit(cand, score, tfSum))
+        topk.add(cand, score, tfSum)
         // block-max pruning: if no doc in the current blocks can beat the
         // threshold, jump past the nearest block end.
         if (!exact) {

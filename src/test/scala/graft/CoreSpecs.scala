@@ -210,6 +210,75 @@ class WandSpec extends AnyFunSuite with GenSamples {
     }
   }
 
+  /** 2–3 lists over 3,000 docs, each holding ~80% of them: conjunctions
+    * of over a thousand matches spanning many 128-posting blocks. tf is
+    * mostly 1–2 with rare spikes, so block maxima differ and block-max
+    * pruning engages; dl is per doc, as in the index. */
+  val denseListsGen: Gen[List[Array[Posting]]] = for {
+    nTerms <- Gen.chooseNum(2, 3)
+    dls <- Gen.listOfN(3000, Gen.chooseNum(20L, 400L))
+    lists <- Gen.listOfN(nTerms, for {
+      keep <- Gen.listOfN(3000, Gen.chooseNum(0, 9))
+      tfs <- Gen.listOfN(3000,
+        Gen.frequency(100 -> Gen.chooseNum(1L, 2L), 1 -> Gen.chooseNum(3L, 30L)))
+    } yield (0 until 3000).filter(keep(_) < 8)
+      .map(i => Posting(i.toLong, tfs(i), dls(i))).toArray)
+  } yield lists
+
+  test("pruned top-k hit set == every doc scoring >= the exact k-th score (ties kept)") {
+    for (scorer <- Seq(Bm25(), ReferenceTfSum)) {
+      var engaged = 0
+      forAll(denseListsGen, n = 30) { lists =>
+        val termSegs = lists.zipWithIndex.map { case (l, i) =>
+          (Wand.TermCtx(s"t$i", l.length.toLong), Some(PostingCodec.encode(l)))
+        }
+        val exact = Wand.evaluateShard(termSegs, scorer, 5000L, 200.0, Int.MaxValue, exact = true)
+        assert(exact.matchCount > 256, "the property needs more than 256 matches")
+        val pruned = Wand.evaluateShard(termSegs, scorer, 5000L, 200.0, 10, exact = false)
+        val kth = exact.hits.map(_.score).sorted.reverse.apply(9)
+        val expected = exact.hits.filter(_.score >= kth).map(h => h.docId -> h.score).toMap
+        assert(pruned.hits.map(h => h.docId -> h.score).toMap == expected,
+          s"${scorer.name}: pruned hit set differs from the exact one")
+        assert(pruned.hits.length == expected.size, "a hit was kept twice")
+        // a pruned count below the exact one means whole blocks were skipped
+        if (pruned.matchCount < exact.matchCount) engaged += 1
+      }
+      assert(engaged > 0, s"${scorer.name}: block-max pruning never engaged")
+    }
+  }
+
+  test("TermCursor.advanceTo / next land where a linear scan over decode lands") {
+    val gen = for {
+      n <- Gen.chooseNum(1, 1500)
+      gaps <- Gen.listOfN(n, Gen.frequency(6 -> Gen.chooseNum(1L, 4L), 1 -> Gen.chooseNum(5L, 400L)))
+      tfs <- Gen.listOfN(n, Gen.chooseNum(1L, 50L))
+      dls <- Gen.listOfN(n, Gen.chooseNum(1L, 1000L))
+      steps <- Gen.listOfN(200, Gen.frequency(
+        4 -> Gen.chooseNum(0L, 30L), 1 -> Gen.chooseNum(31L, 3000L), 1 -> Gen.const(-1L)))
+    } yield {
+      val ids = gaps.scanLeft(0L)(_ + _).tail
+      (ids.lazyZip(tfs).lazyZip(dls).map(Posting(_, _, _)).toArray, steps)
+    }
+    forAll(gen) { case (ps, steps) =>
+      val bytes = PostingCodec.encode(ps)
+      val cur = new Wand.TermCursor(bytes)
+      val decoded = PostingCodec.decode(bytes)
+      var ref = 0
+      var target = 0L
+      for (step <- steps if ref < decoded.length) {
+        if (step < 0) { cur.next(); ref += 1 } // -1 encodes next()
+        else {
+          target += step
+          cur.advanceTo(target)
+          while (ref < decoded.length && decoded(ref).docId < target) ref += 1
+        }
+        assert(cur.exhausted == (ref >= decoded.length), s"exhaustion differs at target $target")
+        if (!cur.exhausted)
+          assert(Posting(cur.doc, cur.tf, cur.dl) == decoded(ref), s"cursor off at target $target")
+      }
+    }
+  }
+
   test("missing term segment ⇒ empty result") {
     val seg = PostingCodec.encode(Array(Posting(1, 1, 10)))
     val res = Wand.evaluateShard(

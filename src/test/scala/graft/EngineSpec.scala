@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.corpus.{CorpusGen, PageRow}
 import graft.index.IndexBuild
-import graft.queryengine.{SearchEngine, Statistics}
+import graft.queryengine.{SearchEngine, SearchResponse, Statistics}
 
 /** End-to-end engine vs reference-oracle rank-identity on the fixture
   * corpus + query set (SURVEY.md §5; FIXTURES.md §4), plus the per-row
@@ -312,40 +312,99 @@ class EngineSpec extends AnyFunSuite {
     assert(usable.length == 2, "fixture must salt >=2 unpruned head terms")
     // constructing the engine runs the prefetch jobs; count jobs only after
     val engine = new SearchEngine(spark, indexDir, pagesPath, Bm25())
-    // count jobs attributed to the query region via the job-group id: the
-    // submitting thread's locals are captured across Spark's async
-    // AQE/broadcast submission (SQLExecution.withThreadLocalCaptured), so
-    // any job the query launches — directly or via AQE — carries the group
+    val (hits, jobs) = jobsOf("prefetch-test-query")(engine.topK(usable.mkString(" "), 10))
+    assert(hits.nonEmpty)
+    assert(jobs == 0,
+      s"head-term query must be fully served by the prefetched caches (saw $jobs jobs)")
+  }
+
+  test("warm topK is Catalyst-free: cache-hit calls run zero rules, a cache miss runs some") {
+    built
+    val q = s"$commonForm $midLemma"
+    assert(engineBm.topK(q, 10).nonEmpty) // every term now in the posting cache
+    val warm = ruleRuns((1 to 20).foreach(_ => engineBm.topK(q, 10)))
+    assert(warm == 0, s"20 cache-hit topK calls ran $warm Catalyst rule executions")
+
+    // control: an engine that caches no postings misses on every call,
+    // and its segment fetch must show up on the same counter
+    spark.conf.set("spark.graft.postingCacheBytes", "0")
+    try {
+      val uncached = new SearchEngine(spark, indexDir, pagesPath, Bm25())
+      assert(uncached.topK(q, 10).nonEmpty) // warms the df cache only
+      val miss = ruleRuns(uncached.topK(q, 10))
+      assert(miss > 0, "a posting-cache miss must plan its segment fetch")
+    } finally spark.conf.unset("spark.graft.postingCacheBytes")
+  }
+
+  test("empty conjunction: a warm search whose terms share no page returns 0, plans nothing, runs no job") {
+    built
+    // indexed, unpruned lemmas that are their own surface form
+    val lemmas = RuDict.contentLemmas
+      .filter(t => Lemmatizer.lemmaCounts(t).keySet == Set(t))
+      .filter { t =>
+        val df = oracle.dfGlobal(t)
+        df > 0 && df * 100.0 / oracle.nDocs <= 80.0
+      }
+    val pagesOf = lemmas.map(t =>
+      t -> oracle.docs.filter(_.lemmaCounts.contains(t)).map(_.url).toSet).toMap
+    val pair = lemmas.combinations(2)
+      .find(p => (pagesOf(p(0)) intersect pagesOf(p(1))).isEmpty)
+    assert(pair.nonEmpty, "fixture must hold two indexed terms with no common page")
+    val q = pair.get.mkString(" ")
+    assert(RefOracle.search(oracle, q, None, Bm25()).count == 0)
+    engineBm.search(q, 0, 10) // warms the df and posting caches
+    val (resp, jobs) = jobsOf("empty-conjunction-query")(engineBm.search(q, 0, 10))
+    assert(resp == SearchResponse(true, 0L, Seq.empty))
+    assert(jobs == 0, s"an empty conjunction must not join docs (saw $jobs jobs)")
+    // the optimizer folds the empty join away without a job, so only the
+    // rule counter shows whether the join was planned at all
+    val rules = ruleRuns(engineBm.search(q, 0, 10))
+    assert(rules == 0, s"an empty conjunction must not plan the docs join ($rules rule runs)")
+  }
+
+  /** Catalyst rule executions (analyzer, optimizer, planner batches) run
+    * by `body`, from Spark's process-wide rule counter. */
+  private def ruleRuns(body: => Unit): Long = {
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    val before = RuleExecutor.getCurrentMetrics().numRuns
+    body
+    RuleExecutor.getCurrentMetrics().numRuns - before
+  }
+
+  /** Runs `body` under job group `group` and returns its result with the
+    * number of Spark jobs that group launched. Attribution is by
+    * job-group id: the submitting thread's locals are captured across
+    * Spark's async AQE/broadcast submission
+    * (SQLExecution.withThreadLocalCaptured), so any job `body` launches —
+    * directly or via AQE — carries the group. */
+  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
+    val marker = s"$group-marker"
     val queryJobs = new java.util.concurrent.atomic.AtomicInteger
     val markerJobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        js.properties.getProperty("spark.jobGroup.id") match {
-          case "prefetch-test-query" => queryJobs.incrementAndGet(); ()
-          case "prefetch-test-marker" => markerJobs.incrementAndGet(); ()
-          case _ => ()
-        }
+        val g = js.properties.getProperty("spark.jobGroup.id")
+        if (g == group) queryJobs.incrementAndGet()
+        else if (g == marker) markerJobs.incrementAndGet()
+        ()
       }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sparkContext.setJobGroup("prefetch-test-query", "query under test")
-      val hits = engine.topK(usable.mkString(" "), 10)
-      assert(hits.nonEmpty)
-      spark.sparkContext.setJobGroup("prefetch-test-marker", "bus drain")
+      spark.sparkContext.setJobGroup(group, "query under test")
+      val out = body
+      spark.sparkContext.setJobGroup(marker, "bus drain")
       // the listener bus is async but FIFO: once the marker's JobStart is
       // delivered, any earlier query job would already be counted
       spark.range(1).count()
       val deadline = System.nanoTime() + 10000000000L
       while (markerJobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
       assert(markerJobs.get() > 0, "marker job not observed — listener broken")
-      assert(queryJobs.get() == 0,
-        s"head-term query must be fully served by the prefetched caches (saw ${queryJobs.get()} jobs)")
+      (out, queryJobs.get())
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
-      ()
     }
   }
 
