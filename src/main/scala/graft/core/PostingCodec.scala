@@ -17,6 +17,13 @@ import java.io.ByteArrayOutputStream
   *   block    := blockEntryCount blockLastDocDelta maxTf payloadByteLen payload
   *   payload  := (docDelta tf dl)*        // docDelta vs previous docId
   *
+  * `docId` here is the index's dense doc ORDINAL (`docs.ord`, numbered
+  * 0..n-1 by the build and upward from `stats.next_ord` by a refresh),
+  * not the url hash that keys the `docs` dim: a gap between ordinals of
+  * one list is about n/df, so a docDelta is mostly one varint byte
+  * where a 63-bit hash gap took eight or nine. The codec itself takes
+  * any non-negative, strictly increasing ids.
+  *
   * `blockLastDocDelta` (delta of the block's last docId vs the previous
   * block's last docId) + `payloadByteLen` let WAND skip a whole block —
   * advance the cursor without decoding — when the block's score upper

@@ -8,9 +8,10 @@ import graft.core.{Lemmatizer, PostingCodec}
 import graft.corpus.PageRow
 import graft.store.TableStore
 
-/** Physical posting segment: delta+varint-encoded sorted run of one
-  * (term, shard); `bucket` is the storage partition column used for
-  * term-level partition pruning at query time (SURVEY.md §1.3).
+/** Physical posting segment: delta+varint-encoded run of one (term,
+  * shard), sorted by doc ORDINAL (`docs.ord`, see [[IndexBuild]]);
+  * `bucket` is the storage partition column used for term-level
+  * partition pruning at query time (SURVEY.md §1.3).
   * shard == -1 ⇔ the term is unsalted (tail term, one segment per batch);
   * shard ∈ [0, shards) ⇔ salted head term, doc-hash sharded. */
 final case class SegmentRow(
@@ -19,7 +20,7 @@ final case class SegmentRow(
 
 /** Map-side partial posting list of one (term, shard) within one input
   * partition: `blob` is a packed little-endian run of 16-byte
-  * (doc_id: long, tf: int, dl: int) records, sorted by doc_id. The
+  * (ord: long, tf: int, dl: int) records, sorted by ord. The
   * build's shuffle unit when the combine path is on — a few thousand
   * partials per input partition instead of one row per posting. */
 final case class SegPartial(term: String, shard: Int, blob: Array[Byte])
@@ -43,9 +44,21 @@ final case class SegPartial(term: String, shard: Int, blob: Array[Byte])
   *    term's sharding is identical across resumable batches;
   *  - segments carry block-max metadata for WAND (PostingCodec);
   *  - builds are resumable: the doc space is split into `nBatches` by
-  *    doc-id hash; each batch commits segments first, then a lineage row
+  *    site hash; each batch commits segments first, then a lineage row
   *    as the commit point (SURVEY.md §7 H5); completed batches are
   *    skipped on restart.
+  *
+  * Doc identity has two forms. The url hash (`doc_id`, [[stableDocId]])
+  * is the KEY of the `docs` / `doc_terms` dims and their `db` storage
+  * partition — how a refresh or delete finds a url's rows. Posting space
+  * (segments, tombstones, the engine's hits) carries the dense doc
+  * ORDINAL `docs.ord` instead: a build numbers its docs 0..n-1 in
+  * doc_id order (see `runInner`) and records the high-water
+  * `stats.next_ord`; a refresh keeps a known url's ordinal and numbers
+  * new urls upward from `next_ord`, and a delete leaves a hole. Dense
+  * ordinals make the codec's doc gaps ~1 varint byte instead of the ~8
+  * a 63-bit hash gap needs. An index written without `next_ord` must be
+  * rebuilt ([[nextOrdOf]]).
   */
 object IndexBuild {
 
@@ -106,11 +119,11 @@ object IndexBuild {
   }
 
   /** Deterministic 63-bit doc id from url: Catalyst's xxhash64(url)
-    * (default seed 42) with the sign bit cleared — non-negative so the
-    * delta+varint codec's first delta is always encodable, and SQL-side
-    * joins can recompute it as `xxhash64(url) & Long.MaxValue` without
-    * carrying the docs dim. Collision odds at 10^12 docs ≈ 5e-5 per pair
-    * set (birthday, 2^63); the build asserts uniqueness. */
+    * (default seed 42) with the sign bit cleared. It keys the `docs` /
+    * `doc_terms` dims and their `db` partition, and orders the build's
+    * ordinals; postings carry `docs.ord`, not this id. Collision odds at
+    * 10^12 docs ≈ 5e-5 per pair set (birthday, 2^63); the build asserts
+    * uniqueness. */
   def stableDocId(url: String): Long =
     org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
       org.apache.spark.unsafe.types.UTF8String.fromString(url),
@@ -141,7 +154,7 @@ object IndexBuild {
 
   /** Build encoded segments from postings, given the globally-decided
     * salted head-term set. `post` must carry columns
-    * (term, doc_id, tf, dl, site).
+    * (term, ord, tf, dl, site), `ord` being the doc ordinal.
     *
     * Physical plan: ONE shuffle — `repartition(segShuffleKeys)`, which
     * co-locates (term, shard) groups bucket-major — and no
@@ -157,7 +170,7 @@ object IndexBuild {
     *
     * Shard scheme (head terms only; tail terms keep shard = -1):
     *   shard = hash(site) % siteGroups × docSubshards
-    *         + hash(doc_id) % docSubshards
+    *         + hash(ord) % docSubshards
     * i.e. Elasticsearch-style ROUTING by site composed with doc-hash
     * splitting inside each site group. Every posting of a doc lands in
     * the same shard (site is a function of the doc), so conjunctive
@@ -180,9 +193,9 @@ object IndexBuild {
       .withColumn("shard",
         when(col("is_head"),
           (pmod(xxhash64(col("site")), lit(cfg.siteGroups)) * cfg.docSubshards +
-            pmod(xxhash64(col("doc_id")), lit(cfg.docSubshards))).cast("int"))
+            pmod(xxhash64(col("ord")), lit(cfg.docSubshards))).cast("int"))
           .otherwise(lit(-1)))
-      .select("term", "shard", "doc_id", "tf", "dl")
+      .select("term", "shard", "ord", "tf", "dl")
 
     val buckets = cfg.buckets
     // MAP-SIDE COMBINE (MapReduce-era inverted-index
@@ -208,7 +221,7 @@ object IndexBuild {
   }
 
   /** Map-side combiner over InternalRows with schema exactly
-    * (term STRING, shard INT, doc_id LONG, tf LONG, dl LONG): groups the
+    * (term STRING, shard INT, ord LONG, tf LONG, dl LONG): groups the
     * partition's postings per (term, shard) into primitive-array buffers
     * (zero allocation per row on key hit — the probe key wraps the row's
     * transient UTF8String, cloned only on first sight), then emits one
@@ -275,7 +288,7 @@ object IndexBuild {
   /** Reduce side of the combine path: over a DataFrame with columns
     * exactly (term STRING, shard INT, blob BINARY), repartitioned by
     * (term, shard) and sorted by (term, shard) within partitions —
-    * unpacks each run's partial blobs, re-sorts the union by doc_id
+    * unpacks each run's partial blobs, re-sorts the union by ord
     * (partials are disjoint doc sets), and encodes the final segment
     * through the SAME PostingCodec.encodeRaw as the row path. */
   private[index] def mergePartials(sorted: DataFrame, buckets: Int): Dataset[SegmentRow] = {
@@ -348,8 +361,8 @@ object IndexBuild {
     spark.createDataset(rdd)
   }
 
-  /** In-place quicksort of parallel posting arrays [lo, hi] by doc id —
-    * primitive arrays, no boxing, no comparator allocation. */
+  /** In-place quicksort of parallel posting arrays [lo, hi] by doc
+    * ordinal — primitive arrays, no boxing, no comparator allocation. */
   private[graft] def sortPostings(
       doc: Array[Long], tf: Array[Long], dl: Array[Long],
       lo0: Int, hi0: Int): Unit = {
@@ -367,8 +380,8 @@ object IndexBuild {
           i += 1
         }
       } else {
-        // median-of-three pivot (doc ids are xxhash64 values — effectively
-        // random, but guard against adversarial runs anyway)
+        // median-of-three pivot (partials arrive as runs of ordinals —
+        // often presorted, which a first-element pivot would make O(n²))
         val mid = lo + (hi - lo) / 2
         if (doc(mid) < doc(lo)) swap(mid, lo)
         if (doc(hi) < doc(lo)) swap(hi, lo)
@@ -389,8 +402,8 @@ object IndexBuild {
   }
 
   /** Streaming run-length encoder over a DataFrame with columns exactly
-    * (term STRING, shard INT, doc_id LONG, tf LONG, dl LONG), ALREADY
-    * repartitioned by (term, shard) and sorted by (term, shard, doc_id)
+    * (term STRING, shard INT, ord LONG, tf LONG, dl LONG), ALREADY
+    * repartitioned by (term, shard) and sorted by (term, shard, ord)
     * within partitions: one SegmentRow per (term, shard) run. Shared by
     * the initial build (buildSegments) and the bucket rebuild of
     * compaction and the engine's delta overlay (Refresh.reencode).
@@ -501,6 +514,18 @@ object IndexBuild {
     pmod(col("doc_id"), lit(buckets)).cast("int")
 
   def docBucketOf(docId: Long, buckets: Int): Int = (docId % buckets).toInt
+
+  /** The ordinal high-water mark of an index's `stats` row: every doc
+    * ordinal ever handed out is below it. An index written before doc
+    * ordinals has no such column — its postings carry url hashes, which
+    * no reader decodes any more, so it must be rebuilt. */
+  def nextOrdOf(stats: org.apache.spark.sql.Row): Long = {
+    if (!stats.schema.fieldNames.contains("next_ord"))
+      throw new IllegalStateException(
+        "index predates dense doc ordinals (its stats row has no next_ord): " +
+          "rebuild it with `GraftCli build`")
+    stats.getAs[Long]("next_ord")
+  }
 
   /** Width of the persisted mid_terms prefetch-hint table: the number of
     * next-hottest non-head terms the engine prefetches after the head
@@ -613,19 +638,46 @@ object IndexBuild {
     // (input_hint invariant, asserted in EngineSpec), and the fused
     // byte-scan kernel is equivalence-tested against the two-stage
     // clean-then-lemmatize spec path (LemmatizerEquivalenceSpec).
-    val analyzed = analyze(pages)
+    //
+    // Dense doc ordinals ride the same pass: `ord` = rank of doc_id among
+    // the analyzed docs, 0..n-1 — a pure function of the page set, so a
+    // clean rebuild and a killed-and-resumed build number every doc
+    // alike. Ranked without a global sort: the id space splits into
+    // 2^rangeBits RANGES by the id's top bits (ids are uniform hashes,
+    // so ranges balance), a window ranks each range locally, and the
+    // per-range counts from the materializing aggregation below give
+    // each range its offset. ~8 ranges per partition keep the hash
+    // placement of ranges even; the explicit width keeps AQE from
+    // coalescing the persisted pass — which every later stage inherits
+    // — into one task.
+    val rangeBits = 35 - Integer.numberOfLeadingZeros(math.max(1, numPartitions) - 1)
+    val ranked = analyze(pages)
+      .withColumn("rb", shiftrightunsigned(col("doc_id"), 63 - rangeBits).cast("int"))
+      .repartition(numPartitions, col("rb"))
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("rb").orderBy("doc_id")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Materialize the cache FIRST (cache-then-write: fusing the heavy
     // extract+lemmatize map into the parquet-writer stage serializes
     // ~2x worse under writer memory pressure) — and the materializing
     // job IS the global-stats aggregation, so the corpus is scanned once
     // for both instead of count-then-agg. The doc-id uniqueness check
-    // rides the same pass.
-    val st = analyzed.agg(
-      count(lit(1)).as("n_docs"),
-      countDistinct(col("doc_id")).as("n_distinct"),
-      avg(col("dl")).as("avgdl"),
-      sum(col("dl")).as("total_tokens")).collect()(0)
+    // and the per-range ordinal counts ride the same pass.
+    val perRange = ranked.groupBy("rb").agg(
+        count(lit(1)).as("n"),
+        countDistinct(col("doc_id")).as("n_distinct"),
+        sum(col("dl")).as("tokens"))
+      .as[(Int, Long, Long, Long)].collect()
+    val nDocs = perRange.map(_._2).sum
+    val nDistinct = perRange.map(_._3).sum
+    val totalTokens = perRange.map(_._4).sum
+    val rangeCount = new Array[Long](1 << rangeBits)
+    perRange.foreach { case (rb, n, _, _) => rangeCount(rb) = n }
+    val rangeOffset = rangeCount.scanLeft(0L)(_ + _).init
+    val analyzed = ranked
+      .withColumn("ord",
+        element_at(typedLit(rangeOffset), col("rb") + 1) + col("rank") - 1)
+      .drop("rb", "rank")
 
     // The three dimension/stat writes are INDEPENDENT jobs over the same
     // persisted analyze pass; submit them from separate threads so their
@@ -652,7 +704,7 @@ object IndexBuild {
     // standard small-files compaction shape (files stay splittable, so
     // read parallelism is unchanged).
     val docsF = Future(store.write(
-      analyzed.select("doc_id", "url", "site", "lang", "dl")
+      analyzed.select("doc_id", "ord", "url", "site", "lang", "dl")
         .withColumn("db", docBucketCol(cfg.buckets))
         .repartition(cfg.buckets, col("db")),
       "docs", SaveMode.Overwrite, partitionBy = Seq("db")))
@@ -671,7 +723,7 @@ object IndexBuild {
       "doc_terms", SaveMode.Overwrite, partitionBy = Seq("db")))
 
     val post = analyzed
-      .select(col("doc_id"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
+      .select(col("ord"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
 
     // lemma_stats aggregation PERSISTED before the write: the head-term /
     // vocabulary derivation below reads this cache instead of the written
@@ -689,22 +741,23 @@ object IndexBuild {
 
     // Global stats for BM25 (N, avgdl) + build config — one tiny row,
     // already collected by the analyze-materializing aggregation above
-    // (`st`) and written back as a literal row: the cache-materializing
+    // (`perRange`) and written back as a literal row: the cache-materializing
     // scan IS the stats job, so no separate agg-then-collect pass runs.
-    require(st.getAs[Long]("n_docs") == st.getAs[Long]("n_distinct"),
-      s"doc_id hash collision or duplicate url: " +
-        s"${st.getAs[Long]("n_docs") - st.getAs[Long]("n_distinct")}")
+    require(nDocs == nDistinct,
+      s"doc_id hash collision or duplicate url: ${nDocs - nDistinct}")
     val statsRow = spark.range(1).select(
-      lit(st.getAs[Long]("n_docs")).as("n_docs"),
-      lit(st.getAs[Long]("n_distinct")).as("n_distinct"),
-      lit(st.getAs[Double]("avgdl")).as("avgdl"),
-      lit(st.getAs[Long]("total_tokens")).as("total_tokens"),
+      lit(nDocs).as("n_docs"),
+      lit(nDistinct).as("n_distinct"),
+      lit(if (nDocs > 0) totalTokens.toDouble / nDocs else 0.0).as("avgdl"),
+      lit(totalTokens).as("total_tokens"),
       lit(cfg.shards).as("shards"),
       lit(cfg.nBatches).as("n_batches"),
       lit(cfg.siteGroups).as("site_groups"),
       lit(cfg.buckets).as("buckets"),
       // highest refresh batch whose corpus delta is applied (Refresh)
-      lit(0).as("stats_as_of"))
+      lit(0).as("stats_as_of"),
+      // doc-ordinal high-water: the next ordinal a new url is given
+      lit(nDocs).as("next_ord"))
     // stats is a derived dimension, not the commit point — write it in the
     // background and join before the first lineage commit below
     val statsWriteF = Future(store.write(statsRow, "stats", SaveMode.Overwrite))
@@ -903,7 +956,7 @@ object IndexBuild {
     indexMetaF.foreach(Await.result(_, Duration.Inf))
     lemmaStats.unpersist()
     allSites.unpersist()
-    analyzed.unpersist()
+    ranked.unpersist()
     built
   }
 

@@ -17,9 +17,11 @@ import graft.store.TableStore
   * version, so both run ONE delta commit (`commitDelta`):
   *
   *  - a refresh appends (a) a delta segment batch holding the new
-  *    version's postings and (b) a tombstone row (doc_id, as_of_batch)
-  *    meaning "postings of doc_id from any batch < as_of_batch are dead";
-  *    a delete appends only the tombstones;
+  *    version's postings and (b) a tombstone row (ord, as_of_batch)
+  *    meaning "postings of doc ordinal `ord` from any batch < as_of_batch
+  *    are dead"; a delete appends only the tombstones. A refreshed url
+  *    keeps its ordinal, a new url takes the next one from
+  *    `stats.next_ord`, and a deleted url's ordinal is never reused;
   *  - EVERY table the commit maintains is O(touched), not O(corpus):
   *    docs/doc_terms are bucket-partitioned by doc id (`db`) and only the
   *    partitions holding the affected ids are rewritten; lemma_stats is
@@ -50,13 +52,17 @@ object Refresh {
     else store.read("index_meta").collect()(0).getAs[Int]("as_of_batch")
   }
 
+  /** The next batch id: one past the highest committed lineage row or
+    * index_meta as_of. A lineage table that exists but cannot be read
+    * fails the caller — treating it as absent would hand out an id a
+    * pending delta batch already holds, and overwrite that batch. */
   private def nextBatch(spark: SparkSession, outDir: String): Int = {
     import spark.implicits._
     val store = TableStore.open(spark, outDir)
     val fromLineage =
-      try store.read("lineage").agg(max("partition_id"))
-        .as[Int].collect().headOption.getOrElse(-1)
-      catch { case scala.util.control.NonFatal(_) => -1 }
+      if (!store.exists("lineage")) -1
+      else store.read("lineage").agg(coalesce(max("partition_id"), lit(-1)))
+        .as[Int].head()
     math.max(fromLineage, indexAsOf(spark, outDir)) + 1
   }
 
@@ -72,15 +78,13 @@ object Refresh {
     * and lemma_stats partitions mod 16 while the base tables use mod 32,
     * silently corrupting the overlay/compaction bucket math. Non-layout
     * knobs (saltThresholdDf) stay the caller's. */
-  private def layoutCfg(store: TableStore,
-      cfg: IndexBuild.Config): IndexBuild.Config = {
-    val r = store.read("stats").collect()(0)
+  private def layoutCfg(r: org.apache.spark.sql.Row,
+      cfg: IndexBuild.Config): IndexBuild.Config =
     cfg.copy(
       shards = r.getAs[Int]("shards"),
       nBatches = r.getAs[Int]("n_batches"),
       siteGroups = r.getAs[Int]("site_groups"),
       buckets = r.getAs[Int]("buckets"))
-  }
 
   /** One version per url: the latest `warc_ts`, then the longest html. A
     * feed trigger or a refresh batch may carry several versions of one
@@ -117,9 +121,9 @@ object Refresh {
   }
 
   /** The one delta commit behind refresh and delete. `ids` are the doc
-    * ids whose indexed version dies; `added` holds the analyzed new
-    * versions (a refresh — its `ids` are exactly these rows' doc ids,
-    * and it is unpersisted once committed) or is None (a delete).
+    * ids (url hashes) whose indexed version dies; `added` holds the
+    * analyzed new versions (a refresh — its `ids` are exactly these rows'
+    * doc ids, and it is unpersisted once committed) or is None (a delete).
     * Every table is maintained O(touched); see [[persistDimDelta]] for
     * the crash-replay protocol the steps follow. */
   private def commitDelta(spark: SparkSession, outDir: String,
@@ -127,37 +131,25 @@ object Refresh {
       label: Int => String, compact: Boolean): Unit = {
     import spark.implicits._
     val store = TableStore.open(spark, outDir)
-    val cfg = layoutCfg(store, cfg0)
+    val stats = store.read("stats").collect()(0)
+    val cfg = layoutCfg(stats, cfg0)
+    val nextOrd = IndexBuild.nextOrdOf(stats)
     val batch = nextBatch(spark, outDir)
 
-    // the new versions' segment batch lands BEFORE the tombstones:
-    // tombstones first would orphan the old version on a crash before the
-    // delta lands; delta-then-tombstone means a crash re-runs the refresh
-    // idempotently (same doc_ids, same batch semantics)
-    added.foreach { a =>
-      val post = a.select(col("doc_id"), col("site"), col("dl"),
-          explode(col("terms")).as(Seq("term", "tf")))
-        .select("term", "doc_id", "tf", "dl", "site")
-      store.write(
-        IndexBuild.buildSegments(post, store.read("head_terms"), cfg,
-          spark.sparkContext.defaultParallelism).toDF,
-        s"segments/batch=$batch", SaveMode.Overwrite, partitionBy = Seq("bucket"))
-    }
-    store.write(ids.select(col("doc_id"), lit(batch).as("as_of_batch")),
-      "tombstones", SaveMode.Append)
-
     // ONE agg over the batch: the touched doc buckets (tiny — they prune
-    // the dim partition reads), the added doc/token counts, and the
-    // batch content key (order-independent hash — drives snapshot reuse
-    // on replay). A delete adds no version, so its dl is null. pmod
-    // before the sum: ANSI mode (Spark 4 default) overflows a sum of
-    // full-range xxhash64 values; 2^31-1 keys are plenty for a
-    // replay-detection content hash.
-    val (dbs, nAdded, addedTokens, idHash) =
+    // the dim partition reads), the added doc/token counts, the batch
+    // content key (order-independent hash — drives snapshot reuse on
+    // replay) and the batch's doc ids in hash order (a refresh numbers
+    // its new urls in that order). A delete adds no version, so its dl
+    // is null. pmod before the sum: ANSI mode (Spark 4 default)
+    // overflows a sum of full-range xxhash64 values; 2^31-1 keys are
+    // plenty for a replay-detection content hash.
+    val (dbs, nAdded, addedTokens, idHash, batchIds) =
       added.getOrElse(ids.withColumn("dl", lit(null).cast("long")))
         .agg(collect_set(IndexBuild.docBucketCol(cfg.buckets)), count(col("dl")),
-          sum(col("dl")), sum(pmod(xxhash64(col("doc_id")), lit(2147483647L))))
-        .as[(Seq[Int], Long, Option[Long], Option[Long])].collect()(0)
+          sum(col("dl")), sum(pmod(xxhash64(col("doc_id")), lit(2147483647L))),
+          sort_array(collect_list(col("doc_id"))))
+        .as[(Seq[Int], Long, Option[Long], Option[Long], Seq[Long])].collect()(0)
     // a crashed refresh of doc set S followed by a delete of the SAME set
     // reuses the crashed batch id (nextBatch moves only at the lineage
     // row); without the salt the delete would key-match the refresh's
@@ -167,6 +159,43 @@ object Refresh {
     val key = idHash.getOrElse(0L) ^ (if (added.isEmpty) DeleteKeySalt else 0L)
     def touchedDbs(table: String): DataFrame =
       store.read(table).filter(col("db").isin(dbs: _*))
+
+    // url hash → ordinal, looked up ONCE: the old versions' docs rows
+    // (partition-pruned to the touched doc buckets), read BEFORE any
+    // write. They key the tombstones and the −df/−stats delta below.
+    val oldDocs: Seq[(Long, Long, String, Long)] =
+      touchedDbs("docs").join(ids, Seq("doc_id"), "leftsemi")
+        .select("doc_id", "ord", "site", "dl")
+        .as[(Long, Long, String, Long)].collect().toSeq
+    // A known url keeps its ordinal; a new one takes the next from
+    // `next_ord`, in hash order. A docs row at or above `next_ord` can
+    // only be this batch's own crashed attempt (the bump lands with the
+    // stats delta), so it is numbered as new again — a replay hands out
+    // exactly the ordinals the crashed attempt did.
+    val known = oldDocs.collect { case (id, ord, _, _) if ord < nextOrd => id -> ord }.toMap
+    val newIds = if (added.isEmpty) Nil else batchIds.filterNot(known.contains)
+    val ords = (known.toSeq ++ newIds.zipWithIndex.map { case (id, i) => id -> (nextOrd + i) })
+      .toDF("doc_id", "ord")
+    // the high-water also passes any crashed attempt's ordinal this
+    // commit retires, so that ordinal is never handed out again
+    val nextOrdAfter = ((nextOrd + newIds.size) +: oldDocs.map(_._2 + 1)).max
+    val addedWithOrd = added.map(_.join(broadcast(ords), Seq("doc_id")))
+
+    // the new versions' segment batch lands BEFORE the tombstones:
+    // tombstones first would orphan the old version on a crash before the
+    // delta lands; delta-then-tombstone means a crash re-runs the refresh
+    // idempotently (same ordinals, same batch semantics)
+    addedWithOrd.foreach { a =>
+      val post = a.select(col("ord"), col("site"), col("dl"),
+        explode(col("terms")).as(Seq("term", "tf")))
+      store.write(
+        IndexBuild.buildSegments(post, store.read("head_terms"), cfg,
+          spark.sparkContext.defaultParallelism).toDF,
+        s"segments/batch=$batch", SaveMode.Overwrite, partitionBy = Seq("bucket"))
+    }
+    if (oldDocs.nonEmpty)
+      store.write(oldDocs.map(d => (d._2, batch)).toDF("ord", "as_of_batch"),
+        "tombstones", SaveMode.Append)
 
     // touched terms = OLD versions' terms (forward doc_terms lookup,
     // partition-pruned to the touched doc buckets) ∪ NEW versions' terms,
@@ -191,25 +220,21 @@ object Refresh {
       // distinct docs per (term, site), and each doc contributes one per
       // distinct term, which is precisely what doc_terms stores). Old
       // rows are read BEFORE the dims are overwritten.
-      val oldDocs = touchedDbs("docs").join(ids, Seq("doc_id"), "leftsemi")
-        .select("doc_id", "site", "dl")
-      val minus = touchedDbs("doc_terms").join(ids, Seq("doc_id"), "leftsemi")
-        .select(col("doc_id"), explode(col("terms")).as("term"))
-        .join(oldDocs.select("doc_id", "site"), Seq("doc_id"))
+      val minus = touchedDbs("doc_terms")
+        .join(broadcast(oldDocs.map(d => (d._1, d._3)).toDF("doc_id", "site")), Seq("doc_id"))
+        .select(col("site"), explode(col("terms")).as("term"))
         .groupBy("term", "site").agg((-count(lit(1))).as("d"))
       val plus = added.map(_
         .select(col("site"), explode(map_keys(col("terms"))).as("term"))
         .groupBy("term", "site").agg(count(lit(1)).as("d")))
-      val (nRemoved, removedTokens) = oldDocs.agg(count(lit(1)), sum(col("dl")))
-        .as[(Long, Option[Long])].collect()(0)
       persistDimDelta(spark, store, batch, plus.fold(minus)(_.unionByName(minus)),
-        nAdded - nRemoved,
-        addedTokens.getOrElse(0L) - removedTokens.getOrElse(0L), key)
+        nAdded - oldDocs.size,
+        addedTokens.getOrElse(0L) - oldDocs.map(_._4).sum, nextOrdAfter, key)
     }
 
     // docs / doc_terms: rewrite ONLY the touched doc buckets
     val fresh = Seq(
-      "docs" -> added.map(_.select("doc_id", "url", "site", "lang", "dl")),
+      "docs" -> addedWithOrd.map(_.select("doc_id", "ord", "url", "site", "lang", "dl")),
       "doc_terms" -> added.map(_.select(col("doc_id"), map_keys(col("terms")).as("terms"))))
     for ((table, rows) <- fresh) {
       val kept = touchedDbs(table).join(ids, Seq("doc_id"), "left_anti")
@@ -263,11 +288,13 @@ object Refresh {
   /** Rewrite ONLY the given doc-bucket partitions of a dim table with
     * `content` (already restricted to those buckets). `content` is
     * snapshotted (lineage cut) because it reads the partitions it then
-    * overwrites; a bucket whose rows all died is dropped explicitly
-    * (dynamic overwrite never touches a partition absent from the data). */
+    * overwrites, and repartitioned by `db` first, as the build writes
+    * the dims, so each bucket gets one file rather than one per task; a
+    * bucket whose rows all died is dropped explicitly (dynamic overwrite
+    * never touches a partition absent from the data). */
   private def rewriteDocBuckets(store: TableStore, content: DataFrame,
       table: String, dbs: Seq[Int]): Unit = {
-    val snap = content.localCheckpoint(true)
+    val snap = content.repartition(col("db")).localCheckpoint(true)
     store.overwritePartitions(snap, table, Seq("db"))
     val alive = snap.select("db").distinct()
       .as[Int](org.apache.spark.sql.Encoders.scalaInt).collect().toSet
@@ -276,7 +303,8 @@ object Refresh {
 
   /** Apply an exact ±df delta to lemma_stats over only the touched term
     * buckets. `delta` columns: (term, site, d). Rows whose df reaches 0
-    * are dropped; buckets whose rows all died are dropped. */
+    * are dropped; buckets whose rows all died are dropped. The rewrite
+    * is repartitioned by `bucket`: one file per touched bucket. */
   private def applyLemmaStatsDelta(spark: SparkSession, store: TableStore,
       delta: DataFrame, cfg: IndexBuild.Config): Unit = {
     import spark.implicits._
@@ -296,6 +324,7 @@ object Refresh {
         (coalesce(col("df"), lit(0L)) + coalesce(col("d"), lit(0L))).as("df"))
       .filter(col("df") > 0)
       .withColumn("bucket", IndexBuild.termBucketCol(cfg.buckets))
+      .repartition(col("bucket"))
       .localCheckpoint(true)
     store.overwritePartitions(merged, "lemma_stats", Seq("bucket"))
     val alive = merged.select("bucket").distinct().as[Int].collect().toSet
@@ -303,13 +332,15 @@ object Refresh {
   }
 
   /** Adjust corpus stats (n_docs / avgdl / total_tokens) by the refresh
-    * delta — one tiny read + one tiny replace, no O(corpus) aggregation.
-    * (Uniqueness is enforced at build time; refresh replaces by doc_id,
-    * so n_distinct tracks n_docs exactly.) The applied batch is stamped
-    * INSIDE the same atomically-replaced row (`stats_as_of`), so a
-    * replayed batch can never double-apply this delta. */
+    * delta and raise the ordinal high-water to `nextOrd` — one tiny read
+    * + one tiny replace, no O(corpus) aggregation. (Uniqueness is
+    * enforced at build time; refresh replaces by doc_id, so n_distinct
+    * tracks n_docs exactly.) The applied batch is stamped INSIDE the
+    * same atomically-replaced row (`stats_as_of`), so a replayed batch
+    * can never double-apply this delta, and until it lands a replay
+    * numbers its new urls from the same `next_ord`. */
   private def applyStatsDelta(spark: SparkSession, store: TableStore,
-      dDocs: Long, dTokens: Long, asOfBatch: Int): Unit = {
+      dDocs: Long, dTokens: Long, nextOrd: Long, asOfBatch: Int): Unit = {
     val prev = store.read("stats").collect()(0)
     if (prev.getAs[Int]("stats_as_of") >= asOfBatch) return
     val n = prev.getAs[Long]("n_docs") + dDocs
@@ -323,7 +354,8 @@ object Refresh {
       lit(prev.getAs[Int]("n_batches")).as("n_batches"),
       lit(prev.getAs[Int]("site_groups")).as("site_groups"),
       lit(prev.getAs[Int]("buckets")).as("buckets"),
-      lit(asOfBatch).as("stats_as_of")),
+      lit(asOfBatch).as("stats_as_of"),
+      lit(math.max(nextOrd, IndexBuild.nextOrdOf(prev))).as("next_ord")),
       "stats")
   }
 
@@ -364,11 +396,11 @@ object Refresh {
     *     moves on. */
   private def persistDimDelta(spark: SparkSession, store: TableStore,
       batch: Int, deltaRows: DataFrame, dDocs: Long, dTokens: Long,
-      key: Long): Unit = {
+      nextOrd: Long, key: Long): Unit = {
     store.replace(deltaRows, s"dim_delta_$batch")
     store.replace(spark.range(1).select(
       lit(dDocs).as("d_docs"), lit(dTokens).as("d_tokens"),
-      lit(key).as("key")), s"dim_delta_stats_$batch")
+      lit(nextOrd).as("next_ord"), lit(key).as("key")), s"dim_delta_stats_$batch")
   }
 
   /** The persisted snapshot's content key for `batch`, if complete. */
@@ -387,12 +419,12 @@ object Refresh {
     }
     val d = store.read(s"dim_delta_stats_$batch").collect()(0)
     applyStatsDelta(spark, store,
-      d.getAs[Long]("d_docs"), d.getAs[Long]("d_tokens"), batch)
+      d.getAs[Long]("d_docs"), d.getAs[Long]("d_tokens"), d.getAs[Long]("next_ord"), batch)
     store.drop(s"dim_delta_$batch")
     store.drop(s"dim_delta_stats_$batch")
   }
 
-  /** Decoded, tombstone-filtered posting rows (term, shard, doc_id, tf,
+  /** Decoded, tombstone-filtered posting rows (term, shard, ord, tf,
     * dl) of the given index buckets: base segments as-of `asOf` plus
     * every pending delta batch, latest batch winning per doc. The result
     * is lineage-cut (localCheckpoint), so callers may overwrite the
@@ -402,8 +434,8 @@ object Refresh {
       buckets: Seq[Int], asOf: Int): DataFrame = {
     import spark.implicits._
     val tombDf = store.readOpt("tombstones")
-      .map(_.groupBy("doc_id").agg(max("as_of_batch").as("tomb_batch")))
-      .getOrElse(Seq.empty[(Long, Int)].toDF("doc_id", "tomb_batch"))
+      .map(_.groupBy("ord").agg(max("as_of_batch").as("tomb_batch")))
+      .getOrElse(Seq.empty[(Long, Int)].toDF("ord", "tomb_batch"))
     val base = store.read("index")
       .filter(col("bucket").isin(buckets: _*))
       .select(lit(asOf).as("batch"), col("term"), col("shard"), col("postings"))
@@ -417,10 +449,10 @@ object Refresh {
         PostingCodec.decode(bytes).iterator.map(p =>
           (batch, term, shard, p.docId, p.tf, p.dl))
       }
-      .toDF("batch", "term", "shard", "doc_id", "tf", "dl")
-      .join(tombDf, Seq("doc_id"), "left")
+      .toDF("batch", "term", "shard", "ord", "tf", "dl")
+      .join(tombDf, Seq("ord"), "left")
       .filter(col("tomb_batch").isNull || col("tomb_batch") <= col("batch"))
-      .select("term", "shard", "doc_id", "tf", "dl")
+      .select("term", "shard", "ord", "tf", "dl")
       .localCheckpoint(true)
   }
 
@@ -438,7 +470,7 @@ object Refresh {
       alive
         .repartition(numPartitions,
           IndexBuild.segShuffleKeys(buckets, numPartitions): _*)
-        .sortWithinPartitions("term", "shard", "doc_id"),
+        .sortWithinPartitions("term", "shard", "ord"),
       buckets)
   }
 
@@ -478,7 +510,7 @@ object Refresh {
       cfg0: IndexBuild.Config): Unit = {
     import spark.implicits._
     val store = TableStore.open(spark, outDir)
-    val cfg = layoutCfg(store, cfg0)
+    val cfg = layoutCfg(store.read("stats").collect()(0), cfg0)
     val asOf = indexAsOf(spark, outDir)
     val maxBatch = nextBatch(spark, outDir) - 1
     val buckets = pendingTouchedBuckets(spark, store, asOf)

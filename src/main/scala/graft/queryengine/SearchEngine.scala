@@ -88,6 +88,7 @@ final class SearchEngine(
 
   private def load(): IndexState = {
     val stats = store.read("stats").collect()(0)
+    IndexBuild.nextOrdOf(stats) // postings must carry doc ordinals
     val buckets = stats.getAs[Int]("buckets")
     // Delta-overlay read path (deferred compaction, Refresh/IndexStream
     // `compact = false`): when delta batches are pending beyond the
@@ -473,10 +474,11 @@ final class SearchEngine(
         SearchResponse(true, 0L, Seq.empty)
 
       case LocalHits(hits, totalCount) =>
-        // small/moderate result: driver ranking (data already local)
+        // small/moderate result: driver ranking (data already local);
+        // hit ids are doc ordinals, resolved to urls through `docs.ord`
         val hitsDf = hits.map(h => (h.docId, h.score, h.tfSum)).toSeq
-          .toDF("doc_id", "score", "tf_sum")
-        val joined = hitsDf.join(docsDf.select("doc_id", "url", "site"), Seq("doc_id"))
+          .toDF("ord", "score", "tf_sum")
+        val joined = hitsDf.join(docsDf.select("ord", "url", "site"), Seq("ord"))
         val filtered = site.fold(joined)(s => joined.filter(col("site") === s))
         val rows = filtered.select("url", "site", "score", "tf_sum")
           .as[(String, String, Double, Double)].collect()
@@ -508,8 +510,8 @@ final class SearchEngine(
         // large result: count / normalization max / top-(offset+limit)
         // all computed executor-side; ONLY the page slice is collected.
         lastRanked = Seq.empty
-        val joined = hitsDs.toDF
-          .join(docsDf.select("doc_id", "url", "site"), Seq("doc_id"))
+        val joined = hitsDs.toDF("ord", "score", "tf_sum")
+          .join(docsDf.select("ord", "url", "site"), Seq("ord"))
         val filtered = site.fold(joined)(s => joined.filter(col("site") === s))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val agg = filtered
@@ -559,7 +561,9 @@ final class SearchEngine(
   }
 
   /** Top-k only (the bench path): block-max pruned WAND, no presentation.
-    * Returns (docId, score) ranked (score DESC, url-independent docId ASC). */
+    * Returns (doc ordinal, score) ranked (score DESC, ordinal ASC); the
+    * ordinal is `docs.ord` — on a fresh build, ordinal order is doc_id
+    * (url hash) order. */
   def topK(query: String, k: Int, pruned: Boolean = true): Seq[(Long, Double)] = {
     ensureFresh()
     val qLemmas = Lemmatizer.lemmaCounts(query).keys.toSeq.sorted

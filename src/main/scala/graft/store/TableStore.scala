@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Storage abstraction for every engine table (SURVEY.md §7.3's decision
   * table: format = parquet in-sandbox, iceberg in production per the
@@ -139,9 +140,30 @@ final class ParquetStore(val spark: SparkSession, val root: String)
     }
   }
 
+  /** The table's schema-cache validator: (`_version`, dir mtime), or
+    * None when the dir cannot be stat'ed. The version moves on every
+    * overwrite/replace, the mtime on appends and on a dir re-created by
+    * another writer. */
+  private def stampOf(path: String): Option[(Long, Long)] =
+    try Some((versionOf(path), fs.getFileStatus(new Path(path)).getModificationTime))
+    catch { case _: java.io.IOException => None }
+
+  /** Parquet schema inference runs a footer-reading Spark job on every
+    * `spark.read.parquet`; a table whose validator is unchanged since the
+    * last read reuses that read's schema instead (zero jobs). */
   override def read(table: String): DataFrame = {
-    recover(pathOf(table))
-    spark.read.parquet(pathOf(table))
+    val path = pathOf(table)
+    recover(path)
+    val key = ParquetStore.keyOf(fs, path)
+    val stamp = stampOf(path)
+    Option(ParquetStore.schemas.get(key)) match {
+      case Some((schema, st)) if stamp.contains(st) =>
+        spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        stamp.foreach(st => ParquetStore.schemas.put(key, (df.schema, st)))
+        df
+    }
   }
 
   override def exists(table: String): Boolean = {
@@ -150,8 +172,12 @@ final class ParquetStore(val spark: SparkSession, val root: String)
   }
 
   override def write(df: DataFrame, table: String, mode: SaveMode,
-      partitionBy: Seq[String] = Nil): Unit = {
-    val path = pathOf(table)
+      partitionBy: Seq[String] = Nil): Unit =
+    try writeFiles(df, pathOf(table), mode, partitionBy)
+    finally ParquetStore.forget(fs, pathOf(table))
+
+  private def writeFiles(df: DataFrame, path: String, mode: SaveMode,
+      partitionBy: Seq[String]): Unit = {
     if (mode == SaveMode.Append && partitionBy.isEmpty) {
       // Append via STAGING: concurrent append jobs into one directory
       // share the Hadoop committer's `_temporary/0` dir and delete each
@@ -232,8 +258,9 @@ final class ParquetStore(val spark: SparkSession, val root: String)
     require(f.rename(new Path(staged), new Path(path)),
       s"replace: rename $staged -> $path failed (old table at $oldAside)")
     f.delete(new Path(oldAside), true)
-    // drop any cached plans/file listings for the location — readers
-    // re-list on next access
+    // drop any cached plans/file listings/schema for the location —
+    // readers re-list on next access
+    ParquetStore.forget(f, path)
     spark.catalog.refreshByPath(path)
   }
 
@@ -273,7 +300,7 @@ final class ParquetStore(val spark: SparkSession, val root: String)
 
   override def drop(table: String): Unit = {
     fs.delete(new Path(pathOf(table)), true)
-    ()
+    ParquetStore.forget(fs, pathOf(table))
   }
 
   override def markerExists(name: String): Boolean =
@@ -287,6 +314,26 @@ final class ParquetStore(val spark: SparkSession, val root: String)
 
   override def dropMarker(name: String): Unit = {
     fs.delete(new Path(s"$root/$name"), false)
+    ()
+  }
+}
+
+object ParquetStore {
+  /** Inferred schemas, JVM-wide (call sites open a new store per use),
+    * keyed by qualified table path, each with the validator it was read
+    * under (see `stampOf`). */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (StructType, (Long, Long))]()
+
+  private def keyOf(fs: FileSystem, path: String): String =
+    fs.makeQualified(new Path(path)).toString
+
+  /** Drop the cached schemas a mutation of `path` may have changed: the
+    * table itself, tables nested in it, and tables it is nested in (a
+    * write to `segments/batch=3` changes what `segments` reads). */
+  private def forget(fs: FileSystem, path: String): Unit = {
+    val p = keyOf(fs, path)
+    schemas.keySet().removeIf(k => k == p || k.startsWith(p + "/") || p.startsWith(k + "/"))
     ()
   }
 }

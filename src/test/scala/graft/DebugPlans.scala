@@ -34,7 +34,7 @@ object DebugPlans {
     println("===== segments build (expect ONE Exchange) =====")
     val head = spark.read.parquet(s"$work/idx/head_terms")
     val post = IndexBuild.analyze(ds)
-      .select(col("doc_id"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
+      .select(col("doc_id").as("ord"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
     val plan = IndexBuild.buildSegments(post, head, IndexBuild.Config(), 8)
       .queryExecution.executedPlan.toString
     println("Exchange count: " + "Exchange".r.findAllIn(plan).size)

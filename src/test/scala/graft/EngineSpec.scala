@@ -154,6 +154,23 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("topK on a fresh build ranks ordinals as the url hash did: (score desc, doc_id asc)") {
+    built
+    import spark.implicits._
+    val urlOf = spark.read.parquet(s"$indexDir/docs").select("ord", "url")
+      .as[(Long, String)].collect().toMap
+    assert(urlOf.keySet == (0L until urlOf.size.toLong).toSet, "ordinals must be dense")
+    for (q <- Seq(s"$commonForm $midLemma", rareForm, midLemma, s"$commonForm $midLemma $rareForm")) {
+      val exp = RefOracle.search(oracle, q, None, Bm25()).results
+        .sortBy(r => (-r.relevance, IndexBuild.stableDocId(r.url))).take(10).map(_.url)
+      assert(exp.nonEmpty, s"fixture: '$q' must match")
+      for (pruned <- Seq(true, false)) {
+        val got = engineBm.topK(q, 10, pruned).map { case (ord, _) => urlOf(ord) }
+        assert(got == exp, s"topK(pruned=$pruned) ranking differs for '$q'")
+      }
+    }
+  }
+
   test("resume: interrupted build + restart yields a segment-identical index (§7 H5)") {
     built
     val dirB = s"$workDir/idx_resume"
@@ -371,42 +388,8 @@ class EngineSpec extends AnyFunSuite {
     RuleExecutor.getCurrentMetrics().numRuns - before
   }
 
-  /** Runs `body` under job group `group` and returns its result with the
-    * number of Spark jobs that group launched. Attribution is by
-    * job-group id: the submitting thread's locals are captured across
-    * Spark's async AQE/broadcast submission
-    * (SQLExecution.withThreadLocalCaptured), so any job `body` launches —
-    * directly or via AQE — carries the group. */
-  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
-    val marker = s"$group-marker"
-    val queryJobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerJobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = js.properties.getProperty("spark.jobGroup.id")
-        if (g == group) queryJobs.incrementAndGet()
-        else if (g == marker) markerJobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "query under test")
-      val out = body
-      spark.sparkContext.setJobGroup(marker, "bus drain")
-      // the listener bus is async but FIFO: once the marker's JobStart is
-      // delivered, any earlier query job would already be counted
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 10000000000L
-      while (markerJobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(markerJobs.get() > 0, "marker job not observed — listener broken")
-      (out, queryJobs.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
+  private def jobsOf[T](group: String)(body: => T): (T, Int) =
+    JobCount(spark, group)(body)
 
   test("mid_terms prefetch hint: written at build, excludes every head term, top-df ordered, bounded") {
     built

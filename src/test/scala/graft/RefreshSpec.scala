@@ -635,4 +635,189 @@ class RefreshSpec extends AnyFunSuite {
         s"ranking mismatch for '$q' after bulk delete")
     }
   }
+
+  /** url → doc ordinal, from the docs dim. */
+  private def ordsOf(idx: String): Map[String, Long] = {
+    import spark.implicits._
+    spark.read.parquet(s"$idx/docs").select("url", "ord").as[(String, Long)].collect().toMap
+  }
+
+  private def nextOrdOf(idx: String): Long =
+    spark.read.parquet(s"$idx/stats").collect()(0).getAs[Long]("next_ord")
+
+  /** Lemmas from the dictionary's rare end that no indexed doc holds. */
+  private def unusedLemmas(idx: String): Seq[String] = {
+    import spark.implicits._
+    val used = spark.read.parquet(s"$idx/lemma_stats").select("term").as[String].collect().toSet
+    (150 until 200).map(RuDict.contentLemmas).filterNot(used)
+  }
+
+  /** Every doc ordinal some posting of the merged index carries. */
+  private def postingOrds(idx: String): Set[Long] = {
+    import spark.implicits._
+    spark.read.parquet(s"$idx/index").select("postings").as[Array[Byte]].collect()
+      .flatMap(b => graft.core.PostingCodec.decode(b).map(_.docId)).toSet
+  }
+
+  test("ordinals: a build numbers docs 0..n-1 in doc_id order; a rebuild and a killed-and-resumed build agree") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-ord-build").toString
+    val pages = buildSmall(work, idxCfg, 40)
+    val ords = ordsOf(s"$work/idx")
+    assert(ords.size == pages.size)
+    val byHash = pages.map(_.url).sortBy(IndexBuild.stableDocId)
+    assert(byHash.map(ords) == byHash.indices.map(_.toLong),
+      "ord must be the rank of the url hash among the built docs")
+    assert(nextOrdOf(s"$work/idx") == pages.size.toLong)
+    assert(postingOrds(s"$work/idx").subsetOf(ords.values.toSet))
+
+    val ds = spark.read.parquet(s"$work/pages")
+      .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
+    IndexBuild.run(spark, ds, s"$work/rebuild", idxCfg)
+    IndexBuild.mergeSegments(spark, s"$work/rebuild")
+    assert(IndexBuild.run(spark, ds, s"$work/resumed", idxCfg, stopAfter = 1) == 1)
+    assert(IndexBuild.run(spark, ds, s"$work/resumed", idxCfg) == idxCfg.nBatches - 1)
+    IndexBuild.mergeSegments(spark, s"$work/resumed")
+    def segments(idx: String): Map[(String, Int), Seq[Byte]] =
+      spark.read.parquet(s"$idx/index").select("term", "shard", "postings")
+        .as[(String, Int, Array[Byte])].collect()
+        .map { case (t, sh, b) => (t, sh) -> b.toSeq }.toMap
+    for (other <- Seq("rebuild", "resumed")) {
+      assert(ordsOf(s"$work/$other") == ords, s"$other: ordinals differ")
+      assert(nextOrdOf(s"$work/$other") == pages.size.toLong)
+      assert(segments(s"$work/$other") == segments(s"$work/idx"), s"$other: segments differ")
+    }
+  }
+
+  test("ordinals: a refresh keeps a known url's ord, a new url takes next_ord, a re-added url a fresh one") {
+    spark.sparkContext.setLogLevel("WARN")
+    val work = Files.createTempDirectory("graft-ord-refresh").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 40)
+    import spark.implicits._
+    val l = RuDict.contentLemmas
+    val u = unusedLemmas(idx)
+    assert(u.size >= 3, "fixture: three unused lemmas needed")
+    val n = pages.size.toLong
+    val known = pages.map(_.url).sorted.apply(3)
+    val ord0 = ordsOf(idx)(known)
+
+    Refresh.refreshPages(spark, idx,
+      spark.createDataset(Seq(page(known, html(u(0), s"${u(0)} ${l(2)}")))), idxCfg)
+    assert(ordsOf(idx)(known) == ord0, "a refreshed url must keep its ordinal")
+    assert(nextOrdOf(idx) == n)
+
+    val added = Seq("https://site0.test/p/new-b", "https://site1.test/p/new-a")
+      .sortBy(IndexBuild.stableDocId)
+    Refresh.refreshPages(spark, idx, spark.createDataset(added.map(url =>
+      page(url, html(u(1), s"${u(1)} ${l(3)}")))), idxCfg)
+    assert(added.map(ordsOf(idx)) == Seq(n, n + 1), "new urls take next_ord upward, in hash order")
+    assert(nextOrdOf(idx) == n + 2)
+
+    Refresh.deletePages(spark, idx, Seq(known), idxCfg)
+    assert(!ordsOf(idx).contains(known) && nextOrdOf(idx) == n + 2, "a delete leaves a hole")
+    assert(!postingOrds(idx).contains(ord0), "the deleted ordinal must have no posting")
+
+    Refresh.refreshPages(spark, idx,
+      spark.createDataset(Seq(page(known, html(u(2), s"${u(2)} ${l(4)}")))), idxCfg)
+    assert(ordsOf(idx)(known) == n + 2, "a re-added url must get a fresh ordinal")
+    assert(nextOrdOf(idx) == n + 3)
+    assert(!ordsOf(idx).values.exists(_ == ord0) && !postingOrds(idx).contains(ord0),
+      "the old ordinal must stay dead")
+    val ords = ordsOf(idx).values.toSeq
+    assert(ords.distinct.size == ords.size, "ordinals must stay unique")
+
+    val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
+    assert(engine.search(u(2), 0, 10, None).data.map(i => i.site + i.uri) == Seq(known))
+    assert(engine.search(u(1), 0, 10, None).data.map(i => i.site + i.uri).sorted == added.sorted)
+    assert(engine.search(u(0), 0, 10, None).count == 0)
+  }
+
+  test("ordinals: a refresh replayed after a crash assigns identical ordinals") {
+    spark.sparkContext.setLogLevel("WARN")
+    import scala.sys.process._
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-ord-replay").toString
+    val idx = s"$work/idx"
+    val cfgP = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 1, buckets = 16)
+    val pages = buildSmall(work, cfgP, 40)
+    val l = RuDict.contentLemmas
+    val batch = (pages.map(_.url).sorted.take(1) ++
+      Seq("https://site0.test/p/new-1", "https://site1.test/p/new-2", "https://site0.test/p/new-3"))
+      .map(u => page(u, html(l(190), s"${l(190)} ${l(191)}")))
+    def ds = spark.createDataset(batch)
+
+    // crash after the dims are rewritten, before the stats delta (and its
+    // next_ord bump) lands — the same injection as the replay tests above
+    if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
+      cancel("chattr +i unsupported on this filesystem")
+    try intercept[Throwable] { Refresh.refreshPages(spark, idx, ds, cfgP) }
+    finally { Seq("chattr", "-i", s"$idx/lemma_stats").! : Unit }
+    val crashed = ordsOf(idx)
+    assert(batch.forall(p => crashed.contains(p.url)), "fixture: docs must be rewritten")
+    assert(nextOrdOf(idx) == pages.size.toLong, "fixture: next_ord must not be bumped yet")
+
+    Refresh.refreshPages(spark, idx, ds, cfgP)
+    assert(ordsOf(idx) == crashed, "the replay must hand out the crashed attempt's ordinals")
+    assert(nextOrdOf(idx) == pages.size + 3L)
+    val ords = ordsOf(idx).values.toSeq
+    assert(ords.distinct.size == ords.size)
+  }
+
+  test("an unreadable lineage fails the commit and never reuses a pending batch id") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-lineage-error").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 40)
+    val l = RuDict.contentLemmas
+    val u = unusedLemmas(idx)
+    assert(u.size >= 2, "fixture: two unused lemmas needed")
+    val urls = pages.map(_.url).sorted
+    // a pending (uncompacted) refresh: its batch id is only in lineage
+    Refresh.refreshPages(spark, idx, spark.createDataset(Seq(
+      page(urls(1), html(u(0), s"${u(0)} ${l(2)}")))), idxCfg, compact = false)
+    val pending = Refresh.indexAsOf(spark, idx) + 1
+    def batchFiles(): Map[String, Seq[Byte]] = {
+      val root = new java.io.File(s"$idx/segments/batch=$pending")
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(root).filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getPath -> Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    val before = batchFiles()
+    assert(before.nonEmpty, "fixture: the pending batch must hold segments")
+
+    val junk = java.nio.file.Paths.get(s"$idx/lineage/a-unreadable.parquet")
+    Files.write(junk, "not parquet".getBytes(StandardCharsets.UTF_8))
+    def second = spark.createDataset(Seq(page(urls(2), html(u(1), s"${u(1)} ${l(2)}"))))
+    intercept[Throwable](Refresh.refreshPages(spark, idx, second, idxCfg, compact = false))
+    assert(batchFiles() == before, "the pending batch must not be overwritten")
+
+    Files.delete(junk)
+    Refresh.refreshPages(spark, idx, second, idxCfg, compact = false)
+    assert(spark.read.parquet(s"$idx/lineage").agg(org.apache.spark.sql.functions.max("partition_id"))
+      .as[Int].head() == pending + 1, "the next commit must take a fresh batch id")
+    val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
+    assert(engine.search(u(0), 0, 10, None).data.map(i => i.site + i.uri) == Seq(urls(1)))
+    assert(engine.search(u(1), 0, 10, None).data.map(i => i.site + i.uri) == Seq(urls(2)))
+  }
+
+  test("an index written before doc ordinals (no stats.next_ord) fails engine open and refresh: rebuild") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-ord-legacy").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    val store = graft.store.TableStore.open(spark, idx)
+    store.replace(store.read("stats").drop("next_ord").localCheckpoint(), "stats")
+    val open = intercept[IllegalStateException](
+      new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum))
+    assert(open.getMessage.contains("rebuild"), open.getMessage)
+    val refresh = intercept[IllegalStateException](
+      Refresh.refreshPages(spark, idx, spark.createDataset(pages.take(1)), idxCfg))
+    assert(refresh.getMessage.contains("rebuild"), refresh.getMessage)
+    intercept[IllegalStateException](Refresh.deletePages(spark, idx, Seq(pages.head.url), idxCfg))
+  }
 }

@@ -44,12 +44,12 @@ class SegmentCombineSpec extends AnyFunSuite {
           counts.valuesIterator.sum.toLong,
           counts.map { case (k, v) => k -> v.toLong })
       }
-      .toDF("doc_id", "url", "site", "dl", "terms")
-    val post = analyzed.select(col("doc_id"), col("site"), col("dl"),
+      .toDF("ord", "url", "site", "dl", "terms")
+    val post = analyzed.select(col("ord"), col("site"), col("dl"),
       explode(col("terms")).as(Seq("term", "tf")))
 
     // head set exactly as the build derives it (global df over sites)
-    val heads = post.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
+    val heads = post.groupBy("term").agg(countDistinct(col("ord")).as("df"))
       .filter(col("df") > cfg.saltThresholdDf).select("term")
 
     def saltedOf(p: org.apache.spark.sql.DataFrame) = p
@@ -57,16 +57,16 @@ class SegmentCombineSpec extends AnyFunSuite {
       .withColumn("shard",
         when(col("is_head"),
           (pmod(xxhash64(col("site")), lit(cfg.siteGroups)) * cfg.docSubshards +
-            pmod(xxhash64(col("doc_id")), lit(cfg.docSubshards))).cast("int"))
+            pmod(xxhash64(col("ord")), lit(cfg.docSubshards))).cast("int"))
           .otherwise(lit(-1)))
-      .select("term", "shard", "doc_id", "tf", "dl")
+      .select("term", "shard", "ord", "tf", "dl")
 
     val combined = IndexBuild.buildSegments(post, heads, cfg, numPartitions = 8)
       .collect()
     val rowPath = IndexBuild.encodeSortedRows(
       saltedOf(post)
         .repartition(8, IndexBuild.segShuffleKeys(cfg.buckets, 8): _*)
-        .sortWithinPartitions("term", "shard", "doc_id"),
+        .sortWithinPartitions("term", "shard", "ord"),
       cfg.buckets).collect()
 
     assert(combined.nonEmpty)

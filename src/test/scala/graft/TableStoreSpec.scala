@@ -151,4 +151,45 @@ class TableStoreSpec extends AnyFunSuite {
       assert(e.getMessage.contains("'orc'"), s"the error must name the value: ${e.getMessage}")
     } finally spark.conf.unset(key)
   }
+
+  private def jobsOf[T](group: String)(body: => T): (T, Int) =
+    JobCount(spark, group)(body)
+
+  test("read: re-reading an unchanged table runs no Spark job, from any store instance") {
+    val (store, root) = freshStore()
+    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    val (_, first) = jobsOf("schema-first")(store.read("t"))
+    assert(first > 0, "fixture: the first read infers the schema with a job")
+    val (df, again) = jobsOf("schema-again")(store.read("t"))
+    assert(again == 0, s"a re-read of an unchanged table ran $again jobs")
+    val (_, other) = jobsOf("schema-other")(TableStore.open(spark, root).read("t"))
+    assert(other == 0, s"a re-read through a new store ran $other jobs")
+    assert(df.schema.fieldNames.toSeq == Seq("x"))
+    assert(readX(store, "t") == 1L)
+  }
+
+  test("read: after a replace with a different schema, the new schema is read") {
+    import spark.implicits._
+    val (store, _) = freshStore()
+    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    assert(store.read("t").schema.fieldNames.toSeq == Seq("x"))
+    store.replace(Seq(("a", 2L)).toDF("name", "y"), "t")
+    val df = store.read("t")
+    assert(df.schema.fieldNames.toSeq == Seq("name", "y"))
+    assert(df.as[(String, Long)].collect().toSeq == Seq(("a", 2L)))
+  }
+
+  test("read: after drop and re-create, the new table's schema is read") {
+    import spark.implicits._
+    val (store, root) = freshStore()
+    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    assert(store.read("t").schema.fieldNames.toSeq == Seq("x"))
+    store.drop("t")
+    // re-created through another store instance: the cache is JVM-wide
+    TableStore.open(spark, root).write(Seq(("b", 3)).toDF("name", "z"), "t",
+      org.apache.spark.sql.SaveMode.Append)
+    val df = store.read("t")
+    assert(df.schema.fieldNames.toSeq == Seq("name", "z"))
+    assert(df.as[(String, Int)].collect().toSeq == Seq(("b", 3)))
+  }
 }
