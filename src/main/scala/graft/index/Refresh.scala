@@ -137,19 +137,17 @@ object Refresh {
     val batch = nextBatch(spark, outDir)
 
     // ONE agg over the batch: the touched doc buckets (tiny — they prune
-    // the dim partition reads), the added doc/token counts, the batch
+    // the dim partition reads), the added doc/token counts and the batch
     // content key (order-independent hash — drives snapshot reuse on
-    // replay) and the batch's doc ids in hash order (a refresh numbers
-    // its new urls in that order). A delete adds no version, so its dl
-    // is null. pmod before the sum: ANSI mode (Spark 4 default)
-    // overflows a sum of full-range xxhash64 values; 2^31-1 keys are
-    // plenty for a replay-detection content hash.
-    val (dbs, nAdded, addedTokens, idHash, batchIds) =
+    // replay). A delete adds no version, so its dl is null. pmod before
+    // the sum: ANSI mode (Spark 4 default) overflows a sum of full-range
+    // xxhash64 values; 2^31-1 keys are plenty for a replay-detection
+    // content hash.
+    val (dbs, nAdded, addedTokens, idHash) =
       added.getOrElse(ids.withColumn("dl", lit(null).cast("long")))
         .agg(collect_set(IndexBuild.docBucketCol(cfg.buckets)), count(col("dl")),
-          sum(col("dl")), sum(pmod(xxhash64(col("doc_id")), lit(2147483647L))),
-          sort_array(collect_list(col("doc_id"))))
-        .as[(Seq[Int], Long, Option[Long], Option[Long], Seq[Long])].collect()(0)
+          sum(col("dl")), sum(pmod(xxhash64(col("doc_id")), lit(2147483647L))))
+        .as[(Seq[Int], Long, Option[Long], Option[Long])].collect()(0)
     // a crashed refresh of doc set S followed by a delete of the SAME set
     // reuses the crashed batch id (nextBatch moves only at the lineage
     // row); without the salt the delete would key-match the refresh's
@@ -161,30 +159,40 @@ object Refresh {
       store.read(table).filter(col("db").isin(dbs: _*))
 
     // url hash → ordinal, looked up ONCE: the old versions' docs rows
-    // (partition-pruned to the touched doc buckets), read BEFORE any
-    // write. They key the tombstones and the −df/−stats delta below.
-    val oldDocs: Seq[(Long, Long, String, Long)] =
-      touchedDbs("docs").join(ids, Seq("doc_id"), "leftsemi")
-        .select("doc_id", "ord", "site", "dl")
-        .as[(Long, Long, String, Long)].collect().toSeq
-    // A known url keeps its ordinal; a new one takes the next from
-    // `next_ord`, in hash order. A docs row at or above `next_ord` can
-    // only be this batch's own crashed attempt (the bump lands with the
-    // stats delta), so it is numbered as new again — a replay hands out
-    // exactly the ordinals the crashed attempt did.
-    val known = oldDocs.collect { case (id, ord, _, _) if ord < nextOrd => id -> ord }.toMap
-    val newIds = if (added.isEmpty) Nil else batchIds.filterNot(known.contains)
-    val ords = (known.toSeq ++ newIds.zipWithIndex.map { case (id, i) => id -> (nextOrd + i) })
-      .toDF("doc_id", "ord")
-    // the high-water also passes any crashed attempt's ordinal this
-    // commit retires, so that ordinal is never handed out again
-    val nextOrdAfter = ((nextOrd + newIds.size) +: oldDocs.map(_._2 + 1)).max
-    val addedWithOrd = added.map(_.join(broadcast(ords), Seq("doc_id")))
+    // (partition-pruned to the touched doc buckets), lineage-cut because
+    // the docs rewrite below overwrites what they read, and materialized
+    // on the executors by the agg right here — before any write. They
+    // key the tombstones and the −df/−stats delta below.
+    val oldDocs = touchedDbs("docs").join(ids, Seq("doc_id"), "leftsemi")
+      .select("doc_id", "ord", "site", "dl")
+      .localCheckpoint(false)
+    val (nOld, oldTokens) = oldDocs.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
+      .as[(Long, Long)].collect()(0)
+    // A known url keeps its ordinal; the new ones (a refresh's ids are
+    // exactly its added docs) take `next_ord` upward in hash order,
+    // numbered on the thin id column.
+    val nNew = if (added.isEmpty) 0L else nAdded - nOld
+    val addedWithOrd = added.map { a =>
+      val fresh = a.select("doc_id").join(oldDocs, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"),
+          (lit(nextOrd - 1) + row_number().over(Window.orderBy("doc_id"))).as("ord"))
+      a.join(oldDocs.select("doc_id", "ord").unionByName(fresh).localCheckpoint(false),
+        Seq("doc_id"))
+    }
+    // Reserve the new ordinals BEFORE anything carries them, outside the
+    // stats_as_of gate: every ordinal written anywhere stays below
+    // `next_ord`, so no later commit hands one out again — not a replay
+    // of this one, nor a different op handed this batch id after a
+    // crash. A replay finds the ordinals this attempt already wrote into
+    // docs and keeps them; any it reserved but never wrote stay holes.
+    if (nNew > 0)
+      store.replace(store.read("stats")
+        .withColumn("next_ord", greatest(col("next_ord"), lit(nextOrd + nNew))), "stats")
 
     // the new versions' segment batch lands BEFORE the tombstones:
     // tombstones first would orphan the old version on a crash before the
     // delta lands; delta-then-tombstone means a crash re-runs the refresh
-    // idempotently (same ordinals, same batch semantics)
+    // idempotently (same batch semantics)
     addedWithOrd.foreach { a =>
       val post = a.select(col("ord"), col("site"), col("dl"),
         explode(col("terms")).as(Seq("term", "tf")))
@@ -193,8 +201,8 @@ object Refresh {
           spark.sparkContext.defaultParallelism).toDF,
         s"segments/batch=$batch", SaveMode.Overwrite, partitionBy = Seq("bucket"))
     }
-    if (oldDocs.nonEmpty)
-      store.write(oldDocs.map(d => (d._2, batch)).toDF("ord", "as_of_batch"),
+    if (nOld > 0)
+      store.write(oldDocs.select(col("ord"), lit(batch).as("as_of_batch")),
         "tombstones", SaveMode.Append)
 
     // touched terms = OLD versions' terms (forward doc_terms lookup,
@@ -221,15 +229,14 @@ object Refresh {
       // distinct term, which is precisely what doc_terms stores). Old
       // rows are read BEFORE the dims are overwritten.
       val minus = touchedDbs("doc_terms")
-        .join(broadcast(oldDocs.map(d => (d._1, d._3)).toDF("doc_id", "site")), Seq("doc_id"))
+        .join(oldDocs.select("doc_id", "site"), Seq("doc_id"))
         .select(col("site"), explode(col("terms")).as("term"))
         .groupBy("term", "site").agg((-count(lit(1))).as("d"))
       val plus = added.map(_
         .select(col("site"), explode(map_keys(col("terms"))).as("term"))
         .groupBy("term", "site").agg(count(lit(1)).as("d")))
       persistDimDelta(spark, store, batch, plus.fold(minus)(_.unionByName(minus)),
-        nAdded - oldDocs.size,
-        addedTokens.getOrElse(0L) - oldDocs.map(_._4).sum, nextOrdAfter, key)
+        nAdded - nOld, addedTokens.getOrElse(0L) - oldTokens, key)
     }
 
     // docs / doc_terms: rewrite ONLY the touched doc buckets
@@ -332,15 +339,14 @@ object Refresh {
   }
 
   /** Adjust corpus stats (n_docs / avgdl / total_tokens) by the refresh
-    * delta and raise the ordinal high-water to `nextOrd` — one tiny read
-    * + one tiny replace, no O(corpus) aggregation. (Uniqueness is
-    * enforced at build time; refresh replaces by doc_id, so n_distinct
-    * tracks n_docs exactly.) The applied batch is stamped INSIDE the
-    * same atomically-replaced row (`stats_as_of`), so a replayed batch
-    * can never double-apply this delta, and until it lands a replay
-    * numbers its new urls from the same `next_ord`. */
+    * delta — one tiny read + one tiny replace, no O(corpus) aggregation.
+    * (Uniqueness is enforced at build time; refresh replaces by doc_id,
+    * so n_distinct tracks n_docs exactly.) The applied batch is stamped
+    * INSIDE the same atomically-replaced row (`stats_as_of`), so a
+    * replayed batch can never double-apply this delta. `next_ord` is
+    * carried over: the commit reserved its ordinals before this point. */
   private def applyStatsDelta(spark: SparkSession, store: TableStore,
-      dDocs: Long, dTokens: Long, nextOrd: Long, asOfBatch: Int): Unit = {
+      dDocs: Long, dTokens: Long, asOfBatch: Int): Unit = {
     val prev = store.read("stats").collect()(0)
     if (prev.getAs[Int]("stats_as_of") >= asOfBatch) return
     val n = prev.getAs[Long]("n_docs") + dDocs
@@ -355,7 +361,7 @@ object Refresh {
       lit(prev.getAs[Int]("site_groups")).as("site_groups"),
       lit(prev.getAs[Int]("buckets")).as("buckets"),
       lit(asOfBatch).as("stats_as_of"),
-      lit(math.max(nextOrd, IndexBuild.nextOrdOf(prev))).as("next_ord")),
+      lit(IndexBuild.nextOrdOf(prev)).as("next_ord")),
       "stats")
   }
 
@@ -396,11 +402,11 @@ object Refresh {
     *     moves on. */
   private def persistDimDelta(spark: SparkSession, store: TableStore,
       batch: Int, deltaRows: DataFrame, dDocs: Long, dTokens: Long,
-      nextOrd: Long, key: Long): Unit = {
+      key: Long): Unit = {
     store.replace(deltaRows, s"dim_delta_$batch")
     store.replace(spark.range(1).select(
       lit(dDocs).as("d_docs"), lit(dTokens).as("d_tokens"),
-      lit(nextOrd).as("next_ord"), lit(key).as("key")), s"dim_delta_stats_$batch")
+      lit(key).as("key")), s"dim_delta_stats_$batch")
   }
 
   /** The persisted snapshot's content key for `batch`, if complete. */
@@ -419,7 +425,7 @@ object Refresh {
     }
     val d = store.read(s"dim_delta_stats_$batch").collect()(0)
     applyStatsDelta(spark, store,
-      d.getAs[Long]("d_docs"), d.getAs[Long]("d_tokens"), d.getAs[Long]("next_ord"), batch)
+      d.getAs[Long]("d_docs"), d.getAs[Long]("d_tokens"), batch)
     store.drop(s"dim_delta_$batch")
     store.drop(s"dim_delta_stats_$batch")
   }

@@ -140,28 +140,20 @@ final class ParquetStore(val spark: SparkSession, val root: String)
     }
   }
 
-  /** The table's schema-cache validator: (`_version`, dir mtime), or
-    * None when the dir cannot be stat'ed. The version moves on every
-    * overwrite/replace, the mtime on appends and on a dir re-created by
-    * another writer. */
-  private def stampOf(path: String): Option[(Long, Long)] =
-    try Some((versionOf(path), fs.getFileStatus(new Path(path)).getModificationTime))
-    catch { case _: java.io.IOException => None }
-
   /** Parquet schema inference runs a footer-reading Spark job on every
-    * `spark.read.parquet`; a table whose validator is unchanged since the
-    * last read reuses that read's schema instead (zero jobs). */
+    * `spark.read.parquet`; a table whose [[fingerprint]] is unchanged
+    * since the last read reuses that read's schema instead (zero jobs). */
   override def read(table: String): DataFrame = {
     val path = pathOf(table)
     recover(path)
     val key = ParquetStore.keyOf(fs, path)
-    val stamp = stampOf(path)
+    val stamp = fingerprint(Seq(table))
     Option(ParquetStore.schemas.get(key)) match {
-      case Some((schema, st)) if stamp.contains(st) =>
+      case Some((schema, st)) if st == stamp =>
         spark.read.schema(schema).parquet(path)
       case _ =>
         val df = spark.read.parquet(path)
-        stamp.foreach(st => ParquetStore.schemas.put(key, (df.schema, st)))
+        ParquetStore.schemas.put(key, (df.schema, stamp))
         df
     }
   }
@@ -320,10 +312,10 @@ final class ParquetStore(val spark: SparkSession, val root: String)
 
 object ParquetStore {
   /** Inferred schemas, JVM-wide (call sites open a new store per use),
-    * keyed by qualified table path, each with the validator it was read
-    * under (see `stampOf`). */
+    * keyed by qualified table path, each with the table's fingerprint
+    * when it was read. */
   private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, (StructType, (Long, Long))]()
+    new java.util.concurrent.ConcurrentHashMap[String, (StructType, Long)]()
 
   private def keyOf(fs: FileSystem, path: String): String =
     fs.makeQualified(new Path(path)).toString

@@ -192,6 +192,15 @@ class EngineSpec extends AnyFunSuite {
     val b = indexMap(dirB)
     assert(a.keySet == b.keySet)
     a.keys.foreach(k => assert(a(k) == b(k), s"segment bytes differ for $k"))
+
+    def ordsOf(dir: String): Map[String, Long] = {
+      import spark.implicits._
+      spark.read.parquet(s"$dir/docs").select("url", "ord").as[(String, Long)].collect().toMap
+    }
+    def nextOrdOf(dir: String): Long =
+      spark.read.parquet(s"$dir/stats").collect()(0).getAs[Long]("next_ord")
+    assert(ordsOf(dirB) == ordsOf(indexDir), "doc ordinals differ")
+    assert(nextOrdOf(dirB) == nextOrdOf(indexDir))
   }
 
   test("statistics: per-site rows + TOTAL row with status lifecycle (A7/A8, reference parity)") {

@@ -659,9 +659,8 @@ class RefreshSpec extends AnyFunSuite {
       .flatMap(b => graft.core.PostingCodec.decode(b).map(_.docId)).toSet
   }
 
-  test("ordinals: a build numbers docs 0..n-1 in doc_id order; a rebuild and a killed-and-resumed build agree") {
+  test("ordinals: a build numbers docs 0..n-1 in doc_id order") {
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
     val work = Files.createTempDirectory("graft-ord-build").toString
     val pages = buildSmall(work, idxCfg, 40)
     val ords = ordsOf(s"$work/idx")
@@ -671,23 +670,6 @@ class RefreshSpec extends AnyFunSuite {
       "ord must be the rank of the url hash among the built docs")
     assert(nextOrdOf(s"$work/idx") == pages.size.toLong)
     assert(postingOrds(s"$work/idx").subsetOf(ords.values.toSet))
-
-    val ds = spark.read.parquet(s"$work/pages")
-      .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
-    IndexBuild.run(spark, ds, s"$work/rebuild", idxCfg)
-    IndexBuild.mergeSegments(spark, s"$work/rebuild")
-    assert(IndexBuild.run(spark, ds, s"$work/resumed", idxCfg, stopAfter = 1) == 1)
-    assert(IndexBuild.run(spark, ds, s"$work/resumed", idxCfg) == idxCfg.nBatches - 1)
-    IndexBuild.mergeSegments(spark, s"$work/resumed")
-    def segments(idx: String): Map[(String, Int), Seq[Byte]] =
-      spark.read.parquet(s"$idx/index").select("term", "shard", "postings")
-        .as[(String, Int, Array[Byte])].collect()
-        .map { case (t, sh, b) => (t, sh) -> b.toSeq }.toMap
-    for (other <- Seq("rebuild", "resumed")) {
-      assert(ordsOf(s"$work/$other") == ords, s"$other: ordinals differ")
-      assert(nextOrdOf(s"$work/$other") == pages.size.toLong)
-      assert(segments(s"$work/$other") == segments(s"$work/idx"), s"$other: segments differ")
-    }
   }
 
   test("ordinals: a refresh keeps a known url's ord, a new url takes next_ord, a re-added url a fresh one") {
@@ -748,21 +730,63 @@ class RefreshSpec extends AnyFunSuite {
       .map(u => page(u, html(l(190), s"${l(190)} ${l(191)}")))
     def ds = spark.createDataset(batch)
 
-    // crash after the dims are rewritten, before the stats delta (and its
-    // next_ord bump) lands — the same injection as the replay tests above
+    // crash after the dims are rewritten, before the stats delta lands —
+    // the same injection as the replay tests above
     if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
       cancel("chattr +i unsupported on this filesystem")
     try intercept[Throwable] { Refresh.refreshPages(spark, idx, ds, cfgP) }
     finally { Seq("chattr", "-i", s"$idx/lemma_stats").! : Unit }
     val crashed = ordsOf(idx)
     assert(batch.forall(p => crashed.contains(p.url)), "fixture: docs must be rewritten")
-    assert(nextOrdOf(idx) == pages.size.toLong, "fixture: next_ord must not be bumped yet")
+    assert(nextOrdOf(idx) == pages.size + 3L, "the new ordinals are reserved before docs carries them")
 
     Refresh.refreshPages(spark, idx, ds, cfgP)
     assert(ordsOf(idx) == crashed, "the replay must hand out the crashed attempt's ordinals")
     assert(nextOrdOf(idx) == pages.size + 3L)
     val ords = ordsOf(idx).values.toSeq
     assert(ords.distinct.size == ords.size)
+  }
+
+  test("ordinals: a different commit handed a crashed commit's batch id never reuses its ordinals") {
+    spark.sparkContext.setLogLevel("WARN")
+    import scala.sys.process._
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-ord-crash-other").toString
+    val idx = s"$work/idx"
+    val cfgP = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 1, buckets = 16)
+    val pages = buildSmall(work, cfgP, 40)
+    val l = RuDict.contentLemmas
+    val u = unusedLemmas(idx)
+    assert(u.size >= 4, "fixture: four unused lemmas needed")
+    // the crashed urls 0 and 2 share a lemma; each url searched for has its own
+    val lemmaOf = Map(0 -> u(0), 1 -> u(1), 2 -> u(0), 3 -> u(2), 4 -> u(3))
+    def refresh(i: Int) = Refresh.refreshPages(spark, idx, spark.createDataset(Seq(
+      page(s"https://site${i % 2}.test/p/new-$i", html(lemmaOf(i), s"${lemmaOf(i)} ${l(2)}")))), cfgP)
+    def crashing(table: String)(body: => Unit): Unit = {
+      if (Seq("chattr", "+i", s"$idx/$table").! != 0)
+        cancel("chattr +i unsupported on this filesystem")
+      try intercept[Throwable](body)
+      finally { Seq("chattr", "-i", s"$idx/$table").! : Unit }
+    }
+    // new url 0 dies after its docs row landed, before any stats delta;
+    // new url 1 is then handed the same batch id
+    crashing("lemma_stats")(refresh(0))
+    assert(ordsOf(idx).contains("https://site0.test/p/new-0"), "fixture: docs must be rewritten")
+    refresh(1)
+    // new url 2 dies after its dim deltas landed, before its lineage
+    // row; new url 3 is handed that batch id, so the batch-id gates drop
+    // its dim deltas (and with them its df: it is not searched for
+    // below), and new url 4 follows in a fresh batch
+    crashing("lineage")(refresh(2))
+    refresh(3)
+    refresh(4)
+    val ords = ordsOf(idx).values.toSeq
+    assert(ords.distinct.size == ords.size, s"ordinals must stay unique: ${ords.sorted}")
+    assert(nextOrdOf(idx) > ords.max)
+    val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
+    for (i <- Seq(1, 4))
+      assert(engine.search(lemmaOf(i), 0, 10, None).data.map(r => r.site + r.uri) ==
+        Seq(s"https://site${i % 2}.test/p/new-$i"), s"new url $i must be found alone")
   }
 
   test("an unreadable lineage fails the commit and never reuses a pending batch id") {
