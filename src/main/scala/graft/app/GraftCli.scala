@@ -13,7 +13,7 @@ import graft.queryengine.{SearchEngine, Statistics}
   *   build  <pagesDir> <indexDir> [nBatches]          — full index build (resumable)
   *   merge  <indexDir>                                — segment sort-merge
   *   search <indexDir> <pagesDir> <tfsum|bm25> <query> [offset] [limit] [siteUrl]
-  *   stats  <indexDir>                                — per-site statistics
+  *   stats  <indexDir>                                — manifest summary + per-site statistics
   *   indexpage <pagesDir> <indexDir> <url>            — /api/indexPage with error shapes
   *   stream <pagesDir> <indexDir> [once]              — continuous page-feed ingest
   *   stop   <indexDir>                                — graceful stop of a running build
@@ -108,6 +108,13 @@ object GraftCli {
         }
 
       case "stats" :: indexDir :: Nil =>
+        val m = graft.store.TableStore.open(spark, indexDir).manifest.getOrElse(
+          sys.error(s"$indexDir holds no index commit manifest: rebuild it with `GraftCli build`"))
+        println(s"manifest v${m.version}: as_of batch ${m.asOf}, pending batches " +
+          m.pending.map(_.batch).mkString("[", ", ", "]"))
+        m.tables.toSeq.sortBy(_._1).foreach { case (t, meta) =>
+          println(f"  $t%-12s ${meta.bytes}%,12d bytes live in ${meta.parts.size} parts")
+        }
         Statistics.compute(spark, indexDir).show(50, truncate = false)
 
       case "indexpage" :: pagesDir :: indexDir :: url :: Nil =>

@@ -1,12 +1,12 @@
 package graft.index
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Lemmatizer, PostingCodec}
 import graft.corpus.PageRow
-import graft.store.TableStore
+import graft.store.{Commit, Lineage, Manifest, Stats, TableStore}
 
 /** Physical posting segment: delta+varint-encoded run of one (term,
   * shard), sorted by doc ORDINAL (`docs.ord`, see [[IndexBuild]]);
@@ -44,8 +44,8 @@ final case class SegPartial(term: String, shard: Int, blob: Array[Byte])
   *    term's sharding is identical across resumable batches;
   *  - segments carry block-max metadata for WAND (PostingCodec);
   *  - builds are resumable: the doc space is split into `nBatches` by
-  *    site hash; each batch commits segments first, then a lineage row
-  *    as the commit point (SURVEY.md §7 H5); completed batches are
+  *    site hash; each batch is one manifest commit carrying its segments
+  *    and its lineage row (SURVEY.md §7 H5); completed batches are
   *    skipped on restart.
   *
   * Doc identity has two forms. The url hash (`doc_id`, [[stableDocId]])
@@ -54,11 +54,11 @@ final case class SegPartial(term: String, shard: Int, blob: Array[Byte])
   * (segments, tombstones, the engine's hits) carries the dense doc
   * ORDINAL `docs.ord` instead: a build numbers its docs 0..n-1 in
   * doc_id order (see `runInner`) and records the high-water
-  * `stats.next_ord`; a refresh keeps a known url's ordinal and numbers
-  * new urls upward from `next_ord`, and a delete leaves a hole. Dense
-  * ordinals make the codec's doc gaps ~1 varint byte instead of the ~8
-  * a 63-bit hash gap needs. An index written without `next_ord` must be
-  * rebuilt ([[nextOrdOf]]).
+  * `next_ord` in the manifest's stats; a refresh keeps a known url's
+  * ordinal and numbers new urls upward from `next_ord`, and a delete
+  * leaves a hole. Dense ordinals make the codec's doc gaps ~1 varint
+  * byte instead of the ~8 a 63-bit hash gap needs. An index dir without
+  * a manifest must be rebuilt ([[statsOf]]).
   */
 object IndexBuild {
 
@@ -515,17 +515,12 @@ object IndexBuild {
 
   def docBucketOf(docId: Long, buckets: Int): Int = (docId % buckets).toInt
 
-  /** The ordinal high-water mark of an index's `stats` row: every doc
-    * ordinal ever handed out is below it. An index written before doc
-    * ordinals has no such column — its postings carry url hashes, which
-    * no reader decodes any more, so it must be rebuilt. */
-  def nextOrdOf(stats: org.apache.spark.sql.Row): Long = {
-    if (!stats.schema.fieldNames.contains("next_ord"))
-      throw new IllegalStateException(
-        "index predates dense doc ordinals (its stats row has no next_ord): " +
-          "rebuild it with `GraftCli build`")
-    stats.getAs[Long]("next_ord")
-  }
+  /** The stats of manifest `m`, present once a build committed a
+    * batch: an index dir without them (no manifest at all, or one written
+    * before manifests existed) must be rebuilt. */
+  def statsOf(m: Manifest, root: String): Stats =
+    m.stats.getOrElse(throw new IllegalStateException(
+      s"$root holds no index commit manifest: rebuild it with `GraftCli build`"))
 
   /** Width of the persisted mid_terms prefetch-hint table: the number of
     * next-hottest non-head terms the engine prefetches after the head
@@ -540,23 +535,23 @@ object IndexBuild {
     * table — run once per build and once per compaction, so engine
     * reloads never aggregate the vocabulary. The stored df is an ORDERING
     * hint only (the engine re-reads current dfs exactly). */
-  def writeMidTerms(store: TableStore): Unit = {
-    val heads = store.readOpt("head_terms")
-      .getOrElse(store.spark.range(0).select(col("id").cast("string").as("term")))
-    store.write(
-      store.read("lemma_stats")
+  def writeMidTerms(c: Commit): Unit =
+    c.put(
+      c.read("lemma_stats")
         .groupBy("term").agg(sum(col("df")).as("df"))
-        .join(broadcast(heads.select("term")), Seq("term"), "left_anti")
+        .join(broadcast(c.read("head_terms").select("term")), Seq("term"), "left_anti")
         .orderBy(col("df").desc, col("term"))
         .limit(MidTermsWidth),
-      "mid_terms", SaveMode.Overwrite)
-  }
+      "mid_terms")
 
-  /** Full resumable build to `outDir`:
-    * {docs, lemma_stats, stats, segments/batch=i/bucket=b, lineage}.
-    * Restart-safe: a batch whose lineage row says COMPLETE is skipped;
-    * lineage is appended only AFTER its segment write commits
-    * (SURVEY.md §7 H5). Returns the number of batches actually built. */
+  /** Full resumable build to `outDir`: one commit per batch — its
+    * segments (`segments` at `batch=i`, or `index` for a single-batch
+    * build), its sites' status rows and its lineage row, plus, with the
+    * first batch a run commits, the dims {docs, doc_terms, lemma_stats,
+    * head_terms, mid_terms} and the stats. Restart-safe: a batch whose
+    * lineage row says COMPLETE is skipped, and a crashed batch left
+    * nothing visible (SURVEY.md §7 H5). Returns the number of batches
+    * actually built. */
   def run(spark: SparkSession, pages: Dataset[PageRow], outDir: String,
       cfg: Config = Config(), stopAfter: Int = Int.MaxValue,
       clearStopMarker: Boolean = true): Int = {
@@ -575,10 +570,8 @@ object IndexBuild {
     // overhead than its re-planning costs; the build's explicit
     // `repartition(N, …)` widths are respected either way).
     // committer v2 is a BUILD-scoped decision (its mid-commit caveat is
-    // argued void only for the lineage-gated build below) — it must not
-    // leak onto later same-session writes (compaction partition
-    // overwrites, store.replace), whose crash-convergence arguments
-    // assume the default committer
+    // argued void for the staged build writes below) — it must not leak
+    // onto later same-session writes such as a corpus `store.replace`
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val committerWas = Option(
       hadoopConf.get("mapreduce.fileoutputcommitter.algorithm.version"))
@@ -603,10 +596,9 @@ object IndexBuild {
     // instead of the driver serially renaming every task dir at JOB commit
     // — with 32 reduce tasks × up to `buckets` bucket files that driver
     // loop is a measurable serial tail. v2's caveat (a job failing
-    // mid-commit leaves partial files visible) is void here: visibility is
-    // governed by the LINEAGE commit row written after the data (batch
-    // retried from scratch on failure), `replace` stages behind a
-    // completeness marker, and the tiny appends are single-task.
+    // mid-commit leaves partial files visible) is void here: every build
+    // write is staged under a fresh name that only the batch's manifest
+    // publish makes visible.
     spark.sparkContext.hadoopConfiguration
       .setInt("mapreduce.fileoutputcommitter.algorithm.version", 2)
     // Shuffle width = the session's declared shuffle partitioning, NOT the
@@ -627,6 +619,9 @@ object IndexBuild {
     // NOT be dropped (the reference's RunIndexMonitor flag can never
     // lose a stop).
     if (clearStopMarker) store.dropMarker(StopMarker)
+    val done = completedBatches(spark, outDir)
+    val todo = (0 until cfg.nBatches).filterNot(done)
+    if (todo.isEmpty) return 0
 
     // ONE extract+lemmatize pass over the corpus, persisted (memory+disk
     // spill) — docs, lemma_stats and every posting batch derive from it.
@@ -679,48 +674,18 @@ object IndexBuild {
         element_at(typedLit(rangeOffset), col("rb") + 1) + col("rank") - 1)
       .drop("rb", "rank")
 
-    // The three dimension/stat writes are INDEPENDENT jobs over the same
-    // persisted analyze pass; submit them from separate threads so their
-    // small stages and driver-side planning/commit gaps overlap (a real
-    // cluster runs exactly this way). Each is driver-latency-bound more
-    // than core-bound, so the overlap collapses a serial ~6 s tail at
-    // high parallelism without affecting the 1-thread level (which
-    // serializes on its single core either way). Futures are joined
-    // before anything depends on the written tables.
+    // The dimension writes are INDEPENDENT jobs over the same persisted
+    // analyze pass; submit them from separate threads so their small
+    // stages and driver-side planning/commit gaps overlap (a real cluster
+    // runs exactly this way). Each is driver-latency-bound more than
+    // core-bound, so the overlap collapses a serial ~6 s tail at high
+    // parallelism without affecting the 1-thread level (which serializes
+    // on its single core either way). They are joined before the commit
+    // that carries them publishes.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-
-    // dims are BUCKET-PARTITIONED by doc id (`db`) / term (`bucket`):
-    // that is what makes a later refresh/delete O(touched) — it rewrites
-    // only the partitions holding the affected rows (Refresh.refreshPages).
-    // Each dim is REPARTITIONED BY ITS PARTITION COLUMN before the write:
-    // without it every cache partition holds every bucket and the dynamic
-    // writer opens tasks × buckets parquet files (32 × 16 = 512 per dim
-    // here) — measured 10-12 s per dim at 1 thread on a 100k corpus, all
-    // of it per-file open/footer fixed cost. One small shuffle instead
-    // collapses that to ~1 file per bucket; at cluster scale this is the
-    // standard small-files compaction shape (files stay splittable, so
-    // read parallelism is unchanged).
-    val docsF = Future(store.write(
-      analyzed.select("doc_id", "ord", "url", "site", "lang", "dl")
-        .withColumn("db", docBucketCol(cfg.buckets))
-        .repartition(cfg.buckets, col("db")),
-      "docs", SaveMode.Overwrite, partitionBy = Seq("db")))
-
-    // FORWARD index (doc -> its distinct terms): the structure that makes
-    // a later single-page refresh/delete O(doc) instead of O(corpus) —
-    // it names exactly the term-buckets a doc's postings live in, so
-    // compaction rewrites only those partitions (Refresh.compactTouched).
-    // The reference gets this for free from its relational index table
-    // (IndexEntity rows by page_id); a posting-list engine must store it
-    // explicitly (Lucene's analogue: per-doc term vectors).
-    val docTermsF = Future(store.write(
-      analyzed.select(col("doc_id"), map_keys(col("terms")).as("terms"))
-        .withColumn("db", docBucketCol(cfg.buckets))
-        .repartition(cfg.buckets, col("db")),
-      "doc_terms", SaveMode.Overwrite, partitionBy = Seq("db")))
 
     val post = analyzed
       .select(col("ord"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
@@ -735,32 +700,21 @@ object IndexBuild {
     val lemmaStats = post.groupBy("term", "site").agg(count(lit(1)).as("df"))
       .withColumn("bucket", termBucketCol(cfg.buckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lemmaStatsF = Future(store.write(
-      lemmaStats.repartition(cfg.buckets, col("bucket")),
-      "lemma_stats", SaveMode.Overwrite, partitionBy = Seq("bucket")))
 
-    // Global stats for BM25 (N, avgdl) + build config — one tiny row,
-    // already collected by the analyze-materializing aggregation above
-    // (`perRange`) and written back as a literal row: the cache-materializing
-    // scan IS the stats job, so no separate agg-then-collect pass runs.
+    // Global stats for BM25 (N, avgdl) + build layout, already collected
+    // by the analyze-materializing aggregation above (`perRange`): the
+    // cache-materializing scan IS the stats job. They travel in the
+    // manifest.
     require(nDocs == nDistinct,
       s"doc_id hash collision or duplicate url: ${nDocs - nDistinct}")
-    val statsRow = spark.range(1).select(
-      lit(nDocs).as("n_docs"),
-      lit(nDistinct).as("n_distinct"),
-      lit(if (nDocs > 0) totalTokens.toDouble / nDocs else 0.0).as("avgdl"),
-      lit(totalTokens).as("total_tokens"),
-      lit(cfg.shards).as("shards"),
-      lit(cfg.nBatches).as("n_batches"),
-      lit(cfg.siteGroups).as("site_groups"),
-      lit(cfg.buckets).as("buckets"),
-      // highest refresh batch whose corpus delta is applied (Refresh)
-      lit(0).as("stats_as_of"),
+    val stats = Stats(
+      n_docs = nDocs, n_distinct = nDistinct,
+      avgdl = if (nDocs > 0) totalTokens.toDouble / nDocs else 0.0,
+      total_tokens = totalTokens,
+      shards = cfg.shards, n_batches = cfg.nBatches,
+      site_groups = cfg.siteGroups, buckets = cfg.buckets,
       // doc-ordinal high-water: the next ordinal a new url is given
-      lit(nDocs).as("next_ord"))
-    // stats is a derived dimension, not the commit point — write it in the
-    // background and join before the first lineage commit below
-    val statsWriteF = Future(store.write(statsRow, "stats", SaveMode.Overwrite))
+      next_ord = nDocs)
 
     // Global salted-term decision — identical across batches/restarts —
     // plus the single-batch lineage metrics, all from ONE aggregation job
@@ -770,13 +724,12 @@ object IndexBuild {
     // < total_postings / saltThresholdDf terms (a few thousand even at
     // 10^12 docs), and shipping it as a literal local relation makes the
     // salting join a broadcast with no extra scan or read-back job.
-    val statsDf = lemmaStats
     // per-term global df, shared by the head/counts collect AND the
     // mid_terms TakeOrdered below — cached so lemma_stats is scanned and
     // re-aggregated once, not once per consumer. Vocabulary-sized
     // (term, df) pairs: a few MB here, a few GB across a cluster at
     // 10^12 docs — well inside executor storage either way.
-    val termDf = statsDf.groupBy("term").agg(sum(col("df")).as("df"))
+    val termDf = lemmaStats.groupBy("term").agg(sum(col("df")).as("df"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val headAgg = termDf
       .agg(
@@ -787,223 +740,193 @@ object IndexBuild {
       .collect()(0)
     val headArr: Seq[String] = headAgg.getSeq[String](2)
     val headDf = headArr.toDF("term")
-    // head_terms is persisted for the query engine / refresh path, but the
-    // build itself salts from the in-memory literal — background the write
-    val headTermsWriteF = Future(store.write(headDf, "head_terms", SaveMode.Overwrite))
-    // mid_terms: the next-hottest terms below the salt threshold, persisted
-    // as a PREFETCH HINT so the engine's cold-start warm never has to run
-    // an O(vocabulary) aggregation per reload (it did, until round 5's
-    // ADVICE flagged it). Ordering hint only — the engine re-derives the
-    // terms' CURRENT dfs through its exact lookup path, so staleness
-    // between compactions can never touch scoring. At build time the head
-    // set IS `df > saltThresholdDf` over this very termDf, so the filter
-    // below is exactly writeMidTerms's anti-join against the head table
-    // (that function remains the compaction-cadence path, where the
-    // persisted head set may predate a different threshold) — one
-    // TakeOrdered over the cached per-term df instead of a second
-    // lemma_stats scan + groupBy + broadcast anti-join chained behind the
-    // head_terms write.
-    val midTermsWriteF = Future(
-      store.write(
+
+    /** Stage the dims into `c`, each from its own thread. */
+    def stageDims(c: Commit): Seq[Future[Unit]] = Seq(
+      // dims are BUCKET-PARTITIONED by doc id (`db`) / term (`bucket`):
+      // that is what makes a later refresh/delete O(touched) — it
+      // rewrites only the partitions holding the affected rows
+      // (Refresh.refreshPages). Each dim is REPARTITIONED BY ITS
+      // PARTITION COLUMN before the write: without it every cache
+      // partition holds every bucket and the dynamic writer opens
+      // tasks × buckets parquet files (32 × 16 = 512 per dim here) —
+      // measured 10-12 s per dim at 1 thread on a 100k corpus, all of it
+      // per-file open/footer fixed cost. One small shuffle instead
+      // collapses that to ~1 file per bucket.
+      Future(c.put(
+        analyzed.select("doc_id", "ord", "url", "site", "lang", "dl")
+          .withColumn("db", docBucketCol(cfg.buckets))
+          .repartition(cfg.buckets, col("db")),
+        "docs", Seq("db"))),
+      // FORWARD index (doc -> its distinct terms): the structure that
+      // makes a later single-page refresh/delete O(doc) instead of
+      // O(corpus) — it names exactly the term-buckets a doc's postings
+      // live in, so compaction rewrites only those partitions
+      // (Refresh.compactTouched). The reference gets this for free from
+      // its relational index table (IndexEntity rows by page_id); a
+      // posting-list engine must store it explicitly (Lucene's analogue:
+      // per-doc term vectors).
+      Future(c.put(
+        analyzed.select(col("doc_id"), map_keys(col("terms")).as("terms"))
+          .withColumn("db", docBucketCol(cfg.buckets))
+          .repartition(cfg.buckets, col("db")),
+        "doc_terms", Seq("db"))),
+      Future(c.put(lemmaStats.repartition(cfg.buckets, col("bucket")),
+        "lemma_stats", Seq("bucket"))),
+      // head_terms is read by the query engine / refresh path; the build
+      // itself salts from the in-memory literal
+      Future(c.put(headDf, "head_terms")),
+      // mid_terms: the next-hottest terms below the salt threshold,
+      // persisted as a PREFETCH HINT so the engine's cold-start warm
+      // never runs an O(vocabulary) aggregation per reload. Ordering
+      // hint only — the engine re-derives the terms' CURRENT dfs through
+      // its exact lookup path. At build time the head set IS
+      // `df > saltThresholdDf` over this very termDf, so the filter is
+      // exactly writeMidTerms's anti-join against the head table (that
+      // function remains the compaction-cadence path).
+      Future(c.put(
         termDf.filter(col("df") <= cfg.saltThresholdDf)
           .orderBy(col("df").desc, col("term")).limit(MidTermsWidth),
-        "mid_terms", SaveMode.Overwrite))
-    midTermsWriteF.onComplete(_ => termDf.unpersist())
-    // every dimension write must be durable before a lineage row declares
-    // the batch COMPLETE (lineage is the commit point)
-    def awaitDims(): Unit =
-      Seq(docsF, docTermsF, lemmaStatsF, statsWriteF, headTermsWriteF,
-          midTermsWriteF)
-        .foreach(Await.result(_, Duration.Inf))
+        "mid_terms")))
 
     // ── per-site status lifecycle (reference site.status / status_time /
-    // last_error; Site.java:16-34, SiteServiceImpl.java:83-91): the build
-    // appends INDEXING rows for every site up front, an INDEXED row per
-    // site when its batch's lineage commits, and FAILED rows (with the
-    // error) if a batch throws. Statistics reads the latest row per site.
-    // All writes are appends of tiny site lists — background futures. ──
-    // appends to the SAME table directory share the Hadoop committer's
-    // `_temporary/0` staging dir — two append jobs running concurrently
-    // delete each other's attempt dirs at job cleanup ("Mkdirs failed to
-    // create …/_temporary/…"). Status appends therefore run on ONE
-    // background CHAIN: overlapped with the build, serialized among
-    // themselves (which also keeps INDEXING→INDEXED row order).
-    var statusFutures = List.empty[Future[Unit]]
-    var statusChain: Future[Unit] = Future.successful(())
-    def appendStatus(sites: DataFrame, status: String, error: String): Future[Unit] = {
-      val f = statusChain.map { _ =>
-        store.write(
-          sites.select(col("site"), lit(status).as("status"),
-            lit(error).cast("string").as("error"),
-            current_timestamp().as("ts")),
-          "site_status", SaveMode.Append)
-      }
-      statusFutures ::= f
-      // a failed append must not wedge later chain links (its own failure
-      // still surfaces through statusFutures at the join below)
-      statusChain = f.recover { case scala.util.control.NonFatal(_) => () }
-      f
-    }
-    // batch key = site hash (see the loop below)
+    // last_error; Site.java:16-34, SiteServiceImpl.java:83-91): a batch's
+    // commit appends INDEXED rows for its sites — the batch key is the
+    // site hash, so a site is INDEXED exactly when its batch commits —
+    // and the first commit of a run INDEXING rows for the sites of every
+    // other batch still to build; a batch that throws commits FAILED rows
+    // carrying the error. Statistics reads the latest row per site. ──
     def siteBatch = pmod(xxhash64(col("site")), lit(cfg.nBatches)).cast("int")
-    val done: Set[Int] = completedBatches(spark, outDir)
-    // persisted: the INDEXING append materializes it once; the INDEXED
-    // append (and multi-batch slices) reuse it instead of re-scanning the
-    // analyze cache — a measurable serial tail at high parallelism
-    val allSites = analyzed.select("site").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // INDEXING stamp only for sites whose batch is still PENDING — a
-    // resumed run must not regress the status of already-committed sites
-    appendStatus(
-      if (done.isEmpty) allSites
-      else analyzed.filter(!siteBatch.isin(done.toSeq: _*)).select("site").distinct(),
-      SiteStatus.Indexing, null)
+    val singleBatch = cfg.nBatches == 1
+    def sitesOf(batches: Seq[Int]): DataFrame =
+      if (singleBatch) analyzed.select("site").distinct()
+      else analyzed.filter(siteBatch.isin(batches: _*)).select("site").distinct()
+    def status(sites: DataFrame, status: String, error: String): DataFrame =
+      sites.select(col("site"), lit(status).as("status"),
+        lit(error).cast("string").as("error"), current_timestamp().as("ts"))
+    def lineage(b: Int, bytes: Long, terms: Long, postings: Long, status: String,
+        error: Option[String]): Lineage =
+      Lineage(b, s"pmod(xxhash64(site), ${cfg.nBatches}) == $b", bytes, terms,
+        postings, status, error, new java.sql.Timestamp(System.currentTimeMillis()))
+
     var built = 0
     // Single-batch build: segments ARE the final index — write them
-    // straight to `index/` and let mergeSegments no-op (a 1-way "merge"
+    // straight to `index` and let mergeSegments no-op (a 1-way "merge"
     // would byte-copy every segment through an extra shuffle).
-    val singleBatch = cfg.nBatches == 1
     // Graceful stop (reference RunIndexMonitor.setStopIndexing, checked
     // between pages by the crawl threads — here between BATCHES): the
     // `_STOP` marker (cleared at run() entry) halts the loop after the
-    // current batch's lineage commit; completed batches stay committed
-    // and a later run resumes the rest.
-    // `stopAfter` simulates a mid-build kill for the resume test (§5.7)
-    // batch key = site hash (the reference's unit of crawl/indexing is
-    // the site, ThreadIndexingManager.java:29-62): every site is wholly
-    // contained in one batch, so per-site status is exact — a site is
-    // INDEXED precisely when its batch's lineage row commits. Resume and
-    // graceful stop therefore operate at site granularity, like the
-    // reference's per-site crawler threads.
-    for (b <- 0 until cfg.nBatches
-        if !done.contains(b) && built < stopAfter && !store.markerExists(StopMarker)) {
+    // current batch's commit; committed batches stay and a later run
+    // resumes the rest. `stopAfter` simulates a mid-build kill for the
+    // resume test (§5.7). The batch key is the site hash (the
+    // reference's unit of crawl/indexing is the site,
+    // ThreadIndexingManager.java:29-62): every site is wholly contained
+    // in one batch, so resume and graceful stop operate at site
+    // granularity, like the reference's per-site crawler threads.
+    for (b <- todo if built < stopAfter && !store.markerExists(StopMarker)) {
       val batchPost =
         if (singleBatch) post
         else post.filter(siteBatch === b)
-      try {
-        val segs = buildSegments(batchPost, headDf, cfg, numPartitions)
-        val segTable = if (singleBatch) "index" else s"segments/batch=$b"
-        store.write(segs.toDF, segTable, SaveMode.Overwrite, partitionBy = Seq("bucket"))
-        awaitDims() // dimensions durable before the commit point
-        // lineage LAST — the batch's commit point (north_rule).
-        // posting_bytes from the store (no data re-read). Metric source:
+      try store.commit { c =>
+        // the dims and stats go out with the build's first commit; a
+        // resumed run finds them committed
+        val dims = if (c.base.stats.isEmpty) stageDims(c) else Nil
+        try {
+          val segs = buildSegments(batchPost, headDf, cfg, numPartitions).toDF
+          if (singleBatch) c.put(segs, "index", Seq("bucket"))
+          else c.append(segs.withColumn("batch", lit(b)), "segments", Seq("batch", "bucket"))
+        } finally dims.foreach(Await.ready(_, Duration.Inf))
+        dims.foreach(Await.result(_, Duration.Inf))
+        // lineage metrics: bytes from the staged parts (no data re-read);
         // a single-batch build's term/posting counts equal the GLOBAL
-        // distinct-term count and Σ df, already computed by the
-        // head/counts aggregation above (zero extra jobs); multi-batch
-        // builds aggregate their own segment table (batch term sets are
-        // proper subsets of the global one).
-        val bytes = store.sizeInBytes(segTable)
-        val counts =
+        // distinct-term count and Σ df of the head/counts aggregation
+        // above (zero extra jobs); multi-batch builds count their own
+        // postings (batch term sets are proper subsets of the global one;
+        // an empty site-hash slice records zeros)
+        val (bytes, terms, postings) =
           if (singleBatch)
-            spark.range(1).select(
-              lit(headAgg.getAs[Long]("term_count")).as("term_count"),
-              lit(headAgg.getAs[Long]("posting_count")).as("posting_count"))
-          else
-            // a batch whose site-hash slice is EMPTY writes no parquet
-            // files (partitioned write) — its lineage row records zeros
-            try store.read(segTable).agg(
-              countDistinct(col("term")).as("term_count"),
-              coalesce(sum(col("doc_count")), lit(0L)).as("posting_count"))
-            catch { case scala.util.control.NonFatal(_) =>
-              spark.range(1).select(
-                lit(0L).as("term_count"), lit(0L).as("posting_count"))
-            }
-        val lin = counts.select(
-          lit(b).as("partition_id"),
-          lit(s"pmod(xxhash64(site), ${cfg.nBatches}) == $b").as("doc_range"),
-          lit(bytes).as("posting_bytes"),
-          col("term_count"), col("posting_count"),
-          lit("COMPLETE").as("status"),
-          lit(null).cast("string").as("error"),
-          current_timestamp().as("ts"))
-        store.write(lin, "lineage", SaveMode.Append)
-        appendStatus(
-          if (singleBatch) allSites else analyzed.filter(siteBatch === b).select("site").distinct(),
-          SiteStatus.Indexed, null)
-        built += 1
+            (c.current.bytes("index"), headAgg.getAs[Long]("term_count"),
+              headAgg.getAs[Long]("posting_count"))
+          else {
+            val (t, p) = batchPost.agg(countDistinct(col("term")), count(lit(1)))
+              .as[(Long, Long)].collect()(0)
+            (c.current.parts("segments").filter(_.value("batch") == b.toString)
+              .map(_.bytes).sum, t, p)
+          }
+        val others = if (built == 0) todo.filter(_ != b) else Nil
+        c.append(
+          if (others.isEmpty) status(sitesOf(Seq(b)), SiteStatus.Indexed, null)
+          else status(sitesOf(Seq(b)), SiteStatus.Indexed, null)
+            .unionByName(status(sitesOf(others), SiteStatus.Indexing, null)),
+          "site_status")
+        c.update(m => m.copy(
+          stats = Some(stats),
+          asOf = if (singleBatch) 0 else m.asOf,
+          batch = math.max(m.batch, cfg.nBatches - 1),
+          lineage = m.lineage :+ lineage(b, bytes, terms, postings, "COMPLETE", None)))
       } catch {
         case scala.util.control.NonFatal(e) =>
           // failure is part of the lifecycle (reference FAILED status,
-          // ThreadIndexingManager.java:45-48): record a FAILED lineage
+          // ThreadIndexingManager.java:45-48): commit a FAILED lineage
           // row (NOT counted by completedBatches — a re-run retries the
           // batch) and FAILED site rows carrying the error, then rethrow
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
-          store.write(spark.range(1).select(
-            lit(b).as("partition_id"),
-            lit(s"pmod(xxhash64(site), ${cfg.nBatches}) == $b").as("doc_range"),
-            lit(0L).as("posting_bytes"),
-            lit(0L).as("term_count"), lit(0L).as("posting_count"),
-            lit("FAILED").as("status"),
-            lit(msg).as("error"),
-            current_timestamp().as("ts")), "lineage", SaveMode.Append)
-          Await.result(appendStatus(
-            if (singleBatch) allSites
-            else analyzed.filter(siteBatch === b).select("site").distinct(),
-            SiteStatus.Failed, msg), Duration.Inf)
+          try store.commit { c =>
+            c.append(status(sitesOf(Seq(b)), SiteStatus.Failed, msg), "site_status")
+            c.update(m => m.copy(lineage = m.lineage :+ lineage(b, 0L, 0L, 0L, "FAILED", Some(msg))))
+          } catch { case scala.util.control.NonFatal(e2) => e.addSuppressed(e2) }
           throw e
       }
+      built += 1
     }
-    // single-batch: the direct-to-index write IS the merged index, as of
-    // batch 0 — written in the background, joined before return (the
-    // engine fingerprints index_meta, so it must be durable by then)
-    val indexMetaF =
-      if (singleBatch && built > 0)
-        Some(Future(store.write(spark.range(1).select(lit(0).as("as_of_batch")),
-          "index_meta", SaveMode.Overwrite)))
-      else None
-    awaitDims() // loop may have run zero batches (resume/stop) — still join
-    statusFutures.foreach(Await.result(_, Duration.Inf))
-    indexMetaF.foreach(Await.result(_, Duration.Inf))
     lemmaStats.unpersist()
-    allSites.unpersist()
+    termDf.unpersist()
     ranked.unpersist()
     built
   }
 
-  def completedBatches(spark: SparkSession, outDir: String): Set[Int] = {
-    import spark.implicits._
-    val store = TableStore.open(spark, outDir)
-    // first build: no lineage table yet (checked, not caught — Spark logs
-    // the missing-path AnalysisException loudly even when handled)
-    if (!store.exists("lineage")) Set.empty
-    else try {
-      store.read("lineage")
-        .filter(col("status") === "COMPLETE")
-        .select("partition_id").as[Int].collect().toSet
-    } catch { case scala.util.control.NonFatal(_) => Set.empty }
-  }
+  /** Build batches whose commit made them COMPLETE. */
+  def completedBatches(spark: SparkSession, outDir: String): Set[Int] =
+    TableStore.open(spark, outDir).manifest.fold(Set.empty[Int]) { m =>
+      val n = m.stats.fold(0)(_.n_batches)
+      m.lineage.collect {
+        case l if l.status == "COMPLETE" && l.partition_id < n => l.partition_id
+      }.toSet
+    }
 
-  /** Segment merge: k-way sort-merge of per-batch segments of the same
-    * (term, shard) into one segment each (SURVEY.md §2.9) — grouped
+  /** Segment merge: k-way sort-merge of the build's per-batch segments —
+    * and of the index a previous merge left, on a resumed build — of the
+    * same (term, shard) into one segment each (SURVEY.md §2.9): grouped
     * shuffle, streaming merge per group, written term-bucket-partitioned
-    * as the final `index`. */
+    * as the final `index`. The same commit drops the merged batches, so
+    * no posting batch at or below the index's as_of stays on disk. */
   def mergeSegments(spark: SparkSession, outDir: String): Unit = {
     import spark.implicits._
-    val store = TableStore.open(spark, outDir)
-    // single-batch builds write segments directly to index/ — nothing to merge
-    if (!store.exists("segments")) return
-    // a graceful stop can leave only EMPTY batch dirs (site-hash batches
-    // whose slice held no sites write a dir but no files) — no schema to
-    // infer, nothing to merge yet
-    val segs = try store.read("segments") catch {
-      case scala.util.control.NonFatal(_) => return
-    }
-    val merged = segs.select("bucket", "term", "shard", "doc_count", "block_max", "postings")
-      .as[(Int, String, Int, Int, Double, Array[Byte])]
-      .groupByKey { case (bucket, term, shard, _, _, _) => (bucket, term, shard) }
-      .mapGroups { (key: (Int, String, Int), rows: Iterator[(Int, String, Int, Int, Double, Array[Byte])]) =>
-        val (bucket, term, shard) = key
-        val parts = rows.toSeq
-        SegmentRow(bucket, term, shard, 0,
-          parts.map(_._4).sum, parts.map(_._5).max,
-          PostingCodec.merge(parts.map(_._6)))
+    TableStore.open(spark, outDir).commit { c =>
+      val m = c.base
+      // build batches only: delta batches (ids ≥ n_batches) fold through
+      // Refresh.compactTouched, which applies their tombstones
+      val batches = m.stats.fold(Seq.empty[Int]) { s =>
+        m.parts("segments").map(_.value("batch").toInt).filter(_ < s.n_batches).distinct
       }
-      .toDF
-    store.write(merged, "index", SaveMode.Overwrite, partitionBy = Seq("bucket"))
-    // high-water mark for incremental refresh (Refresh.indexAsOf)
-    val maxBatch = store.read("segments")
-      .agg(max(col("batch"))).collect()(0).getInt(0)
-    store.write(spark.range(1).select(lit(maxBatch).as("as_of_batch")),
-      "index_meta", SaveMode.Overwrite)
+      if (batches.nonEmpty) {
+        val cols = Seq("bucket", "term", "shard", "doc_count", "block_max", "postings")
+        val segs = c.read("segments").filter(col("batch").isin(batches: _*)).select(cols.map(col): _*)
+        val merged = (if (m.has("index")) segs.unionByName(c.read("index").select(cols.map(col): _*)) else segs)
+          .as[(Int, String, Int, Int, Double, Array[Byte])]
+          .groupByKey { case (bucket, term, shard, _, _, _) => (bucket, term, shard) }
+          .mapGroups { (key: (Int, String, Int), rows: Iterator[(Int, String, Int, Int, Double, Array[Byte])]) =>
+            val (bucket, term, shard) = key
+            val parts = rows.toSeq
+            SegmentRow(bucket, term, shard, 0,
+              parts.map(_._4).sum, parts.map(_._5).max,
+              PostingCodec.merge(parts.map(_._6)))
+          }
+          .toDF
+        c.put(merged, "index", Seq("bucket"))
+        c.remove("segments")(p => batches.contains(p.value("batch").toInt))
+        c.update(_.copy(asOf = math.max(m.asOf, batches.max)))
+      }
+    }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{HtmlText, Lemmatizer, Scorer, PostingCodec, ReferenceTfSum, Snippet}
 import graft.index.IndexBuild
-import graft.store.TableStore
+import graft.store.{Manifest, TableStore}
 
 /** API row (reference SearchItemData.java:9-16). */
 final case class SearchItem(
@@ -41,12 +41,12 @@ final case class SearchResponse(result: Boolean, count: Long, data: Seq[SearchIt
   * production scale that variant would read a site-partitioned index
   * instead.
   *
-  * Refresh safety: the engine stamps the index dirs (index_meta / docs /
-  * lemma_stats modification fingerprints) at load and re-checks the
-  * stamp per query (a few filesystem metadata calls, zero Spark jobs);
-  * a Refresh.refreshPages/deletePages under a live engine invalidates
-  * every driver-side cache (df cache, hot-posting LRU, pagination cache,
-  * corpus stats) and reloads automatically.
+  * Refresh safety: the engine loads one manifest version of the index
+  * ([[graft.store.TableStore]]) and re-checks the latest version per
+  * query — one directory listing, zero Spark jobs, and every commit
+  * moves it; a Refresh.refreshPages/deletePages under a live engine
+  * invalidates every driver-side cache (df cache, hot-posting LRU,
+  * pagination cache, corpus stats) and reloads automatically.
   */
 final class SearchEngine(
     spark: SparkSession,
@@ -59,22 +59,16 @@ final class SearchEngine(
   private val store = TableStore.open(spark, indexDir)
   private val corpus = TableStore.open(spark, pagesPath)
 
-  // ── reloadable index state (rebuilt when the fingerprint changes) ──
+  // ── reloadable index state (rebuilt when the manifest version moves) ──
   private final case class IndexState(
       nDocs: Long, avgdl: Double, shards: Int, siteGroups: Int,
       buckets: Int,
       docsDf: DataFrame, lemmaStatsDf: DataFrame, segmentsDf: DataFrame,
       headTerms: Set[String],
-      // fingerprint to stamp as "loaded": taken after the debt-cap
-      // compaction (so its own index_meta bump doesn't force a second
-      // reload) but BEFORE the table reads — an external refresh that
-      // commits while load() runs lands after this capture, so the next
-      // ensureFresh() sees a changed fingerprint and reloads, instead of
-      // latching state read before that commit as current
-      fpAtLoad: Long)
-
-  private def fingerprint(): Long =
-    store.fingerprint(Seq("index_meta", "docs", "lemma_stats"))
+      // the manifest every table above was read from: a commit that
+      // lands while load() runs moves the latest version past it, so the
+      // next ensureFresh() reloads
+      manifest: Manifest)
 
   /** Cache budget for the merged index (`spark.graft.indexCacheBytes`,
     * default 8 GiB): within it the index is `.cache`d at load (in-sandbox
@@ -86,91 +80,87 @@ final class SearchEngine(
     spark.conf.getOption("spark.graft.indexCacheBytes")
       .map(_.toLong).getOrElse(8L * 1024 * 1024 * 1024)
 
+  /** The latest manifest; an index without one must be rebuilt. */
+  private def latest(): Manifest = {
+    val m = store.manifest.getOrElse(Manifest.empty)
+    IndexBuild.statsOf(m, indexDir)
+    m
+  }
+
   private def load(): IndexState = {
-    val stats = store.read("stats").collect()(0)
-    IndexBuild.nextOrdOf(stats) // postings must carry doc ordinals
-    val buckets = stats.getAs[Int]("buckets")
-    // Delta-overlay read path (deferred compaction, Refresh/IndexStream
-    // `compact = false`): when delta batches are pending beyond the
-    // index's as_of, the touched buckets are rebuilt IN MEMORY at load —
-    // the same decode → tombstone-filter → re-encode pass compaction runs,
-    // materialized once (localCheckpoint inside aliveRows) instead of
-    // written — and unioned with the untouched base buckets. Queries see
-    // every committed refresh immediately; the physical rewrite happens
-    // once per compaction interval.
     // Deferred-compaction debt cap (round-4 verdict item 4): the overlay
-    // re-decodes every pending bucket in memory on EVERY reload — bounded
-    // by the touched set per reload, but a long-crashed compactor grows
-    // the pending-batch list without bound and every reload re-pays it.
-    // Past the cap the engine compacts ONCE up front (exactly the work
-    // the next compaction interval owed) and serves the clean index.
-    // spark.graft.maxPendingBatches; default 64 ≈ 8× IndexStream's
+    // below re-decodes every pending bucket in memory on EVERY reload —
+    // bounded by the touched set per reload, but a long-crashed compactor
+    // grows the pending-batch list without bound and every reload
+    // re-pays it. Past the cap the engine compacts ONCE up front (exactly
+    // the work the next compaction interval owed) and serves the clean
+    // index. spark.graft.maxPendingBatches; default 64 ≈ 8× IndexStream's
     // default compactEvery.
     val maxPending = spark.conf.getOption("spark.graft.maxPendingBatches")
       .map(_.toInt).getOrElse(64)
-    if (maxPending > 0 && store.exists("index_meta")) {
-      val n = graft.index.Refresh.pendingBatches(spark, indexDir)
-      if (n > maxPending) {
+    val m0 = latest()
+    val m =
+      if (maxPending <= 0 || m0.pending.size <= maxPending) m0
+      else {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"$n pending delta batches exceed spark.graft.maxPendingBatches=$maxPending — " +
-            "compacting before serving to cap reload cost")
+          s"${m0.pending.size} pending delta batches exceed spark.graft.maxPendingBatches=" +
+            s"$maxPending — compacting before serving to cap reload cost")
         // Best-effort: the overlay below is always correct, just slower.
-        // A reader without write access (or one that loses the versioned-
-        // replace race to the real compactor / another loading engine)
-        // must serve, not die — single-writer is the deployment contract
-        // for the REWRITE, never a precondition for reads.
-        try graft.index.Refresh.compactTouched(spark, indexDir,
-          IndexBuild.Config(buckets = buckets))
-        catch { case scala.util.control.NonFatal(e) =>
+        // A reader without write access must serve, not die —
+        // single-writer is the deployment contract for the REWRITE,
+        // never a precondition for reads.
+        try {
+          graft.index.Refresh.compactTouched(spark, indexDir, IndexBuild.Config())
+          latest()
+        } catch { case scala.util.control.NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"load-time compaction failed (${e.getMessage}) — serving via the delta overlay")
+          m0
         }
       }
-    }
-    // stamp point: post-compaction, pre-read (see IndexState.fpAtLoad)
-    val fpAtLoad = fingerprint()
-    val docsDf = store.read("docs").cache()
-    val lemmaStatsDf = store.read("lemma_stats").cache()
-    val asOf = graft.index.Refresh.indexAsOf(spark, indexDir)
-    val pending = graft.index.Refresh.pendingTouchedBuckets(spark, store, asOf)
+    val stats = IndexBuild.statsOf(m, indexDir)
+    val docsDf = store.readAt(m, "docs").cache()
+    val lemmaStatsDf = store.readAt(m, "lemma_stats").cache()
+    // Delta-overlay read path (deferred compaction, Refresh/IndexStream
+    // `compact = false`): when delta batches are pending beyond the
+    // index's as_of, the touched buckets are rebuilt IN MEMORY at load —
+    // the same decode → tombstone-filter → re-encode pass compaction
+    // runs, cached instead of written — and unioned with the untouched
+    // base buckets. Queries see every committed refresh immediately; the
+    // physical rewrite happens once per compaction interval.
+    val pending = graft.index.Refresh.pendingBuckets(m)
     val segCols = Seq("bucket", "term", "shard", "part_id", "doc_count",
       "block_max", "postings").map(col)
-    val baseSegs = store.read("index")
+    val baseSegs = store.readAt(m, "index")
     val segmentsPlan =
       if (pending.isEmpty) baseSegs
       else {
         val rebuilt = graft.index.Refresh.reencode(
-          graft.index.Refresh.aliveRows(spark, store, pending, asOf), buckets).toDF
+          graft.index.Refresh.aliveRows(store, m, pending), stats.buckets).toDF
         baseSegs.filter(!col("bucket").isin(pending: _*)).select(segCols: _*)
           .unionByName(rebuilt.select(segCols: _*))
       }
-    val cacheIndex =
-      try store.sizeInBytes("index") <= indexCacheLimit
-      catch { case scala.util.control.NonFatal(_) => true }
-    val segmentsDf = if (cacheIndex) segmentsPlan.cache() else segmentsPlan
-    val headTerms: Set[String] =
-      try store.read("head_terms").as[String].collect().toSet
-      catch { case _: org.apache.spark.sql.AnalysisException => Set.empty }
+    val segmentsDf =
+      if (m.bytes("index") <= indexCacheLimit) segmentsPlan.cache() else segmentsPlan
     IndexState(
-      nDocs = stats.getAs[Long]("n_docs"),
-      avgdl = stats.getAs[Double]("avgdl"),
-      shards = stats.getAs[Int]("shards"),
-      siteGroups = stats.getAs[Int]("site_groups"),
-      buckets = buckets,
+      nDocs = stats.n_docs,
+      avgdl = stats.avgdl,
+      shards = stats.shards,
+      siteGroups = stats.site_groups,
+      buckets = stats.buckets,
       docsDf = docsDf, lemmaStatsDf = lemmaStatsDf, segmentsDf = segmentsDf,
-      headTerms = headTerms, fpAtLoad = fpAtLoad)
+      headTerms = store.readAt(m, "head_terms").as[String].collect().toSet,
+      manifest = m)
   }
 
   private var state: IndexState = load()
-  private var loadedFp: Long = state.fpAtLoad
   // (prefetchHot() is invoked at the end of the class body, after the
   // caches it populates are initialized — constructor statement order)
 
-  /** Re-check the index fingerprint; on change drop every driver-side
-    * cache and reload. Cheap (3 filesystem stats, no Spark job). */
-  private def ensureFresh(): Unit = {
-    val fp = fingerprint()
-    if (fp != loadedFp) {
+  /** Re-check the latest manifest version; on change drop every
+    * driver-side cache and reload. One directory listing, no Spark job. */
+  private def ensureFresh(): Unit =
+    if (store.version != state.manifest.version) {
       state.docsDf.unpersist()
       state.lemmaStatsDf.unpersist()
       state.segmentsDf.unpersist()
@@ -182,14 +172,8 @@ final class SearchEngine(
       lastSurviving = Seq.empty
       dropRankedDf()
       state = load()
-      // the stamp is captured INSIDE load(), after its debt-cap
-      // compaction (so that bump doesn't force a second reload) but
-      // before its reads (so an external commit racing the load is
-      // detected by the next query, not latched as seen)
-      loadedFp = state.fpAtLoad
       prefetchHot()
     }
-  }
 
   /** Cold-start prefetch (engine load / reload): pull the HEAD terms'
     * segments into the posting LRU and their dfs into the df cache.
@@ -265,7 +249,7 @@ final class SearchEngine(
       // cannot touch scoring.
       val budgetLeft = postingCache.budget - usedByHeads
       if (budgetLeft > (1L << 20)) {
-        val mids = store.read("mid_terms")
+        val mids = store.readAt(state.manifest, "mid_terms")
           .orderBy(col("df").desc, col("term")).limit(IndexBuild.MidTermsWidth)
           .select("term").as[String].collect().toSeq
         if (mids.nonEmpty) {
@@ -301,7 +285,7 @@ final class SearchEngine(
     siteCountCache.getOrElseUpdate(s,
       docsDf.filter(col("site") === s).count())
 
-  // Driver-side term-stats cache (valid for one index fingerprint —
+  // Driver-side term-stats cache (valid for one manifest version —
   // cleared on reload). Saves one Spark job per repeated query term —
   // term stats caching is standard in IR engines; at 10^12 docs
   // lemma_stats is huge but the per-query term set is tiny, so an LRU
@@ -805,9 +789,10 @@ final class SearchEngine(
   * `indexing` flag (TotalStatistics.java:6-11).
   *
   * Per-site lifecycle is GENUINE, not a global stamp: the build appends
-  * rows to `site_status` (INDEXING at start, INDEXED per committed
-  * site-batch, FAILED with the error on a thrown batch — the batch key is
-  * the site hash, so a site is INDEXED exactly when its batch commits),
+  * rows to `site_status` (INDEXED with each committed site-batch,
+  * INDEXING for the batches still to build, FAILED with the error on a
+  * thrown batch — the batch key is the site hash, so a site is INDEXED
+  * exactly when its batch commits),
   * refresh stamps its sites, and this endpoint reads the LATEST row per
   * site — a half-built or partially-failed multi-site corpus reports each
   * site's true state independently, like the reference's per-site crawler
@@ -816,25 +801,21 @@ object Statistics {
   def compute(spark: SparkSession, indexDir: String): DataFrame = {
     import spark.implicits._
     val store = TableStore.open(spark, indexDir)
-    val docs = store.read("docs")
-    val lemmas = store.read("lemma_stats")
+    val m = store.manifest.getOrElse(Manifest.empty)
+    val docs = store.readAt(m, "docs")
+    val lemmas = store.readAt(m, "lemma_stats")
     val pages = docs.groupBy("site").agg(count(lit(1)).as("pages"))
     val lem = lemmas.groupBy("site").agg(count(lit(1)).as("lemmas"))
     val perSite = pages.join(lem, Seq("site"), "full_outer")
       .na.fill(0L, Seq("pages", "lemmas"))
 
-    // latest lifecycle row per site (sites with docs but no status row —
-    // e.g. an index predating the lifecycle table — default to INDEXING)
+    // latest lifecycle row per site (sites with docs but no status row
+    // default to INDEXING)
     val w = Window.partitionBy(col("site")).orderBy(desc("ts"))
-    val latest = store.readOpt("site_status") match {
-      case Some(ss) => ss
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("site"), col("status"),
-          col("ts").as("status_time"), col("error"))
-      case None => Seq.empty[(String, String, java.sql.Timestamp, String)]
-        .toDF("site", "status", "status_time", "error")
-    }
+    val latest = store.readAt(m, "site_status")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("site"), col("status"), col("ts").as("status_time"), col("error"))
 
     val detailed = perSite.join(latest, Seq("site"), "left")
       .na.fill("INDEXING", Seq("status"))

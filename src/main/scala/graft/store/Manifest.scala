@@ -1,0 +1,83 @@
+package graft.store
+
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** One live directory of a table, relative to the store root:
+  * `<table>/<partition path>/c=<id>` (`docs/db=3/c=k0f…`,
+  * `segments/batch=5/bucket=2/c=k1a…`, `head_terms/c=k9b…`). A commit
+  * never writes into a published directory; it stages a new one. */
+final case class Part(dir: String, bytes: Long) {
+  /** The partition path inside the table (`db=3`, `batch=5/bucket=2`),
+    * "" for an unpartitioned table. */
+  def key: String = {
+    val inTable = dir.substring(dir.indexOf('/') + 1)
+    val c = inTable.lastIndexOf("/c=")
+    if (c < 0) "" else inTable.substring(0, c)
+  }
+  /** The value of one partition column of this part. */
+  def value(column: String): String =
+    key.split('/').collectFirst { case kv if kv.startsWith(column + "=") =>
+      kv.substring(column.length + 1)
+    }.getOrElse(throw new IllegalArgumentException(s"$dir has no partition $column"))
+  def id: String = dir.substring(dir.lastIndexOf("/c=") + 3)
+}
+
+/** A table as one manifest publishes it: its read schema (data columns,
+  * then partition columns, as JSON) and its live directories. */
+final case class TableMeta(schema: String, parts: Seq[Part]) {
+  def bytes: Long = parts.map(_.bytes).sum
+}
+
+/** Corpus scalars and layout of an index: `read("stats")` serves them as
+  * a one-row table. `next_ord` is the doc-ordinal high-water mark: every
+  * ordinal a published doc ever carried is below it. */
+final case class Stats(
+    n_docs: Long, n_distinct: Long, avgdl: Double, total_tokens: Long,
+    shards: Int, n_batches: Int, site_groups: Int, buckets: Int,
+    next_ord: Long)
+
+/** A delta batch not yet folded into `index`, with the term buckets it
+  * touched: the buckets compaction rewrites and the engine overlays. */
+final case class Pending(batch: Int, buckets: Seq[Int])
+
+/** One commit's lineage row; `read("lineage")` serves every one of them. */
+final case class Lineage(
+    partition_id: Int, doc_range: String, posting_bytes: Long,
+    term_count: Long, posting_count: Long, status: String,
+    error: Option[String], ts: java.sql.Timestamp)
+
+/** One version of an index root — the commit point. Everything a reader
+  * sees is what one manifest names: the live directories and schema of
+  * each table, the stats, `asOf` (the highest batch folded into
+  * `index`, -1 before any), `batch` (the highest batch id a commit has
+  * used), the pending delta batches and the lineage rows. */
+final case class Manifest(
+    version: Long,
+    tables: Map[String, TableMeta],
+    stats: Option[Stats],
+    asOf: Int,
+    batch: Int,
+    pending: Seq[Pending],
+    lineage: Seq[Lineage]) {
+
+  def has(table: String): Boolean = table match {
+    case "stats" => stats.isDefined
+    case "lineage" => lineage.nonEmpty
+    case t => tables.contains(t)
+  }
+
+  def parts(table: String): Seq[Part] = tables.get(table).fold(Seq.empty[Part])(_.parts)
+
+  def bytes(table: String): Long = tables.get(table).fold(0L)(_.bytes)
+}
+
+object Manifest {
+  val empty: Manifest = Manifest(0L, Map.empty, None, -1, -1, Nil, Nil)
+
+  private val mapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  def toJson(m: Manifest): String = mapper.writeValueAsString(m)
+
+  def fromJson(json: String): Manifest = mapper.readValue(json, classOf[Manifest])
+}

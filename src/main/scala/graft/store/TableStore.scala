@@ -1,70 +1,77 @@
 package graft.store
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** Storage abstraction for every engine table (SURVEY.md §7.3's decision
   * table: format = parquet in-sandbox, iceberg in production per the
   * north_star's "Iceberg table of Common-Crawl-style web pages").
   *
-  * One store instance is rooted at a directory (an index dir, or a corpus
-  * table when `table = ""`); tables are addressed by relative name
-  * (`docs`, `lemma_stats`, `stats`, `head_terms`, `lineage`,
-  * `tombstones`, `index`, `index_meta`, `segments/batch=N`).
+  * One store instance is rooted at a directory, and a root is one of two
+  * kinds:
+  *  - an INDEX root holds `_manifest/v<N>.json` files. Every index table
+  *    (`docs`, `doc_terms`, `lemma_stats`, `index`, `segments`,
+  *    `tombstones`, `head_terms`, `mid_terms`, `site_status`) is read
+  *    through the latest manifest with its stored schema, and every
+  *    change is a copy-on-write [[commit]]: the op stages new
+  *    directories under fresh names (`docs/db=3/c=<id>`), then the
+  *    manifest naming them is published put-if-absent under a per-root
+  *    lock, then GC deletes whatever the new manifest does not name —
+  *    superseded directories, older manifests beyond a few, and anything
+  *    a crashed commit staged. A commit that loses the publish race
+  *    re-runs its op from the new version. `stats` and `lineage` live in
+  *    the manifest itself and read as tables;
+  *  - a CORPUS root (`table = ""` is the root itself) is plain parquet:
+  *    `replace` stages aside and promotes with two renames, and reads
+  *    converge a crashed replace.
   *
   * Iceberg mapping (the production implementation this interface is the
   * seam for — the sandbox ships no iceberg-spark-runtime jars, so only
-  * the parquet implementation is compiled):
-  *  - `read(t)`       → `spark.table("cat.db.t")` — snapshot-isolated scan
-  *  - `write(Append)` → `df.writeTo("cat.db.t").append()` — atomic commit
-  *  - `replace(t)`    → `df.writeTo("cat.db.t").replace()` (REPLACE TABLE
-  *                      AS SELECT): one atomic snapshot swap instead of the
-  *                      parquet write-aside/delete/rename dance
-  *  - refresh (S6)    → MERGE INTO + equality-delete files; the
-  *                      `tombstones` table becomes Iceberg's own equality
-  *                      deletes, and `Refresh.compactTouched` its
-  *                      compaction
-  *  - cascade undo    → snapshot rollback (`CALL cat.system.rollback_to…`)
-  *  - `fingerprint`   → the table's current snapshot id (exact, no mtime
-  *                      heuristics)
-  *  - `segments/batch=N` → one `segments` table partitioned by (batch,
-  *                      bucket); per-batch writes are partition overwrites
+  * the parquet implementation is compiled). The manifest is Iceberg's
+  * table metadata in miniature:
+  *  - `_manifest/v<N>.json` → `metadata/v<N>.metadata.json`, published
+  *    the way Iceberg's Hadoop catalog commits it (a temp file renamed to
+  *    the next version, which fails if it exists);
+  *  - a `Part` directory → a data file of a manifest list entry; the
+  *    per-table schema → the table schema; `stats`/`pending`/`lineage`
+  *    → snapshot summary properties;
+  *  - `commit` → one snapshot commit; its retry on a lost race →
+  *    Iceberg's optimistic retry (`commit.retry.num-retries`);
+  *  - GC → `expire_snapshots` + `remove_orphan_files`;
+  *  - `version` → the current snapshot id;
+  *  - `replace(t)` on a corpus → `df.writeTo("cat.db.t").replace()`;
+  *  - refresh (S6) → MERGE INTO + equality-delete files: `tombstones`
+  *    are Iceberg's equality deletes and `Refresh.compactTouched` its
+  *    compaction.
   */
 trait TableStore {
   def spark: SparkSession
   def root: String
 
+  /** The latest published manifest; None when the root holds none (a
+    * corpus root, or an index dir no commit has reached). */
+  def manifest: Option[Manifest]
+
+  /** The latest manifest version, 0 when none — one directory listing,
+    * and it moves with every commit. */
+  def version: Long
+
+  /** `table` as manifest `m` publishes it, with the stored schema: no
+    * directory listing beyond the named parts, no schema inference. */
+  def readAt(m: Manifest, table: String): DataFrame
+
+  /** `table` through the latest manifest on an index root, as plain
+    * parquet on a corpus root. */
   def read(table: String): DataFrame
   def exists(table: String): Boolean
-  def readOpt(table: String): Option[DataFrame] =
-    if (exists(table)) Some(read(table)) else None
 
-  def write(df: DataFrame, table: String, mode: SaveMode,
-      partitionBy: Seq[String] = Nil): Unit
-
-  /** Overwrite a table that may concurrently be a read source: stage,
-    * atomically promote, and invalidate session caches for the location.
-    * (Iceberg: a single REPLACE TABLE AS SELECT commit.) */
+  /** Corpus roots: overwrite a table that may concurrently be a read
+    * source (stage aside, then two atomic renames; invalidate session
+    * caches). Index tables change only through [[commit]]. */
   def replace(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit
-
-  /** Overwrite ONLY the partitions present in `df`, leaving every other
-    * partition's files untouched (Iceberg: df.writeTo(t)
-    * .overwritePartitions() — an atomic commit there; the parquet
-    * implementation is Spark dynamic partition overwrite, whose crash
-    * recovery is re-running the idempotent caller). */
-  def overwritePartitions(df: DataFrame, table: String,
-      partitionBy: Seq[String]): Unit
-
-  /** Physical size of a table — lineage metrics (posting_bytes). */
-  def sizeInBytes(table: String): Long
-
-  /** Change-detection stamp over the given tables: differs whenever any
-    * of them was replaced/appended. (Iceberg: xor of snapshot ids.) */
-  def fingerprint(tables: Seq[String]): Long
-
-  /** Drop a table (delete delta dirs on refresh compaction, etc.). */
-  def drop(table: String): Unit
 
   /** Control markers (e.g. the graceful-stop flag `_STOP` the batch loop
     * polls between batches — the table-scan rebuild of the reference's
@@ -72,9 +79,34 @@ trait TableStore {
   def markerExists(name: String): Boolean
   def putMarker(name: String): Unit
   def dropMarker(name: String): Unit
+
+  // ── the three mutations of an index root; a commit is made of them ──
+
+  /** Write `df` under a fresh directory name per partition of `table`;
+    * nothing reads it until a manifest names it. */
+  def stage(df: DataFrame, table: String, partitionBy: Seq[String]): Seq[Part]
+
+  /** Publish `m` as version `m.version` iff the latest is the version
+    * before it. False when another commit got there first. */
+  def publish(m: Manifest): Boolean
+
+  /** Delete paths relative to the root (recursively): GC after a publish. */
+  def delete(paths: Seq[String]): Unit
+
+  /** Paths relative to the root that manifest `m` does not reference and
+    * no in-flight commit is staging: what GC deletes after `m`. */
+  def unreferenced(m: Manifest): Seq[String]
+
+  /** Run `op` as one copy-on-write commit of this index root; see
+    * [[Commit]]. Returns `op`'s result. */
+  final def commit[T](op: Commit => T): T = Commit.run(this, op)
 }
 
 object TableStore {
+  /** Applied to every store [[open]] returns; identity unless a test
+    * wraps the store (the crash-point spec injects faults through it). */
+  @volatile private[graft] var wrap: TableStore => TableStore = identity
+
   /** Format flag per SURVEY §7.3, the deployment setting
     * `spark.graft.tableFormat` (default `parquet`). `parquet` is the
     * in-sandbox implementation; `iceberg` requires the
@@ -82,7 +114,7 @@ object TableStore {
     * scaladoc. */
   def open(spark: SparkSession, root: String): TableStore =
     spark.conf.getOption("spark.graft.tableFormat").getOrElse("parquet") match {
-      case "parquet" => new ParquetStore(spark, root)
+      case "parquet" => wrap(new ParquetStore(spark, root))
       case "iceberg" => throw new UnsupportedOperationException(
         "iceberg store: add iceberg-spark-runtime to the classpath and " +
           "implement via writeTo/replace per the TableStore scaladoc mapping")
@@ -91,8 +123,108 @@ object TableStore {
     }
 }
 
-/** Parquet-directory implementation: each table is `$root/$table`
-  * (table "" = the root itself, for single-table corpus paths). */
+/** One copy-on-write commit of an index root, built by the op that
+  * [[TableStore.commit]] runs. Reads see `base`, the version the op
+  * started from; writes stage new parts, and `update` edits the
+  * manifest fields. Nothing is visible until the publish. Thread-safe:
+  * an op may stage several tables concurrently. */
+final class Commit private[store] (val store: TableStore, val base: Manifest) {
+  private var next = base
+  private var changed = false
+  private[store] val ids = scala.collection.mutable.Set.empty[String]
+
+  /** `table` as of `base`. */
+  def read(table: String): DataFrame = store.readAt(base, table)
+
+  /** The manifest this commit would publish now. */
+  def current: Manifest = synchronized(next)
+
+  /** Replace the whole table. */
+  def put(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit =
+    write(df, table, partitionBy)((_, _) => true)
+
+  /** Replace the partitions `df` writes and the partitions under `keys`
+    * (`db=3`), whether or not `df` writes them: a partition whose rows
+    * all died is dropped. */
+  def overwrite(df: DataFrame, table: String, partitionBy: Seq[String],
+      keys: Iterable[String]): Unit = {
+    val dropped = keys.toSet
+    write(df, table, partitionBy)((p, staged) => dropped(p.key) || staged(p.key))
+  }
+
+  /** Add `df`'s rows to the table. */
+  def append(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit =
+    write(df, table, partitionBy)((_, _) => false)
+
+  /** Drop the parts `drop` selects; the table itself stays, maybe empty. */
+  def remove(table: String)(drop: Part => Boolean): Unit = synchronized {
+    next.tables.get(table).foreach { t =>
+      next = next.copy(tables = next.tables + (table -> t.copy(parts = t.parts.filterNot(drop))))
+      changed = true
+    }
+  }
+
+  /** Edit the manifest's stats, batch bookkeeping or lineage. */
+  def update(f: Manifest => Manifest): Unit = synchronized { next = f(next); changed = true }
+
+  private def write(df: DataFrame, table: String, partitionBy: Seq[String])(
+      drop: (Part, Set[String]) => Boolean): Unit = {
+    val schema = StructType(
+      (df.schema.filterNot(f => partitionBy.contains(f.name)) ++ partitionBy.map(df.schema(_)))
+        .map(_.copy(nullable = true))).json
+    val parts = store.stage(df, table, partitionBy)
+    val staged = parts.map(_.key).toSet
+    synchronized {
+      ids ++= parts.map(_.id)
+      val kept = next.parts(table).filterNot(drop(_, staged))
+      next = next.copy(tables = next.tables + (table -> TableMeta(schema, kept ++ parts)))
+      changed = true
+    }
+  }
+}
+
+object Commit {
+  /** Ids of directories being staged in this JVM — GC never deletes them. */
+  private[store] val active = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val MaxAttempts = 16
+
+  /** Run `op` from the latest version; publish what it built as the next
+    * version and collect garbage, both under the root's lock; on a lost
+    * race run `op` again from the new version. An op that changes
+    * nothing publishes nothing. A failure anywhere leaves the latest
+    * manifest as it was; what the op staged is garbage the next commit
+    * collects. */
+  private[store] def run[T](store: TableStore, op: Commit => T): T = {
+    val lock = locks.computeIfAbsent(
+      new Path(store.root).getFileSystem(store.spark.sparkContext.hadoopConfiguration)
+        .makeQualified(new Path(store.root)).toString, _ => new Object)
+    var attempt = 1
+    while (true) {
+      val c = new Commit(store, store.manifest.getOrElse(Manifest.empty))
+      try {
+        val out = op(c)
+        if (!c.changed) return out
+        val m = c.current.copy(version = c.base.version + 1)
+        val won = lock.synchronized {
+          store.publish(m) && {
+            val garbage = store.unreferenced(m)
+            if (garbage.nonEmpty) store.delete(garbage)
+            true
+          }
+        }
+        if (won) return out
+      } finally c.synchronized(c.ids.foreach(active.remove))
+      require(attempt < MaxAttempts, s"${store.root}: lost $attempt commit races in a row")
+      attempt += 1
+    }
+    throw new IllegalStateException("unreachable")
+  }
+}
+
+/** Parquet-directory implementation: an index root per the [[TableStore]]
+  * scaladoc; on a corpus root each table is `$root/$table` (table "" =
+  * the root itself, for single-table corpus paths). */
 final class ParquetStore(val spark: SparkSession, val root: String)
     extends TableStore {
 
@@ -102,11 +234,136 @@ final class ParquetStore(val spark: SparkSession, val root: String)
   private def fs: FileSystem =
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
-  // ── monotonic table version (`_version` file inside the table dir —
-  // underscore-prefixed, so Spark's parquet FileIndex ignores it). The
-  // EXACT change-detection stamp: a replace that writes byte-identical
-  // length within one mtime granule still bumps it. Iceberg's snapshot
-  // id plays this role in production. ──
+  private def manifestDir = new Path(s"$root/_manifest")
+
+  private def versions: Seq[Long] =
+    try fs.listStatus(manifestDir).toSeq.map(_.getPath.getName)
+      .collect { case ParquetStore.VersionFile(v) => v.toLong }
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  override def version: Long = versions.foldLeft(0L)(math.max)
+
+  override def manifest: Option[Manifest] = {
+    val v = version
+    if (v == 0) None
+    else {
+      val in = fs.open(new Path(manifestDir, s"v$v.json"))
+      try Some(Manifest.fromJson(new String(in.readAllBytes(), UTF_8))) finally in.close()
+    }
+  }
+
+  override def readAt(m: Manifest, table: String): DataFrame = table match {
+    case "stats" => spark.createDataFrame(Seq(m.stats.getOrElse(throw new IllegalArgumentException(
+      s"$root: manifest v${m.version} holds no stats"))))
+    case "lineage" => spark.createDataFrame(m.lineage)
+    case _ =>
+      val t = m.tables.getOrElse(table, throw new IllegalArgumentException(
+        s"$root: manifest v${m.version} has no table '$table'"))
+      val schema = DataType.fromJson(t.schema).asInstanceOf[StructType]
+      if (t.parts.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema.add("c", StringType))
+        .option("basePath", pathOf(table))
+        .parquet(t.parts.map(p => s"$root/${p.dir}"): _*)
+        .drop("c")
+  }
+
+  override def read(table: String): DataFrame = manifest match {
+    case Some(m) => readAt(m, table)
+    case None => readPlain(table)
+  }
+
+  override def exists(table: String): Boolean = manifest match {
+    case Some(m) => m.has(table)
+    case None =>
+      recover(pathOf(table))
+      fs.exists(new Path(pathOf(table)))
+  }
+
+  override def stage(df: DataFrame, table: String, partitionBy: Seq[String]): Seq[Part] = {
+    val id = ParquetStore.newId()
+    Commit.active.add(id)
+    try {
+      val tmp = new Path(s"${pathOf(table)}/_stage-$id")
+      val w = df.write.mode(SaveMode.Overwrite)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp.toString)
+      val f = fs
+      f.delete(new Path(tmp, "_SUCCESS"), false)
+      def leaves(dir: Path, key: String, depth: Int): Seq[(Path, String)] =
+        if (depth == 0) Seq(dir -> key)
+        else f.listStatus(dir).toSeq.filter(s => s.isDirectory && s.getPath.getName.contains("="))
+          .flatMap { s =>
+            val name = s.getPath.getName
+            leaves(s.getPath, if (key.isEmpty) name else s"$key/$name", depth - 1)
+          }
+      val parts = leaves(tmp, "", partitionBy.size).map { case (leaf, key) =>
+        val dir = if (key.isEmpty) s"$table/c=$id" else s"$table/$key/c=$id"
+        val bytes = f.listStatus(leaf).filter(s => s.getPath.getName.endsWith(".parquet"))
+          .map(_.getLen).sum
+        val to = new Path(s"$root/$dir")
+        f.mkdirs(to.getParent)
+        require(f.rename(leaf, to), s"stage: rename $leaf -> $to failed")
+        Part(dir, bytes)
+      }
+      f.delete(tmp, true)
+      parts
+    } catch {
+      case e: Throwable => Commit.active.remove(id); throw e
+    }
+  }
+
+  override def publish(m: Manifest): Boolean = {
+    if (version != m.version - 1) return false
+    val f = fs
+    f.mkdirs(manifestDir)
+    val tmp = new Path(manifestDir, s".v${m.version}-${ParquetStore.newId()}.tmp")
+    val out = f.create(tmp, false)
+    try out.write(Manifest.toJson(m).getBytes(UTF_8)) finally out.close()
+    // put-if-absent: the version check runs under the root's JVM lock;
+    // on a file system whose rename refuses an existing target (HDFS)
+    // the rename also fences writers in other processes
+    val to = new Path(manifestDir, s"v${m.version}.json")
+    val won = !f.exists(to) && f.rename(tmp, to)
+    if (!won) f.delete(tmp, false)
+    won
+  }
+
+  override def delete(paths: Seq[String]): Unit = {
+    val f = fs
+    paths.foreach(p => f.delete(new Path(s"$root/$p"), true))
+  }
+
+  override def unreferenced(m: Manifest): Seq[String] = {
+    val f = fs
+    val live = m.tables.valuesIterator.flatMap(_.parts.map(_.dir)).toSet
+    def inFlight(name: String): Boolean =
+      Seq("c=", "_stage-").exists(p => name.startsWith(p) && Commit.active.contains(name.drop(p.length)))
+    def walk(rel: String): Seq[String] =
+      f.listStatus(new Path(s"$root/$rel")).toSeq.flatMap { st =>
+        val child = s"$rel/${st.getPath.getName}"
+        if (live(child) || inFlight(st.getPath.getName)) Nil
+        else if (st.isDirectory && !st.getPath.getName.startsWith("c=") &&
+          !st.getPath.getName.startsWith("_stage-")) walk(child)
+        else Seq(child)
+      }
+    val tables = f.listStatus(new Path(root)).toSeq
+      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .flatMap(st => walk(st.getPath.getName))
+    // the newest few manifests stay (a reader that just listed the
+    // latest can still open it); crashed publishes leave temp files
+    val manifests = f.listStatus(manifestDir).toSeq.map(_.getPath.getName).filter {
+      case ParquetStore.VersionFile(v) => v.toLong <= m.version - ParquetStore.RetainedVersions
+      case name => name.startsWith(".v") && name.endsWith(".tmp")
+    }.map(n => s"_manifest/$n")
+    tables ++ manifests
+  }
+
+  // ── corpus roots: plain parquet ──
+
+  // monotonic table version (`_version` file inside the table dir —
+  // underscore-prefixed, so Spark's parquet FileIndex ignores it): the
+  // EXACT change stamp behind the schema cache — a replace that writes a
+  // byte-identical length within one mtime granule still bumps it
   private def versionOf(path: String): Long = {
     val vp = new Path(s"$path/_version")
     try { val in = fs.open(vp); try in.readLong() finally in.close() }
@@ -143,7 +400,7 @@ final class ParquetStore(val spark: SparkSession, val root: String)
   /** Parquet schema inference runs a footer-reading Spark job on every
     * `spark.read.parquet`; a table whose [[fingerprint]] is unchanged
     * since the last read reuses that read's schema instead (zero jobs). */
-  override def read(table: String): DataFrame = {
+  private def readPlain(table: String): DataFrame = {
     val path = pathOf(table)
     recover(path)
     val key = ParquetStore.keyOf(fs, path)
@@ -155,68 +412,6 @@ final class ParquetStore(val spark: SparkSession, val root: String)
         val df = spark.read.parquet(path)
         ParquetStore.schemas.put(key, (df.schema, stamp))
         df
-    }
-  }
-
-  override def exists(table: String): Boolean = {
-    recover(pathOf(table))
-    fs.exists(new Path(pathOf(table)))
-  }
-
-  override def write(df: DataFrame, table: String, mode: SaveMode,
-      partitionBy: Seq[String] = Nil): Unit =
-    try writeFiles(df, pathOf(table), mode, partitionBy)
-    finally ParquetStore.forget(fs, pathOf(table))
-
-  private def writeFiles(df: DataFrame, path: String, mode: SaveMode,
-      partitionBy: Seq[String]): Unit = {
-    if (mode == SaveMode.Append && partitionBy.isEmpty) {
-      // Append via STAGING: concurrent append jobs into one directory
-      // share the Hadoop committer's `_temporary/0` dir and delete each
-      // other's attempt dirs at cleanup — so each append writes to a
-      // unique sibling dir, then moves its (uniquely renamed) data files
-      // in. Concurrent appends (e.g. indexPage during a running build —
-      // the reference allows it) compose safely; a crash mid-append
-      // leaves at worst a partial file set of ONE append, equivalent to
-      // the torn append plain parquet gives. (Iceberg: append() is a
-      // single atomic snapshot commit.)
-      val stamp = java.util.UUID.randomUUID().toString.take(12)
-      val staged = s"$path.__append-$stamp"
-      df.write.mode(SaveMode.Overwrite).parquet(staged)
-      val f = fs
-      f.mkdirs(new Path(path))
-      f.listStatus(new Path(staged)).foreach { st =>
-        val n = st.getPath.getName
-        if (!n.startsWith("_") && !n.startsWith(".")) {
-          // a false rename here would silently drop this append's rows —
-          // fail LOUDLY instead (the caller retries or surfaces the error)
-          require(f.rename(st.getPath, new Path(s"$path/app-$stamp-$n")),
-            s"append to $path: rename of ${st.getPath} failed")
-        }
-      }
-      f.delete(new Path(staged), true)
-      // GC staging garbage: a crash between the staged write and the
-      // final delete leaves an orphaned `.__append-<stamp>` sibling that
-      // recover() (which converges only .__new/.__old) never touches.
-      // The NEXT append sweeps siblings older than an hour — the age
-      // guard keeps a concurrent in-flight append's live staging safe.
-      val parent = new Path(path).getParent
-      val prefix = new Path(path).getName + ".__append-"
-      val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-      try f.listStatus(parent)
-        .filter(st => st.getPath.getName.startsWith(prefix) &&
-          st.getModificationTime < cutoff)
-        .foreach(st => f.delete(st.getPath, true))
-      catch { case _: java.io.IOException => () } // GC is best-effort
-      ()
-    } else {
-      // Overwrite deletes the dir (and its `_version`) — carry the
-      // monotonic version across so fingerprints see every overwrite
-      val nextV = if (mode == SaveMode.Overwrite) versionOf(path) + 1 else -1L
-      val w = df.write.mode(mode)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(path)
-      if (nextV >= 0) writeVersion(path, nextV)
     }
   }
 
@@ -240,10 +435,8 @@ final class ParquetStore(val spark: SparkSession, val root: String)
     writeVersion(staged, nextV) // completeness marker — written LAST
     val f = fs
     f.delete(new Path(oldAside), true) // stale from an earlier crash
-    // FAIL LOUDLY on either rename (same contract as append's staged
-    // rename): a false return here would leave the OLD table in place
-    // while the caller proceeds as if it was replaced — e.g. a compaction
-    // that then GCs tombstones against an index that still contains them
+    // FAIL LOUDLY on either rename: a false return here would leave the
+    // OLD table in place while the caller proceeds as if it was replaced
     if (f.exists(new Path(path)))
       require(f.rename(new Path(path), new Path(oldAside)),
         s"replace: rename $path -> $oldAside failed")
@@ -256,43 +449,22 @@ final class ParquetStore(val spark: SparkSession, val root: String)
     spark.catalog.refreshByPath(path)
   }
 
-  override def overwritePartitions(df: DataFrame, table: String,
-      partitionBy: Seq[String]): Unit = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    // dynamic overwrite keeps the table dir — write() bumps `_version`
-    try write(df, table, SaveMode.Overwrite, partitionBy)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    spark.catalog.refreshByPath(pathOf(table))
-  }
-
-  override def sizeInBytes(table: String): Long =
-    fs.getContentSummary(new Path(pathOf(table))).getLength
-
-  override def fingerprint(tables: Seq[String]): Long = {
+  /** Change-detection stamp over plain tables: differs whenever any of
+    * them was replaced. */
+  def fingerprint(tables: Seq[String]): Long = {
     val f = fs
     def stamp(table: String): Long =
       try {
         val path = pathOf(table)
         val st = f.getFileStatus(new Path(path))
-        // `_version` makes the stamp exact (replace/overwrite always
-        // bumps it); mtime×len remains as defense for appends and
-        // tables predating the version file
+        // `_version` makes the stamp exact (replace always bumps it);
+        // mtime×len remains as defense for tables written without it
         versionOf(path) * 0xff51afd7ed558ccdL ^
           st.getModificationTime ^ (st.getLen * 0x9e3779b97f4a7c15L)
       } catch { case _: java.io.IOException => 0L }
     tables.zipWithIndex.foldLeft(0L) { case (acc, (t, i)) =>
       acc ^ java.lang.Long.rotateLeft(stamp(t), i * 17)
     }
-  }
-
-  override def drop(table: String): Unit = {
-    fs.delete(new Path(pathOf(table)), true)
-    ParquetStore.forget(fs, pathOf(table))
   }
 
   override def markerExists(name: String): Boolean =
@@ -311,18 +483,24 @@ final class ParquetStore(val spark: SparkSession, val root: String)
 }
 
 object ParquetStore {
-  /** Inferred schemas, JVM-wide (call sites open a new store per use),
-    * keyed by qualified table path, each with the table's fingerprint
-    * when it was read. */
+  private val VersionFile = "v(\\d+)\\.json".r
+
+  /** Manifest versions GC keeps, the latest included. */
+  private val RetainedVersions = 3
+
+  private def newId(): String =
+    "k" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+
+  /** Inferred corpus schemas, JVM-wide, keyed by qualified table path,
+    * each with the table's fingerprint when it was read. */
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, (StructType, Long)]()
 
   private def keyOf(fs: FileSystem, path: String): String =
     fs.makeQualified(new Path(path)).toString
 
-  /** Drop the cached schemas a mutation of `path` may have changed: the
-    * table itself, tables nested in it, and tables it is nested in (a
-    * write to `segments/batch=3` changes what `segments` reads). */
+  /** Drop the cached schemas a replace of `path` may have changed: the
+    * table itself, tables nested in it, and tables it is nested in. */
   private def forget(fs: FileSystem, path: String): Unit = {
     val p = keyOf(fs, path)
     schemas.keySet().removeIf(k => k == p || k.startsWith(p + "/") || p.startsWith(k + "/"))

@@ -18,17 +18,19 @@ import graft.store.TableStore
   * Design: `readPages` watches a directory (the Iceberg-table stand-in;
   * production would be a stream off the table's commit log) and each
   * micro-batch lands through `foreachBatch` on the SAME commit protocol
-  * as interactive refresh — delta segment batch → tombstones → lineage
-  * row → bucket-pruned compaction — so a page re-crawled in a later file
+  * as interactive refresh — one manifest commit of the delta segment
+  * batch, tombstones, dims and lineage row, then bucket-pruned
+  * compaction — so a page re-crawled in a later file
   * replaces its old version exactly like `/api/indexPage`, and a live
-  * [[graft.queryengine.SearchEngine]] picks each commit up via its index
-  * fingerprint without restarting.
+  * [[graft.queryengine.SearchEngine]] picks each commit up via the
+  * manifest version without restarting.
   *
   * Delivery semantics: the file source + checkpoint give at-least-once
-  * micro-batches; a replayed batch re-appends a delta+tombstone pair for
-  * the same urls, and latest-batch-wins merge converges to the same index
-  * (idempotent by CONVERGENCE, the standard foreachBatch contract —
-  * Iceberg in production makes each micro-batch one atomic commit).
+  * micro-batches. Each micro-batch is one atomic commit, so a batch that
+  * crashed left nothing, and a replay of a committed batch re-appends a
+  * delta+tombstone pair for the same urls, which latest-batch-wins merge
+  * converges to the same index (idempotent by CONVERGENCE, the standard
+  * foreachBatch contract).
   *
   * The first-ever micro-batch on an empty index dir bootstraps through
   * the full build (single batch), so the stream can be pointed at an
@@ -65,23 +67,13 @@ object IndexStream {
       batch: Dataset[PageRow], cfg: IndexBuild.Config,
       compactEvery: Int = 1): Unit = {
     if (batch.isEmpty) return // empty trigger — nothing to commit
-    val store = TableStore.open(spark, indexDir)
-    // Bootstrap gate = the ACTUAL commit point (`index_meta`, written
-    // strictly after docs/dims + index + lineage are durable), NOT the
-    // docs table: docs lands from a background future well before the
-    // build commits, so a crash inside the first micro-batch used to
-    // leave docs present and route the checkpointed replay into the
-    // refresh path, which then failed forever reading the missing index
-    // (at-least-once convergence broken for the bootstrap batch).
-    if (!store.exists("index_meta")) {
-      // a HALF-WRITTEN bootstrap (crash between the first table write
-      // and the index_meta commit) is dropped wholesale before re-running
-      // — no refresh ever committed (no index_meta), so every engine
-      // table is this batch's own partial output. The stream checkpoint
-      // (underscore-prefixed) is not a table and is never touched.
-      Seq("docs", "doc_terms", "lemma_stats", "stats", "head_terms",
-        "site_status", "lineage", "index", "index_meta", "segments",
-        "tombstones", "touched_log").foreach(store.drop)
+    // Bootstrap gate = the commit point: an index exists once a manifest
+    // carries its stats. A crash inside the first micro-batch leaves no
+    // manifest (or one without stats), so the checkpointed replay
+    // bootstraps again; whatever the crashed attempt staged is garbage
+    // the bootstrap commit collects.
+    val m = TableStore.open(spark, indexDir).manifest
+    if (!m.exists(_.stats.isDefined)) {
       IndexBuild.run(spark, Refresh.latestPerUrl(batch), indexDir, cfg.copy(nBatches = 1))
       IndexBuild.mergeSegments(spark, indexDir)
     } else {
@@ -89,10 +81,9 @@ object IndexStream {
       // but the index-bucket rewrite (decode+re-encode of every touched
       // bucket) runs only once per `compactEvery` micro-batches — pending
       // delta batches stay queryable through the engine's delta-overlay
-      // read path, and the deferral counter is derived from the store
-      // (lineage high-water vs index_meta), so it survives restarts.
-      val compact = compactEvery <= 1 ||
-        Refresh.pendingBatches(spark, indexDir) + 1 >= compactEvery
+      // read path, and the deferral counter is the manifest's pending
+      // list, so it survives restarts.
+      val compact = compactEvery <= 1 || m.get.pending.size + 1 >= compactEvery
       Refresh.refreshPages(spark, indexDir, batch, cfg, compact = compact)
     }
   }

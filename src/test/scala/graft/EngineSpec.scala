@@ -198,7 +198,7 @@ class EngineSpec extends AnyFunSuite {
       spark.read.parquet(s"$dir/docs").select("url", "ord").as[(String, Long)].collect().toMap
     }
     def nextOrdOf(dir: String): Long =
-      spark.read.parquet(s"$dir/stats").collect()(0).getAs[Long]("next_ord")
+      IndexDir.stats(spark, dir).getAs[Long]("next_ord")
     assert(ordsOf(dirB) == ordsOf(indexDir), "doc ordinals differ")
     assert(nextOrdOf(dirB) == nextOrdOf(indexDir))
   }

@@ -116,19 +116,21 @@ class IndexStreamSpec extends AnyFunSuite {
     val idx = s"$work/idx"
     val cfg = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, buckets = 16)
 
-    // simulate the crash window: docs (written by a background future
-    // during the build) is present, but the commit point (index_meta) is
-    // not — the round-3 gate keyed on docs and wedged here forever
+    // simulate the crash window: a docs table is on disk, but the
+    // commit point (the manifest) is not — the round-3 gate keyed on docs
+    // and wedged here forever
     val base = CorpusGen.generate(spark, CorpusGen.Config(2, 20)).collect().toSeq
     Seq(("https://site0.test/p/partial", "junk", "s", "l", 1L))
       .toDF("url", "x", "site", "lang", "dl")
       .write.parquet(s"$idx/docs")
-    assert(!TableStore.open(spark, idx).exists("index_meta"))
+    assert(TableStore.open(spark, idx).manifest.isEmpty)
 
     // the checkpointed replay of the first micro-batch must bootstrap
     IndexStream.ingestBatch(spark, idx, spark.createDataset(base), cfg)
     val store = TableStore.open(spark, idx)
-    assert(store.exists("index_meta"), "bootstrap must reach its commit point")
+    assert(store.manifest.exists(_.stats.isDefined), "bootstrap must reach its commit point")
+    assert(IndexDir.unreferenced(spark, idx).isEmpty,
+      s"the half-written table must be collected: ${IndexDir.unreferenced(spark, idx)}")
     assert(store.read("stats").collect()(0).getAs[Long]("n_docs") == base.size.toLong,
       "the partial pre-crash docs table must not leak into the rebuilt index")
     assert(!store.read("docs").columns.contains("x"),

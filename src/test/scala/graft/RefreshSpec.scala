@@ -275,7 +275,7 @@ class RefreshSpec extends AnyFunSuite {
       }, s"$t: refresh must rewrite its touched partitions")
     }
     // stats were adjusted from the delta, not re-aggregated — verify exact
-    val st = spark.read.parquet(s"$work/idx/stats").collect()(0)
+    val st = IndexDir.stats(spark, s"$work/idx")
     assert(st.getAs[Long]("n_docs") == pages.size.toLong)
     val expectTokens = spark.read.parquet(s"$work/idx/docs")
       .agg(org.apache.spark.sql.functions.sum(col("dl"))).as[Long].head()
@@ -308,30 +308,28 @@ class RefreshSpec extends AnyFunSuite {
     val statsBefore = spark.read.parquet(s"$idx/lemma_stats")
       .select("term", "site", "df").as[(String, String, Long)].collect().toSet
 
-    // CRASH INJECTION at the exact window the protocol exists for: the
-    // dims are rewritten, the delta snapshot is persisted, and the
-    // lemma_stats application dies (its partition-overwrite stages inside
-    // the lemma_stats dir — immutable blocks even root, reads unaffected)
+    // CRASH INJECTION where the old protocol had its window: the new
+    // segments and tombstones are staged, and staging the lemma_stats
+    // delta dies (it stages inside the lemma_stats dir — immutable blocks
+    // even root, reads unaffected)
     if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
       cancel("chattr +i unsupported on this filesystem")
     try intercept[Throwable] { Refresh.refreshPages(spark, idx, ds, cfgP) }
     finally { Seq("chattr", "-i", s"$idx/lemma_stats").! : Unit }
-    // the crash window is real: doc_terms already carries the NEW terms
-    // while lemma_stats is still the pre-refresh table — exactly the
-    // state the old code replayed into a permanent zero delta
+    // the crashed commit left nothing visible: doc_terms does not carry
+    // the NEW terms and lemma_stats is the pre-refresh table
     val targetId = IndexBuild.stableDocId(targetUrl)
-    assert(spark.read.parquet(s"$idx/doc_terms")
+    val store = graft.store.TableStore.open(spark, idx)
+    assert(!store.read("doc_terms")
       .filter(col("doc_id") === targetId)
       .select(explode(col("terms"))).as[String].collect().toSet
-      .contains(l(191)), "fixture: dims must be rewritten before the crash")
-    assert(spark.read.parquet(s"$idx/lemma_stats")
+      .contains(l(191)), "a crashed commit must leave the dims as they were")
+    assert(store.read("lemma_stats")
       .select("term", "site", "df").as[(String, String, Long)].collect().toSet
-      == statsBefore, "fixture: the df delta must NOT be applied yet")
+      == statsBefore, "a crashed commit must leave lemma_stats as it was")
 
-    // REPLAY (IndexStream re-runs its micro-batch; nextBatch hands out
-    // the same id because the lineage row never landed) — the persisted
-    // snapshot must apply the TRUE delta, not a zero recomputed from the
-    // already-new dims
+    // REPLAY (IndexStream re-runs its micro-batch) from the unchanged
+    // version: it must apply the TRUE delta exactly once
     Refresh.refreshPages(spark, idx, ds, cfgP)
 
     // converged: lemma_stats equals a fresh recomputation from the dims
@@ -345,13 +343,13 @@ class RefreshSpec extends AnyFunSuite {
       .as[(String, String, Long)].collect().toSet
     assert(got == expect, "replayed refresh must leave lemma_stats exact")
     // corpus stats exact too
-    val st = spark.read.parquet(s"$idx/stats").collect()(0)
+    val st = IndexDir.stats(spark, idx)
     assert(st.getAs[Long]("n_docs") == pages.size.toLong)
     assert(st.getAs[Long]("total_tokens") ==
       spark.read.parquet(s"$idx/docs").agg(sum(col("dl"))).as[Long].head())
-    // and the snapshot tables were cleaned up
-    assert(!new java.io.File(idx).listFiles().exists(_.getName.startsWith("dim_delta")),
-      "applied snapshots must be dropped")
+    // and what the crashed attempt staged was collected
+    assert(IndexDir.unreferenced(spark, idx).isEmpty,
+      s"the crashed attempt's staged files must be collected: ${IndexDir.unreferenced(spark, idx)}")
   }
 
   test("a refresh with a MISMATCHED caller Config takes the index's persisted layout") {
@@ -426,27 +424,29 @@ class RefreshSpec extends AnyFunSuite {
       .filter(col("dl") > 0).orderBy("url").select("url").as[String].head()
     val newPage = page(targetUrl, html(freshTerm, s"$freshTerm $freshTerm ${l(2)}"))
 
-    // crash the refresh after its dim rewrites + snapshot persist, before
-    // the lemma_stats apply (same injection as the replay test)
+    // crash the refresh while it stages its lemma_stats delta (same
+    // injection as the replay test)
     if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
       cancel("chattr +i unsupported on this filesystem")
     try intercept[Throwable] {
       Refresh.refreshPages(spark, idx, spark.createDataset(Seq(newPage)), cfgP)
     } finally { Seq("chattr", "-i", s"$idx/lemma_stats").! : Unit }
-    assert(new java.io.File(idx).listFiles().exists(_.getName.startsWith("dim_delta")),
-      "fixture: the crashed refresh must leave its snapshot behind")
+    val batchBefore = graft.store.TableStore.open(spark, idx).manifest.get.batch
+    assert(IndexDir.unreferenced(spark, idx).nonEmpty,
+      "fixture: the crashed refresh must leave staged files behind")
 
-    // an operator deletes the SAME url: nextBatch hands out the same id
-    // (the refresh's lineage row never landed). Without the op salt in
-    // the snapshot key the delete key-matched the refresh's snapshot and
-    // applied ITS delta — +new-version dfs for a doc being deleted and
-    // Δdocs=0 — permanently corrupting lemma_stats and n_docs.
+    // an operator deletes the SAME url and is handed the same batch id.
+    // The old replay protocol once applied the crashed refresh's delta
+    // here — +new-version dfs for a doc being deleted and Δdocs=0 —
+    // permanently corrupting lemma_stats and n_docs.
     Refresh.deletePages(spark, idx, Seq(targetUrl), cfgP)
+    assert(graft.store.TableStore.open(spark, idx).manifest.get.lineage
+      .exists(_.partition_id == batchBefore + 1), "the delete takes the crashed batch id")
 
     val targetId = IndexBuild.stableDocId(targetUrl)
     assert(spark.read.parquet(s"$idx/docs")
       .filter(col("doc_id") === targetId).count() == 0, "doc must be gone")
-    val st = spark.read.parquet(s"$idx/stats").collect()(0)
+    val st = IndexDir.stats(spark, idx)
     assert(st.getAs[Long]("n_docs") == pages.size - 1L,
       "the DELETE's Δdocs=-1 must be applied, not the crashed refresh's Δdocs=0")
     assert(!spark.read.parquet(s"$idx/lemma_stats")
@@ -475,11 +475,12 @@ class RefreshSpec extends AnyFunSuite {
       : (Set[(String, String, Long)], Set[(String, String, Long)]) = {
     import org.apache.spark.sql.functions.{col, count, explode, lit}
     import spark.implicits._
-    val got = spark.read.parquet(s"$idx/lemma_stats")
+    val store = graft.store.TableStore.open(spark, idx)
+    val got = store.read("lemma_stats")
       .select("term", "site", "df").as[(String, String, Long)].collect().toSet
-    val fresh = spark.read.parquet(s"$idx/doc_terms")
+    val fresh = store.read("doc_terms")
       .select(col("doc_id"), explode(col("terms")).as("term"))
-      .join(spark.read.parquet(s"$idx/docs").select("doc_id", "site"), Seq("doc_id"))
+      .join(store.read("docs").select("doc_id", "site"), Seq("doc_id"))
       .groupBy("term", "site").agg(count(lit(1)).as("df"))
       .as[(String, String, Long)].collect().toSet
     (got, fresh)
@@ -508,7 +509,7 @@ class RefreshSpec extends AnyFunSuite {
       .copy(warc_ts = new java.sql.Timestamp(CorpusGen.Epoch + 60000L))
     Refresh.refreshPages(spark, idx, spark.createDataset(Seq(newer, older)), cfgP)
 
-    val st = spark.read.parquet(s"$idx/stats").collect()(0)
+    val st = IndexDir.stats(spark, idx)
     assert(st.getAs[Long]("n_docs") == pages.size.toLong,
       "a re-crawled url must replace its doc, not add one")
     assert(spark.read.parquet(s"$idx/docs").filter(col("url") === targetUrl).count() == 1,
@@ -538,29 +539,29 @@ class RefreshSpec extends AnyFunSuite {
       .filter(col("dl") > 0).orderBy("url").select("url").as[String].head()
     val statsBefore = lemmaStatsAndFresh(idx)._1
 
-    // CRASH INJECTION as in the refresh replay test: the dims are
-    // rewritten and the delta snapshot persisted, then the lemma_stats
-    // application dies
+    // CRASH INJECTION as in the refresh replay test: staging the
+    // lemma_stats delta dies after the tombstones are staged
     if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
       cancel("chattr +i unsupported on this filesystem")
     try intercept[Throwable] { Refresh.deletePages(spark, idx, Seq(targetUrl), cfgP) }
     finally { Seq("chattr", "-i", s"$idx/lemma_stats").! : Unit }
-    assert(spark.read.parquet(s"$idx/docs").filter(col("url") === targetUrl).count() == 0,
-      "fixture: dims must be rewritten before the crash")
+    assert(graft.store.TableStore.open(spark, idx).read("docs")
+      .filter(col("url") === targetUrl).count() == 1,
+      "a crashed commit must leave the dims as they were")
     assert(lemmaStatsAndFresh(idx)._1 == statsBefore,
-      "fixture: the df delta must NOT be applied yet")
+      "a crashed commit must leave lemma_stats as it was")
 
-    // REPLAY: the same batch id, the snapshot's TRUE delta applies
+    // REPLAY from the unchanged version: the TRUE delta applies once
     Refresh.deletePages(spark, idx, Seq(targetUrl), cfgP)
 
     val (got, fresh) = lemmaStatsAndFresh(idx)
     assert(got == fresh, "replayed delete must leave lemma_stats exact")
-    val st = spark.read.parquet(s"$idx/stats").collect()(0)
+    val st = IndexDir.stats(spark, idx)
     assert(st.getAs[Long]("n_docs") == pages.size - 1L)
     assert(st.getAs[Long]("total_tokens") ==
       spark.read.parquet(s"$idx/docs").agg(sum(col("dl"))).as[Long].head())
-    assert(!new java.io.File(idx).listFiles().exists(_.getName.startsWith("dim_delta")),
-      "applied snapshots must be dropped")
+    assert(IndexDir.unreferenced(spark, idx).isEmpty,
+      s"the crashed attempt's staged files must be collected: ${IndexDir.unreferenced(spark, idx)}")
   }
 
   test("a deferred delete serves through the delta overlay, then compacts rank-identically") {
@@ -639,11 +640,12 @@ class RefreshSpec extends AnyFunSuite {
   /** url → doc ordinal, from the docs dim. */
   private def ordsOf(idx: String): Map[String, Long] = {
     import spark.implicits._
-    spark.read.parquet(s"$idx/docs").select("url", "ord").as[(String, Long)].collect().toMap
+    graft.store.TableStore.open(spark, idx).read("docs")
+      .select("url", "ord").as[(String, Long)].collect().toMap
   }
 
   private def nextOrdOf(idx: String): Long =
-    spark.read.parquet(s"$idx/stats").collect()(0).getAs[Long]("next_ord")
+    IndexDir.stats(spark, idx).getAs[Long]("next_ord")
 
   /** Lemmas from the dictionary's rare end that no indexed doc holds. */
   private def unusedLemmas(idx: String): Seq[String] = {
@@ -725,23 +727,26 @@ class RefreshSpec extends AnyFunSuite {
     val cfgP = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 1, buckets = 16)
     val pages = buildSmall(work, cfgP, 40)
     val l = RuDict.contentLemmas
-    val batch = (pages.map(_.url).sorted.take(1) ++
-      Seq("https://site0.test/p/new-1", "https://site1.test/p/new-2", "https://site0.test/p/new-3"))
-      .map(u => page(u, html(l(190), s"${l(190)} ${l(191)}")))
+    val known = pages.map(_.url).sorted.head
+    val added = Seq("https://site0.test/p/new-1", "https://site1.test/p/new-2", "https://site0.test/p/new-3")
+    val batch = (known +: added).map(u => page(u, html(l(190), s"${l(190)} ${l(191)}")))
     def ds = spark.createDataset(batch)
+    val before = ordsOf(idx)
 
-    // crash after the dims are rewritten, before the stats delta lands —
-    // the same injection as the replay tests above
+    // crash while the refresh stages its lemma_stats delta — the same
+    // injection as the replay tests above
     if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
       cancel("chattr +i unsupported on this filesystem")
     try intercept[Throwable] { Refresh.refreshPages(spark, idx, ds, cfgP) }
     finally { Seq("chattr", "-i", s"$idx/lemma_stats").! : Unit }
-    val crashed = ordsOf(idx)
-    assert(batch.forall(p => crashed.contains(p.url)), "fixture: docs must be rewritten")
-    assert(nextOrdOf(idx) == pages.size + 3L, "the new ordinals are reserved before docs carries them")
+    assert(ordsOf(idx) == before, "a crashed commit must leave docs as they were")
+    assert(nextOrdOf(idx) == pages.size.toLong, "a crashed commit must reserve no ordinal")
 
     Refresh.refreshPages(spark, idx, ds, cfgP)
-    assert(ordsOf(idx) == crashed, "the replay must hand out the crashed attempt's ordinals")
+    val expected = before ++ added.sortBy(IndexBuild.stableDocId).zipWithIndex
+      .map { case (u, i) => u -> (pages.size.toLong + i) }
+    assert(ordsOf(idx) == expected,
+      "the replay must hand out the ordinals an uncrashed refresh hands out")
     assert(nextOrdOf(idx) == pages.size + 3L)
     val ords = ordsOf(idx).values.toSeq
     assert(ords.distinct.size == ords.size)
@@ -750,6 +755,7 @@ class RefreshSpec extends AnyFunSuite {
   test("ordinals: a different commit handed a crashed commit's batch id never reuses its ordinals") {
     spark.sparkContext.setLogLevel("WARN")
     import scala.sys.process._
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val work = Files.createTempDirectory("graft-ord-crash-other").toString
     val idx = s"$work/idx"
@@ -760,46 +766,60 @@ class RefreshSpec extends AnyFunSuite {
     assert(u.size >= 4, "fixture: four unused lemmas needed")
     // the crashed urls 0 and 2 share a lemma; each url searched for has its own
     val lemmaOf = Map(0 -> u(0), 1 -> u(1), 2 -> u(0), 3 -> u(2), 4 -> u(3))
-    def refresh(i: Int) = Refresh.refreshPages(spark, idx, spark.createDataset(Seq(
-      page(s"https://site${i % 2}.test/p/new-$i", html(lemmaOf(i), s"${lemmaOf(i)} ${l(2)}")))), cfgP)
-    def crashing(table: String)(body: => Unit): Unit = {
-      if (Seq("chattr", "+i", s"$idx/$table").! != 0)
+    def newPage(i: Int) =
+      page(s"https://site${i % 2}.test/p/new-$i", html(lemmaOf(i), s"${lemmaOf(i)} ${l(2)}"))
+    def refresh(i: Int) = Refresh.refreshPages(spark, idx, spark.createDataset(Seq(newPage(i))), cfgP)
+    def crashing(dir: String)(body: => Unit): Unit = {
+      if (Seq("chattr", "+i", s"$idx/$dir").! != 0)
         cancel("chattr +i unsupported on this filesystem")
       try intercept[Throwable](body)
-      finally { Seq("chattr", "-i", s"$idx/$table").! : Unit }
+      finally { Seq("chattr", "-i", s"$idx/$dir").! : Unit }
     }
-    // new url 0 dies after its docs row landed, before any stats delta;
-    // new url 1 is then handed the same batch id
+    // new url 0 dies while its lemma_stats delta stages; new url 1 is
+    // then handed the same batch id
     crashing("lemma_stats")(refresh(0))
-    assert(ordsOf(idx).contains("https://site0.test/p/new-0"), "fixture: docs must be rewritten")
+    assert(!ordsOf(idx).contains("https://site0.test/p/new-0"), "a crashed commit leaves no docs row")
     refresh(1)
-    // new url 2 dies after its dim deltas landed, before its lineage
-    // row; new url 3 is handed that batch id, so the batch-id gates drop
-    // its dim deltas (and with them its df: it is not searched for
-    // below), and new url 4 follows in a fresh batch
-    crashing("lineage")(refresh(2))
+    // new url 2 dies at its publish, with every table staged; new url 3
+    // is handed that batch id — the old batch-id gates then dropped its
+    // dim deltas, leaving its terms at df 0 — and new url 4 follows in
+    // a fresh batch
+    crashing("_manifest")(refresh(2))
     refresh(3)
     refresh(4)
     val ords = ordsOf(idx).values.toSeq
     assert(ords.distinct.size == ords.size, s"ordinals must stay unique: ${ords.sorted}")
     assert(nextOrdOf(idx) > ords.max)
     val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
-    for (i <- Seq(1, 4))
+    for (i <- Seq(1, 3, 4))
       assert(engine.search(lemmaOf(i), 0, 10, None).data.map(r => r.site + r.uri) ==
         Seq(s"https://site${i % 2}.test/p/new-$i"), s"new url $i must be found alone")
+
+    // url 3's new terms carry the df a rebuild of the same pages gives
+    val live = pages ++ Seq(1, 3, 4).map(newPage)
+    spark.createDataset(live).write.mode("overwrite").parquet(s"$work/pages_live")
+    IndexBuild.run(spark, spark.read.parquet(s"$work/pages_live")
+      .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]), s"$work/rebuilt", cfgP)
+    val terms = graft.core.Lemmatizer.lemmaCountsFromHtml(newPage(3).html).keySet.toSeq
+    def dfOf(dir: String): Set[(String, String, Long)] =
+      graft.store.TableStore.open(spark, dir).read("lemma_stats")
+        .filter(col("term").isin(terms: _*))
+        .select("term", "site", "df").as[(String, String, Long)].collect().toSet
+    assert(dfOf(idx) == dfOf(s"$work/rebuilt"), "url 3's terms must carry the rebuild's df")
   }
 
-  test("an unreadable lineage fails the commit and never reuses a pending batch id") {
+  test("an unreadable manifest fails engine open and commit loudly") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-lineage-error").toString
+    val work = Files.createTempDirectory("graft-manifest-error").toString
     val idx = s"$work/idx"
     val pages = buildSmall(work, idxCfg, 40)
     val l = RuDict.contentLemmas
     val u = unusedLemmas(idx)
     assert(u.size >= 2, "fixture: two unused lemmas needed")
     val urls = pages.map(_.url).sorted
-    // a pending (uncompacted) refresh: its batch id is only in lineage
+    // a pending (uncompacted) refresh: its segments are live only
+    // through the manifest
     Refresh.refreshPages(spark, idx, spark.createDataset(Seq(
       page(urls(1), html(u(0), s"${u(0)} ${l(2)}")))), idxCfg, compact = false)
     val pending = Refresh.indexAsOf(spark, idx) + 1
@@ -813,35 +833,76 @@ class RefreshSpec extends AnyFunSuite {
     val before = batchFiles()
     assert(before.nonEmpty, "fixture: the pending batch must hold segments")
 
-    val junk = java.nio.file.Paths.get(s"$idx/lineage/a-unreadable.parquet")
-    Files.write(junk, "not parquet".getBytes(StandardCharsets.UTF_8))
+    val latest = java.nio.file.Paths.get(s"$idx/_manifest/v${
+      graft.store.TableStore.open(spark, idx).version}.json")
+    val good = Files.readAllBytes(latest)
+    Files.write(latest, "not a manifest".getBytes(StandardCharsets.UTF_8))
     def second = spark.createDataset(Seq(page(urls(2), html(u(1), s"${u(1)} ${l(2)}"))))
+    intercept[Throwable](new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum))
     intercept[Throwable](Refresh.refreshPages(spark, idx, second, idxCfg, compact = false))
-    assert(batchFiles() == before, "the pending batch must not be overwritten")
+    intercept[Throwable](Refresh.deletePages(spark, idx, Seq(urls(3)), idxCfg))
+    assert(batchFiles() == before, "the pending batch must not be touched")
 
-    Files.delete(junk)
+    Files.write(latest, good)
     Refresh.refreshPages(spark, idx, second, idxCfg, compact = false)
-    assert(spark.read.parquet(s"$idx/lineage").agg(org.apache.spark.sql.functions.max("partition_id"))
+    assert(graft.store.TableStore.open(spark, idx).read("lineage")
+      .agg(org.apache.spark.sql.functions.max("partition_id"))
       .as[Int].head() == pending + 1, "the next commit must take a fresh batch id")
     val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
     assert(engine.search(u(0), 0, 10, None).data.map(i => i.site + i.uri) == Seq(urls(1)))
     assert(engine.search(u(1), 0, 10, None).data.map(i => i.site + i.uri) == Seq(urls(2)))
   }
 
-  test("an index written before doc ordinals (no stats.next_ord) fails engine open and refresh: rebuild") {
+  test("no manifest: engine open, refresh and delete fail with rebuild") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-ord-legacy").toString
+    val work = Files.createTempDirectory("graft-no-manifest").toString
     val idx = s"$work/idx"
     val pages = buildSmall(work, idxCfg, 20)
-    val store = graft.store.TableStore.open(spark, idx)
-    store.replace(store.read("stats").drop("next_ord").localCheckpoint(), "stats")
+    // the tables stay on disk; without the manifest nothing names them
+    val dir = new java.io.File(s"$idx/_manifest")
+    dir.listFiles().foreach(_.delete())
+    dir.delete()
     val open = intercept[IllegalStateException](
       new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum))
     assert(open.getMessage.contains("rebuild"), open.getMessage)
     val refresh = intercept[IllegalStateException](
       Refresh.refreshPages(spark, idx, spark.createDataset(pages.take(1)), idxCfg))
     assert(refresh.getMessage.contains("rebuild"), refresh.getMessage)
-    intercept[IllegalStateException](Refresh.deletePages(spark, idx, Seq(pages.head.url), idxCfg))
+    val delete = intercept[IllegalStateException](
+      Refresh.deletePages(spark, idx, Seq(pages.head.url), idxCfg))
+    assert(delete.getMessage.contains("rebuild"), delete.getMessage)
+  }
+
+  test("merge and compaction drop segments batches at or below as_of") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-segments-gc").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 40) // 2 batches, merged
+    def batchesOnDisk(): Set[Int] = {
+      val root = new java.io.File(s"$idx/segments")
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(root).filter(_.getName.endsWith(".parquet"))
+        .map(f => "batch=(\\d+)".r.findFirstMatchIn(f.getPath).get.group(1).toInt).toSet
+    }
+    val asOf = Refresh.indexAsOf(spark, idx)
+    assert(asOf == idxCfg.nBatches - 1)
+    assert(batchesOnDisk().isEmpty, s"merge must drop the merged batches: ${batchesOnDisk()}")
+    assert(IndexDir.unreferenced(spark, idx).isEmpty)
+
+    // a deferred refresh keeps its batch until the compaction folds it
+    val l = RuDict.contentLemmas
+    val u = unusedLemmas(idx)
+    Refresh.refreshPages(spark, idx, spark.createDataset(Seq(
+      page(pages.head.url, html(u(0), s"${u(0)} ${l(2)}")))), idxCfg, compact = false)
+    assert(batchesOnDisk() == Set(asOf + 1), "a pending batch stays until compaction")
+    Refresh.compactTouched(spark, idx, idxCfg)
+    assert(Refresh.indexAsOf(spark, idx) == asOf + 1)
+    assert(batchesOnDisk().isEmpty, s"compaction must drop the folded batch: ${batchesOnDisk()}")
+    assert(IndexDir.unreferenced(spark, idx).isEmpty)
+    val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
+    assert(engine.search(u(0), 0, 10, None).data.map(i => i.site + i.uri) == Seq(pages.head.url))
   }
 }

@@ -41,7 +41,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("replace: crash BETWEEN the two renames (table dir absent) recovers to the NEW version") {
     val (store, root) = freshStore()
-    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    store.replace(oneRow(1L), "t")
     // stage the new version exactly as replace() does...
     oneRow(2L).write.parquet(s"$root/t.__new")
     val out = fs.create(new Path(s"$root/t.__new/_version"), true)
@@ -59,7 +59,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("replace: crash with an INCOMPLETE staged dir keeps the old version intact") {
     val (store, root) = freshStore()
-    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    store.replace(oneRow(1L), "t")
     // staged dir exists but has no _version completeness marker — the
     // crash happened mid-stage, before any rename; table untouched
     oneRow(2L).write.parquet(s"$root/t.__new")
@@ -74,7 +74,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("replace: crash AFTER old moved aside but staged incomplete restores the OLD version") {
     val (store, root) = freshStore()
-    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    store.replace(oneRow(1L), "t")
     oneRow(2L).write.parquet(s"$root/t.__new")
     fs.delete(new Path(s"$root/t.__new/_version"), false)
     fs.rename(new Path(s"$root/t"), new Path(s"$root/t.__old"))
@@ -85,53 +85,16 @@ class TableStoreSpec extends AnyFunSuite {
     assert(fs.exists(new Path(s"$root/t")))
   }
 
-  test("append: concurrent appends to one table do not clobber each other (staged appends)") {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import spark.implicits._
-    val (store, _) = freshStore()
-    // Hadoop FileOutputCommitter shares `_temporary/0` per output dir:
-    // two concurrent plain appends can delete each other's attempt dirs
-    // (observed as "Mkdirs failed to create …/_temporary/…"). The staged
-    // append must make N concurrent appends land all N row sets.
-    val n = 6
-    val fs = (0 until n).map(i => Future {
-      store.write(oneRow(i.toLong), "t", org.apache.spark.sql.SaveMode.Append)
-    })
-    fs.foreach(Await.result(_, Duration.Inf))
-    val got = store.read("t").as[Long].collect().sorted.toSeq
-    assert(got == (0L until n.toLong), s"expected all $n appended rows, got $got")
-  }
-
-  test("append: a stale crashed staging dir is GC'd by the next append; a fresh one is left alone") {
-    val (store, root) = freshStore()
-    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Append)
-    val f = fs
-    // simulate a crash between the staged write and the final delete:
-    // an orphaned sibling staging dir, old enough to be provably dead
-    val stale = new Path(s"$root/t.__append-deadbeef0000")
-    f.mkdirs(stale)
-    f.setTimes(stale, System.currentTimeMillis() - 2L * 60 * 60 * 1000, -1)
-    // and a FRESH one (a concurrent in-flight append) that must survive
-    val live = new Path(s"$root/t.__append-cafecafe0000")
-    f.mkdirs(live)
-    store.write(oneRow(2L), "t", org.apache.spark.sql.SaveMode.Append)
-    assert(!f.exists(stale), "stale append staging must be swept by the next append")
-    assert(f.exists(live), "a recent (possibly in-flight) staging dir must be kept")
-    import spark.implicits._
-    assert(store.read("t").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-  }
-
   test("fingerprint detects a same-length replace (monotonic _version, not mtime heuristics)") {
-    val (store, _) = freshStore()
-    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    val (s, _) = freshStore()
+    val store = s.asInstanceOf[graft.store.ParquetStore] // the corpus-root schema-cache stamp
+    store.replace(oneRow(1L), "t")
     val fp1 = store.fingerprint(Seq("t"))
     store.replace(oneRow(2L), "t") // identical schema + row count ⇒ same byte length
     val fp2 = store.fingerprint(Seq("t"))
     assert(fp1 != fp2, "replace with same-length content must change the fingerprint")
-    // and a same-length plain Overwrite write too (index_meta pattern)
-    store.write(oneRow(3L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    // and every further same-length replace too
+    store.replace(oneRow(3L), "t")
     val fp3 = store.fingerprint(Seq("t"))
     assert(fp2 != fp3)
   }
@@ -157,7 +120,7 @@ class TableStoreSpec extends AnyFunSuite {
 
   test("read: re-reading an unchanged table runs no Spark job, from any store instance") {
     val (store, root) = freshStore()
-    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    store.replace(oneRow(1L), "t")
     val (_, first) = jobsOf("schema-first")(store.read("t"))
     assert(first > 0, "fixture: the first read infers the schema with a job")
     val (df, again) = jobsOf("schema-again")(store.read("t"))
@@ -171,7 +134,7 @@ class TableStoreSpec extends AnyFunSuite {
   test("read: after a replace with a different schema, the new schema is read") {
     import spark.implicits._
     val (store, _) = freshStore()
-    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    store.replace(oneRow(1L), "t")
     assert(store.read("t").schema.fieldNames.toSeq == Seq("x"))
     store.replace(Seq(("a", 2L)).toDF("name", "y"), "t")
     val df = store.read("t")
@@ -182,14 +145,88 @@ class TableStoreSpec extends AnyFunSuite {
   test("read: after drop and re-create, the new table's schema is read") {
     import spark.implicits._
     val (store, root) = freshStore()
-    store.write(oneRow(1L), "t", org.apache.spark.sql.SaveMode.Overwrite)
+    store.replace(oneRow(1L), "t")
     assert(store.read("t").schema.fieldNames.toSeq == Seq("x"))
-    store.drop("t")
+    fs.delete(new Path(s"$root/t"), true) // dropped outside the store
     // re-created through another store instance: the cache is JVM-wide
-    TableStore.open(spark, root).write(Seq(("b", 3)).toDF("name", "z"), "t",
-      org.apache.spark.sql.SaveMode.Append)
+    TableStore.open(spark, root).replace(Seq(("b", 3)).toDF("name", "z"), "t")
     val df = store.read("t")
     assert(df.schema.fieldNames.toSeq == Seq("name", "z"))
     assert(df.as[(String, Int)].collect().toSeq == Seq(("b", 3)))
+  }
+
+  // ── index roots: copy-on-write commits published through a manifest ──
+
+  private def unreferencedFiles(root: String): Seq[String] = IndexDir.unreferenced(spark, root)
+
+  private def statusRows(n: Int, tag: String) = {
+    import spark.implicits._
+    (0 until n).map(i => (s"$tag-$i", "INDEXED")).toDF("site", "status")
+  }
+
+  test("commit: status appends racing a batch commit all land; the batch commit re-runs") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import spark.implicits._
+    val (store, root) = freshStore()
+    store.commit(_.append(statusRows(1, "boot"), "site_status"))
+    val appends = 4
+    val appended = new java.util.concurrent.CountDownLatch(appends)
+    val attempts = new java.util.concurrent.atomic.AtomicInteger
+    // the batch commit stages its segments, then (first attempt only)
+    // waits until every status append has published: it must lose the
+    // race, re-run from the new version and keep every appended row
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val batch = Future(store.commit { c =>
+      started.countDown()
+      c.append(Seq((1, "t", 7L)).toDF("batch", "term", "postings"), "segments", Seq("batch"))
+      if (attempts.incrementAndGet() == 1) appended.await()
+      c.update(m => m.copy(batch = m.batch + 1))
+      c.base.version
+    })
+    started.await()
+    val statuses = (0 until appends).map(i => Future {
+      store.commit(_.append(statusRows(2, s"a$i"), "site_status"))
+      appended.countDown()
+    })
+    statuses.foreach(Await.result(_, Duration.Inf))
+    val batchBase = Await.result(batch, Duration.Inf)
+    assert(attempts.get == 2, "the batch commit must lose once and re-run")
+    assert(batchBase == 1L + appends, "the re-run must start from the latest version")
+    val m = store.manifest.get
+    assert(m.version == 2L + appends, "one version per commit")
+    assert(store.read("site_status").count() == 1L + 2 * appends, "every append must land")
+    assert(store.read("segments").as[(String, Long, Int)].collect().toSeq == Seq(("t", 7L, 1)))
+    assert(m.batch == 0)
+    assert(unreferencedFiles(root).isEmpty,
+      s"the lost attempt's staged files must be collected: ${unreferencedFiles(root)}")
+  }
+
+  test("commit: concurrent read-modify-write commits re-run on a lost race, none is lost") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val (store, root) = freshStore()
+    val zero = graft.store.Stats(0L, 0L, 0.0, 0L, 1, 1, 1, 1, 0L)
+    store.commit(_.update(_.copy(stats = Some(zero))))
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val writers = (0 until 4).map(w => Future {
+      (0 until 3).foreach { i =>
+        store.commit { c =>
+          runs.incrementAndGet()
+          val n = c.base.stats.get.n_docs // read the base, write base + 1
+          c.append(statusRows(1, s"w$w-$i"), "site_status")
+          c.update(_.copy(stats = Some(zero.copy(n_docs = n + 1))))
+        }
+      }
+    })
+    writers.foreach(Await.result(_, Duration.Inf))
+    assert(store.read("stats").collect()(0).getAs[Long]("n_docs") == 12L,
+      "a commit that lost the race must re-run from the new version, not overwrite it")
+    assert(store.read("site_status").count() == 12L)
+    assert(store.manifest.get.version == 13L)
+    assert(runs.get >= 12)
+    assert(unreferencedFiles(root).isEmpty, s"unreferenced: ${unreferencedFiles(root)}")
   }
 }
