@@ -34,7 +34,7 @@ final case class IndexingResponse(result: Boolean, error: Option[String])
   *    invalid HTTP code (or no corpus row at all — the table-scan
   *    analogue of a failed HEAD request) fails with
   *    «Код: N Ошибка доступа к url» (IndexServiceImpl.java:91-94);
-  *    otherwise the page is refreshed via equality-delete tombstones.
+  *    otherwise the page is refreshed in one commit (Refresh.refreshPages).
   *
   * The monitor is in-process (an AtomicBoolean), exactly like the
   * reference's static RunIndexMonitor — cross-process mutual exclusion

@@ -110,8 +110,7 @@ object GraftCli {
       case "stats" :: indexDir :: Nil =>
         val m = graft.store.TableStore.open(spark, indexDir).manifest.getOrElse(
           sys.error(s"$indexDir holds no index commit manifest: rebuild it with `GraftCli build`"))
-        println(s"manifest v${m.version}: as_of batch ${m.asOf}, pending batches " +
-          m.pending.map(_.batch).mkString("[", ", ", "]"))
+        println(s"manifest v${m.version}: as_of batch ${m.asOf}")
         m.tables.toSeq.sortBy(_._1).foreach { case (t, meta) =>
           println(f"  $t%-12s ${meta.bytes}%,12d bytes live in ${meta.parts.size} parts")
         }

@@ -51,7 +51,7 @@ final case class SegPartial(term: String, shard: Int, blob: Array[Byte])
   * Doc identity has two forms. The url hash (`doc_id`, [[stableDocId]])
   * is the KEY of the `docs` / `doc_terms` dims and their `db` storage
   * partition — how a refresh or delete finds a url's rows. Posting space
-  * (segments, tombstones, the engine's hits) carries the dense doc
+  * (segments, the engine's hits) carries the dense doc
   * ORDINAL `docs.ord` instead: a build numbers its docs 0..n-1 in
   * doc_id order (see `runInner`) and records the high-water
   * `next_ord` in the manifest's stats; a refresh keeps a known url's
@@ -89,6 +89,14 @@ object IndexBuild {
     val RandomPage = "RANDOM_PAGE"
     val All: Seq[String] = Seq(Indexing, Indexed, Failed, RandomPage)
   }
+
+  /** The latest `site_status` row per site (by `ts`): the state
+    * Statistics reports, and what a refresh rewrites the table to. */
+  def latestStatus(rows: DataFrame): DataFrame =
+    rows.withColumn("__rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("site")).orderBy(desc("ts"))))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
 
   /** Reference F1: only pages with a valid HTTP status are lemmatized
     * (MorphologyServiceImpl.java:89-90; valid-codes {200, 308} from
@@ -166,36 +174,14 @@ object IndexBuild {
     * build throughput — the posting-row external sort was the build's
     * memory-bandwidth ceiling. The output is byte-identical to the
     * original row-shuffle + partition-local-sort plan, which
-    * SegmentCombineSpec runs through [[encodeSortedRows]] as its oracle.
-    *
-    * Shard scheme (head terms only; tail terms keep shard = -1):
-    *   shard = hash(site) % siteGroups × docSubshards
-    *         + hash(ord) % docSubshards
-    * i.e. Elasticsearch-style ROUTING by site composed with doc-hash
-    * splitting inside each site group. Every posting of a doc lands in
-    * the same shard (site is a function of the doc), so conjunctive
-    * queries stay shard-local exactly as with pure doc-hash sharding —
-    * and a SITE-SCOPED query prunes to its group's `docSubshards` shards
-    * (1/siteGroups of the salted postings) instead of scoring every
-    * global match. Trade-off (documented, the same one ES routing makes):
-    * a single mega-site concentrates in docSubshards shards; production
-    * raises docSubshards (or splits hot tenants) when site skew demands. */
+    * SegmentCombineSpec runs through [[encodeSortedRows]] as its oracle. */
   def buildSegments(
       post: DataFrame,
       headTerms: DataFrame, // single column `term`
       cfg: Config,
       numPartitions: Int): Dataset[SegmentRow] = {
     val spark = post.sparkSession
-    import spark.implicits._
-
-    val salted = post
-      .join(broadcast(headTerms).withColumn("is_head", lit(true)), Seq("term"), "left")
-      .withColumn("shard",
-        when(col("is_head"),
-          (pmod(xxhash64(col("site")), lit(cfg.siteGroups)) * cfg.docSubshards +
-            pmod(xxhash64(col("ord")), lit(cfg.docSubshards))).cast("int"))
-          .otherwise(lit(-1)))
-      .select("term", "shard", "ord", "tf", "dl")
+    val salted = saltedPostings(post, headTerms, cfg)
 
     val buckets = cfg.buckets
     // MAP-SIDE COMBINE (MapReduce-era inverted-index
@@ -219,6 +205,32 @@ object IndexBuild {
         .sortWithinPartitions("term", "shard"),
       buckets)
   }
+
+  /** Posting rows (term, shard, ord, tf, dl) of `post` — columns (term,
+    * ord, tf, dl, site) — given the salted head-term set: the build's
+    * segments and a refresh's new postings both take their shard here.
+    *
+    * Shard scheme (head terms only; tail terms keep shard = -1):
+    *   shard = hash(site) % siteGroups × docSubshards
+    *         + hash(ord) % docSubshards
+    * i.e. Elasticsearch-style ROUTING by site composed with doc-hash
+    * splitting inside each site group. Every posting of a doc lands in
+    * the same shard (site is a function of the doc), so conjunctive
+    * queries stay shard-local exactly as with pure doc-hash sharding —
+    * and a SITE-SCOPED query prunes to its group's `docSubshards` shards
+    * (1/siteGroups of the salted postings) instead of scoring every
+    * global match. Trade-off (documented, the same one ES routing makes):
+    * a single mega-site concentrates in docSubshards shards; production
+    * raises docSubshards (or splits hot tenants) when site skew demands. */
+  def saltedPostings(post: DataFrame, headTerms: DataFrame, cfg: Config): DataFrame =
+    post
+      .join(broadcast(headTerms).withColumn("is_head", lit(true)), Seq("term"), "left")
+      .withColumn("shard",
+        when(col("is_head"),
+          (pmod(xxhash64(col("site")), lit(cfg.siteGroups)) * cfg.docSubshards +
+            pmod(xxhash64(col("ord")), lit(cfg.docSubshards))).cast("int"))
+          .otherwise(lit(-1)))
+      .select("term", "shard", "ord", "tf", "dl")
 
   /** Map-side combiner over InternalRows with schema exactly
     * (term STRING, shard INT, ord LONG, tf LONG, dl LONG): groups the
@@ -404,9 +416,8 @@ object IndexBuild {
   /** Streaming run-length encoder over a DataFrame with columns exactly
     * (term STRING, shard INT, ord LONG, tf LONG, dl LONG), ALREADY
     * repartitioned by (term, shard) and sorted by (term, shard, ord)
-    * within partitions: one SegmentRow per (term, shard) run. Shared by
-    * the initial build (buildSegments) and the bucket rebuild of
-    * compaction and the engine's delta overlay (Refresh.reencode).
+    * within partitions: one SegmentRow per (term, shard) run: the bucket
+    * rewrite of a refresh or delete (Refresh.reencode).
     *
     * Runs over the physical plan's InternalRows with primitive-array
     * accumulators: the deserializer alternative (`.as[Tuple5]` +
@@ -530,14 +541,14 @@ object IndexBuild {
   /** Persist the top [[MidTermsWidth]] mid-df terms (hottest NON-head
     * terms — heads are excluded by a broadcast anti-join against the
     * persisted head set, so this stays correct whatever salt threshold a
-    * later compaction was configured with) as the engine's cold-start
+    * later refresh was configured with) as the engine's cold-start
     * prefetch hint table. A bounded TakeOrdered over the tiny lemma_stats
-    * table — run once per build and once per compaction, so engine
-    * reloads never aggregate the vocabulary. The stored df is an ORDERING
-    * hint only (the engine re-reads current dfs exactly). */
+    * table as `c` has staged it so far — run on a refresh cadence, so
+    * engine reloads never aggregate the vocabulary. The stored df is an
+    * ORDERING hint only (the engine re-reads current dfs exactly). */
   def writeMidTerms(c: Commit): Unit =
     c.put(
-      c.read("lemma_stats")
+      c.store.readAt(c.current, "lemma_stats")
         .groupBy("term").agg(sum(col("df")).as("df"))
         .join(broadcast(c.read("head_terms").select("term")), Seq("term"), "left_anti")
         .orderBy(col("df").desc, col("term"))
@@ -761,8 +772,8 @@ object IndexBuild {
       // FORWARD index (doc -> its distinct terms): the structure that
       // makes a later single-page refresh/delete O(doc) instead of
       // O(corpus) — it names exactly the term-buckets a doc's postings
-      // live in, so compaction rewrites only those partitions
-      // (Refresh.compactTouched). The reference gets this for free from
+      // live in, so a refresh rewrites only those partitions
+      // (Refresh.commitDelta). The reference gets this for free from
       // its relational index table (IndexEntity rows by page_id); a
       // posting-list engine must store it explicitly (Lucene's analogue:
       // per-doc term vectors).
@@ -783,7 +794,7 @@ object IndexBuild {
       // its exact lookup path. At build time the head set IS
       // `df > saltThresholdDf` over this very termDf, so the filter is
       // exactly writeMidTerms's anti-join against the head table (that
-      // function remains the compaction-cadence path).
+      // function remains the refresh-cadence path).
       Future(c.put(
         termDf.filter(col("df") <= cfg.saltThresholdDf)
           .orderBy(col("df").desc, col("term")).limit(MidTermsWidth),
@@ -904,14 +915,11 @@ object IndexBuild {
     import spark.implicits._
     TableStore.open(spark, outDir).commit { c =>
       val m = c.base
-      // build batches only: delta batches (ids ≥ n_batches) fold through
-      // Refresh.compactTouched, which applies their tombstones
-      val batches = m.stats.fold(Seq.empty[Int]) { s =>
-        m.parts("segments").map(_.value("batch").toInt).filter(_ < s.n_batches).distinct
-      }
+      // `segments` holds only the batches of a multi-batch build
+      val batches = m.parts("segments").map(_.value("batch").toInt)
       if (batches.nonEmpty) {
         val cols = Seq("bucket", "term", "shard", "doc_count", "block_max", "postings")
-        val segs = c.read("segments").filter(col("batch").isin(batches: _*)).select(cols.map(col): _*)
+        val segs = c.read("segments").select(cols.map(col): _*)
         val merged = (if (m.has("index")) segs.unionByName(c.read("index").select(cols.map(col): _*)) else segs)
           .as[(Int, String, Int, Int, Double, Array[Byte])]
           .groupByKey { case (bucket, term, shard, _, _, _) => (bucket, term, shard) }
@@ -924,7 +932,7 @@ object IndexBuild {
           }
           .toDF
         c.put(merged, "index", Seq("bucket"))
-        c.remove("segments")(p => batches.contains(p.value("batch").toInt))
+        c.remove("segments")(_ => true)
         c.update(_.copy(asOf = math.max(m.asOf, batches.max)))
       }
     }

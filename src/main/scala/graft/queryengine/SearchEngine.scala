@@ -1,7 +1,6 @@
 package graft.queryengine
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{HtmlText, Lemmatizer, Scorer, PostingCodec, ReferenceTfSum, Snippet}
@@ -80,68 +79,14 @@ final class SearchEngine(
     spark.conf.getOption("spark.graft.indexCacheBytes")
       .map(_.toLong).getOrElse(8L * 1024 * 1024 * 1024)
 
-  /** The latest manifest; an index without one must be rebuilt. */
-  private def latest(): Manifest = {
-    val m = store.manifest.getOrElse(Manifest.empty)
-    IndexBuild.statsOf(m, indexDir)
-    m
-  }
-
+  /** The latest manifest's tables; an index without one must be rebuilt. */
   private def load(): IndexState = {
-    // Deferred-compaction debt cap (round-4 verdict item 4): the overlay
-    // below re-decodes every pending bucket in memory on EVERY reload —
-    // bounded by the touched set per reload, but a long-crashed compactor
-    // grows the pending-batch list without bound and every reload
-    // re-pays it. Past the cap the engine compacts ONCE up front (exactly
-    // the work the next compaction interval owed) and serves the clean
-    // index. spark.graft.maxPendingBatches; default 64 ≈ 8× IndexStream's
-    // default compactEvery.
-    val maxPending = spark.conf.getOption("spark.graft.maxPendingBatches")
-      .map(_.toInt).getOrElse(64)
-    val m0 = latest()
-    val m =
-      if (maxPending <= 0 || m0.pending.size <= maxPending) m0
-      else {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"${m0.pending.size} pending delta batches exceed spark.graft.maxPendingBatches=" +
-            s"$maxPending — compacting before serving to cap reload cost")
-        // Best-effort: the overlay below is always correct, just slower.
-        // A reader without write access must serve, not die —
-        // single-writer is the deployment contract for the REWRITE,
-        // never a precondition for reads.
-        try {
-          graft.index.Refresh.compactTouched(spark, indexDir, IndexBuild.Config())
-          latest()
-        } catch { case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"load-time compaction failed (${e.getMessage}) — serving via the delta overlay")
-          m0
-        }
-      }
+    val m = store.manifest.getOrElse(Manifest.empty)
     val stats = IndexBuild.statsOf(m, indexDir)
     val docsDf = store.readAt(m, "docs").cache()
     val lemmaStatsDf = store.readAt(m, "lemma_stats").cache()
-    // Delta-overlay read path (deferred compaction, Refresh/IndexStream
-    // `compact = false`): when delta batches are pending beyond the
-    // index's as_of, the touched buckets are rebuilt IN MEMORY at load —
-    // the same decode → tombstone-filter → re-encode pass compaction
-    // runs, cached instead of written — and unioned with the untouched
-    // base buckets. Queries see every committed refresh immediately; the
-    // physical rewrite happens once per compaction interval.
-    val pending = graft.index.Refresh.pendingBuckets(m)
-    val segCols = Seq("bucket", "term", "shard", "part_id", "doc_count",
-      "block_max", "postings").map(col)
-    val baseSegs = store.readAt(m, "index")
-    val segmentsPlan =
-      if (pending.isEmpty) baseSegs
-      else {
-        val rebuilt = graft.index.Refresh.reencode(
-          graft.index.Refresh.aliveRows(store, m, pending), stats.buckets).toDF
-        baseSegs.filter(!col("bucket").isin(pending: _*)).select(segCols: _*)
-          .unionByName(rebuilt.select(segCols: _*))
-      }
-    val segmentsDf =
-      if (m.bytes("index") <= indexCacheLimit) segmentsPlan.cache() else segmentsPlan
+    val index = store.readAt(m, "index")
+    val segmentsDf = if (m.bytes("index") <= indexCacheLimit) index.cache() else index
     IndexState(
       nDocs = stats.n_docs,
       avgdl = stats.avgdl,
@@ -189,7 +134,7 @@ final class SearchEngine(
     * mega-term's segments can exceed the whole budget and must stay on
     * the distributed path. After the heads, the REMAINING budget is
     * filled with the next-hottest MID terms by global df, read from the
-    * persisted `mid_terms` hint table (maintained at build/compaction
+    * persisted `mid_terms` hint table (maintained at build/refresh
     * cadence — cold-query tails are dominated by high-df terms, so this
     * is the principled generalization of "prefetch what cold queries
     * will touch", not a fixture-specific tune; and reading a hint table
@@ -241,11 +186,11 @@ final class SearchEngine(
       // terms by global df, into whatever prefetch budget the heads left
       // over. The term LIST comes from the persisted `mid_terms` hint
       // table (maintained by IndexBuild.writeMidTerms at build +
-      // compaction cadence) — a bounded tiny-table read, so engine reloads
+      // refresh cadence) — a bounded tiny-table read, so engine reloads
       // never run an O(vocabulary) aggregation (round-5 ADVICE: the former
       // sweep shuffled the whole vocabulary on every refresh-triggered
       // reload). Their dfs are re-derived through globalDf's exact
-      // bucket-pruned lookups, so hint staleness between compactions
+      // bucket-pruned lookups, so hint staleness between rewrites
       // cannot touch scoring.
       val budgetLeft = postingCache.budget - usedByHeads
       if (budgetLeft > (1L << 20)) {
@@ -811,10 +756,7 @@ object Statistics {
 
     // latest lifecycle row per site (sites with docs but no status row
     // default to INDEXING)
-    val w = Window.partitionBy(col("site")).orderBy(desc("ts"))
-    val latest = store.readAt(m, "site_status")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val latest = IndexBuild.latestStatus(store.readAt(m, "site_status"))
       .select(col("site"), col("status"), col("ts").as("status_time"), col("error"))
 
     val detailed = perSite.join(latest, Seq("site"), "left")

@@ -37,10 +37,6 @@ final case class Stats(
     shards: Int, n_batches: Int, site_groups: Int, buckets: Int,
     next_ord: Long)
 
-/** A delta batch not yet folded into `index`, with the term buckets it
-  * touched: the buckets compaction rewrites and the engine overlays. */
-final case class Pending(batch: Int, buckets: Seq[Int])
-
 /** One commit's lineage row; `read("lineage")` serves every one of them. */
 final case class Lineage(
     partition_id: Int, doc_range: String, posting_bytes: Long,
@@ -49,16 +45,15 @@ final case class Lineage(
 
 /** One version of an index root — the commit point. Everything a reader
   * sees is what one manifest names: the live directories and schema of
-  * each table, the stats, `asOf` (the highest batch folded into
-  * `index`, -1 before any), `batch` (the highest batch id a commit has
-  * used), the pending delta batches and the lineage rows. */
+  * each table, the stats, `asOf` (the batch of the last commit that
+  * changed `index`, -1 before any), `batch` (the highest batch id a
+  * commit has used) and the lineage rows. */
 final case class Manifest(
     version: Long,
     tables: Map[String, TableMeta],
     stats: Option[Stats],
     asOf: Int,
     batch: Int,
-    pending: Seq[Pending],
     lineage: Seq[Lineage]) {
 
   def has(table: String): Boolean = table match {
@@ -73,7 +68,7 @@ final case class Manifest(
 }
 
 object Manifest {
-  val empty: Manifest = Manifest(0L, Map.empty, None, -1, -1, Nil, Nil)
+  val empty: Manifest = Manifest(0L, Map.empty, None, -1, -1, Nil)
 
   private val mapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
 

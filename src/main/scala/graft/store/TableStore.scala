@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * kinds:
   *  - an INDEX root holds `_manifest/v<N>.json` files. Every index table
   *    (`docs`, `doc_terms`, `lemma_stats`, `index`, `segments`,
-  *    `tombstones`, `head_terms`, `mid_terms`, `site_status`) is read
+  *    `head_terms`, `mid_terms`, `site_status`) is read
   *    through the latest manifest with its stored schema, and every
   *    change is a copy-on-write [[commit]]: the op stages new
   *    directories under fresh names (`docs/db=3/c=<id>`), then the
@@ -36,16 +36,16 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   *    the way Iceberg's Hadoop catalog commits it (a temp file renamed to
   *    the next version, which fails if it exists);
   *  - a `Part` directory → a data file of a manifest list entry; the
-  *    per-table schema → the table schema; `stats`/`pending`/`lineage`
-  *    → snapshot summary properties;
+  *    per-table schema → the table schema; `stats`/`lineage` → snapshot
+  *    summary properties;
   *  - `commit` → one snapshot commit; its retry on a lost race →
   *    Iceberg's optimistic retry (`commit.retry.num-retries`);
   *  - GC → `expire_snapshots` + `remove_orphan_files`;
   *  - `version` → the current snapshot id;
   *  - `replace(t)` on a corpus → `df.writeTo("cat.db.t").replace()`;
-  *  - refresh (S6) → MERGE INTO + equality-delete files: `tombstones`
-  *    are Iceberg's equality deletes and `Refresh.compactTouched` its
-  *    compaction.
+  *  - refresh and delete (S6) → one copy-on-write `MERGE INTO` that
+  *    rewrites the touched partitions' data files, with no equality
+  *    deletes.
   */
 trait TableStore {
   def spark: SparkSession
@@ -248,7 +248,14 @@ final class ParquetStore(val spark: SparkSession, val root: String)
     if (v == 0) None
     else {
       val in = fs.open(new Path(manifestDir, s"v$v.json"))
-      try Some(Manifest.fromJson(new String(in.readAllBytes(), UTF_8))) finally in.close()
+      try Some(Manifest.fromJson(new String(in.readAllBytes(), UTF_8)))
+      catch {
+        // a field this version does not know (an older layout's `pending`
+        // delta batches): serving the manifest without it would be wrong
+        case e: com.fasterxml.jackson.databind.exc.UnrecognizedPropertyException =>
+          throw new IllegalStateException(s"$root: manifest v$v carries '${e.getPropertyName}', " +
+            "which this version does not read: rebuild it with `GraftCli build`", e)
+      } finally in.close()
     }
   }
 

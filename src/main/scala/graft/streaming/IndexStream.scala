@@ -17,20 +17,19 @@ import graft.store.TableStore
   *
   * Design: `readPages` watches a directory (the Iceberg-table stand-in;
   * production would be a stream off the table's commit log) and each
-  * micro-batch lands through `foreachBatch` on the SAME commit protocol
-  * as interactive refresh — one manifest commit of the delta segment
-  * batch, tombstones, dims and lineage row, then bucket-pruned
-  * compaction — so a page re-crawled in a later file
+  * micro-batch lands through `foreachBatch` on the SAME commit as
+  * interactive refresh — one manifest commit of the touched index
+  * buckets, dims and lineage row — so a page re-crawled in a later file
   * replaces its old version exactly like `/api/indexPage`, and a live
   * [[graft.queryengine.SearchEngine]] picks each commit up via the
   * manifest version without restarting.
   *
   * Delivery semantics: the file source + checkpoint give at-least-once
   * micro-batches. Each micro-batch is one atomic commit, so a batch that
-  * crashed left nothing, and a replay of a committed batch re-appends a
-  * delta+tombstone pair for the same urls, which latest-batch-wins merge
-  * converges to the same index (idempotent by CONVERGENCE, the standard
-  * foreachBatch contract).
+  * crashed left nothing, and a replay of a committed batch refreshes the
+  * same urls to the same versions again, which leaves the postings, dims
+  * and stats as one ingest left them (idempotent by CONVERGENCE, the
+  * standard foreachBatch contract).
   *
   * The first-ever micro-batch on an empty index dir bootstraps through
   * the full build (single batch), so the stream can be pointed at an
@@ -58,34 +57,23 @@ object IndexStream {
   }
 
   /** One micro-batch into the index: bootstrap build if the index dir is
-    * empty, refresh-with-tombstones otherwise. Exposed for tests.
+    * empty, a refresh otherwise. Exposed for tests.
     *
     * A url appearing in SEVERAL feed files of one trigger (rapid
     * re-crawl) resolves to its latest `warc_ts` version
     * (`Refresh.latestPerUrl`, which the refresh path applies itself). */
   def ingestBatch(spark: SparkSession, indexDir: String,
-      batch: Dataset[PageRow], cfg: IndexBuild.Config,
-      compactEvery: Int = 1): Unit = {
+      batch: Dataset[PageRow], cfg: IndexBuild.Config): Unit = {
     if (batch.isEmpty) return // empty trigger — nothing to commit
     // Bootstrap gate = the commit point: an index exists once a manifest
     // carries its stats. A crash inside the first micro-batch leaves no
     // manifest (or one without stats), so the checkpointed replay
     // bootstraps again; whatever the crashed attempt staged is garbage
     // the bootstrap commit collects.
-    val m = TableStore.open(spark, indexDir).manifest
-    if (!m.exists(_.stats.isDefined)) {
+    if (!TableStore.open(spark, indexDir).manifest.exists(_.stats.isDefined)) {
       IndexBuild.run(spark, Refresh.latestPerUrl(batch), indexDir, cfg.copy(nBatches = 1))
       IndexBuild.mergeSegments(spark, indexDir)
-    } else {
-      // AMORTIZED compaction: dims are maintained O(touched) every batch,
-      // but the index-bucket rewrite (decode+re-encode of every touched
-      // bucket) runs only once per `compactEvery` micro-batches — pending
-      // delta batches stay queryable through the engine's delta-overlay
-      // read path, and the deferral counter is the manifest's pending
-      // list, so it survives restarts.
-      val compact = compactEvery <= 1 || m.get.pending.size + 1 >= compactEvery
-      Refresh.refreshPages(spark, indexDir, batch, cfg, compact = compact)
-    }
+    } else Refresh.refreshPages(spark, indexDir, batch, cfg)
   }
 
   /** Start the ingest stream. The checkpoint lives INSIDE the index dir
@@ -94,8 +82,7 @@ object IndexStream {
   def run(spark: SparkSession, pagesDir: String, indexDir: String,
       cfg: IndexBuild.Config = IndexBuild.Config(),
       maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.ProcessingTime(0),
-      compactEvery: Int = 1): StreamingQuery = {
+      trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery = {
     import org.apache.spark.sql.Encoders
     val pages = readPages(spark, pagesDir, maxFilesPerTrigger)
     pages.writeStream
@@ -106,7 +93,7 @@ object IndexStream {
         ingestBatch(spark, indexDir,
           batch.select(col("url"), col("warc_ts"), col("html"),
             col("text"), col("lang")).as[PageRow](Encoders.product[PageRow]),
-          cfg, compactEvery)
+          cfg)
       }
       .start()
   }

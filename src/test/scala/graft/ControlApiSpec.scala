@@ -66,7 +66,7 @@ class ControlApiSpec extends AnyFunSuite {
     assert(!missing.result)
     assert(missing.error.exists(_.startsWith("Код: 404")))
 
-    // 4. valid url refreshes through the tombstone path
+    // 4. valid url refreshes in one commit
     val okUrl = spark.read.parquet(s"$work/pages")
       .filter(col("code") === 200).select("url").as[String].head()
     val before = graft.index.Refresh.indexAsOf(spark, s"$work/idx")

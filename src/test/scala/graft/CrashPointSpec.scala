@@ -137,8 +137,7 @@ class CrashPointSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hashes = names.map(t => store.readAt(m, t).selectExpr(s"'$t'", "xxhash64(*)"))
       .reduce(_ union _).as[(String, Long)].collect().groupBy(_._1)
     names.map(t => t -> hashes.get(t).fold(Seq.empty[Long])(_.map(_._2).toSeq.sorted)).toMap +
-      ("stats" -> m.stats.toSeq.map(_.hashCode.toLong)) +
-      ("pending" -> m.pending.flatMap(_.buckets).map(_.toLong))
+      ("stats" -> m.stats.toSeq.map(_.hashCode.toLong))
   }
 
   private val queries = {
@@ -173,6 +172,7 @@ class CrashPointSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val ref = fresh("ref")
     val total = withFaults(ref, Int.MaxValue)(op(ref))
+    info(s"$name: $total crash points")
     assert(total >= 3, s"$name: fixture must stage, publish and collect ($total mutations)")
     val expectTables = tables(ref)
     val expectAnswers = if (withEngine) answers(ref) else Nil
@@ -232,13 +232,6 @@ class CrashPointSpec extends AnyFunSuite with BeforeAndAfterAll {
     val urls = pages.collect().map(_.url).sorted.slice(5, 7).toSeq
     enumerate("delete", Some(mergedBase), withEngine = true) { dir =>
       Refresh.deletePages(spark, dir, urls, cfg)
-    }
-  }
-
-  test("every crash point of a deferred refresh and its compaction converges") {
-    enumerate("deferred", Some(mergedBase), withEngine = true) { dir =>
-      Refresh.refreshPages(spark, dir, refreshBatch, cfg, compact = false)
-      Refresh.compactTouched(spark, dir, cfg)
     }
   }
 }

@@ -6,7 +6,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{HtmlText, ReferenceTfSum, RuDict}
+import graft.core.{HtmlText, PostingCodec, ReferenceTfSum, RuDict}
 import graft.corpus.{CorpusGen, PageRow}
 import graft.index.IndexBuild
 import graft.queryengine.SearchEngine
@@ -137,165 +137,73 @@ class IndexStreamSpec extends AnyFunSuite {
       "half-written bootstrap tables must be dropped wholesale")
   }
 
-  test("amortized compaction (compactEvery=3): between compactions the index is NOT rewritten, queries overlay pending deltas") {
+  test("a replayed micro-batch converges: ingesting it twice equals ingesting it once") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-stream-amort").toString
+    val work = Files.createTempDirectory("graft-stream-replay").toString
     val idx = s"$work/idx"
-    val cfg = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, buckets = 16)
+    val cfg = IndexBuild.Config(shards = 4, saltThresholdDf = 20L, buckets = 16)
     val l = RuDict.contentLemmas
-
-    def indexFiles(): Map[String, Seq[Byte]] = {
-      val root = new java.io.File(s"$idx/index")
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(root).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getAbsolutePath.stripPrefix(root.getAbsolutePath) ->
-          java.nio.file.Files.readAllBytes(f.toPath).toSeq)
-        .toMap
-    }
-    def batchDs(ps: PageRow*) = spark.createDataset(ps.toSeq)
-
-    // batch 1: bootstrap
     val base = CorpusGen.generate(spark, CorpusGen.Config(2, 30)).collect().toSeq
-    spark.createDataset(base).write.mode("append").parquet(s"$work/pages")
-    IndexStream.ingestBatch(spark, idx,
-      spark.createDataset(base), cfg, compactEvery = 3)
+    IndexStream.ingestBatch(spark, idx, spark.createDataset(base), cfg)
+    // a re-crawl of a known url and a url the index has not seen
+    val batch = Seq(
+      page(base.map(_.url).sorted.apply(3), html("снова", s"${l(190)} ${l(0)} ${l(2)}")),
+      page("https://site1.test/p/replayed", html("новая", s"${l(191)} ${l(0)} ${l(0)}")))
+
     val store = TableStore.open(spark, idx)
-    val afterBoot = indexFiles()
-    assert(graft.index.Refresh.pendingBatches(spark, idx) == 0)
-
-    // batches 2 and 3: refreshes that must NOT rewrite the index —
-    // the amortization contract: bytes rewritten per non-compacting
-    // batch are bounded by the touched DIM buckets only (index: zero)
-    val mA = l(190); val mB = l(193)
-    val uA = "https://site0.test/p/amortA"
-    val uB = "https://site1.test/p/amortB"
-    val pA = page(uA, html("а", s"$mA ${RuDict.formsOf(mA)(1)} ${l(2)}"))
-    val pB = page(uB, html("б", s"$mB ${l(3)}"))
-    spark.createDataset(Seq(pA, pB)).write.mode("append").parquet(s"$work/pages")
-    IndexStream.ingestBatch(spark, idx, batchDs(pA), cfg, compactEvery = 3)
-    assert(indexFiles() == afterBoot,
-      "a non-compacting micro-batch must leave every index file byte-identical")
-    assert(graft.index.Refresh.pendingBatches(spark, idx) == 1)
-
-    // pending deltas are QUERYABLE now (engine delta overlay), and the
-    // dims were maintained: n_docs grew
-    val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
-    assert(engine.search(mA, 0, 10, None).data.exists(i => i.site + i.uri == uA),
-      "pending (uncompacted) delta batch must be visible to queries")
-    assert(store.read("stats").collect()(0).getAs[Long]("n_docs") == base.size + 1L)
-
-    IndexStream.ingestBatch(spark, idx, batchDs(pB), cfg, compactEvery = 3)
-    assert(indexFiles() == afterBoot,
-      "second non-compacting micro-batch must still not touch the index")
-    assert(graft.index.Refresh.pendingBatches(spark, idx) == 2)
-
-    // batch 4 triggers the deferred compaction: all pending batches fold
-    IndexStream.ingestBatch(spark, idx,
-      batchDs(page("https://site0.test/p/amortC", html("в", s"${l(7)} ${l(8)}"))),
-      cfg, compactEvery = 3)
-    assert(graft.index.Refresh.pendingBatches(spark, idx) == 0,
-      "the compactEvery-th batch must fold every pending delta")
-    assert(indexFiles() != afterBoot, "compaction must rewrite touched buckets")
-    // post-compaction: same results, now from the base index path
-    assert(engine.search(mA, 0, 10, None).data.exists(i => i.site + i.uri == uA))
-    assert(engine.search(mB, 0, 10, None).data.exists(i => i.site + i.uri == uB))
+    def state() = (
+      store.read("index").select("term", "shard", "postings")
+        .as[(String, Int, Array[Byte])].collect().toSeq
+        .flatMap { case (t, sh, b) => PostingCodec.decode(b).map(p => (t, sh, p.docId, p.tf, p.dl)) }
+        .sorted,
+      store.read("docs").select("doc_id", "ord", "url", "site", "lang", "dl")
+        .as[(Long, Long, String, String, String, Long)].collect().toSet,
+      store.read("lemma_stats").select("term", "site", "df")
+        .as[(String, String, Long)].collect().toSet,
+      store.manifest.get.stats)
+    IndexStream.ingestBatch(spark, idx, spark.createDataset(batch), cfg)
+    val once = state()
+    assert(once._2.exists(_._3 == "https://site1.test/p/replayed"), "fixture: the new url is indexed")
+    IndexStream.ingestBatch(spark, idx, spark.createDataset(batch), cfg)
+    val twice = state()
+    assert(twice._1 == once._1, "a replay must leave the decoded postings as one ingest left them")
+    assert(twice._2 == once._2, "a replay must leave docs as one ingest left them")
+    assert(twice._3 == once._3, "a replay must leave lemma_stats as one ingest left them")
+    assert(twice._4 == once._4, "a replay must leave the stats as one ingest left them")
   }
 
-  test("deferred-compaction debt cap: a load past maxPendingBatches compacts before serving, rank-identically (VERDICT r04 item 4)") {
+  test("the HintEvery-th refresh rewrites mid_terms, and the new hint excludes every head term") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-stream-debt").toString
+    val work = Files.createTempDirectory("graft-stream-hint").toString
     val idx = s"$work/idx"
-    val cfg = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, buckets = 16)
+    val cfg = IndexBuild.Config(shards = 4, saltThresholdDf = 20L, buckets = 16)
     val l = RuDict.contentLemmas
-    def batchDs(ps: PageRow*) = spark.createDataset(ps.toSeq)
-
-    // bootstrap + 4 refresh batches with compaction deferred indefinitely
-    // (a "long-crashed compactor": compactEvery far beyond the backlog)
     val base = CorpusGen.generate(spark, CorpusGen.Config(2, 30)).collect().toSeq
-    spark.createDataset(base).write.mode("append").parquet(s"$work/pages")
-    IndexStream.ingestBatch(spark, idx,
-      spark.createDataset(base), cfg, compactEvery = 1000)
-    val marks = Seq(l(190), l(193), l(196), l(199))
-    val urls = marks.zipWithIndex.map { case (_, i) => s"https://site0.test/p/debt$i" }
-    marks.zip(urls).foreach { case (m, u) =>
-      val p = page(u, html("д", s"$m ${RuDict.formsOf(m)(1)} ${l(2)}"))
-      spark.createDataset(Seq(p)).write.mode("append").parquet(s"$work/pages")
-      IndexStream.ingestBatch(spark, idx, batchDs(p), cfg, compactEvery = 1000)
+    IndexStream.ingestBatch(spark, idx, spark.createDataset(base), cfg) // batch 0
+    val store = TableStore.open(spark, idx)
+    def hintParts() = store.manifest.get.parts("mid_terms")
+    val bootHint = hintParts()
+    // a lemma no page holds yet: it enters the hint only with a rewrite
+    val used = store.read("lemma_stats").select("term").as[String].collect().toSet
+    val fresh = (150 until 200).map(l).find(t => !used(t))
+      .getOrElse(fail("fixture: no unused lemma available"))
+    def ingest(i: Int): Unit = IndexStream.ingestBatch(spark, idx, spark.createDataset(Seq(
+      page(s"https://site0.test/p/hint$i", html("х", s"$fresh ${l(2)}")))), cfg)
+
+    // batches 1-7 stay inside the first HintEvery = 8 window
+    for (i <- 1 to 7) {
+      ingest(i)
+      assert(hintParts() == bootHint, s"refresh batch $i must not rewrite the hint")
     }
-    assert(graft.index.Refresh.pendingBatches(spark, idx) == 4)
-
-    // control rankings through the overlay path (debt below the cap)
-    val qs = Seq(marks.head, s"${l(2)} ${marks(1)}", RuDict.formsOf(marks(2))(1))
-    val overlayEngine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
-    val expected = qs.map(q => overlayEngine.search(q, 0, 20, None).data
-      .map(i => (i.site + i.uri, i.relevance)))
-    assert(graft.index.Refresh.pendingBatches(spark, idx) == 4,
-      "an engine load below the cap must NOT compact")
-
-    // capped load: 4 pending > 3 allowed → the engine compacts up front...
-    spark.conf.set("spark.graft.maxPendingBatches", "3")
-    try {
-      val cappedEngine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
-      assert(graft.index.Refresh.pendingBatches(spark, idx) == 0,
-        "a load past the debt cap must compact before serving")
-      // ...and serves the same rankings from the clean index
-      val got = qs.map(q => cappedEngine.search(q, 0, 20, None).data
-        .map(i => (i.site + i.uri, i.relevance)))
-      assert(got == expected, "capped (compacted) load must rank identically to the overlay path")
-      // compaction also maintains the prefetch hint table (round-5 ADVICE)
-      assert(TableStore.open(spark, idx).exists("mid_terms"),
-        "compaction must (re)write the mid_terms prefetch hint")
-    } finally spark.conf.unset("spark.graft.maxPendingBatches")
-  }
-
-  test("debt-cap compaction is best-effort: a reader that cannot write serves via the overlay") {
-    spark.sparkContext.setLogLevel("WARN")
-    import scala.sys.process._
-    import spark.implicits._
-    val work = Files.createTempDirectory("graft-stream-rodebt").toString
-    val idx = s"$work/idx"
-    val cfg = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, buckets = 16)
-    val l = RuDict.contentLemmas
-
-    val base = CorpusGen.generate(spark, CorpusGen.Config(2, 30)).collect().toSeq
-    spark.createDataset(base).write.mode("append").parquet(s"$work/pages")
-    IndexStream.ingestBatch(spark, idx,
-      spark.createDataset(base), cfg, compactEvery = 1000)
-    val marks = Seq(l(190), l(193))
-    marks.zipWithIndex.foreach { case (m, i) =>
-      val p = page(s"https://site0.test/p/ro$i",
-        html("д", s"$m ${RuDict.formsOf(m)(1)} ${l(2)}"))
-      spark.createDataset(Seq(p)).write.mode("append").parquet(s"$work/pages")
-      IndexStream.ingestBatch(spark, idx, spark.createDataset(Seq(p)), cfg,
-        compactEvery = 1000)
-    }
-    assert(graft.index.Refresh.pendingBatches(spark, idx) == 2)
-
-    val qs = Seq(marks.head, s"${l(2)} ${marks(1)}")
-    val overlayEngine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
-    val expected = qs.map(q => overlayEngine.search(q, 0, 20, None).data
-      .map(i => (i.site + i.uri, i.relevance)))
-
-    // make the index TABLE unwritable even to root (the compaction's first
-    // write stages inside it) while leaving every read path intact — the
-    // read-only-reader / lost-compaction-race scenario
-    if (Seq("chattr", "+i", s"$idx/index").! != 0)
-      cancel("chattr +i unsupported on this filesystem")
-    try {
-      spark.conf.set("spark.graft.maxPendingBatches", "1")
-      val roEngine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
-      val got = qs.map(q => roEngine.search(q, 0, 20, None).data
-        .map(i => (i.site + i.uri, i.relevance)))
-      assert(got == expected,
-        "a reader whose over-cap compaction fails must serve the overlay rankings, not die")
-      assert(graft.index.Refresh.pendingBatches(spark, idx) == 2,
-        "the failed compaction must leave the pending debt untouched")
-    } finally {
-      spark.conf.unset("spark.graft.maxPendingBatches")
-      Seq("chattr", "-i", s"$idx/index").! : Unit
-    }
+    ingest(8)
+    assert(hintParts() != bootHint, "the 8th refresh batch must rewrite the hint")
+    val hint = store.read("mid_terms").select("term", "df").as[(String, Long)].collect().toMap
+    val heads = store.read("head_terms").as[String].collect().toSet
+    assert(heads.nonEmpty, "fixture: the index must have head terms")
+    assert(hint.keySet.intersect(heads).isEmpty, s"head terms in the hint: ${hint.keySet.intersect(heads)}")
+    assert(hint.get(fresh).contains(8L),
+      s"the hint must carry the df of its own commit's lemma_stats: ${hint.get(fresh)}")
   }
 }

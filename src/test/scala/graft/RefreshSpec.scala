@@ -308,8 +308,8 @@ class RefreshSpec extends AnyFunSuite {
     val statsBefore = spark.read.parquet(s"$idx/lemma_stats")
       .select("term", "site", "df").as[(String, String, Long)].collect().toSet
 
-    // CRASH INJECTION where the old protocol had its window: the new
-    // segments and tombstones are staged, and staging the lemma_stats
+    // CRASH INJECTION where the old protocol had its window: the touched
+    // index buckets are staged, and staging the lemma_stats
     // delta dies (it stages inside the lemma_stats dir — immutable blocks
     // even root, reads unaffected)
     if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
@@ -540,7 +540,7 @@ class RefreshSpec extends AnyFunSuite {
     val statsBefore = lemmaStatsAndFresh(idx)._1
 
     // CRASH INJECTION as in the refresh replay test: staging the
-    // lemma_stats delta dies after the tombstones are staged
+    // lemma_stats delta dies after the index buckets are staged
     if (Seq("chattr", "+i", s"$idx/lemma_stats").! != 0)
       cancel("chattr +i unsupported on this filesystem")
     try intercept[Throwable] { Refresh.deletePages(spark, idx, Seq(targetUrl), cfgP) }
@@ -564,46 +564,7 @@ class RefreshSpec extends AnyFunSuite {
       s"the crashed attempt's staged files must be collected: ${IndexDir.unreferenced(spark, idx)}")
   }
 
-  test("a deferred delete serves through the delta overlay, then compacts rank-identically") {
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val work = Files.createTempDirectory("graft-delete-deferred").toString
-    val idx = s"$work/idx"
-    val pages = buildSmall(work, idxCfg, 60)
-    val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
-    val l = RuDict.contentLemmas
-    val victim = engine.search(l(5), 0, 100, None).data.head // warms the caches
-    val victimUrl = victim.site + victim.uri
-
-    Refresh.deletePages(spark, idx, Seq(victimUrl), idxCfg, compact = false)
-    assert(Refresh.pendingBatches(spark, idx) == 1, "the delete must stay pending")
-
-    val remaining = pages.filterNot(_.url == victimUrl)
-    val oracle = new RefOracle.Corpus(remaining.map { r =>
-      RefOracle.Doc(r.url, IndexBuild.siteOf(r.url), new String(r.html, StandardCharsets.UTF_8))
-    })
-    val queries = Seq(l(5), l(0), s"${l(0)} ${l(20)}", s"${l(1)} ${l(30)}")
-    def served(): Seq[Seq[(String, Double)]] = queries.map { q =>
-      engine.search(q, 0, 50, None).data.map(i => (i.site + i.uri, i.relevance))
-    }
-    // the SAME live engine reloads onto the overlay of the pending delete
-    for (q <- queries) {
-      val exp = RefOracle.search(oracle, q, None, ReferenceTfSum)
-      val got = engine.search(q, 0, 50, None)
-      assert(got.count == exp.count.toLong, s"count mismatch for '$q' under the overlay")
-      assert(got.data.map(i => i.site + i.uri) == exp.results.take(50).map(_.url),
-        s"ranking mismatch for '$q' under the overlay")
-    }
-    assert(engine.nDocs == remaining.size.toLong)
-    val overlay = served()
-    assert(!overlay.flatten.exists(_._1 == victimUrl), "deleted url must be absent")
-
-    Refresh.compactTouched(spark, idx, idxCfg)
-    assert(Refresh.pendingBatches(spark, idx) == 0)
-    assert(served() == overlay, "compaction must not change the served rankings")
-  }
-
-  test("merge with a LARGE tombstone set stays rank-identical (distributed tombstone join)") {
+  test("a bulk delete of two thirds of the corpus stays rank-identical") {
     spark.sparkContext.setLogLevel("WARN")
     val work = Files.createTempDirectory("graft-refresh-big").toString
     val pages = CorpusGen.generate(spark, corpusCfg).collect().toSeq
@@ -614,7 +575,7 @@ class RefreshSpec extends AnyFunSuite {
     IndexBuild.run(spark, ds, s"$work/idx", idxCfg)
     IndexBuild.mergeSegments(spark, s"$work/idx")
 
-    // tombstone ~2/3 of the corpus in one delete batch
+    // delete ~2/3 of the corpus in one batch
     val toDelete = pages.map(_.url).zipWithIndex.collect { case (u, i) if i % 3 != 0 => u }
     assert(toDelete.size > 100)
     Refresh.deletePages(spark, s"$work/idx", toDelete, idxCfg)
@@ -818,20 +779,18 @@ class RefreshSpec extends AnyFunSuite {
     val u = unusedLemmas(idx)
     assert(u.size >= 2, "fixture: two unused lemmas needed")
     val urls = pages.map(_.url).sorted
-    // a pending (uncompacted) refresh: its segments are live only
-    // through the manifest
     Refresh.refreshPages(spark, idx, spark.createDataset(Seq(
-      page(urls(1), html(u(0), s"${u(0)} ${l(2)}")))), idxCfg, compact = false)
-    val pending = Refresh.indexAsOf(spark, idx) + 1
-    def batchFiles(): Map[String, Seq[Byte]] = {
-      val root = new java.io.File(s"$idx/segments/batch=$pending")
+      page(urls(1), html(u(0), s"${u(0)} ${l(2)}")))), idxCfg)
+    val batch = Refresh.indexAsOf(spark, idx)
+    def indexFiles(): Map[String, Seq[Byte]] = {
+      val root = new java.io.File(s"$idx/index")
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       walk(root).filter(_.getName.endsWith(".parquet"))
         .map(f => f.getPath -> Files.readAllBytes(f.toPath).toSeq).toMap
     }
-    val before = batchFiles()
-    assert(before.nonEmpty, "fixture: the pending batch must hold segments")
+    val before = indexFiles()
+    assert(before.nonEmpty, "fixture: the index must hold files")
 
     val latest = java.nio.file.Paths.get(s"$idx/_manifest/v${
       graft.store.TableStore.open(spark, idx).version}.json")
@@ -839,15 +798,15 @@ class RefreshSpec extends AnyFunSuite {
     Files.write(latest, "not a manifest".getBytes(StandardCharsets.UTF_8))
     def second = spark.createDataset(Seq(page(urls(2), html(u(1), s"${u(1)} ${l(2)}"))))
     intercept[Throwable](new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum))
-    intercept[Throwable](Refresh.refreshPages(spark, idx, second, idxCfg, compact = false))
+    intercept[Throwable](Refresh.refreshPages(spark, idx, second, idxCfg))
     intercept[Throwable](Refresh.deletePages(spark, idx, Seq(urls(3)), idxCfg))
-    assert(batchFiles() == before, "the pending batch must not be touched")
+    assert(indexFiles() == before, "the live index files must not be touched")
 
     Files.write(latest, good)
-    Refresh.refreshPages(spark, idx, second, idxCfg, compact = false)
+    Refresh.refreshPages(spark, idx, second, idxCfg)
     assert(graft.store.TableStore.open(spark, idx).read("lineage")
       .agg(org.apache.spark.sql.functions.max("partition_id"))
-      .as[Int].head() == pending + 1, "the next commit must take a fresh batch id")
+      .as[Int].head() == batch + 1, "the next commit must take a fresh batch id")
     val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
     assert(engine.search(u(0), 0, 10, None).data.map(i => i.site + i.uri) == Seq(urls(1)))
     assert(engine.search(u(1), 0, 10, None).data.map(i => i.site + i.uri) == Seq(urls(2)))
@@ -874,7 +833,7 @@ class RefreshSpec extends AnyFunSuite {
     assert(delete.getMessage.contains("rebuild"), delete.getMessage)
   }
 
-  test("merge and compaction drop segments batches at or below as_of") {
+  test("merge drops segments batches; refresh and delete write no segments or tombstones") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val work = Files.createTempDirectory("graft-segments-gc").toString
@@ -892,17 +851,105 @@ class RefreshSpec extends AnyFunSuite {
     assert(batchesOnDisk().isEmpty, s"merge must drop the merged batches: ${batchesOnDisk()}")
     assert(IndexDir.unreferenced(spark, idx).isEmpty)
 
-    // a deferred refresh keeps its batch until the compaction folds it
+    // a refresh and a delete rewrite index buckets instead of adding
+    // posting batches or delete markers
     val l = RuDict.contentLemmas
     val u = unusedLemmas(idx)
+    val urls = pages.map(_.url).sorted
     Refresh.refreshPages(spark, idx, spark.createDataset(Seq(
-      page(pages.head.url, html(u(0), s"${u(0)} ${l(2)}")))), idxCfg, compact = false)
-    assert(batchesOnDisk() == Set(asOf + 1), "a pending batch stays until compaction")
-    Refresh.compactTouched(spark, idx, idxCfg)
-    assert(Refresh.indexAsOf(spark, idx) == asOf + 1)
-    assert(batchesOnDisk().isEmpty, s"compaction must drop the folded batch: ${batchesOnDisk()}")
+      page(urls(0), html(u(0), s"${u(0)} ${l(2)}")))), idxCfg)
+    Refresh.deletePages(spark, idx, Seq(urls(1)), idxCfg)
+    assert(Refresh.indexAsOf(spark, idx) == asOf + 2, "each commit moves as_of to its own batch")
+    assert(batchesOnDisk().isEmpty, s"a refresh or delete wrote segments: ${batchesOnDisk()}")
+    assert(!new java.io.File(s"$idx/tombstones").exists, "a refresh or delete wrote tombstones")
+    val m = graft.store.TableStore.open(spark, idx).manifest.get
+    assert(m.parts("segments").isEmpty && !m.has("tombstones"))
     assert(IndexDir.unreferenced(spark, idx).isEmpty)
     val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
-    assert(engine.search(u(0), 0, 10, None).data.map(i => i.site + i.uri) == Seq(pages.head.url))
+    assert(engine.search(u(0), 0, 10, None).data.map(i => i.site + i.uri) == Seq(urls(0)))
+  }
+
+  test("a refresh and a delete each publish exactly one manifest version") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-one-version").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    val store = graft.store.TableStore.open(spark, idx)
+    val v0 = store.version
+    val l = RuDict.contentLemmas
+    val urls = pages.map(_.url).sorted
+    Refresh.refreshPages(spark, idx,
+      spark.createDataset(Seq(page(urls(0), html(l(190), s"${l(190)} ${l(2)}")))), idxCfg)
+    assert(store.version == v0 + 1, s"a refresh published ${store.version - v0} versions")
+    Refresh.deletePages(spark, idx, Seq(urls(1)), idxCfg)
+    assert(store.version == v0 + 2, s"a delete published ${store.version - v0 - 1} versions")
+  }
+
+  test("a manifest carrying pending delta batches fails open, refresh and delete with rebuild") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-pending-manifest").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    // the fixture: the latest manifest as the older two-commit refresh
+    // left it when it crashed between its delta commit and the
+    // compaction — one delta batch pending, published as the next version
+    val v = graft.store.TableStore.open(spark, idx).version
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val json = mapper.readTree(Files.readAllBytes(java.nio.file.Paths.get(s"$idx/_manifest/v$v.json")))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    json.put("version", v + 1)
+    json.set[com.fasterxml.jackson.databind.JsonNode]("pending",
+      mapper.readTree("""[{"batch": 2, "buckets": [3, 5]}]"""))
+    Files.write(java.nio.file.Paths.get(s"$idx/_manifest/v${v + 1}.json"), mapper.writeValueAsBytes(json))
+
+    val open = intercept[IllegalStateException](
+      new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum))
+    assert(open.getMessage.contains("rebuild"), open.getMessage)
+    val refresh = intercept[IllegalStateException](
+      Refresh.refreshPages(spark, idx, spark.createDataset(pages.take(1)), idxCfg))
+    assert(refresh.getMessage.contains("rebuild"), refresh.getMessage)
+    val delete = intercept[IllegalStateException](
+      Refresh.deletePages(spark, idx, Seq(pages.head.url), idxCfg))
+    assert(delete.getMessage.contains("rebuild"), delete.getMessage)
+  }
+
+  test("refreshes keep site_status at one part, with the latest row per site") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-site-status").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20) // 2 batches: one status part each
+    val store = graft.store.TableStore.open(spark, idx)
+    def statusRows(): Set[(String, String, String, java.sql.Timestamp)] =
+      store.read("site_status").select("site", "status", "error", "ts")
+        .as[(String, String, String, java.sql.Timestamp)].collect().toSet
+    assert(store.manifest.get.parts("site_status").size > 1, "fixture: a build appends status parts")
+    // the log an append-only table would hold: the build's rows, then
+    // the rows each refresh adds
+    var log = statusRows()
+    val l = RuDict.contentLemmas
+    val urls = pages.map(_.url).sorted
+    val targets = Seq(urls.find(_.contains("site0")).get, urls.find(_.contains("site1")).get,
+      urls.filter(_.contains("site0")).last)
+    for ((url, i) <- targets.zipWithIndex) {
+      val before = statusRows()
+      Refresh.refreshPages(spark, idx,
+        spark.createDataset(Seq(page(url, html(l(190 + i), s"${l(190 + i)} ${l(2)}")))), idxCfg)
+      val added = statusRows() -- before
+      assert(added.map(_._1) == Set(IndexBuild.siteOf(url)) && added.forall(_._2 == "INDEXED"),
+        s"refresh $i must stamp its site: $added")
+      log ++= added
+    }
+    assert(store.manifest.get.parts("site_status").size == 1, "site_status must stay one part")
+    val latest = log.groupBy(_._1).map { case (site, rows) => site -> rows.maxBy(_._4.getTime) }
+    assert(statusRows() == latest.values.toSet, "the table must hold the latest row per site")
+    val stats = graft.queryengine.Statistics.compute(spark, idx)
+      .select("site", "status", "error", "status_time")
+      .as[(String, String, String, java.sql.Timestamp)].collect()
+    assert(stats.filter(_._1 != "TOTAL").toSet == latest.values.toSet,
+      "Statistics must report the latest row of the whole log per site")
+    assert(stats.find(_._1 == "TOTAL").map(_._4) == Some(latest.values.map(_._4).maxBy(_.getTime)))
   }
 }

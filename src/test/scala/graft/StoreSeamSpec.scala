@@ -25,7 +25,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * A second walk over the same tree keeps environment reads (`sys.env`,
   * `System.getenv`) in the process entry points: engine options are
-  * `spark.graft.*` conf keys only.
+  * `spark.graft.*` conf keys only, and a third holds those keys to the
+  * ones README's options table documents.
   */
 class StoreSeamSpec extends AnyFunSuite {
 
@@ -78,6 +79,19 @@ class StoreSeamSpec extends AnyFunSuite {
       assert(n == 1, s"$s: expected exactly one streaming file-source .parquet( call, got $n")
       assert(text.contains("readStream"), s"$s: the allowed .parquet( must be a readStream source")
     }
+  }
+
+  test("main reads exactly the spark.graft.* keys README's options table lists") {
+    val expected = Set("indexCacheBytes", "postingCacheBytes", "tableFormat")
+    val key = "\"spark\\.graft\\.(\\w+)\"".r
+    val read = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(p => key.findAllMatchIn(new String(Files.readAllBytes(p))).map(_.group(1)))
+      .toSet
+    assert(read == expected, s"spark.graft.* keys read by src/main: $read")
+    val row = "^\\| `spark\\.graft\\.(\\w+)`".r
+    val documented = Files.readAllLines(Paths.get("README.md")).asScala
+      .flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
+    assert(documented == expected, s"spark.graft.* keys in README's options table: $documented")
   }
 
   test("only process entry points read environment variables") {
