@@ -3,7 +3,7 @@ package graft.core
 import java.io.ByteArrayOutputStream
 
 /** Posting-list segment codec: delta + unsigned-varint compression of
-  * doc-id-sorted (docId, tf, dl) runs, in skippable blocks carrying
+  * doc-id-sorted (docId, tf) runs, in skippable blocks carrying
   * block-max term frequency (north_rule: "term-partitioned posting-list
   * construction with per-partition sort + delta/varint compression ...
   * block-max WAND pruning").
@@ -12,10 +12,10 @@ import java.io.ByteArrayOutputStream
   * (IndexEntity.java:9-27) — no compression; this codec is the scale path
   * that replaces it (SURVEY.md §1.3, §2.9).
   *
-  * Wire format (all ints unsigned LEB128 varints):
+  * Wire format ([[Format]] 2; all ints unsigned LEB128 varints):
   *   segment  := entryCount block*
   *   block    := blockEntryCount blockLastDocDelta maxTf payloadByteLen payload
-  *   payload  := (docDelta tf dl)*        // docDelta vs previous docId
+  *   payload  := (docDelta tf)*           // docDelta vs previous docId
   *
   * `docId` here is the index's dense doc ORDINAL (`docs.ord`, numbered
   * 0..n-1 by the build and upward from `stats.next_ord` by a refresh),
@@ -30,15 +30,20 @@ import java.io.ByteArrayOutputStream
   * bound (from maxTf) can't beat the current top-k threshold.
   *
   * tf is an integral occurrence count (the reference persists it as
-  * DOUBLE `rating`, MorphologyServiceImpl.java:164-170). dl = document
-  * token length, carried per posting so BM25's length normalization is
-  * computable segment-locally with no doc-table broadcast (the same
-  * trade Lucene makes with per-doc norms; costs ~1 varint/posting).
+  * DOUBLE `rating`, MorphologyServiceImpl.java:164-170). The document
+  * token length BM25 normalizes by is NOT in the payload: it is a per-doc
+  * value, stored once in `docs.dl` and read by ordinal as the engine's
+  * norms (Lucene's per-doc norms), instead of once per posting.
   */
 object PostingCodec extends Serializable {
   val BlockSize = 128
 
-  final case class Posting(docId: Long, tf: Long, dl: Long)
+  /** The payload layout this version writes and reads, recorded in every
+    * index manifest's stats. Format 1 carried `dl` per posting; an index
+    * written in it must be rebuilt. */
+  val Format = 2
+
+  final case class Posting(docId: Long, tf: Long)
 
   private def writeVarLong(out: ByteArrayOutputStream, v0: Long): Unit = {
     var v = v0
@@ -68,53 +73,20 @@ object PostingCodec extends Serializable {
 
   /** Encode a doc-id-sorted run. Strict sortedness enforced (the index
     * build sorts within partitions; fail fast otherwise). */
-  def encode(postings: Array[Posting]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(postings.length * 3 + 16)
-    writeVarLong(out, postings.length.toLong)
-    var i = 0
-    var prevBlockLast = 0L
-    while (i < postings.length) {
-      val end = math.min(i + BlockSize, postings.length)
-      val payload = new ByteArrayOutputStream((end - i) * 3)
-      var prevDoc = prevBlockLast
-      var maxTf = 0L
-      var j = i
-      while (j < end) {
-        val p = postings(j)
-        require(j == 0 || p.docId > postings(j - 1).docId,
-          "postings must be strictly sorted by docId")
-        writeVarLong(payload, p.docId - prevDoc)
-        writeVarLong(payload, p.tf)
-        writeVarLong(payload, p.dl)
-        if (p.tf > maxTf) maxTf = p.tf
-        prevDoc = p.docId
-        j += 1
-      }
-      val blockLast = postings(end - 1).docId
-      writeVarLong(out, (end - i).toLong)
-      writeVarLong(out, blockLast - prevBlockLast)
-      writeVarLong(out, maxTf)
-      writeVarLong(out, payload.size().toLong)
-      payload.writeTo(out)
-      prevBlockLast = blockLast
-      i = end
-    }
-    out.toByteArray
-  }
+  def encode(postings: Array[Posting]): Array[Byte] =
+    encodeRaw(postings.map(_.docId), postings.map(_.tf), postings.length)
 
-  /** Encode from primitive parallel arrays [0, n) — the build hot path.
-    * Identical wire format to [[encode]]; avoids materializing one
-    * Posting object per row (the build encodes ~10^8s of postings per
+  /** Encode from primitive parallel arrays [0, n) — the build hot path:
+    * no Posting object per row (the build encodes ~10^8s of postings per
     * partition wave, and per-posting allocation is pure GC pressure). */
-  def encodeRaw(docIds: Array[Long], tfs: Array[Long], dls: Array[Long],
-      n: Int): Array[Byte] = {
-    val out = new ByteArrayOutputStream(n * 3 + 16)
+  def encodeRaw(docIds: Array[Long], tfs: Array[Long], n: Int): Array[Byte] = {
+    val out = new ByteArrayOutputStream(n * 2 + 16)
     writeVarLong(out, n.toLong)
     var i = 0
     var prevBlockLast = 0L
     while (i < n) {
       val end = math.min(i + BlockSize, n)
-      val payload = new ByteArrayOutputStream((end - i) * 3)
+      val payload = new ByteArrayOutputStream((end - i) * 2)
       var prevDoc = prevBlockLast
       var maxTf = 0L
       var j = i
@@ -123,7 +95,6 @@ object PostingCodec extends Serializable {
           "postings must be strictly sorted by docId")
         writeVarLong(payload, docIds(j) - prevDoc)
         writeVarLong(payload, tfs(j))
-        writeVarLong(payload, dls(j))
         if (tfs(j) > maxTf) maxTf = tfs(j)
         prevDoc = docIds(j)
         j += 1
@@ -156,9 +127,7 @@ object PostingCodec extends Serializable {
       var j = 0
       while (j < cnt) {
         val doc = prevDoc + r.readVarLong()
-        val tf = r.readVarLong()
-        val dl = r.readVarLong()
-        out(written) = Posting(doc, tf, dl)
+        out(written) = Posting(doc, r.readVarLong())
         prevDoc = doc
         written += 1
         j += 1
@@ -193,4 +162,19 @@ object PostingCodec extends Serializable {
     }
     encode(out)
   }
+
+  // ── BENCHMARK COMPAT: the benchmark's kernel probes (perfbench
+  // Kernels) still call the pre-norms shapes below. No engine code calls
+  // them; they go with the next benchmark change that updates Kernels.
+
+  /** `dl` left the payload: always 0. */
+  implicit final class LegacyPostingDl(private val p: Posting) extends AnyVal {
+    def dl: Long = 0L
+  }
+
+  /** The pre-norms encoder shape; `dls` is ignored. */
+  def encodeRaw(docIds: Array[Long], tfs: Array[Long], dls: Array[Long], n: Int): Array[Byte] =
+    encodeRaw(docIds, tfs, n)
+
+  // ── end BENCHMARK COMPAT ──
 }

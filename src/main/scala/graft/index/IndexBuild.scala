@@ -19,8 +19,8 @@ final case class SegmentRow(
     doc_count: Int, block_max: Double, postings: Array[Byte])
 
 /** Map-side partial posting list of one (term, shard) within one input
-  * partition: `blob` is a packed little-endian run of 16-byte
-  * (ord: long, tf: int, dl: int) records, sorted by ord. The
+  * partition: `blob` is a packed little-endian run of 12-byte
+  * (ord: long, tf: int) records, sorted by ord. The
   * build's shuffle unit when the combine path is on — a few thousand
   * partials per input partition instead of one row per posting. */
 final case class SegPartial(term: String, shard: Int, blob: Array[Byte])
@@ -73,6 +73,9 @@ object IndexBuild {
     /** doc-hash subshards inside each site group */
     def docSubshards: Int = shards / siteGroups
   }
+
+  /** Bytes of one (ord: long, tf: int) record of a [[SegPartial]] blob. */
+  private val PartialRecord = 12
 
   /** Graceful-stop marker polled between batches (ControlApi.stopIndexing). */
   val StopMarker = "_STOP"
@@ -162,7 +165,7 @@ object IndexBuild {
 
   /** Build encoded segments from postings, given the globally-decided
     * salted head-term set. `post` must carry columns
-    * (term, ord, tf, dl, site), `ord` being the doc ordinal.
+    * (term, ord, tf, site), `ord` being the doc ordinal.
     *
     * Physical plan: ONE shuffle — `repartition(segShuffleKeys)`, which
     * co-locates (term, shard) groups bucket-major — and no
@@ -186,7 +189,7 @@ object IndexBuild {
     val buckets = cfg.buckets
     // MAP-SIDE COMBINE (MapReduce-era inverted-index
     // combiner, cf. Ivory/Nutch): each input partition pre-groups its
-    // postings per (term, shard) into a packed 16-byte-per-posting blob,
+    // postings per (term, shard) into a packed 12-byte-per-posting blob,
     // so the shuffle moves a few thousand partial rows per partition
     // instead of one row per posting — ~40x fewer shuffle rows and ~4x
     // fewer pre-compression bytes than the posting-row shuffle, and the
@@ -206,8 +209,8 @@ object IndexBuild {
       buckets)
   }
 
-  /** Posting rows (term, shard, ord, tf, dl) of `post` — columns (term,
-    * ord, tf, dl, site) — given the salted head-term set: the build's
+  /** Posting rows (term, shard, ord, tf) of `post` — columns (term,
+    * ord, tf, site) — given the salted head-term set: the build's
     * segments and a refresh's new postings both take their shard here.
     *
     * Shard scheme (head terms only; tail terms keep shard = -1):
@@ -230,10 +233,10 @@ object IndexBuild {
           (pmod(xxhash64(col("site")), lit(cfg.siteGroups)) * cfg.docSubshards +
             pmod(xxhash64(col("ord")), lit(cfg.docSubshards))).cast("int"))
           .otherwise(lit(-1)))
-      .select("term", "shard", "ord", "tf", "dl")
+      .select("term", "shard", "ord", "tf")
 
   /** Map-side combiner over InternalRows with schema exactly
-    * (term STRING, shard INT, ord LONG, tf LONG, dl LONG): groups the
+    * (term STRING, shard INT, ord LONG, tf LONG): groups the
     * partition's postings per (term, shard) into primitive-array buffers
     * (zero allocation per row on key hit — the probe key wraps the row's
     * transient UTF8String, cloned only on first sight), then emits one
@@ -244,15 +247,13 @@ object IndexBuild {
     final class Buf {
       var doc = new Array[Long](16)
       var tf = new Array[Long](16)
-      var dl = new Array[Long](16)
       var n = 0
-      def add(d: Long, t: Long, l: Long): Unit = {
+      def add(d: Long, t: Long): Unit = {
         if (n == doc.length) {
           doc = java.util.Arrays.copyOf(doc, n * 2)
           tf = java.util.Arrays.copyOf(tf, n * 2)
-          dl = java.util.Arrays.copyOf(dl, n * 2)
         }
-        doc(n) = d; tf(n) = t; dl(n) = l; n += 1
+        doc(n) = d; tf(n) = t; n += 1
       }
     }
     final class Key(var term: UTF8String, var shard: Int) {
@@ -273,7 +274,7 @@ object IndexBuild {
         buf = new Buf
         map.put(new Key(probe.term.clone(), probe.shard), buf)
       }
-      buf.add(row.getLong(2), row.getLong(3), row.getLong(4))
+      buf.add(row.getLong(2), row.getLong(3))
     }
     val entries = map.entrySet().iterator()
     new Iterator[SegPartial] {
@@ -281,15 +282,14 @@ object IndexBuild {
       override def next(): SegPartial = {
         val e = entries.next()
         val b = e.getValue
-        sortPostings(b.doc, b.tf, b.dl, 0, b.n - 1)
-        val blob = new Array[Byte](b.n * 16)
+        sortPostings(b.doc, b.tf, 0, b.n - 1)
+        val blob = new Array[Byte](b.n * PartialRecord)
         val bb = java.nio.ByteBuffer.wrap(blob)
           .order(java.nio.ByteOrder.LITTLE_ENDIAN)
         var i = 0
         while (i < b.n) {
-          require(b.tf(i) <= Int.MaxValue && b.dl(i) <= Int.MaxValue,
-            "tf/dl exceeds Int range")
-          bb.putLong(b.doc(i)); bb.putInt(b.tf(i).toInt); bb.putInt(b.dl(i).toInt)
+          require(b.tf(i) <= Int.MaxValue, "tf exceeds Int range")
+          bb.putLong(b.doc(i)); bb.putInt(b.tf(i).toInt)
           i += 1
         }
         SegPartial(e.getKey.term.toString, e.getKey.shard, blob)
@@ -318,7 +318,6 @@ object IndexBuild {
           val term = curTerm.toString
           val doc = new Array[Long](total)
           val tf = new Array[Long](total)
-          val dl = new Array[Long](total)
           var w = 0
           var maxTf = 0L
           // blobs were prepended — order within the run is irrelevant,
@@ -327,22 +326,21 @@ object IndexBuild {
             val bb = java.nio.ByteBuffer.wrap(blob)
               .order(java.nio.ByteOrder.LITTLE_ENDIAN)
             var i = 0
-            val n = blob.length / 16
+            val n = blob.length / PartialRecord
             while (i < n) {
               doc(w) = bb.getLong()
               tf(w) = bb.getInt().toLong
-              dl(w) = bb.getInt().toLong
               if (tf(w) > maxTf) maxTf = tf(w)
               w += 1; i += 1
             }
           }
-          sortPostings(doc, tf, dl, 0, total - 1)
+          sortPostings(doc, tf, 0, total - 1)
           val r = SegmentRow(
             bucket = termBucket(term, buckets),
             term = term, shard = curShard, part_id = partId,
             doc_count = total,
             block_max = maxTf.toDouble,
-            postings = PostingCodec.encodeRaw(doc, tf, dl, total))
+            postings = PostingCodec.encodeRaw(doc, tf, total))
           blobs = Nil; total = 0
           r
         }
@@ -359,11 +357,11 @@ object IndexBuild {
               val r = emit()
               curTerm = term.clone(); curShard = shard
               val b = row.getBinary(2)
-              blobs ::= b; total += b.length / 16
+              blobs ::= b; total += b.length / PartialRecord
               return r
             }
             val b = row.getBinary(2)
-            blobs ::= b; total += b.length / 16
+            blobs ::= b; total += b.length / PartialRecord
           }
           if (blobs.nonEmpty) emit()
           else throw new NoSuchElementException("empty partition")
@@ -376,12 +374,10 @@ object IndexBuild {
   /** In-place quicksort of parallel posting arrays [lo, hi] by doc
     * ordinal — primitive arrays, no boxing, no comparator allocation. */
   private[graft] def sortPostings(
-      doc: Array[Long], tf: Array[Long], dl: Array[Long],
-      lo0: Int, hi0: Int): Unit = {
+      doc: Array[Long], tf: Array[Long], lo0: Int, hi0: Int): Unit = {
     def swap(i: Int, j: Int): Unit = {
       val d = doc(i); doc(i) = doc(j); doc(j) = d
       val t = tf(i); tf(i) = tf(j); tf(j) = t
-      val l = dl(i); dl(i) = dl(j); dl(j) = l
     }
     def sort(lo: Int, hi: Int): Unit = {
       if (hi - lo < 16) { // insertion sort for small runs
@@ -414,14 +410,14 @@ object IndexBuild {
   }
 
   /** Streaming run-length encoder over a DataFrame with columns exactly
-    * (term STRING, shard INT, ord LONG, tf LONG, dl LONG), ALREADY
+    * (term STRING, shard INT, ord LONG, tf LONG), ALREADY
     * repartitioned by (term, shard) and sorted by (term, shard, ord)
     * within partitions: one SegmentRow per (term, shard) run: the bucket
     * rewrite of a refresh or delete (Refresh.reencode).
     *
     * Runs over the physical plan's InternalRows with primitive-array
-    * accumulators: the deserializer alternative (`.as[Tuple5]` +
-    * per-posting objects) allocates 5 boxes + a tuple + a Posting per
+    * accumulators: the deserializer alternative (`.as[Tuple4]` +
+    * per-posting objects) allocates 4 boxes + a tuple + a Posting per
     * posting row — measured GC pressure that caps the build's thread
     * scaling. The term string materializes once per (term, shard) RUN,
     * not once per row. */
@@ -433,19 +429,17 @@ object IndexBuild {
       new Iterator[SegmentRow] {
         private var docIds = new Array[Long](1024)
         private var tfs = new Array[Long](1024)
-        private var dls = new Array[Long](1024)
         private var n = 0
         private var maxTf = 0L
         private var curTerm: org.apache.spark.unsafe.types.UTF8String = null
         private var curShard: Int = 0
 
-        private def add(d: Long, t: Long, l: Long): Unit = {
+        private def add(d: Long, t: Long): Unit = {
           if (n == docIds.length) {
             docIds = java.util.Arrays.copyOf(docIds, n * 2)
             tfs = java.util.Arrays.copyOf(tfs, n * 2)
-            dls = java.util.Arrays.copyOf(dls, n * 2)
           }
-          docIds(n) = d; tfs(n) = t; dls(n) = l
+          docIds(n) = d; tfs(n) = t
           if (t > maxTf) maxTf = t
           n += 1
         }
@@ -457,7 +451,7 @@ object IndexBuild {
             term = term, shard = curShard, part_id = partId,
             doc_count = n,
             block_max = maxTf.toDouble,
-            postings = PostingCodec.encodeRaw(docIds, tfs, dls, n))
+            postings = PostingCodec.encodeRaw(docIds, tfs, n))
           n = 0; maxTf = 0L
           r
         }
@@ -473,10 +467,10 @@ object IndexBuild {
             if (shard != curShard || term != curTerm) {
               val r = emit()
               curTerm = term.clone(); curShard = shard
-              add(row.getLong(2), row.getLong(3), row.getLong(4))
+              add(row.getLong(2), row.getLong(3))
               return r
             }
-            add(row.getLong(2), row.getLong(3), row.getLong(4))
+            add(row.getLong(2), row.getLong(3))
           }
           if (n > 0) emit()
           else throw new NoSuchElementException("empty partition")
@@ -528,10 +522,16 @@ object IndexBuild {
 
   /** The stats of manifest `m`, present once a build committed a
     * batch: an index dir without them (no manifest at all, or one written
-    * before manifests existed) must be rebuilt. */
-  def statsOf(m: Manifest, root: String): Stats =
-    m.stats.getOrElse(throw new IllegalStateException(
+    * before manifests existed) or with posting lists in another
+    * [[PostingCodec.Format]] must be rebuilt. */
+  def statsOf(m: Manifest, root: String): Stats = {
+    val s = m.stats.getOrElse(throw new IllegalStateException(
       s"$root holds no index commit manifest: rebuild it with `GraftCli build`"))
+    if (s.posting_format != PostingCodec.Format) throw new IllegalStateException(
+      s"$root: manifest v${m.version} holds posting format ${s.posting_format}, " +
+        s"this version reads ${PostingCodec.Format}: rebuild it with `GraftCli build`")
+    s
+  }
 
   /** Width of the persisted mid_terms prefetch-hint table: the number of
     * next-hottest non-head terms the engine prefetches after the head
@@ -630,6 +630,9 @@ object IndexBuild {
     // NOT be dropped (the reference's RunIndexMonitor flag can never
     // lose a stop).
     if (clearStopMarker) store.dropMarker(StopMarker)
+    // a resumed build adds batches to the committed ones: they must be in
+    // this version's posting format
+    store.manifest.filter(_.stats.isDefined).foreach(statsOf(_, outDir))
     val done = completedBatches(spark, outDir)
     val todo = (0 until cfg.nBatches).filterNot(done)
     if (todo.isEmpty) return 0
@@ -699,7 +702,7 @@ object IndexBuild {
       scala.concurrent.ExecutionContext.global
 
     val post = analyzed
-      .select(col("ord"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
+      .select(col("ord"), col("site"), explode(col("terms")).as(Seq("term", "tf")))
 
     // lemma_stats aggregation PERSISTED before the write: the head-term /
     // vocabulary derivation below reads this cache instead of the written
@@ -725,7 +728,8 @@ object IndexBuild {
       shards = cfg.shards, n_batches = cfg.nBatches,
       site_groups = cfg.siteGroups, buckets = cfg.buckets,
       // doc-ordinal high-water: the next ordinal a new url is given
-      next_ord = nDocs)
+      next_ord = nDocs,
+      posting_format = PostingCodec.Format)
 
     // Global salted-term decision — identical across batches/restarts —
     // plus the single-batch lineage metrics, all from ONE aggregation job
@@ -918,6 +922,7 @@ object IndexBuild {
       // `segments` holds only the batches of a multi-batch build
       val batches = m.parts("segments").map(_.value("batch").toInt)
       if (batches.nonEmpty) {
+        statsOf(m, outDir) // decodes every posting list: this version's format only
         val cols = Seq("bucket", "term", "shard", "doc_count", "block_max", "postings")
         val segs = c.read("segments").select(cols.map(col): _*)
         val merged = (if (m.has("index")) segs.unionByName(c.read("index").select(cols.map(col): _*)) else segs)

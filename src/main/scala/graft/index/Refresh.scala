@@ -161,14 +161,14 @@ object Refresh {
           .select("term", "shard", "postings")
           .as[(String, Int, Array[Byte])]
           .flatMap { case (term, shard, bytes) =>
-            PostingCodec.decode(bytes).iterator.map(p => (term, shard, p.docId, p.tf, p.dl))
+            PostingCodec.decode(bytes).iterator.map(p => (term, shard, p.docId, p.tf))
           }
-          .toDF("term", "shard", "ord", "tf", "dl")
+          .toDF("term", "shard", "ord", "tf")
           .join(oldDocs.select("ord"), Seq("ord"), "left_anti")
         val rows = addedWithOrd.fold(kept)(a => kept.unionByName(IndexBuild.saltedPostings(
-          a.select(col("ord"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf"))),
+          a.select(col("ord"), col("site"), explode(col("terms")).as(Seq("term", "tf"))),
           c.read("head_terms"), cfg)))
-        c.overwrite(reencode(rows.select("term", "shard", "ord", "tf", "dl"), cfg.buckets).toDF,
+        c.overwrite(reencode(rows.select("term", "shard", "ord", "tf"), cfg.buckets).toDF,
           "index", Seq("bucket"), touchedKeys)
       }
 
@@ -263,7 +263,7 @@ object Refresh {
     }
   }
 
-  /** Re-encode decoded posting rows (term, shard, ord, tf, dl) into
+  /** Re-encode decoded posting rows (term, shard, ord, tf) into
     * segment rows, with the build's shuffle keys and in-partition sort. */
   private def reencode(rows: DataFrame, buckets: Int): Dataset[SegmentRow] = {
     val spark = rows.sparkSession

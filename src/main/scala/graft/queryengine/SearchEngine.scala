@@ -1,5 +1,10 @@
 package graft.queryengine
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.FutureAction
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,10 +69,21 @@ final class SearchEngine(
       buckets: Int,
       docsDf: DataFrame, lemmaStatsDf: DataFrame, segmentsDf: DataFrame,
       headTerms: Set[String],
+      nextOrd: Int,
+      normsRead: Option[FutureAction[Seq[(Long, Long)]]],
       // the manifest every table above was read from: a commit that
       // lands while load() runs moves the latest version past it, so the
       // next ensureFresh() reloads
-      manifest: Manifest)
+      manifest: Manifest) {
+    /** `docs.dl` by `docs.ord` (0 in the holes deletes leave): the BM25
+      * length norm of every doc, 4 B per ordinal; null for a scorer that
+      * does not read it. */
+    lazy val norms: Array[Int] = normsRead.map { read =>
+      val a = new Array[Int](nextOrd)
+      Await.result(read, Duration.Inf).foreach { case (ord, dl) => a(ord.toInt) = Math.toIntExact(dl) }
+      a
+    }.orNull
+  }
 
   /** Cache budget for the merged index (`spark.graft.indexCacheBytes`,
     * default 8 GiB): within it the index is `.cache`d at load (in-sandbox
@@ -83,6 +99,15 @@ final class SearchEngine(
   private def load(): IndexState = {
     val m = store.manifest.getOrElse(Manifest.empty)
     val stats = IndexBuild.statsOf(m, indexDir)
+    // norms: one two-column read of `docs`, planned before the dim is
+    // cache-marked (so it reads the two columns, not the whole cache) and
+    // collected while the rest of the load runs
+    val normsRead = if (!scorer.usesDocLength) None else {
+      require(stats.next_ord <= Int.MaxValue - 8, s"$indexDir: ${stats.next_ord} doc ordinals " +
+        "exceed what driver-side norms (an int per ordinal) can hold")
+      Some(store.readAt(m, "docs").select("ord", "dl").queryExecution.toRdd
+        .map(r => (r.getLong(0), r.getLong(1))).collectAsync())
+    }
     val docsDf = store.readAt(m, "docs").cache()
     val lemmaStatsDf = store.readAt(m, "lemma_stats").cache()
     val index = store.readAt(m, "index")
@@ -95,10 +120,21 @@ final class SearchEngine(
       buckets = stats.buckets,
       docsDf = docsDf, lemmaStatsDf = lemmaStatsDf, segmentsDf = segmentsDf,
       headTerms = store.readAt(m, "head_terms").as[String].collect().toSet,
+      nextOrd = stats.next_ord.toInt,
+      normsRead = normsRead,
       manifest = m)
   }
 
   private var state: IndexState = load()
+
+  /** The norms as a broadcast for the distributed WAND path: made on its
+    * first use, destroyed on reload. */
+  private var normsBroadcast: Option[Broadcast[Array[Int]]] = None
+  private def normsBc: Broadcast[Array[Int]] = normsBroadcast.getOrElse {
+    val b = spark.sparkContext.broadcast(state.norms)
+    normsBroadcast = Some(b)
+    b
+  }
   // (prefetchHot() is invoked at the end of the class body, after the
   // caches it populates are initialized — constructor statement order)
 
@@ -116,6 +152,8 @@ final class SearchEngine(
       lastRanked = Seq.empty
       lastSurviving = Seq.empty
       dropRankedDf()
+      normsBroadcast.foreach(_.destroy())
+      normsBroadcast = None
       state = load()
       prefetchHot()
     }
@@ -561,13 +599,12 @@ final class SearchEngine(
         if (siteShards.isDefined && headTerms.contains(t))
           df / math.max(1, state.siteGroups) else df
       }.sum
-    val localEvalLimit = 2000000L
     val s = shards
     val termsArr = ordered.toArray
     val dfArr = termsArr.map(dfMap)
     val (n, ad, sc) = (nDocs, avgdl, scorer)
 
-    def evalGroup(rows: Seq[(String, Array[Byte])]): Wand.ShardResult = {
+    def evalGroup(rows: Seq[(String, Array[Byte])], norms: Array[Int]): Wand.ShardResult = {
       val byTerm = rows.groupBy(_._1)
       val termSegs = termsArr.indices.map { i =>
         val t = termsArr(i)
@@ -576,7 +613,7 @@ final class SearchEngine(
         }
         (Wand.TermCtx(t, dfArr(i)), bytes)
       }
-      Wand.evaluateShard(termSegs, sc, n, ad, k, exact)
+      Wand.evaluateShard(termSegs, sc, n, ad, norms, k, exact)
     }
 
     def cachedRows(terms: Seq[String]): Seq[(String, Int, Array[Byte])] =
@@ -588,7 +625,7 @@ final class SearchEngine(
     // evaluation groups: scoped queries touch only the site group's
     // shard range; unscoped evaluate every shard
     val evalShards: Seq[Int] = siteShards.getOrElse(0 until s)
-    if (totalPostings <= localEvalLimit) {
+    if (totalPostings <= SearchEngine.localEvalLimit) {
       // Local path (tail-only, moderate salted, or full cache hit):
       // fetch missing segments in at most ONE job, cache them, and
       // evaluate doc-shard groups on the driver. A repeated (or fully
@@ -605,20 +642,23 @@ final class SearchEngine(
           .foreach(t => postingCache.put(t, Seq.empty))
       }
       val rows = cachedRows(cachedTerms) ++ fetched
+      val norms = state.norms
       val results: Array[Wand.ShardResult] =
-        if (!anySalted) Array(evalGroup(rows.map(r => (r._1, r._3))))
+        if (!anySalted) Array(evalGroup(rows.map(r => (r._1, r._3)), norms))
         else evalShards.map { g =>
           evalGroup(rows.collect {
             case (t, sh, bytes) if sh == g || sh < 0 => (t, bytes)
-          })
+          }, norms)
         }.toArray
       LocalHits(results.flatMap(_.hits), results.map(_.matchCount).sum)
     } else {
       // Large query: shard-local distributed WAND. Salted segments
       // stay on their doc shard; unsalted ones replicate to each
       // evaluated shard. Scan ALL query terms here — driver-cached rows
-      // can't feed a distributed evaluation.
+      // can't feed a distributed evaluation. Norms reach the executors
+      // as a broadcast.
       val groupsArr = evalShards.toArray
+      val norms = Option(state.norms).map(_ => normsBc)
       val shardRows = segmentRows(ordered)
         .flatMap { case (t, sh, bytes) =>
           if (sh < 0) groupsArr.map(g => (g, t, bytes)).toSeq else Seq((sh, t, bytes))
@@ -627,12 +667,12 @@ final class SearchEngine(
       if (exact && k == Int.MaxValue) {
         // unbounded exact (the parity search path): hits STAY distributed
         DistributedHits(shardRows.flatMapGroups { (_, rows) =>
-          evalGroup(rows.toSeq.map(r => (r._2, r._3))).hits.iterator
+          evalGroup(rows.toSeq.map(r => (r._2, r._3)), norms.map(_.value).orNull).hits.iterator
         })
       } else {
         // finite k: per-shard top-k (+ties) only — bounded driver merge
         val results = shardRows
-          .mapGroups((_, rows) => evalGroup(rows.toSeq.map(r => (r._2, r._3))))
+          .mapGroups((_, rows) => evalGroup(rows.toSeq.map(r => (r._2, r._3)), norms.map(_.value).orNull))
           .collect()
         LocalHits(results.flatMap(_.hits), results.map(_.matchCount).sum)
       }
@@ -782,6 +822,11 @@ object Statistics {
 }
 
 object SearchEngine {
+  /** Postings a query may fetch to the driver (its missing salted terms'
+    * df sum) before WAND runs distributed instead. Settable by tests, as
+    * [[graft.store.TableStore.wrap]] is. */
+  @volatile private[graft] var localEvalLimit: Long = 2000000L
+
   /** Bounded access-ordered LRU over tiny (String -> Long) point lookups
     * (term dfs, per-site doc counts). Entries are ~100 bytes so the cap
     * bounds a long-lived engine serving an unbounded distinct-key stream

@@ -28,7 +28,7 @@ object Wand {
   final case class TermCtx(term: String, df: Long)
 
   /** Streaming cursor over one encoded segment with block-skip seek.
-    * A decoded block lives in three primitive arrays reused for every
+    * A decoded block lives in two primitive arrays reused for every
     * block (the codec caps a block at [[PostingCodec.BlockSize]]
     * postings), so walking a list allocates nothing per posting. */
   final class TermCursor(bytes: Array[Byte]) {
@@ -39,7 +39,6 @@ object Wand {
 
     private val docs = new Array[Long](PostingCodec.BlockSize)
     private val tfs = new Array[Long](PostingCodec.BlockSize)
-    private val dls = new Array[Long](PostingCodec.BlockSize)
     private var blockLen = 0
     private var blockPos = 0
     private var blockMaxOfCurrent = 0L
@@ -67,7 +66,6 @@ object Wand {
         prevDoc += r.readVarLong()
         docs(j) = prevDoc
         tfs(j) = r.readVarLong()
-        dls(j) = r.readVarLong()
         j += 1
       }
       seen += hdrCount
@@ -100,7 +98,6 @@ object Wand {
 
     def doc: Long = docs(blockPos)
     def tf: Long = tfs(blockPos)
-    def dl: Long = dls(blockPos)
 
     /** Upper-bound info for block-max pruning: the decoded block's max tf
       * and its last docId. */
@@ -189,7 +186,10 @@ object Wand {
   /** Evaluate one doc shard: conjunctive AND of all terms, rarest first
     * (reference O1, SearchServiceImpl.java:68-73). `termSegs` is ordered
     * (df ASC, term ASC) by the caller; a term with no segment in this
-    * shard means no matches (empty cursor).
+    * shard means no matches (empty cursor). `norms(ord)` is the doc's
+    * token length (`docs.dl` by ordinal), read once per matching doc; a
+    * null `norms` (a scorer that ignores `dl`) scores every doc at
+    * `avgdl`.
     *
     * Returns per-shard top-k (ties kept) + exact/lower-bound match count.
     */
@@ -198,6 +198,7 @@ object Wand {
       scorer: Scorer,
       nDocs: Long,
       avgdl: Double,
+      norms: Array[Int],
       k: Int,
       exact: Boolean): ShardResult = {
 
@@ -230,12 +231,13 @@ object Wand {
         i += 1
       }
       if (allMatch) {
+        val dl = if (norms == null) avgdl else norms(cand.toInt).toDouble
         var score = 0.0
         var tfSum = 0.0
         var j = 0
         while (j < m) {
           val c = cursors(j)
-          score += scorer.termScore(c.tf.toDouble, ctxs(j).df, nDocs, c.dl.toDouble, avgdl)
+          score += scorer.termScore(c.tf.toDouble, ctxs(j).df, nDocs, dl, avgdl)
           tfSum += c.tf.toDouble
           j += 1
         }
@@ -269,4 +271,20 @@ object Wand {
 
     ShardResult(topk.result(), count)
   }
+
+  // ── BENCHMARK COMPAT: the benchmark's kernel probes (perfbench
+  // Kernels) still call the pre-norms shape below. No engine code calls
+  // it; it goes with the next benchmark change that updates Kernels.
+
+  /** The pre-norms shape: every doc is scored at `avgdl`. */
+  def evaluateShard(
+      termSegs: Seq[(TermCtx, Option[Array[Byte]])],
+      scorer: Scorer,
+      nDocs: Long,
+      avgdl: Double,
+      k: Int,
+      exact: Boolean): ShardResult =
+    evaluateShard(termSegs, scorer, nDocs, avgdl, null, k, exact)
+
+  // ── end BENCHMARK COMPAT ──
 }

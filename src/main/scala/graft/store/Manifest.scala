@@ -31,11 +31,13 @@ final case class TableMeta(schema: String, parts: Seq[Part]) {
 
 /** Corpus scalars and layout of an index: `read("stats")` serves them as
   * a one-row table. `next_ord` is the doc-ordinal high-water mark: every
-  * ordinal a published doc ever carried is below it. */
+  * ordinal a published doc ever carried is below it. `posting_format` is
+  * the `PostingCodec.Format` the index's posting lists are written in; a
+  * manifest from before it was recorded reads 0. */
 final case class Stats(
     n_docs: Long, n_distinct: Long, avgdl: Double, total_tokens: Long,
     shards: Int, n_batches: Int, site_groups: Int, buckets: Int,
-    next_ord: Long)
+    next_ord: Long, posting_format: Int)
 
 /** One commit's lineage row; `read("lineage")` serves every one of them. */
 final case class Lineage(

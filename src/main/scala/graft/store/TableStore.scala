@@ -2,7 +2,7 @@ package graft.store
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
@@ -90,11 +90,15 @@ trait TableStore {
     * before it. False when another commit got there first. */
   def publish(m: Manifest): Boolean
 
-  /** Delete paths relative to the root (recursively): GC after a publish. */
+  /** Delete paths relative to the root: GC after a publish. Data
+    * directories and files go recursively; a partition or table
+    * directory goes only while empty, and so does every such directory
+    * above a deleted path that the delete leaves empty. */
   def delete(paths: Seq[String]): Unit
 
   /** Paths relative to the root that manifest `m` does not reference and
-    * no in-flight commit is staging: what GC deletes after `m`. */
+    * no in-flight commit is staging, and partition directories holding
+    * nothing: what GC deletes after `m`. */
   def unreferenced(m: Manifest): Seq[String]
 
   /** Run `op` as one copy-on-write commit of this index root; see
@@ -307,8 +311,10 @@ final class ParquetStore(val spark: SparkSession, val root: String)
         val bytes = f.listStatus(leaf).filter(s => s.getPath.getName.endsWith(".parquet"))
           .map(_.getLen).sum
         val to = new Path(s"$root/$dir")
-        f.mkdirs(to.getParent)
-        require(f.rename(leaf, to), s"stage: rename $leaf -> $to failed")
+        def move(): Boolean = { f.mkdirs(to.getParent); f.rename(leaf, to) }
+        // a GC running outside this commit may remove the partition
+        // directory while it is still empty, between the mkdirs and the rename
+        require(move() || (!f.exists(to.getParent) && move()), s"stage: rename $leaf -> $to failed")
         Part(dir, bytes)
       }
       f.delete(tmp, true)
@@ -336,7 +342,26 @@ final class ParquetStore(val spark: SparkSession, val root: String)
 
   override def delete(paths: Seq[String]): Unit = {
     val f = fs
-    paths.foreach(p => f.delete(new Path(s"$root/$p"), true))
+    // an rmdir, which fails on a directory a stage has just moved into
+    def removeIfEmpty(rel: String): Unit = f match {
+      case local: LocalFileSystem => local.pathToFile(new Path(s"$root/$rel")).delete()
+      case _ => try f.delete(new Path(s"$root/$rel"), false)
+        catch { case _: java.io.IOException => false }
+    }
+    paths.foreach { p =>
+      val path = new Path(s"$root/$p")
+      val isDir = try f.getFileStatus(path).isDirectory
+        catch { case _: java.io.FileNotFoundException => false }
+      if (isDir && !ParquetStore.isDataDir(path.getName)) removeIfEmpty(p) else f.delete(path, true)
+    }
+    // then the partition and table directories the deletes emptied,
+    // deepest first
+    def parents(rel: String): Seq[String] = {
+      val i = rel.lastIndexOf('/')
+      if (i <= 0) Nil else rel.substring(0, i) +: parents(rel.substring(0, i))
+    }
+    paths.filterNot(_.startsWith("_")).flatMap(parents).distinct
+      .sortBy(-_.count(_ == '/')).foreach(removeIfEmpty)
   }
 
   override def unreferenced(m: Manifest): Seq[String] = {
@@ -344,14 +369,16 @@ final class ParquetStore(val spark: SparkSession, val root: String)
     val live = m.tables.valuesIterator.flatMap(_.parts.map(_.dir)).toSet
     def inFlight(name: String): Boolean =
       Seq("c=", "_stage-").exists(p => name.startsWith(p) && Commit.active.contains(name.drop(p.length)))
-    def walk(rel: String): Seq[String] =
-      f.listStatus(new Path(s"$root/$rel")).toSeq.flatMap { st =>
+    def walk(rel: String): Seq[String] = {
+      val children = f.listStatus(new Path(s"$root/$rel")).toSeq
+      if (children.isEmpty) Seq(rel) // a partition or table directory holding nothing
+      else children.flatMap { st =>
         val child = s"$rel/${st.getPath.getName}"
         if (live(child) || inFlight(st.getPath.getName)) Nil
-        else if (st.isDirectory && !st.getPath.getName.startsWith("c=") &&
-          !st.getPath.getName.startsWith("_stage-")) walk(child)
+        else if (st.isDirectory && !ParquetStore.isDataDir(st.getPath.getName)) walk(child)
         else Seq(child)
       }
+    }
     val tables = f.listStatus(new Path(root)).toSeq
       .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
@@ -494,6 +521,11 @@ object ParquetStore {
 
   /** Manifest versions GC keeps, the latest included. */
   private val RetainedVersions = 3
+
+  /** A directory one stage wrote: a part (`c=<id>`) or a staging area
+    * (`_stage-<id>`). Every other directory under a table is a partition. */
+  private def isDataDir(name: String): Boolean =
+    name.startsWith("c=") || name.startsWith("_stage-")
 
   private def newId(): String =
     "k" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)

@@ -131,8 +131,7 @@ class PostingCodecSpec extends AnyFunSuite with GenSamples {
     n <- Gen.chooseNum(0, 1000)
     docIds <- Gen.listOfN(n, Gen.chooseNum(0L, 1L << 48)).map(_.distinct.sorted)
     tfs <- Gen.listOfN(docIds.size, Gen.chooseNum(1L, 500L))
-    dls <- Gen.listOfN(docIds.size, Gen.chooseNum(1L, 5000L))
-  } yield docIds.zip(tfs.zip(dls)).map { case (d, (t, l)) => Posting(d, t, l) }.toArray
+  } yield docIds.zip(tfs).map { case (d, t) => Posting(d, t) }.toArray
 
   test("decode ∘ encode = identity on sorted runs (FIXTURES.md §5)") {
     forAll(postingsGen) { ps =>
@@ -150,13 +149,21 @@ class PostingCodecSpec extends AnyFunSuite with GenSamples {
   }
   test("encode rejects unsorted input") {
     intercept[IllegalArgumentException] {
-      encode(Array(Posting(5, 1, 1), Posting(3, 1, 1)))
+      encode(Array(Posting(5, 1), Posting(3, 1)))
     }
   }
   test("compression is effective on dense ids") {
-    val ps = Array.tabulate(10000)(i => Posting(i.toLong * 2, 1L + i % 3, 100L))
+    val ps = Array.tabulate(10000)(i => Posting(i.toLong * 2, 1L + i % 3))
     val bytes = encode(ps)
-    assert(bytes.length < 10000 * 6) // << 24 bytes/posting uncompressed
+    assert(bytes.length < 10000 * 3) // << 16 bytes/posting uncompressed
+  }
+  test("the payload is (docDelta tf) only: one-byte gaps and tfs cost two bytes a posting") {
+    // one block of 100: entryCount (1 byte), the block header (count,
+    // lastDocDelta and maxTf take a byte each, the 200-byte payload length
+    // two), then 100 × (gap, tf)
+    val ps = Array.tabulate(100)(i => Posting(i.toLong + 1, 1L + i % 50))
+    assert(encode(ps).length == 1 + 5 + 2 * 100)
+    assert(decode(encode(ps)).toSeq == ps.toSeq)
   }
 }
 
@@ -169,13 +176,16 @@ class WandSpec extends AnyFunSuite with GenSamples {
     sets.reduce(_ intersect _).toSeq.sorted
   }
 
+  /** Every doc of [[listsGen]] (ids 0..600) at dl = avgdl = 50. */
+  private val flatNorms = Array.fill(601)(50)
+
   val listsGen: Gen[List[Array[Posting]]] = for {
     nTerms <- Gen.chooseNum(1, 4)
     lists <- Gen.listOfN(nTerms, for {
       n <- Gen.chooseNum(1, 400)
       ids <- Gen.listOfN(n, Gen.chooseNum(0L, 600L)).map(_.distinct.sorted)
       tfs <- Gen.listOfN(ids.size, Gen.chooseNum(1L, 9L))
-    } yield ids.zip(tfs).map { case (d, t) => Posting(d, t, 50L) }.toArray)
+    } yield ids.zip(tfs).map { case (d, t) => Posting(d, t) }.toArray)
   } yield lists
 
   test("exact WAND conjunction == brute-force set intersection") {
@@ -183,7 +193,7 @@ class WandSpec extends AnyFunSuite with GenSamples {
       val termSegs = lists.zipWithIndex.map { case (l, i) =>
         (Wand.TermCtx(s"t$i", l.length.toLong), Some(PostingCodec.encode(l)))
       }
-      val res = Wand.evaluateShard(termSegs, ReferenceTfSum, 1000L, 50.0,
+      val res = Wand.evaluateShard(termSegs, ReferenceTfSum, 1000L, 50.0, flatNorms,
         Int.MaxValue, exact = true)
       val expected = bruteConjunction(lists)
       assert(res.hits.map(_.docId).sorted.toSeq == expected)
@@ -202,8 +212,8 @@ class WandSpec extends AnyFunSuite with GenSamples {
       val termSegs = lists.zipWithIndex.map { case (l, i) =>
         (Wand.TermCtx(s"t$i", l.length.toLong), Some(PostingCodec.encode(l)))
       }
-      val exact = Wand.evaluateShard(termSegs, bm, 1000L, 50.0, Int.MaxValue, exact = true)
-      val pruned = Wand.evaluateShard(termSegs, bm, 1000L, 50.0, 10, exact = false)
+      val exact = Wand.evaluateShard(termSegs, bm, 1000L, 50.0, flatNorms, Int.MaxValue, exact = true)
+      val pruned = Wand.evaluateShard(termSegs, bm, 1000L, 50.0, flatNorms, 10, exact = false)
       val trueTop = exact.hits.map(_.score).sorted.reverse.take(10)
       val gotTop = pruned.hits.map(_.score).sorted.reverse.take(10)
       assert(gotTop.toSeq == trueTop.toSeq)
@@ -213,28 +223,28 @@ class WandSpec extends AnyFunSuite with GenSamples {
   /** 2–3 lists over 3,000 docs, each holding ~80% of them: conjunctions
     * of over a thousand matches spanning many 128-posting blocks. tf is
     * mostly 1–2 with rare spikes, so block maxima differ and block-max
-    * pruning engages; dl is per doc, as in the index. */
-  val denseListsGen: Gen[List[Array[Posting]]] = for {
+    * pruning engages; dl is per doc, as in the index: the norms. */
+  val denseListsGen: Gen[(Array[Int], List[Array[Posting]])] = for {
     nTerms <- Gen.chooseNum(2, 3)
-    dls <- Gen.listOfN(3000, Gen.chooseNum(20L, 400L))
+    dls <- Gen.listOfN(3000, Gen.chooseNum(20, 400))
     lists <- Gen.listOfN(nTerms, for {
       keep <- Gen.listOfN(3000, Gen.chooseNum(0, 9))
       tfs <- Gen.listOfN(3000,
         Gen.frequency(100 -> Gen.chooseNum(1L, 2L), 1 -> Gen.chooseNum(3L, 30L)))
     } yield (0 until 3000).filter(keep(_) < 8)
-      .map(i => Posting(i.toLong, tfs(i), dls(i))).toArray)
-  } yield lists
+      .map(i => Posting(i.toLong, tfs(i))).toArray)
+  } yield (dls.toArray, lists)
 
   test("pruned top-k hit set == every doc scoring >= the exact k-th score (ties kept)") {
     for (scorer <- Seq(Bm25(), ReferenceTfSum)) {
       var engaged = 0
-      forAll(denseListsGen, n = 30) { lists =>
+      forAll(denseListsGen, n = 30) { case (norms, lists) =>
         val termSegs = lists.zipWithIndex.map { case (l, i) =>
           (Wand.TermCtx(s"t$i", l.length.toLong), Some(PostingCodec.encode(l)))
         }
-        val exact = Wand.evaluateShard(termSegs, scorer, 5000L, 200.0, Int.MaxValue, exact = true)
+        val exact = Wand.evaluateShard(termSegs, scorer, 5000L, 200.0, norms, Int.MaxValue, exact = true)
         assert(exact.matchCount > 256, "the property needs more than 256 matches")
-        val pruned = Wand.evaluateShard(termSegs, scorer, 5000L, 200.0, 10, exact = false)
+        val pruned = Wand.evaluateShard(termSegs, scorer, 5000L, 200.0, norms, 10, exact = false)
         val kth = exact.hits.map(_.score).sorted.reverse.apply(9)
         val expected = exact.hits.filter(_.score >= kth).map(h => h.docId -> h.score).toMap
         assert(pruned.hits.map(h => h.docId -> h.score).toMap == expected,
@@ -252,12 +262,11 @@ class WandSpec extends AnyFunSuite with GenSamples {
       n <- Gen.chooseNum(1, 1500)
       gaps <- Gen.listOfN(n, Gen.frequency(6 -> Gen.chooseNum(1L, 4L), 1 -> Gen.chooseNum(5L, 400L)))
       tfs <- Gen.listOfN(n, Gen.chooseNum(1L, 50L))
-      dls <- Gen.listOfN(n, Gen.chooseNum(1L, 1000L))
       steps <- Gen.listOfN(200, Gen.frequency(
         4 -> Gen.chooseNum(0L, 30L), 1 -> Gen.chooseNum(31L, 3000L), 1 -> Gen.const(-1L)))
     } yield {
       val ids = gaps.scanLeft(0L)(_ + _).tail
-      (ids.lazyZip(tfs).lazyZip(dls).map(Posting(_, _, _)).toArray, steps)
+      (ids.lazyZip(tfs).map(Posting(_, _)).toArray, steps)
     }
     forAll(gen) { case (ps, steps) =>
       val bytes = PostingCodec.encode(ps)
@@ -274,17 +283,38 @@ class WandSpec extends AnyFunSuite with GenSamples {
         }
         assert(cur.exhausted == (ref >= decoded.length), s"exhaustion differs at target $target")
         if (!cur.exhausted)
-          assert(Posting(cur.doc, cur.tf, cur.dl) == decoded(ref), s"cursor off at target $target")
+          assert(Posting(cur.doc, cur.tf) == decoded(ref), s"cursor off at target $target")
       }
     }
   }
 
   test("missing term segment ⇒ empty result") {
-    val seg = PostingCodec.encode(Array(Posting(1, 1, 10)))
+    val seg = PostingCodec.encode(Array(Posting(1, 1)))
     val res = Wand.evaluateShard(
       Seq((Wand.TermCtx("a", 1), Some(seg)), (Wand.TermCtx("b", 0), None)),
-      ReferenceTfSum, 10, 10.0, 10, exact = true)
+      ReferenceTfSum, 10, 10.0, Array(10, 10), 10, exact = true)
     assert(res.hits.isEmpty && res.matchCount == 0)
+  }
+
+  test("dl comes from the norms array: equal tf ranks the shorter doc first under BM25, ties under tf-sum") {
+    // docs 3 and 7 hold both terms with the same tfs; doc 3 is 400
+    // tokens long, doc 7 is 40
+    val norms = Array.fill(10)(100)
+    norms(3) = 400
+    norms(7) = 40
+    val segs = Seq(
+      (Wand.TermCtx("a", 2), Some(PostingCodec.encode(Array(Posting(3, 2), Posting(7, 2))))),
+      (Wand.TermCtx("b", 3), Some(PostingCodec.encode(Array(Posting(1, 1), Posting(3, 1), Posting(7, 1))))))
+    val bm = Bm25()
+    val bmHits = Wand.evaluateShard(segs, bm, 10, 100.0, norms, 10, exact = true).hits
+      .sortBy(h => (-h.score, h.docId)).toSeq
+    assert(bmHits.map(_.docId) == Seq(7L, 3L), "BM25 must rank the shorter doc first")
+    for (h <- bmHits) assert(h.score ==
+      bm.termScore(2.0, 2, 10, norms(h.docId.toInt).toDouble, 100.0) +
+        bm.termScore(1.0, 3, 10, norms(h.docId.toInt).toDouble, 100.0))
+    val tfHits = Wand.evaluateShard(segs, ReferenceTfSum, 10, 100.0, norms, 10, exact = true).hits
+    assert(tfHits.map(h => h.docId -> h.score).toMap == Map(3L -> 3.0, 7L -> 3.0),
+      "tf-sum ignores dl: the two docs tie")
   }
 }
 

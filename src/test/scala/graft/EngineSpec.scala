@@ -344,6 +344,34 @@ class EngineSpec extends AnyFunSuite {
       s"head-term query must be fully served by the prefetched caches (saw $jobs jobs)")
   }
 
+  test("distributed WAND (broadcast norms) answers search and topK exactly as the local path") {
+    built
+    val q = s"$commonForm $midLemma"
+    val site = Some("https://site1.test")
+    for (scorer <- Seq(ReferenceTfSum, Bm25())) {
+      def answers(e: SearchEngine): Seq[Any] =
+        Seq(q, s"$commonForm $midLemma $rareForm").flatMap(query => Seq(
+          e.search(query, 0, 10), e.search(query, 10, 10), e.search(query, 0, 10, site),
+          e.topK(query, 10, pruned = true), e.topK(query, 10, pruned = false)))
+      val local = new SearchEngine(spark, indexDir, pagesPath, scorer)
+      val expected = answers(local)
+      assert(local.search(q, 0, 10).count > 10, "fixture: page 2 must hold hits")
+      // a warm local topK is served from the driver caches
+      assert(jobsOf("local-topk")(local.topK(q, 10))._2 == 0)
+
+      val limit = SearchEngine.localEvalLimit
+      SearchEngine.localEvalLimit = -1L // every query evaluates on the executors
+      try {
+        val dist = new SearchEngine(spark, indexDir, pagesPath, scorer)
+        val got = answers(dist)
+        expected.zip(got).zipWithIndex.foreach { case ((e, g), i) =>
+          assert(g == e, s"${scorer.name}: answer $i differs from the local path")
+        }
+        assert(jobsOf("distributed-topk")(dist.topK(q, 10))._2 > 0, "the query must run distributed")
+      } finally SearchEngine.localEvalLimit = limit
+    }
+  }
+
   test("warm topK is Catalyst-free: cache-hit calls run zero rules, a cache miss runs some") {
     built
     val q = s"$commonForm $midLemma"

@@ -155,7 +155,7 @@ class IndexStreamSpec extends AnyFunSuite {
     def state() = (
       store.read("index").select("term", "shard", "postings")
         .as[(String, Int, Array[Byte])].collect().toSeq
-        .flatMap { case (t, sh, b) => PostingCodec.decode(b).map(p => (t, sh, p.docId, p.tf, p.dl)) }
+        .flatMap { case (t, sh, b) => PostingCodec.decode(b).map(p => (t, sh, p.docId, p.tf)) }
         .sorted,
       store.read("docs").select("doc_id", "ord", "url", "site", "lang", "dl")
         .as[(Long, Long, String, String, String, Long)].collect().toSet,

@@ -915,6 +915,76 @@ class RefreshSpec extends AnyFunSuite {
     assert(delete.getMessage.contains("rebuild"), delete.getMessage)
   }
 
+  test("a manifest that does not declare the posting format fails open, refresh and delete with rebuild, touching no file") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-format-manifest").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    // the fixture: the latest manifest as a version that wrote `dl` into
+    // every posting published it — its stats name no posting format
+    val v = graft.store.TableStore.open(spark, idx).version
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val json = mapper.readTree(Files.readAllBytes(java.nio.file.Paths.get(s"$idx/_manifest/v$v.json")))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    json.put("version", v + 1)
+    json.get("stats").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("posting_format")
+    Files.write(java.nio.file.Paths.get(s"$idx/_manifest/v${v + 1}.json"), mapper.writeValueAsBytes(json))
+    val before = filesUnder(idx)
+
+    val open = intercept[IllegalStateException](
+      new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum))
+    assert(open.getMessage.contains("rebuild"), open.getMessage)
+    val refresh = intercept[IllegalStateException](
+      Refresh.refreshPages(spark, idx, spark.createDataset(pages.take(1)), idxCfg))
+    assert(refresh.getMessage.contains("rebuild"), refresh.getMessage)
+    val delete = intercept[IllegalStateException](
+      Refresh.deletePages(spark, idx, Seq(pages.head.url), idxCfg))
+    assert(delete.getMessage.contains("rebuild"), delete.getMessage)
+    assert(filesUnder(idx) == before, "a refused operation must not touch the index dir")
+  }
+
+  test("GC leaves no empty directory: after a 2-batch build and merge, and after a delete that empties a bucket") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-empty-dirs").toString
+    buildSmall(work, idxCfg, 20) // 2 batches, merged: every segments partition dies
+    assert(emptyDirsUnder(s"$work/idx").isEmpty, s"after merge: ${emptyDirsUnder(s"$work/idx")}")
+
+    // two one-lemma pages whose lemmas hash to different index buckets:
+    // deleting the first empties its bucket
+    val l = RuDict.contentLemmas
+    val (a, b) = (150 until 200).map(l).combinations(2).map(p => (p(0), p(1)))
+      .find { case (x, y) => IndexBuild.termBucket(x, 16) != IndexBuild.termBucket(y, 16) }.get
+    val idx = s"$work/idx2"
+    val two = Seq(page("https://site0.test/p/a", html(a, s"$a $a")),
+      page("https://site1.test/p/b", html(b, s"$b $b")))
+    IndexBuild.run(spark, spark.createDataset(two), idx, idxCfg)
+    IndexBuild.mergeSegments(spark, idx)
+    val store = graft.store.TableStore.open(spark, idx)
+    val bucketA = s"bucket=${IndexBuild.termBucket(a, 16)}"
+    assert(store.manifest.get.parts("index").exists(_.key == bucketA), "fixture: a's bucket is live")
+    Refresh.deletePages(spark, idx, Seq("https://site0.test/p/a"), idxCfg)
+    assert(!store.manifest.get.parts("index").exists(_.key == bucketA), "the delete must drop a's bucket")
+    assert(emptyDirsUnder(idx).isEmpty, s"after the delete: ${emptyDirsUnder(idx)}")
+    assert(IndexDir.unreferenced(spark, idx).isEmpty)
+  }
+
+  /** Every file under `root` with its bytes. */
+  private def filesUnder(root: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(java.nio.file.Paths.get(root)).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => f.toString -> Files.readAllBytes(f).toSeq).toMap
+  }
+
+  /** Directories under `root` holding nothing. */
+  private def emptyDirsUnder(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(d => Files.isDirectory(d) && { val s = Files.list(d); try !s.findAny().isPresent finally s.close() })
+      .map(_.toString).toSeq
+  }
+
   test("refreshes keep site_status at one part, with the latest row per site") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -41,11 +41,10 @@ class SegmentCombineSpec extends AnyFunSuite {
       .map { p =>
         val counts = graft.core.Lemmatizer.lemmaCountsFromHtml(p.html)
         (IndexBuild.stableDocId(p.url), p.url, IndexBuild.siteOf(p.url),
-          counts.valuesIterator.sum.toLong,
           counts.map { case (k, v) => k -> v.toLong })
       }
-      .toDF("ord", "url", "site", "dl", "terms")
-    val post = analyzed.select(col("ord"), col("site"), col("dl"),
+      .toDF("ord", "url", "site", "terms")
+    val post = analyzed.select(col("ord"), col("site"),
       explode(col("terms")).as(Seq("term", "tf")))
 
     // head set exactly as the build derives it (global df over sites)
@@ -59,7 +58,7 @@ class SegmentCombineSpec extends AnyFunSuite {
           (pmod(xxhash64(col("site")), lit(cfg.siteGroups)) * cfg.docSubshards +
             pmod(xxhash64(col("ord")), lit(cfg.docSubshards))).cast("int"))
           .otherwise(lit(-1)))
-      .select("term", "shard", "ord", "tf", "dl")
+      .select("term", "shard", "ord", "tf")
 
     val combined = IndexBuild.buildSegments(post, heads, cfg, numPartitions = 8)
       .collect()
@@ -93,13 +92,11 @@ class SegmentCombineSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     for (n <- Seq(0, 1, 2, 15, 16, 17, 1000)) {
       val doc = Array.fill(n)(rnd.nextLong())
-      val tf = doc.map(_ & 0xff)
-      val dl = doc.map(d => (d >>> 8) & 0xff)
-      val expect = doc.zip(tf.zip(dl)).sortBy(_._1)
-      IndexBuild.sortPostings(doc, tf, dl, 0, n - 1)
+      val tf = doc.map(_ & 0xffff)
+      val expect = doc.zip(tf).sortBy(_._1)
+      IndexBuild.sortPostings(doc, tf, 0, n - 1)
       assert(doc.toSeq == expect.map(_._1).toSeq)
-      assert(tf.toSeq == expect.map(_._2._1).toSeq)
-      assert(dl.toSeq == expect.map(_._2._2).toSeq)
+      assert(tf.toSeq == expect.map(_._2).toSeq)
     }
   }
 }

@@ -208,7 +208,7 @@ class TableStoreSpec extends AnyFunSuite {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val (store, root) = freshStore()
-    val zero = graft.store.Stats(0L, 0L, 0.0, 0L, 1, 1, 1, 1, 0L)
+    val zero = graft.store.Stats(0L, 0L, 0.0, 0L, 1, 1, 1, 1, 0L, graft.core.PostingCodec.Format)
     store.commit(_.update(_.copy(stats = Some(zero))))
     val runs = new java.util.concurrent.atomic.AtomicInteger
     val writers = (0 until 4).map(w => Future {

@@ -4,10 +4,10 @@
 Decodes every PostingCodec blob of the `index` and `segments` tables
 (graft.core.PostingCodec wire format: unsigned LEB128 varints,
 segment := entryCount block*, block := count lastDocDelta maxTf
-payloadLen (docDelta tf dl)*) and prints, per table:
+payloadLen (docDelta tf)*) and prints, per table:
 
   - postings, blob bytes and bytes/posting;
-  - how those bytes split into doc gaps, tf, dl and block headers
+  - how those bytes split into doc gaps, tf and block headers
     (the segment's entryCount varint is counted as header);
   - the table's parquet bytes on disk.
 
@@ -44,7 +44,7 @@ def split_blob(buf, acc):
         _, pos = varint(buf, pos)  # payload length
         acc["header"] += pos - start
         for _ in range(cnt):
-            for field in ("gap", "tf", "dl"):
+            for field in ("gap", "tf"):
                 start = pos
                 _, pos = varint(buf, pos)
                 acc[field] += pos - start
@@ -67,7 +67,7 @@ def report(index_dir, table):
     if not files:
         print(f"{table}: absent")
         return
-    acc = dict(postings=0, bytes=0, gap=0, tf=0, dl=0, header=0)
+    acc = dict(postings=0, bytes=0, gap=0, tf=0, header=0)
     disk = 0
     for f in files:
         disk += os.path.getsize(f)
@@ -76,7 +76,7 @@ def report(index_dir, table):
     n = max(acc["postings"], 1)
     print(f"{table}: {acc['postings']} postings, {acc['bytes']} blob bytes, "
           f"{acc['bytes'] / n:.2f} B/posting, {disk} parquet bytes on disk")
-    for field in ("gap", "tf", "dl", "header"):
+    for field in ("gap", "tf", "header"):
         print(f"  {field:<6} {acc[field] / n:6.2f} B/posting"
               f"  ({100.0 * acc[field] / max(acc['bytes'], 1):5.1f}%)")
 
