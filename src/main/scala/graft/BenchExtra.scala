@@ -108,7 +108,6 @@ object BenchExtra {
           val nDocs = pages.count()
           val t0 = System.nanoTime()
           graft.index.IndexBuild.run(spark, pages, idxDir, cfg)
-          graft.index.IndexBuild.mergeSegments(spark, idxDir)
           val buildS = (System.nanoTime() - t0) / 1e9
           // file census per table (small-files health at the bigger tier)
           def census(table: String): (Int, Long) = {

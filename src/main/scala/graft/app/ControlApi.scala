@@ -75,7 +75,6 @@ final class ControlApi(
         val pages = TableStore.open(spark, pagesPath).read("")
           .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
         IndexBuild.run(spark, pages, indexDir, cfg, clearStopMarker = false)
-        IndexBuild.mergeSegments(spark, indexDir)
       } catch {
         case scala.util.control.NonFatal(e) => lastFailure = Some(e)
       } finally running.set(false)

@@ -11,7 +11,6 @@ import graft.queryengine.{SearchEngine, Statistics}
   *
   *   gen    <nSites> <pagesPerSite> <pagesDir>       — synthetic corpus
   *   build  <pagesDir> <indexDir> [nBatches]          — full index build (resumable)
-  *   merge  <indexDir>                                — segment sort-merge
   *   search <indexDir> <pagesDir> <tfsum|bm25> <query> [offset] [limit] [siteUrl]
   *   stats  <indexDir>                                — manifest summary + per-site statistics
   *   indexpage <pagesDir> <indexDir> <url>            — /api/indexPage with error shapes
@@ -58,15 +57,10 @@ object GraftCli {
           .read("").as[PageRow](Encoders.product[PageRow])
         val t0 = System.nanoTime()
         val built = IndexBuild.run(spark, pages, indexDir, cfg)
-        IndexBuild.mergeSegments(spark, indexDir)
         val sec = (System.nanoTime() - t0) / 1e9
         val n = graft.store.TableStore.open(spark, indexDir)
           .read("stats").collect()(0).getAs[Long]("n_docs")
         println(f"built $built batches, $n docs in $sec%.1f s (${n / sec}%.0f docs/s)")
-
-      case "merge" :: indexDir :: Nil =>
-        IndexBuild.mergeSegments(spark, indexDir)
-        println("merged")
 
       case "refresh" :: pagesDir :: indexDir :: url :: Nil =>
         // re-index one page from the (updated) pages table — §3.3 indexPage
@@ -172,7 +166,6 @@ object GraftCli {
              |usage:
              |  gen <nSites> <pagesPerSite> <pagesDir>
              |  build <pagesDir> <indexDir> [nBatches]
-             |  merge <indexDir>
              |  refresh <pagesDir> <indexDir> <url>
              |  delete <indexDir> <url>
              |  search <indexDir> <pagesDir> <tfsum|bm25> <query> [offset limit [siteUrl]]

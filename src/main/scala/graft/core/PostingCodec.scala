@@ -111,7 +111,7 @@ object PostingCodec extends Serializable {
     out.toByteArray
   }
 
-  /** Full decode (tests, merge, brute-force paths). */
+  /** Full decode (tests, patch, brute-force paths). */
   def decode(bytes: Array[Byte]): Array[Posting] = {
     val r = new Reader(bytes, 0)
     val n = r.readVarLong().toInt
@@ -137,31 +137,44 @@ object PostingCodec extends Serializable {
     out
   }
 
-  /** Sort-merge already-sorted segments of the SAME term into one segment.
-    * Duplicate docIds must not occur across segments of one term — each
-    * doc is indexed by exactly one batch; enforced. Used by SegmentMerge
-    * (SURVEY.md §2.9). */
-  def merge(segments: Seq[Array[Byte]]): Array[Byte] = {
-    val all = segments.map(decode)
-    val n = all.map(_.length).sum
-    val out = new Array[Posting](n)
-    val pq = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](
-      Ordering.by[(Long, Int), Long](_._1).reverse)
-    val idx = Array.fill(all.size)(0)
-    for (s <- all.indices if all(s).nonEmpty) pq.enqueue((all(s)(0).docId, s))
-    var w = 0
-    while (pq.nonEmpty) {
-      val (_, s) = pq.dequeue()
-      val p = all(s)(idx(s))
-      require(w == 0 || out(w - 1).docId < p.docId,
-        s"duplicate/unsorted docId ${p.docId} across segments of one term")
-      out(w) = p
-      w += 1
-      idx(s) += 1
-      if (idx(s) < all(s).length) pq.enqueue((all(s)(idx(s)).docId, s))
+  /** (entry count, max tf) of an encoded list, from its block headers. */
+  def summary(bytes: Array[Byte]): (Int, Long) = {
+    val r = new Reader(bytes, 0)
+    val n = r.readVarLong().toInt
+    var seen = 0
+    var maxTf = 0L
+    while (seen < n) {
+      seen += r.readVarLong().toInt
+      r.readVarLong() // blockLastDocDelta
+      maxTf = math.max(maxTf, r.readVarLong())
+      r.skip(r.readVarLong())
     }
+    (n, maxTf)
+  }
+
+  /** The posting list of one term that `segments` (disjoint sorted runs)
+    * hold, minus the `dead` doc ids, plus `added`, encoded: how a refresh
+    * or delete rewrites a list, one row in and one row out. Every dead id
+    * must be in the list and no added id may be in what is kept; either
+    * mismatch fails, as it means the forward index and the lists disagree. */
+  def patch(segments: Seq[Array[Byte]], dead: Seq[Long], added: Seq[Posting]): Array[Byte] = {
+    val gone = dead.toArray
+    java.util.Arrays.sort(gone)
+    val old = segments.flatMap(decode)
+    val kept = old.filter(p => java.util.Arrays.binarySearch(gone, p.docId) < 0)
+    require(old.size - kept.size == gone.length,
+      s"${gone.length - (old.size - kept.size)} dead doc ids are missing from the list")
+    val out = (kept ++ added).toArray
+    // TimSort: the kept postings are sorted runs, a duplicate id fails in encode
+    java.util.Arrays.sort(out, (a: Posting, b: Posting) => java.lang.Long.compare(a.docId, b.docId))
     encode(out)
   }
+
+  /** Sort-merge already-sorted segments of the SAME term into one segment:
+    * the build's fold of its batches. Duplicate docIds must not occur
+    * across segments of one term — each doc is indexed by exactly one
+    * batch; enforced. */
+  def merge(segments: Seq[Array[Byte]]): Array[Byte] = patch(segments, Nil, Nil)
 
   // ── BENCHMARK COMPAT: the benchmark's kernel probes (perfbench
   // Kernels) still call the pre-norms shapes below. No engine code calls

@@ -175,9 +175,9 @@ object IndexBuild {
     * this cut the build's shuffle from one 64-byte-plus row per posting
     * (~80M rows) to ~2M packed partials and roughly quadrupled 4-core
     * build throughput — the posting-row external sort was the build's
-    * memory-bandwidth ceiling. The output is byte-identical to the
-    * original row-shuffle + partition-local-sort plan, which
-    * SegmentCombineSpec runs through [[encodeSortedRows]] as its oracle. */
+    * memory-bandwidth ceiling. The output is byte-identical to grouping
+    * the postings per (term, shard), sorting each group by ordinal and
+    * encoding it, which SegmentCombineSpec checks. */
   def buildSegments(
       post: DataFrame,
       headTerms: DataFrame, // single column `term`
@@ -409,75 +409,30 @@ object IndexBuild {
     if (hi0 > lo0) sort(lo0, hi0)
   }
 
-  /** Streaming run-length encoder over a DataFrame with columns exactly
-    * (term STRING, shard INT, ord LONG, tf LONG), ALREADY
-    * repartitioned by (term, shard) and sorted by (term, shard, ord)
-    * within partitions: one SegmentRow per (term, shard) run: the bucket
-    * rewrite of a refresh or delete (Refresh.reencode).
-    *
-    * Runs over the physical plan's InternalRows with primitive-array
-    * accumulators: the deserializer alternative (`.as[Tuple4]` +
-    * per-posting objects) allocates 4 boxes + a tuple + a Posting per
-    * posting row — measured GC pressure that caps the build's thread
-    * scaling. The term string materializes once per (term, shard) RUN,
-    * not once per row. */
-  def encodeSortedRows(sorted: DataFrame, buckets: Int): Dataset[SegmentRow] = {
-    val spark = sorted.sparkSession
-    import spark.implicits._
-    val rdd = sorted.queryExecution.toRdd.mapPartitions { it =>
-      val partId = TaskContext.getPartitionId()
-      new Iterator[SegmentRow] {
-        private var docIds = new Array[Long](1024)
-        private var tfs = new Array[Long](1024)
-        private var n = 0
-        private var maxTf = 0L
-        private var curTerm: org.apache.spark.unsafe.types.UTF8String = null
-        private var curShard: Int = 0
+  /** Dense doc ordinals in doc_id order without a global sort, in two
+    * steps around an aggregation the caller runs: the build numbers its
+    * docs 0..n-1 this way, a refresh its new urls upward from `next_ord`.
+    * This step splits the id space into ranges by the id's top bits (ids
+    * are uniform hashes, so ranges balance; ~8 ranges per partition keep
+    * their hash placement even) and ranks each range locally: columns
+    * `rb` and `rank`. [[numbered]] then places the ranges end to end. */
+  def rangeRanked(docs: DataFrame, numPartitions: Int): DataFrame = {
+    val bits = 35 - Integer.numberOfLeadingZeros(math.max(1, numPartitions) - 1)
+    docs.withColumn("rb", shiftrightunsigned(col("doc_id"), 63 - bits).cast("int"))
+      .repartition(numPartitions, col("rb"))
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("rb").orderBy("doc_id")))
+  }
 
-        private def add(d: Long, t: Long): Unit = {
-          if (n == docIds.length) {
-            docIds = java.util.Arrays.copyOf(docIds, n * 2)
-            tfs = java.util.Arrays.copyOf(tfs, n * 2)
-          }
-          docIds(n) = d; tfs(n) = t
-          if (t > maxTf) maxTf = t
-          n += 1
-        }
-
-        private def emit(): SegmentRow = {
-          val term = curTerm.toString
-          val r = SegmentRow(
-            bucket = termBucket(term, buckets),
-            term = term, shard = curShard, part_id = partId,
-            doc_count = n,
-            block_max = maxTf.toDouble,
-            postings = PostingCodec.encodeRaw(docIds, tfs, n))
-          n = 0; maxTf = 0L
-          r
-        }
-
-        override def hasNext: Boolean = it.hasNext || n > 0
-
-        override def next(): SegmentRow = {
-          while (it.hasNext) {
-            val row = it.next()
-            val term = row.getUTF8String(0)
-            val shard = row.getInt(1)
-            if (curTerm == null) { curTerm = term.clone(); curShard = shard }
-            if (shard != curShard || term != curTerm) {
-              val r = emit()
-              curTerm = term.clone(); curShard = shard
-              add(row.getLong(2), row.getLong(3))
-              return r
-            }
-            add(row.getLong(2), row.getLong(3))
-          }
-          if (n > 0) emit()
-          else throw new NoSuchElementException("empty partition")
-        }
-      }
-    }
-    spark.createDataset(rdd)
+  /** `ranked` ([[rangeRanked]]) with `ord` = `from` + the rows of the
+    * ranges below a row's range + its rank − 1, given each range's row
+    * count. */
+  def numbered(ranked: DataFrame, counts: Seq[(Int, Long)], from: Long): DataFrame = {
+    val n = new Array[Long](counts.map(_._1 + 1).maxOption.getOrElse(0))
+    counts.foreach { case (rb, c) => n(rb) = c }
+    ranked.withColumn("ord",
+        element_at(typedLit(n.scanLeft(from)(_ + _).init), col("rb") + 1) + col("rank") - 1)
+      .drop("rb", "rank")
   }
 
   /** Shuffle keys for the posting encode: (storage bucket,
@@ -561,8 +516,10 @@ object IndexBuild {
     * first batch a run commits, the dims {docs, doc_terms, lemma_stats,
     * head_terms, mid_terms} and the stats. Restart-safe: a batch whose
     * lineage row says COMPLETE is skipped, and a crashed batch left
-    * nothing visible (SURVEY.md §7 H5). Returns the number of batches
-    * actually built. */
+    * nothing visible (SURVEY.md §7 H5). Before it returns — after every
+    * batch, a stop or a resume with nothing left to build — the run folds
+    * the committed batches into `index` ([[mergeSegments]]), so the
+    * index is servable. Returns the number of batches actually built. */
   def run(spark: SparkSession, pages: Dataset[PageRow], outDir: String,
       cfg: Config = Config(), stopAfter: Int = Int.MaxValue,
       clearStopMarker: Boolean = true): Int = {
@@ -635,7 +592,8 @@ object IndexBuild {
     store.manifest.filter(_.stats.isDefined).foreach(statsOf(_, outDir))
     val done = completedBatches(spark, outDir)
     val todo = (0 until cfg.nBatches).filterNot(done)
-    if (todo.isEmpty) return 0
+    // every batch committed: fold what a crash left unfolded
+    if (todo.isEmpty) { mergeSegments(spark, outDir); return 0 }
 
     // ONE extract+lemmatize pass over the corpus, persisted (memory+disk
     // spill) — docs, lemma_stats and every posting batch derive from it.
@@ -648,23 +606,14 @@ object IndexBuild {
     // byte-scan kernel is equivalence-tested against the two-stage
     // clean-then-lemmatize spec path (LemmatizerEquivalenceSpec).
     //
-    // Dense doc ordinals ride the same pass: `ord` = rank of doc_id among
-    // the analyzed docs, 0..n-1 — a pure function of the page set, so a
-    // clean rebuild and a killed-and-resumed build number every doc
-    // alike. Ranked without a global sort: the id space splits into
-    // 2^rangeBits RANGES by the id's top bits (ids are uniform hashes,
-    // so ranges balance), a window ranks each range locally, and the
-    // per-range counts from the materializing aggregation below give
-    // each range its offset. ~8 ranges per partition keep the hash
-    // placement of ranges even; the explicit width keeps AQE from
-    // coalescing the persisted pass — which every later stage inherits
-    // — into one task.
-    val rangeBits = 35 - Integer.numberOfLeadingZeros(math.max(1, numPartitions) - 1)
-    val ranked = analyze(pages)
-      .withColumn("rb", shiftrightunsigned(col("doc_id"), 63 - rangeBits).cast("int"))
-      .repartition(numPartitions, col("rb"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("rb").orderBy("doc_id")))
+    // Dense doc ordinals ride the same pass (see [[rangeRanked]]): `ord`
+    // = rank of doc_id among the analyzed docs, 0..n-1 — a pure function
+    // of the page set, so a clean rebuild and a killed-and-resumed build
+    // number every doc alike. The per-range counts come from the
+    // materializing aggregation below; the explicit width keeps AQE from
+    // coalescing the persisted pass — which every later stage inherits —
+    // into one task.
+    val ranked = rangeRanked(analyze(pages), numPartitions)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Materialize the cache FIRST (cache-then-write: fusing the heavy
     // extract+lemmatize map into the parquet-writer stage serializes
@@ -680,13 +629,7 @@ object IndexBuild {
     val nDocs = perRange.map(_._2).sum
     val nDistinct = perRange.map(_._3).sum
     val totalTokens = perRange.map(_._4).sum
-    val rangeCount = new Array[Long](1 << rangeBits)
-    perRange.foreach { case (rb, n, _, _) => rangeCount(rb) = n }
-    val rangeOffset = rangeCount.scanLeft(0L)(_ + _).init
-    val analyzed = ranked
-      .withColumn("ord",
-        element_at(typedLit(rangeOffset), col("rb") + 1) + col("rank") - 1)
-      .drop("rb", "rank")
+    val analyzed = numbered(ranked, perRange.map(r => (r._1, r._2)), 0L)
 
     // The dimension writes are INDEPENDENT jobs over the same persisted
     // analyze pass; submit them from separate threads so their small
@@ -826,8 +769,8 @@ object IndexBuild {
 
     var built = 0
     // Single-batch build: segments ARE the final index — write them
-    // straight to `index` and let mergeSegments no-op (a 1-way "merge"
-    // would byte-copy every segment through an extra shuffle).
+    // straight to `index`, leaving the fold nothing to do (a 1-way
+    // "merge" would byte-copy every segment through an extra shuffle).
     // Graceful stop (reference RunIndexMonitor.setStopIndexing, checked
     // between pages by the crawl threads — here between BATCHES): the
     // `_STOP` marker (cleared at run() entry) halts the loop after the
@@ -897,6 +840,8 @@ object IndexBuild {
     lemmaStats.unpersist()
     termDf.unpersist()
     ranked.unpersist()
+    // a stopped run leaves a servable index too: its batches so far
+    mergeSegments(spark, outDir)
     built
   }
 
@@ -909,12 +854,13 @@ object IndexBuild {
       }.toSet
     }
 
-  /** Segment merge: k-way sort-merge of the build's per-batch segments —
-    * and of the index a previous merge left, on a resumed build — of the
-    * same (term, shard) into one segment each (SURVEY.md §2.9): grouped
-    * shuffle, streaming merge per group, written term-bucket-partitioned
-    * as the final `index`. The same commit drops the merged batches, so
-    * no posting batch at or below the index's as_of stays on disk. */
+  /** The build's fold ([[run]] ends with it): the per-batch segments —
+    * and the index an earlier fold left, on a resumed build — of the
+    * same (term, shard) merged into one segment each (SURVEY.md §2.9):
+    * grouped shuffle, one merge per group, written term-bucket-partitioned
+    * as the final `index`. The same commit drops the `segments` table, so
+    * no posting batch at or below the index's as_of stays on disk. With
+    * nothing to fold it publishes nothing. */
   def mergeSegments(spark: SparkSession, outDir: String): Unit = {
     import spark.implicits._
     TableStore.open(spark, outDir).commit { c =>

@@ -19,11 +19,12 @@ import graft.store.{Lineage, Stats, TableStore}
   *  - a refreshed url keeps its ordinal, a new url takes the next one
   *    from the manifest's `next_ord`, and a deleted url's ordinal is
   *    never reused;
-  *  - the touched term buckets of `index` — the buckets of the old
-  *    versions' terms and of the new ones' — are decoded, the old
-  *    versions' ordinals anti-joined away, the new postings added
-  *    (salted as the build salts them) and the result re-encoded over
-  *    exactly those partitions; untouched partitions keep their files;
+  *  - in the touched term buckets of `index` — the buckets of the old
+  *    versions' terms and of the new ones' — each (term, shard) list a
+  *    change names is patched as one row: the old versions' ordinals out,
+  *    the new postings in (both salted as the build salts them). The
+  *    work is per list, not per posting; the buckets' other lists pass
+  *    through unchanged, and untouched partitions keep their files;
   *  - every other table the commit maintains is O(touched), not
   *    O(corpus), as well: docs/doc_terms are bucket-partitioned by doc id
   *    (`db`) and only the partitions holding the affected ids are
@@ -49,7 +50,7 @@ import graft.store.{Lineage, Stats, TableStore}
 object Refresh {
 
   /** The batch id of the last commit that changed `index` (a build's
-    * merge, a refresh or a delete); -1 before any. */
+    * fold, a refresh or a delete); -1 before any. */
   def indexAsOf(spark: SparkSession, outDir: String): Int =
     TableStore.open(spark, outDir).manifest.fold(-1)(_.asOf)
 
@@ -130,73 +131,97 @@ object Refresh {
         .as[(Long, Long)].collect()(0)
       // A known url keeps its ordinal; the new ones (a refresh's ids are
       // exactly its added docs) take `next_ord` upward in hash order,
-      // numbered on the thin id column.
+      // numbered on the thin id column as the build numbers its docs
       val nNew = if (added.isEmpty) 0L else nAdded - nOld
       val addedWithOrd = added.map { a =>
-        val fresh = a.select("doc_id").join(oldDocs, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"),
-            (lit(stats.next_ord - 1) + row_number().over(Window.orderBy("doc_id"))).as("ord"))
-        a.join(oldDocs.select("doc_id", "ord").unionByName(fresh), Seq("doc_id"))
+        val known = oldDocs.select("doc_id", "ord")
+        val ords = if (nNew == 0) known else {
+          val fresh = IndexBuild.rangeRanked(
+            a.select("doc_id").join(oldDocs, Seq("doc_id"), "left_anti"),
+            spark.sparkContext.defaultParallelism)
+          known.unionByName(IndexBuild.numbered(fresh,
+            fresh.groupBy("rb").count().as[(Int, Long)].collect(), stats.next_ord))
+        }
+        a.join(ords, Seq("doc_id"))
       }
 
-      // touched terms = OLD versions' terms (forward doc_terms lookup,
-      // partition-pruned to the touched doc buckets) ∪ NEW versions'
-      // terms. Their buckets are the index partitions this commit
-      // rewrites and the lemma_stats partitions the ±df delta rewrites.
-      val oldTerms = touchedDbs("doc_terms").join(ids, Seq("doc_id"))
-        .select(explode(col("terms")).as("term"))
-      val (nTouched, touchedBuckets) = added
-        .fold(oldTerms)(a => oldTerms.union(
-          a.select(explode(map_keys(col("terms"))).as("term"))))
-        .distinct()
-        .agg(count(lit(1)), collect_set(IndexBuild.termBucketCol(cfg.buckets)))
-        .as[(Long, Seq[Int])].collect()(0)
-      val touchedKeys = touchedBuckets.map(b => s"bucket=$b")
+      // The old versions' postings, (ord, site, term) — ONE doc_terms read,
+      // partition-pruned to the touched doc buckets and cached: with the
+      // new versions' terms it names the touched term buckets (the index
+      // and lemma_stats partitions this commit rewrites), and it gives the
+      // ordinals that leave each list and the −df delta.
+      val oldPost = touchedDbs("doc_terms").join(oldDocs, Seq("doc_id"))
+        .select(col("ord"), col("site"), explode(col("terms")).as("term"))
+        .cache()
+      val (nTouched, touchedBuckets) = try {
+        val touched @ (_, buckets) = added
+          .fold(oldPost.select("term"))(a => oldPost.select("term").union(
+            a.select(explode(map_keys(col("terms"))).as("term"))))
+          .distinct()
+          .agg(count(lit(1)), collect_set(IndexBuild.termBucketCol(cfg.buckets)))
+          .as[(Long, Seq[Int])].collect()(0)
+        val keys = buckets.map(b => s"bucket=$b")
 
-      // index: the touched buckets' postings minus the old versions'
-      // ordinals, plus the new versions' postings, re-encoded; a bucket
-      // whose postings all died produces no rows and is dropped
-      if (touchedBuckets.nonEmpty) {
-        val kept = c.read("index").filter(col("bucket").isin(touchedBuckets: _*))
-          .select("term", "shard", "postings")
-          .as[(String, Int, Array[Byte])]
-          .flatMap { case (term, shard, bytes) =>
-            PostingCodec.decode(bytes).iterator.map(p => (term, shard, p.docId, p.tf))
-          }
-          .toDF("term", "shard", "ord", "tf")
-          .join(oldDocs.select("ord"), Seq("ord"), "left_anti")
-        val rows = addedWithOrd.fold(kept)(a => kept.unionByName(IndexBuild.saltedPostings(
-          a.select(col("ord"), col("site"), explode(col("terms")).as(Seq("term", "tf"))),
-          c.read("head_terms"), cfg)))
-        c.overwrite(reencode(rows.select("term", "shard", "ord", "tf"), cfg.buckets).toDF,
-          "index", Seq("bucket"), touchedKeys)
-      }
+        // index: each (term, shard) list a change names is patched as one
+        // row — its dead ordinals (salted as the build salted them) out, the
+        // new versions' postings in; the touched buckets' other lists pass
+        // through as they are, and a list left empty is dropped (and so is
+        // a bucket whose lists all died)
+        if (buckets.nonEmpty) {
+          val heads = c.read("head_terms")
+          val dead = IndexBuild.saltedPostings(oldPost.withColumn("tf", lit(0L)), heads, cfg)
+            .select(col("term"), col("shard"), col("ord").as("dead"),
+              lit(null).cast("struct<docId:bigint,tf:bigint>").as("posting"))
+          val changes = addedWithOrd.fold(dead)(a => dead.unionByName(IndexBuild.saltedPostings(
+              a.select(col("ord"), col("site"), explode(col("terms")).as(Seq("term", "tf"))), heads, cfg)
+            .select(col("term"), col("shard"), lit(null).cast("long").as("dead"),
+              struct(col("ord").as("docId"), col("tf").cast("long").as("tf")).as("posting"))))
+            .groupBy("term", "shard")
+            .agg(collect_list("dead").as("dead"), collect_list("posting").as("added"))
+          val lists = c.read("index").filter(col("bucket").isin(buckets: _*))
+          val nBuckets = cfg.buckets
+          c.overwrite(
+            lists.select(struct(lists.columns.map(col): _*).as("seg"), col("term"), col("shard"))
+              .join(changes, Seq("term", "shard"), "full_outer")
+              .select("seg", "term", "shard", "dead", "added")
+              .as[(SegmentRow, String, Int, Seq[Long], Seq[PostingCodec.Posting])]
+              .flatMap { case (seg, term, shard, dead, add) =>
+                if (dead == null) Some(seg)
+                else {
+                  val postings = PostingCodec.patch(Option(seg).map(_.postings).toSeq, dead, add)
+                  val (n, maxTf) = PostingCodec.summary(postings)
+                  Option.when(n > 0)(SegmentRow(IndexBuild.termBucket(term, nBuckets), term, shard,
+                    Option(seg).fold(0)(_.part_id), n, maxTf.toDouble, postings))
+                }
+              }
+              .toDF,
+            "index", Seq("bucket"), keys)
+        }
 
-      // ±df delta over only the touched terms: df(term, site) += new
-      // versions' counts − old versions' counts (exact — df counts
-      // distinct docs per (term, site), and each doc contributes one per
-      // distinct term, which is precisely what doc_terms stores). Rows
-      // whose df reaches 0 are dropped, and so is a touched bucket whose
-      // rows all died.
-      val minus = touchedDbs("doc_terms")
-        .join(oldDocs.select("doc_id", "site"), Seq("doc_id"))
-        .select(col("site"), explode(col("terms")).as("term"))
-        .groupBy("term", "site").agg((-count(lit(1))).as("d"))
-      val delta = added.fold(minus)(a => a
-        .select(col("site"), explode(map_keys(col("terms"))).as("term"))
-        .groupBy("term", "site").agg(count(lit(1)).as("d"))
-        .unionByName(minus))
-        .groupBy("term", "site").agg(sum(col("d")).as("d"))
-      if (touchedBuckets.nonEmpty) c.overwrite(
-        c.read("lemma_stats").filter(col("bucket").isin(touchedBuckets: _*))
-          .select("term", "site", "df")
-          .join(delta, Seq("term", "site"), "full_outer")
-          .select(col("term"), col("site"),
-            (coalesce(col("df"), lit(0L)) + coalesce(col("d"), lit(0L))).as("df"))
-          .filter(col("df") > 0)
-          .withColumn("bucket", IndexBuild.termBucketCol(cfg.buckets))
-          .repartition(col("bucket")),
-        "lemma_stats", Seq("bucket"), touchedKeys)
+        // ±df delta over only the touched terms: df(term, site) += new
+        // versions' counts − old versions' counts (exact — df counts
+        // distinct docs per (term, site), and each doc contributes one per
+        // distinct term, which is precisely what doc_terms stores). Rows
+        // whose df reaches 0 are dropped, and so is a touched bucket whose
+        // rows all died.
+        val minus = oldPost.groupBy("term", "site").agg((-count(lit(1))).as("d"))
+        val delta = added.fold(minus)(a => a
+          .select(col("site"), explode(map_keys(col("terms"))).as("term"))
+          .groupBy("term", "site").agg(count(lit(1)).as("d"))
+          .unionByName(minus))
+          .groupBy("term", "site").agg(sum(col("d")).as("d"))
+        if (buckets.nonEmpty) c.overwrite(
+          c.read("lemma_stats").filter(col("bucket").isin(buckets: _*))
+            .select("term", "site", "df")
+            .join(delta, Seq("term", "site"), "full_outer")
+            .select(col("term"), col("site"),
+              (coalesce(col("df"), lit(0L)) + coalesce(col("d"), lit(0L))).as("df"))
+            .filter(col("df") > 0)
+            .withColumn("bucket", IndexBuild.termBucketCol(cfg.buckets))
+            .repartition(col("bucket")),
+          "lemma_stats", Seq("bucket"), keys)
+        touched
+      } finally oldPost.unpersist()
 
       // docs / doc_terms: rewrite ONLY the touched doc buckets,
       // repartitioned by `db` as the build writes the dims, so each
@@ -261,21 +286,6 @@ object Refresh {
         lineage = m.lineage :+ Lineage(batch, label(batch), rewritten, termCount,
           postingCount, "COMPLETE", None, new java.sql.Timestamp(System.currentTimeMillis()))))
     }
-  }
-
-  /** Re-encode decoded posting rows (term, shard, ord, tf) into
-    * segment rows, with the build's shuffle keys and in-partition sort. */
-  private def reencode(rows: DataFrame, buckets: Int): Dataset[SegmentRow] = {
-    val spark = rows.sparkSession
-    val numPartitions = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      spark.sparkContext.defaultParallelism)
-    IndexBuild.encodeSortedRows(
-      rows
-        .repartition(numPartitions,
-          IndexBuild.segShuffleKeys(buckets, numPartitions): _*)
-        .sortWithinPartitions("term", "shard", "ord"),
-      buckets)
   }
 
   /** Prefetch-hint (mid_terms) refresh cadence, in ingest batches. */

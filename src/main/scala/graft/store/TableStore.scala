@@ -160,10 +160,12 @@ final class Commit private[store] (val store: TableStore, val base: Manifest) {
   def append(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit =
     write(df, table, partitionBy)((_, _) => false)
 
-  /** Drop the parts `drop` selects; the table itself stays, maybe empty. */
+  /** Drop the parts `drop` selects, and the table once none is left. */
   def remove(table: String)(drop: Part => Boolean): Unit = synchronized {
     next.tables.get(table).foreach { t =>
-      next = next.copy(tables = next.tables + (table -> t.copy(parts = t.parts.filterNot(drop))))
+      val kept = t.parts.filterNot(drop)
+      next = next.copy(tables =
+        if (kept.isEmpty) next.tables - table else next.tables + (table -> t.copy(parts = kept)))
       changed = true
     }
   }

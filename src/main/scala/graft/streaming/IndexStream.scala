@@ -70,10 +70,9 @@ object IndexStream {
     // manifest (or one without stats), so the checkpointed replay
     // bootstraps again; whatever the crashed attempt staged is garbage
     // the bootstrap commit collects.
-    if (!TableStore.open(spark, indexDir).manifest.exists(_.stats.isDefined)) {
+    if (!TableStore.open(spark, indexDir).manifest.exists(_.stats.isDefined))
       IndexBuild.run(spark, Refresh.latestPerUrl(batch), indexDir, cfg.copy(nBatches = 1))
-      IndexBuild.mergeSegments(spark, indexDir)
-    } else Refresh.refreshPages(spark, indexDir, batch, cfg)
+    else Refresh.refreshPages(spark, indexDir, batch, cfg)
   }
 
   /** Start the ingest stream. The checkpoint lives INSIDE the index dir

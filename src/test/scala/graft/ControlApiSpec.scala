@@ -39,7 +39,6 @@ class ControlApiSpec extends AnyFunSuite {
     val ds = spark.read.parquet(s"$work/pages")
       .as[graft.corpus.PageRow](org.apache.spark.sql.Encoders.product[graft.corpus.PageRow])
     IndexBuild.run(spark, ds, s"$work/idx", cfg)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
 
     val api = new ControlApi(spark, s"$work/pages", s"$work/idx",
       Seq("https://site0.test", "https://site1.test"), cfg)
@@ -86,7 +85,6 @@ class ControlApiSpec extends AnyFunSuite {
     val ds = spark.read.parquet(s"$work/pages")
       .as[graft.corpus.PageRow](org.apache.spark.sql.Encoders.product[graft.corpus.PageRow])
     IndexBuild.run(spark, ds, s"$work/idx", cfg)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
 
     // a marker lemma no existing doc carries
     val statsTerms = spark.read.parquet(s"$work/idx/lemma_stats")

@@ -147,6 +147,26 @@ class PostingCodecSpec extends AnyFunSuite with GenSamples {
       }
     }
   }
+  test("patch = encode(sorted((decode(old) − dead) ∪ added)); a missing dead id or a collision throws") {
+    val pairs = for (old <- postingsGen; fresh <- postingsGen) yield (old, fresh)
+    forAll(pairs) { case (old, fresh) =>
+      val dead = old.map(_.docId).filter(_ % 3 == 0).toSet
+      val kept = old.filterNot(p => dead(p.docId))
+      val keptIds = kept.map(_.docId).toSet
+      // a re-indexed doc takes its dead id back with a new tf
+      val added = fresh.filterNot(p => keptIds(p.docId) || dead(p.docId)) ++
+        dead.take(2).map(Posting(_, 7L))
+      val want = encode((kept ++ added).sortBy(_.docId))
+      assert(patch(Seq(encode(old)), dead.toSeq, added.toSeq).toSeq == want.toSeq)
+      // split across two segments, as the build's fold sees its batches
+      val (a, b) = old.partition(_.docId % 2 == 0)
+      assert(patch(Seq(encode(a), encode(b)), dead.toSeq, added.toSeq).toSeq == want.toSeq)
+      intercept[IllegalArgumentException](patch(Seq(encode(old)), Seq(1L << 50), Nil))
+      kept.headOption.foreach { p =>
+        intercept[IllegalArgumentException](patch(Seq(encode(old)), Nil, Seq(Posting(p.docId, 1L))))
+      }
+    }
+  }
   test("encode rejects unsorted input") {
     intercept[IllegalArgumentException] {
       encode(Array(Posting(5, 1), Posting(3, 1)))

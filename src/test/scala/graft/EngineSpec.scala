@@ -40,7 +40,6 @@ class EngineSpec extends AnyFunSuite {
     val ds = spark.read.parquet(pagesPath).as[PageRow](
       org.apache.spark.sql.Encoders.product[PageRow])
     IndexBuild.run(spark, ds, indexDir, idxCfg)
-    IndexBuild.mergeSegments(spark, indexDir)
   }
 
   lazy val oracle: RefOracle.Corpus = {
@@ -181,7 +180,6 @@ class EngineSpec extends AnyFunSuite {
     assert(IndexBuild.completedBatches(spark, dirB) == Set(0))
     val second = IndexBuild.run(spark, ds, dirB, idxCfg)
     assert(second == idxCfg.nBatches - 1)
-    IndexBuild.mergeSegments(spark, dirB)
 
     def indexMap(dir: String): Map[(String, Int), Seq[Byte]] =
       spark.read.parquet(s"$dir/index").collect().map { r =>
@@ -286,7 +284,6 @@ class EngineSpec extends AnyFunSuite {
     assert(totalRows.head.getAs[String]("status") == "INDEXING")
     // completing the build flips every site to INDEXED
     IndexBuild.run(spark, ds, s"$work/idx", cfg4)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
     Statistics.compute(spark, s"$work/idx").collect()
       .foreach(r => assert(r.getAs[String]("status") == "INDEXED"))
   }

@@ -63,7 +63,6 @@ class GoldenSpec extends AnyFunSuite {
       .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
     val cfg = IndexBuild.Config(shards = 4, saltThresholdDf = 120L, nBatches = 2, buckets = 16)
     IndexBuild.run(spark, ds, s"$work/idx", cfg)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
     (new SearchEngine(spark, s"$work/idx", s"$work/pages", ReferenceTfSum),
       new SearchEngine(spark, s"$work/idx", s"$work/pages", Bm25()))
   }

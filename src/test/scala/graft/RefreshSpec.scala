@@ -44,7 +44,6 @@ class RefreshSpec extends AnyFunSuite {
     val ds = spark.read.parquet(s"$work/pages")
       .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
     IndexBuild.run(spark, ds, s"$work/idx", idxCfg)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
 
     val l = RuDict.contentLemmas
     val marker = l(198) // rare lemma, used as the refreshed page's content
@@ -112,7 +111,6 @@ class RefreshSpec extends AnyFunSuite {
     val ds = spark.read.parquet(s"$work/pages")
       .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
     IndexBuild.run(spark, ds, s"$work/idx", idxCfg)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
 
     val engine = new SearchEngine(spark, s"$work/idx", s"$work/pages", ReferenceTfSum)
     val q = RuDict.contentLemmas(5)
@@ -147,7 +145,6 @@ class RefreshSpec extends AnyFunSuite {
     val ds = spark.read.parquet(s"$work/pages")
       .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
     IndexBuild.run(spark, ds, s"$work/idx", cfgP)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
 
     def indexFiles(): Map[String, Seq[Byte]] = {
       val root = new java.io.File(s"$work/idx/index")
@@ -222,7 +219,6 @@ class RefreshSpec extends AnyFunSuite {
     val ds = spark.read.parquet(s"$work/pages")
       .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
     IndexBuild.run(spark, ds, s"$work/idx", cfgP)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
 
     def tableFiles(table: String): Map[String, Seq[Byte]] = {
       val root = new java.io.File(s"$work/idx/$table")
@@ -297,7 +293,6 @@ class RefreshSpec extends AnyFunSuite {
       spark.read.parquet(s"$work/pages")
         .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]),
       idx, cfgP)
-    IndexBuild.mergeSegments(spark, idx)
 
     val targetUrl = spark.read.parquet(s"$idx/docs")
       .filter(col("dl") > 0).orderBy("url").select("url").as[String].head()
@@ -367,7 +362,6 @@ class RefreshSpec extends AnyFunSuite {
       spark.read.parquet(s"$work/pages")
         .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]),
       idx, buildCfg)
-    IndexBuild.mergeSegments(spark, idx)
 
     val targetUrl = spark.read.parquet(s"$idx/docs")
       .filter(col("dl") > 0).orderBy("url").select("url").as[String].head()
@@ -412,7 +406,6 @@ class RefreshSpec extends AnyFunSuite {
       spark.read.parquet(s"$work/pages")
         .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]),
       idx, cfgP)
-    IndexBuild.mergeSegments(spark, idx)
 
     // a term in NO existing doc — the refreshed page's new content
     val statsTerms = spark.read.parquet(s"$idx/lemma_stats")
@@ -465,7 +458,6 @@ class RefreshSpec extends AnyFunSuite {
       spark.read.parquet(s"$work/pages")
         .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]),
       s"$work/idx", cfg)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
     pages
   }
 
@@ -573,7 +565,6 @@ class RefreshSpec extends AnyFunSuite {
     val ds = spark.read.parquet(s"$work/pages")
       .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
     IndexBuild.run(spark, ds, s"$work/idx", idxCfg)
-    IndexBuild.mergeSegments(spark, s"$work/idx")
 
     // delete ~2/3 of the corpus in one batch
     val toDelete = pages.map(_.url).zipWithIndex.collect { case (u, i) if i % 3 != 0 => u }
@@ -596,6 +587,138 @@ class RefreshSpec extends AnyFunSuite {
       assert(got.data.map(i => i.site + i.uri) == exp.results.take(50).map(_.url),
         s"ranking mismatch for '$q' after bulk delete")
     }
+  }
+
+  /** (term, shard) → (doc_count, block_max, postings) of every list. */
+  private def listsOf(idx: String): Map[(String, Int), (Int, Double, Seq[Byte])] = {
+    import spark.implicits._
+    graft.store.TableStore.open(spark, idx).read("index")
+      .select("term", "shard", "doc_count", "block_max", "postings")
+      .as[(String, Int, Int, Double, Array[Byte])].collect()
+      .map { case (t, s, n, m, p) => (t, s) -> (n, m, p.toSeq) }.toMap
+  }
+
+  /** The distinct terms doc_terms holds for `url`. */
+  private def termsOf(idx: String, url: String): Set[String] = {
+    import org.apache.spark.sql.functions.{col, explode}
+    import spark.implicits._
+    graft.store.TableStore.open(spark, idx).read("doc_terms")
+      .filter(col("doc_id") === IndexBuild.stableDocId(url))
+      .select(explode(col("terms"))).as[String].collect().toSet
+  }
+
+  test("a refresh patches only the lists it names: the touched buckets' other lists keep their bytes") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-refresh-lists").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 40)
+    val l = RuDict.contentLemmas
+    val target = pages.map(_.url).sorted.find(termsOf(idx, _).nonEmpty).get
+    val newPage = page(target, html(l(190), s"${l(190)} ${l(191)} ${l(2)}"))
+    val named = termsOf(idx, target) ++
+      graft.core.Lemmatizer.lemmaCountsFromHtml(newPage.html).keySet
+    val touched = named.map(IndexBuild.termBucket(_, idxCfg.buckets))
+    val before = listsOf(idx)
+    Refresh.refreshPages(spark, idx, spark.createDataset(Seq(newPage)), idxCfg)
+    val after = listsOf(idx)
+
+    val others = before.filter { case ((t, _), _) =>
+      !named(t) && touched(IndexBuild.termBucket(t, idxCfg.buckets))
+    }
+    assert(others.size >= 20, s"fixture: the touched buckets must hold other lists (${others.size})")
+    others.foreach { case (k, v) => assert(after.get(k).contains(v), s"list $k changed") }
+    assert(before.exists { case (k, v) => named(k._1) && !after.get(k).contains(v) },
+      "the named lists must change")
+  }
+
+  /** Shuffle records written by the tasks of the jobs `body` runs, summed
+    * by a task-end listener over the stages of those jobs. */
+  private def shuffleRecords(body: => Unit): Long = {
+    import org.apache.spark.scheduler._
+    val (group, marker) = ("shuffle-records", "shuffle-records-marker")
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        js.properties.getProperty("spark.jobGroup.id") match {
+          case `group` => js.stageIds.foreach(stages.add)
+          case `marker` => drained.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          records.merge(te.stageId, m.shuffleWriteMetrics.recordsWritten, _ + _))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "under test")
+      body
+      // the listener bus is FIFO: once the marker job's start arrives,
+      // every task end of `body` has
+      spark.sparkContext.setJobGroup(marker, "bus drain")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(drained.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
+      stages.toArray.map(s => records.getOrDefault(s, 0L)).sum
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a one-page delete shuffles per list, far fewer records than its touched buckets hold postings") {
+    spark.sparkContext.setLogLevel("WARN")
+    import org.apache.spark.sql.functions.{col, sum}
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-delete-shuffle").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 100)
+    val target = pages.map(_.url).sorted.find(termsOf(idx, _).size >= 20).get
+    val touched = termsOf(idx, target).map(IndexBuild.termBucket(_, idxCfg.buckets)).toSeq
+    val postings = graft.store.TableStore.open(spark, idx).read("index")
+      .filter(col("bucket").isin(touched: _*)).agg(sum(col("doc_count"))).as[Long].head()
+    val records = shuffleRecords(Refresh.deletePages(spark, idx, Seq(target), idxCfg))
+    info(s"shuffle records $records, postings in the ${touched.size} touched buckets $postings")
+    assert(records > 0, "the listener must see the delete's shuffles")
+    assert(records * 4 < postings,
+      s"a one-page delete shuffled $records records against $postings postings")
+  }
+
+  test("a refresh numbers its new urls with no unpartitioned window") {
+    spark.sparkContext.setLogLevel("WARN")
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-refresh-window").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    val l = RuDict.contentLemmas
+    val windows = new java.util.concurrent.ConcurrentLinkedQueue[WindowExec]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = {
+        Plans.collect(qe.executedPlan) { case w: WindowExec => w }.foreach(windows.add)
+        if (qe.logical.toString.contains("7919")) drained.countDown()
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val added = Seq("https://site0.test/p/new-w1", "https://site1.test/p/new-w2")
+      Refresh.refreshPages(spark, idx, spark.createDataset(
+        (pages.head.url +: added).map(u => page(u, html(l(190), s"${l(190)} ${l(2)}")))), idxCfg)
+      spark.range(7919).collect()
+      assert(drained.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener not drained")
+    } finally spark.listenerManager.unregister(listener)
+    val all = windows.toArray(Array.empty[WindowExec]).toSeq
+    assert(all.exists(_.partitionSpec.nonEmpty), "fixture: the listener must see the commit's windows")
+    assert(!all.exists(_.partitionSpec.isEmpty),
+      s"an unpartitioned window ran: ${all.filter(_.partitionSpec.isEmpty).map(_.simpleString(200))}")
+    assert(nextOrdOf(idx) == pages.size + 2L)
   }
 
   /** url → doc ordinal, from the docs dim. */
@@ -838,7 +961,9 @@ class RefreshSpec extends AnyFunSuite {
     import spark.implicits._
     val work = Files.createTempDirectory("graft-segments-gc").toString
     val idx = s"$work/idx"
-    val pages = buildSmall(work, idxCfg, 40) // 2 batches, merged
+    val pages = buildSmall(work, idxCfg, 40) // 2 batches, folded by the build
+    assert(!graft.store.TableStore.open(spark, idx).manifest.get.has("segments"),
+      "the build's fold must drop the segments table, not only its parts")
     def batchesOnDisk(): Set[Int] = {
       val root = new java.io.File(s"$idx/segments")
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -863,7 +988,7 @@ class RefreshSpec extends AnyFunSuite {
     assert(batchesOnDisk().isEmpty, s"a refresh or delete wrote segments: ${batchesOnDisk()}")
     assert(!new java.io.File(s"$idx/tombstones").exists, "a refresh or delete wrote tombstones")
     val m = graft.store.TableStore.open(spark, idx).manifest.get
-    assert(m.parts("segments").isEmpty && !m.has("tombstones"))
+    assert(!m.has("segments") && !m.has("tombstones"))
     assert(IndexDir.unreferenced(spark, idx).isEmpty)
     val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
     assert(engine.search(u(0), 0, 10, None).data.map(i => i.site + i.uri) == Seq(urls(0)))
@@ -948,7 +1073,7 @@ class RefreshSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val work = Files.createTempDirectory("graft-empty-dirs").toString
-    buildSmall(work, idxCfg, 20) // 2 batches, merged: every segments partition dies
+    buildSmall(work, idxCfg, 20) // 2 batches, folded: every segments partition dies
     assert(emptyDirsUnder(s"$work/idx").isEmpty, s"after merge: ${emptyDirsUnder(s"$work/idx")}")
 
     // two one-lemma pages whose lemmas hash to different index buckets:
@@ -960,7 +1085,6 @@ class RefreshSpec extends AnyFunSuite {
     val two = Seq(page("https://site0.test/p/a", html(a, s"$a $a")),
       page("https://site1.test/p/b", html(b, s"$b $b")))
     IndexBuild.run(spark, spark.createDataset(two), idx, idxCfg)
-    IndexBuild.mergeSegments(spark, idx)
     val store = graft.store.TableStore.open(spark, idx)
     val bucketA = s"bucket=${IndexBuild.termBucket(a, 16)}"
     assert(store.manifest.get.parts("index").exists(_.key == bucketA), "fixture: a's bucket is live")

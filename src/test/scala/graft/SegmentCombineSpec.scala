@@ -7,15 +7,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.{CorpusGen, PageRow}
-import graft.index.IndexBuild
+import graft.core.PostingCodec
+import graft.index.{IndexBuild, SegmentRow}
 
 /** The build's map-side posting combine (SegPartial blobs shuffled
   * instead of posting rows) must be INVISIBLE in the output: every
   * segment it produces — term, shard, part_id, doc_count, block_max and
-  * the encoded posting BYTES — equals the row-shuffle path's segment
-  * exactly. The row path — row shuffle, partition-local sort, then
-  * encodeSortedRows, the same encoder Refresh.reencode runs — is built
-  * here as the byte-identity oracle. */
+  * the encoded posting BYTES — equals the plain definition exactly:
+  * every posting row, collected and grouped per (term, shard), sorted by
+  * ordinal and encoded, in the reduce partition the build's shuffle keys
+  * send the group to. */
 class SegmentCombineSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -62,18 +63,21 @@ class SegmentCombineSpec extends AnyFunSuite {
 
     val combined = IndexBuild.buildSegments(post, heads, cfg, numPartitions = 8)
       .collect()
-    val rowPath = IndexBuild.encodeSortedRows(
-      saltedOf(post)
-        .repartition(8, IndexBuild.segShuffleKeys(cfg.buckets, 8): _*)
-        .sortWithinPartitions("term", "shard", "ord"),
-      cfg.buckets).collect()
+    val rowPath = saltedOf(post)
+      .withColumn("part_id", pmod(hash(IndexBuild.segShuffleKeys(cfg.buckets, 8): _*), lit(8)))
+      .as[(String, Int, Long, Long, Int)].collect()
+      .groupBy(r => (r._1, r._2)).map { case ((term, shard), rows) =>
+        val ps = rows.map(r => PostingCodec.Posting(r._3, r._4)).sortBy(_.docId)
+        SegmentRow(IndexBuild.termBucket(term, cfg.buckets), term, shard, rows.head._5,
+          ps.length, ps.map(_.tf).max.toDouble, PostingCodec.encode(ps))
+      }.toArray
 
     assert(combined.nonEmpty)
     // both paths must produce head shards and tail runs
     assert(combined.exists(_.shard >= 0), "no salted head segment produced")
     assert(combined.exists(_.shard == -1), "no tail segment produced")
 
-    def keyed(rows: Array[graft.index.SegmentRow]) =
+    def keyed(rows: Array[SegmentRow]) =
       rows.map(r => ((r.term, r.shard),
         (r.bucket, r.part_id, r.doc_count, r.block_max,
           java.util.Base64.getEncoder.encodeToString(r.postings)))).toMap

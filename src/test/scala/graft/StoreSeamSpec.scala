@@ -26,7 +26,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * A second walk over the same tree keeps environment reads (`sys.env`,
   * `System.getenv`) in the process entry points: engine options are
   * `spark.graft.*` conf keys only, and a third holds those keys to the
-  * ones README's options table documents.
+  * ones README's options table documents. A fourth keeps the build one
+  * step: `IndexBuild.run` folds its batches, so no other main file calls
+  * `mergeSegments` after it.
   */
 class StoreSeamSpec extends AnyFunSuite {
 
@@ -92,6 +94,14 @@ class StoreSeamSpec extends AnyFunSuite {
     val documented = Files.readAllLines(Paths.get("README.md")).asScala
       .flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
     assert(documented == expected, s"spark.graft.* keys in README's options table: $documented")
+  }
+
+  test("a build folds its own batches: no main caller runs mergeSegments as a second step") {
+    // IndexBuild.run ends with the fold; the frozen bench mains still
+    // call it after run, where it finds nothing left to fold
+    val hits = offenders(Set("index/IndexBuild.scala", "Bench.scala", "BenchBuild.scala"),
+      "mergeSegments(")
+    assert(hits.isEmpty, "mergeSegments called after IndexBuild.run:\n" + hits.mkString("\n"))
   }
 
   test("only process entry points read environment variables") {

@@ -53,7 +53,6 @@ class CorpusBucketSpec extends AnyFunSuite {
       store.read("").as[graft.corpus.PageRow](
         org.apache.spark.sql.Encoders.product[graft.corpus.PageRow]),
       s"$work/idx", IndexBuild.Config(nBatches = 1))
-    IndexBuild.mergeSegments(spark, s"$work/idx")
     val engine = new SearchEngine(spark, s"$work/idx", s"$work/pages")
 
     val urls = store.read("").select("url").limit(3)
@@ -99,7 +98,6 @@ class CorpusBucketSpec extends AnyFunSuite {
       store.read("").as[graft.corpus.PageRow](
         org.apache.spark.sql.Encoders.product[graft.corpus.PageRow]),
       s"$work/idx", IndexBuild.Config(nBatches = 1))
-    IndexBuild.mergeSegments(spark, s"$work/idx")
     val engine = new SearchEngine(spark, s"$work/idx", s"$work/pages")
     val urls = store.read("").select("url").limit(2)
       .collect().map(_.getString(0)).toSeq
