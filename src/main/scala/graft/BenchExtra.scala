@@ -123,7 +123,7 @@ object BenchExtra {
               } finally s.close()
             }
           }
-          val tables = Seq("index", "docs", "doc_terms", "lemma_stats")
+          val tables = Seq("index", "docs", "lemma_stats")
           val censusJson = tables.map { t =>
             val (n, b) = census(t)
             s""""$t":{"files":$n,"bytes":$b}"""

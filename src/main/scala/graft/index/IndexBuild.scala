@@ -49,8 +49,8 @@ final case class SegPartial(term: String, shard: Int, blob: Array[Byte])
   *    skipped on restart.
   *
   * Doc identity has two forms. The url hash (`doc_id`, [[stableDocId]])
-  * is the KEY of the `docs` / `doc_terms` dims and their `db` storage
-  * partition — how a refresh or delete finds a url's rows. Posting space
+  * is the KEY of the `docs` dim and its `db` storage partition — how a
+  * refresh or delete finds a url's row. Posting space
   * (segments, the engine's hits) carries the dense doc
   * ORDINAL `docs.ord` instead: a build numbers its docs 0..n-1 in
   * doc_id order (see `runInner`) and records the high-water
@@ -130,8 +130,8 @@ object IndexBuild {
   }
 
   /** Deterministic 63-bit doc id from url: Catalyst's xxhash64(url)
-    * (default seed 42) with the sign bit cleared. It keys the `docs` /
-    * `doc_terms` dims and their `db` partition, and orders the build's
+    * (default seed 42) with the sign bit cleared. It keys the `docs`
+    * dim and its `db` partition, and orders the build's
     * ordinals; postings carry `docs.ord`, not this id. Collision odds at
     * 10^12 docs ≈ 5e-5 per pair set (birthday, 2^63); the build asserts
     * uniqueness. */
@@ -465,9 +465,9 @@ object IndexBuild {
   def termBucketCol(buckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col("term")), lit(buckets)).cast("int")
 
-  /** Storage partition (`db`) of the docs/doc_terms dimensions: doc_id is
+  /** Storage partition (`db`) of the `docs` dimension: doc_id is
     * already a xxhash64 of the url, so its residue partitions uniformly.
-    * Bucketing the dims is what makes a refresh/delete O(touched) — only
+    * Bucketing the dim is what makes a refresh/delete O(touched) — only
     * the partitions holding the affected doc ids are rewritten
     * (Refresh.refreshPages), the rest keep their files byte-identical. */
   def docBucketCol(buckets: Int): org.apache.spark.sql.Column =
@@ -475,16 +475,34 @@ object IndexBuild {
 
   def docBucketOf(docId: Long, buckets: Int): Int = (docId % buckets).toInt
 
+  /** The `docs` rows of analyzed docs that carry their `ord`: one row per
+    * url, with its `db` partition. `terms` (the doc's distinct terms) is
+    * the FORWARD index that makes a later refresh/delete O(doc) instead
+    * of O(corpus) — it names exactly the term buckets the doc's postings
+    * live in, so a refresh rewrites only those partitions
+    * (Refresh.commitDelta). The reference reaches a page's lemmas through
+    * the page's own `index_t` rows (IndexEntity rows by page_id); a
+    * posting-list engine stores them with the doc (Lucene's analogue:
+    * per-doc term vectors). */
+  def docRows(analyzed: DataFrame, buckets: Int): DataFrame =
+    analyzed.select(col("doc_id"), col("ord"), col("url"), col("site"), col("lang"),
+        col("dl"), map_keys(col("terms")).as("terms"))
+      .withColumn("db", docBucketCol(buckets))
+
   /** The stats of manifest `m`, present once a build committed a
     * batch: an index dir without them (no manifest at all, or one written
-    * before manifests existed) or with posting lists in another
-    * [[PostingCodec.Format]] must be rebuilt. */
+    * before manifests existed), with posting lists in another
+    * [[PostingCodec.Format]] or with its docs' terms in a separate
+    * `doc_terms` table must be rebuilt. */
   def statsOf(m: Manifest, root: String): Stats = {
     val s = m.stats.getOrElse(throw new IllegalStateException(
       s"$root holds no index commit manifest: rebuild it with `GraftCli build`"))
     if (s.posting_format != PostingCodec.Format) throw new IllegalStateException(
       s"$root: manifest v${m.version} holds posting format ${s.posting_format}, " +
         s"this version reads ${PostingCodec.Format}: rebuild it with `GraftCli build`")
+    if (m.has("doc_terms")) throw new IllegalStateException(
+      s"$root: manifest v${m.version} keeps the docs' terms in a doc_terms table, " +
+        "this version reads them from docs: rebuild it with `GraftCli build`")
     s
   }
 
@@ -513,8 +531,8 @@ object IndexBuild {
   /** Full resumable build to `outDir`: one commit per batch — its
     * segments (`segments` at `batch=i`, or `index` for a single-batch
     * build), its sites' status rows and its lineage row, plus, with the
-    * first batch a run commits, the dims {docs, doc_terms, lemma_stats,
-    * head_terms, mid_terms} and the stats. Restart-safe: a batch whose
+    * first batch a run commits, the dims {docs, lemma_stats, head_terms,
+    * mid_terms} and the stats. Restart-safe: a batch whose
     * lineage row says COMPLETE is skipped, and a crashed batch left
     * nothing visible (SURVEY.md §7 H5). Before it returns — after every
     * batch, a stop or a resume with nothing left to build — the run folds
@@ -711,24 +729,8 @@ object IndexBuild {
       // measured 10-12 s per dim at 1 thread on a 100k corpus, all of it
       // per-file open/footer fixed cost. One small shuffle instead
       // collapses that to ~1 file per bucket.
-      Future(c.put(
-        analyzed.select("doc_id", "ord", "url", "site", "lang", "dl")
-          .withColumn("db", docBucketCol(cfg.buckets))
-          .repartition(cfg.buckets, col("db")),
+      Future(c.put(docRows(analyzed, cfg.buckets).repartition(cfg.buckets, col("db")),
         "docs", Seq("db"))),
-      // FORWARD index (doc -> its distinct terms): the structure that
-      // makes a later single-page refresh/delete O(doc) instead of
-      // O(corpus) — it names exactly the term-buckets a doc's postings
-      // live in, so a refresh rewrites only those partitions
-      // (Refresh.commitDelta). The reference gets this for free from
-      // its relational index table (IndexEntity rows by page_id); a
-      // posting-list engine must store it explicitly (Lucene's analogue:
-      // per-doc term vectors).
-      Future(c.put(
-        analyzed.select(col("doc_id"), map_keys(col("terms")).as("terms"))
-          .withColumn("db", docBucketCol(cfg.buckets))
-          .repartition(cfg.buckets, col("db")),
-        "doc_terms", Seq("db"))),
       Future(c.put(lemmaStats.repartition(cfg.buckets, col("bucket")),
         "lemma_stats", Seq("bucket"))),
       // head_terms is read by the query engine / refresh path; the build

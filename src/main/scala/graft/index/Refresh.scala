@@ -26,12 +26,12 @@ import graft.store.{Lineage, Stats, TableStore}
   *    work is per list, not per posting; the buckets' other lists pass
   *    through unchanged, and untouched partitions keep their files;
   *  - every other table the commit maintains is O(touched), not
-  *    O(corpus), as well: docs/doc_terms are bucket-partitioned by doc id
-  *    (`db`) and only the partitions holding the affected ids are
-  *    rewritten; lemma_stats is bucket-partitioned by term and updated
-  *    by an exact ±df delta over the touched term buckets; corpus stats
-  *    (n_docs/avgdl/total_tokens) are adjusted from the delta itself —
-  *    never re-aggregated;
+  *    O(corpus), as well: docs is bucket-partitioned by doc id (`db`),
+  *    carries each doc's distinct terms, and only the partitions holding
+  *    the affected ids are rewritten; lemma_stats is bucket-partitioned
+  *    by term and updated by an exact ±df delta over the touched term
+  *    buckets; corpus stats (n_docs/avgdl/total_tokens) are adjusted
+  *    from the delta itself — never re-aggregated;
   *  - all of it — index buckets, dims, ±df, stats, `next_ord`, `asOf`,
   *    the site status and the lineage row — lands in ONE manifest
   *    publish. A crash before it leaves nothing visible and a re-run
@@ -112,54 +112,56 @@ object Refresh {
       val batch = c.base.batch + 1
 
       // ONE agg over the batch: the touched doc buckets (tiny — they
-      // prune the dim partition reads) and the added doc/token counts. A
-      // delete adds no version, so its dl is null.
-      val (dbs, nAdded, addedTokens) =
-        added.getOrElse(ids.withColumn("dl", lit(null).cast("long")))
+      // prune the docs partition reads), the added doc/token counts and
+      // the new versions' posting rows (Σ per-doc distinct terms). A
+      // delete adds no version, so its dl is null and its terms empty.
+      val (dbs, nAdded, addedTokens, addedPostings) =
+        added.getOrElse(ids.withColumn("dl", lit(null).cast("long"))
+            .withColumn("terms", typedLit(Map.empty[String, Int])))
           .agg(collect_set(IndexBuild.docBucketCol(cfg.buckets)), count(col("dl")),
-            coalesce(sum(col("dl")), lit(0L)))
-          .as[(Seq[Int], Long, Long)].collect()(0)
-      def touchedDbs(table: String): DataFrame =
-        c.read(table).filter(col("db").isin(dbs: _*))
+            coalesce(sum(col("dl")), lit(0L)), coalesce(sum(size(col("terms"))), lit(0L)))
+          .as[(Seq[Int], Long, Long, Long)].collect()(0)
+      def touchedDocs: DataFrame = c.read("docs").filter(col("db").isin(dbs: _*))
 
-      // url hash → ordinal: the old versions' docs rows, partition-pruned
-      // to the touched doc buckets. Their ordinals leave the index and
-      // they key the −df/−stats delta below.
-      val oldDocs = touchedDbs("docs").join(ids, Seq("doc_id"), "leftsemi")
-        .select("doc_id", "ord", "site", "dl")
-      val (nOld, oldTokens) = oldDocs.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
-        .as[(Long, Long)].collect()(0)
-      // A known url keeps its ordinal; the new ones (a refresh's ids are
-      // exactly its added docs) take `next_ord` upward in hash order,
-      // numbered on the thin id column as the build numbers its docs
-      val nNew = if (added.isEmpty) 0L else nAdded - nOld
-      val addedWithOrd = added.map { a =>
-        val known = oldDocs.select("doc_id", "ord")
-        val ords = if (nNew == 0) known else {
-          val fresh = IndexBuild.rangeRanked(
-            a.select("doc_id").join(oldDocs, Seq("doc_id"), "left_anti"),
-            spark.sparkContext.defaultParallelism)
-          known.unionByName(IndexBuild.numbered(fresh,
-            fresh.groupBy("rb").count().as[(Int, Long)].collect(), stats.next_ord))
-        }
-        a.join(ords, Seq("doc_id"))
-      }
-
-      // The old versions' postings, (ord, site, term) — ONE doc_terms read,
-      // partition-pruned to the touched doc buckets and cached: with the
-      // new versions' terms it names the touched term buckets (the index
-      // and lemma_stats partitions this commit rewrites), and it gives the
-      // ordinals that leave each list and the −df delta.
-      val oldPost = touchedDbs("doc_terms").join(oldDocs, Seq("doc_id"))
-        .select(col("ord"), col("site"), explode(col("terms")).as("term"))
+      // The old versions: ONE docs read, partition-pruned to the touched
+      // doc buckets and cached for the commit. Their ordinals leave the
+      // index, their terms name the touched term buckets (the index and
+      // lemma_stats partitions this commit rewrites) and key the −df
+      // delta, and their dl the −stats delta.
+      val old = touchedDocs.join(ids, Seq("doc_id"), "leftsemi")
+        .select("doc_id", "ord", "site", "dl", "terms")
         .cache()
-      val (nTouched, touchedBuckets) = try {
-        val touched @ (_, buckets) = added
-          .fold(oldPost.select("term"))(a => oldPost.select("term").union(
-            a.select(explode(map_keys(col("terms"))).as("term"))))
+      try {
+        val (nOld, oldTokens) = old.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
+          .as[(Long, Long)].collect()(0)
+        // A known url keeps its ordinal; the new ones (a refresh's ids are
+        // exactly its added docs) take `next_ord` upward in hash order,
+        // numbered on the thin id column as the build numbers its docs
+        val nNew = if (added.isEmpty) 0L else nAdded - nOld
+        val addedWithOrd = added.map { a =>
+          val known = old.select("doc_id", "ord")
+          val ords = if (nNew == 0) known else {
+            val fresh = IndexBuild.rangeRanked(
+              a.select("doc_id").join(old, Seq("doc_id"), "left_anti"),
+              spark.sparkContext.defaultParallelism)
+            known.unionByName(IndexBuild.numbered(fresh,
+              fresh.groupBy("rb").count().as[(Int, Long)].collect(), stats.next_ord))
+          }
+          a.join(ords, Seq("doc_id"))
+        }
+
+        // the old versions' postings, (ord, site, term); with the new
+        // versions' terms (tagged, so the lineage counts them) they name
+        // the touched term buckets
+        val oldPost = old.select(col("ord"), col("site"), explode(col("terms")).as("term"))
+        val oldTerms = oldPost.select(col("term"), lit(false).as("new"))
+        val (nTouched, nNewTerms, buckets) = added
+          .fold(oldTerms)(a => oldTerms.union(
+            a.select(explode(map_keys(col("terms"))).as("term"), lit(true).as("new"))))
           .distinct()
-          .agg(count(lit(1)), collect_set(IndexBuild.termBucketCol(cfg.buckets)))
-          .as[(Long, Seq[Int])].collect()(0)
+          .agg(countDistinct(col("term")), count(when(col("new"), 1)),
+            collect_set(IndexBuild.termBucketCol(cfg.buckets)))
+          .as[(Long, Long, Seq[Int])].collect()(0)
         val keys = buckets.map(b => s"bucket=$b")
 
         // index: each (term, shard) list a change names is patched as one
@@ -201,7 +203,7 @@ object Refresh {
         // ±df delta over only the touched terms: df(term, site) += new
         // versions' counts − old versions' counts (exact — df counts
         // distinct docs per (term, site), and each doc contributes one per
-        // distinct term, which is precisely what doc_terms stores). Rows
+        // distinct term, which is precisely what docs.terms stores). Rows
         // whose df reaches 0 are dropped, and so is a touched bucket whose
         // rows all died.
         val minus = oldPost.groupBy("term", "site").agg((-count(lit(1))).as("d"))
@@ -220,71 +222,61 @@ object Refresh {
             .withColumn("bucket", IndexBuild.termBucketCol(cfg.buckets))
             .repartition(col("bucket")),
           "lemma_stats", Seq("bucket"), keys)
-        touched
-      } finally oldPost.unpersist()
 
-      // docs / doc_terms: rewrite ONLY the touched doc buckets,
-      // repartitioned by `db` as the build writes the dims, so each
-      // bucket gets one file rather than one per task
-      val fresh = Seq(
-        "docs" -> addedWithOrd.map(_.select("doc_id", "ord", "url", "site", "lang", "dl")),
-        "doc_terms" -> added.map(_.select(col("doc_id"), map_keys(col("terms")).as("terms"))))
-      for ((table, rows) <- fresh if dbs.nonEmpty) {
-        val kept = touchedDbs(table).join(ids, Seq("doc_id"), "left_anti")
-        c.overwrite(
-          rows.fold(kept)(r =>
-            kept.unionByName(r.withColumn("db", IndexBuild.docBucketCol(cfg.buckets))))
-            .repartition(col("db")),
-          table, Seq("db"), dbs.map(b => s"db=$b"))
-      }
+        // docs: rewrite ONLY the touched doc buckets, repartitioned by
+        // `db` as the build writes the dim, so each bucket gets one file
+        // rather than one per task
+        if (dbs.nonEmpty) {
+          val kept = touchedDocs.join(ids, Seq("doc_id"), "left_anti")
+          c.overwrite(
+            addedWithOrd.fold(kept)(a => kept.unionByName(IndexBuild.docRows(a, cfg.buckets)))
+              .repartition(col("db")),
+            "docs", Seq("db"), dbs.map(b => s"db=$b"))
+        }
 
-      // prefetch-hint refresh, AMORTIZED on batch-count boundaries: the
-      // O(vocabulary) TakeOrdered must ride neither on every engine
-      // reload nor on every one-page refresh. It runs when the as_of
-      // advance crosses a HintEvery boundary — bounded staleness
-      // (≤ HintEvery batches). Ordering hint only; the engine re-reads
-      // current dfs exactly.
-      if (c.base.asOf / HintEvery != batch / HintEvery)
-        IndexBuild.writeMidTerms(c)
+        // prefetch-hint refresh, AMORTIZED on batch-count boundaries: the
+        // O(vocabulary) TakeOrdered must ride neither on every engine
+        // reload nor on every one-page refresh. It runs when the as_of
+        // advance crosses a HintEvery boundary — bounded staleness
+        // (≤ HintEvery batches). Ordering hint only; the engine re-reads
+        // current dfs exactly.
+        if (c.base.asOf / HintEvery != batch / HintEvery)
+          IndexBuild.writeMidTerms(c)
 
-      // lineage: REAL metrics — the index bytes this commit rewrote, and
-      // for a refresh the distinct terms of the new versions and their
-      // posting rows (Σ per-doc distinct terms); a delete records its
-      // touched terms
-      val rewritten = c.current.parts("index")
-        .filter(p => touchedBuckets.contains(p.value("bucket").toInt)).map(_.bytes).sum
-      val (termCount, postingCount) = added match {
-        case Some(a) =>
-          a.select(explode(map_keys(col("terms"))).as("term"))
-            .agg(countDistinct(col("term")), count(lit(1)))
-            .as[(Long, Long)].collect()(0)
-        case None => (nTouched, 0L)
-      }
-      // per-site lifecycle: stamp the refreshed sites' status_time (the
-      // reference's updateStatusOnSite path, SiteServiceImpl.java:83-91),
-      // rewriting the table as its latest row per site so it stays one
-      // part however many refreshes run
-      added.foreach { a =>
-        c.put(
-          IndexBuild.latestStatus(c.read("site_status").unionByName(
-            a.select("site").distinct()
-              .select(col("site"), lit(IndexBuild.SiteStatus.Indexed).as("status"),
-                lit(null).cast("string").as("error"), current_timestamp().as("ts"))))
-            .coalesce(1),
-          "site_status")
-      }
-      // corpus stats from the delta (refresh replaces by doc_id, so
-      // n_distinct tracks n_docs exactly)
-      val n = stats.n_docs + nAdded - nOld
-      val tokens = stats.total_tokens + addedTokens - oldTokens
-      c.update(m => m.copy(
-        stats = Some(stats.copy(n_docs = n, n_distinct = n,
-          avgdl = if (n > 0) tokens.toDouble / n else 0.0, total_tokens = tokens,
-          next_ord = stats.next_ord + nNew)),
-        batch = batch,
-        asOf = batch,
-        lineage = m.lineage :+ Lineage(batch, label(batch), rewritten, termCount,
-          postingCount, "COMPLETE", None, new java.sql.Timestamp(System.currentTimeMillis()))))
+        // per-site lifecycle: stamp the refreshed sites' status_time (the
+        // reference's updateStatusOnSite path, SiteServiceImpl.java:83-91),
+        // rewriting the table as its latest row per site so it stays one
+        // part however many refreshes run
+        added.foreach { a =>
+          c.put(
+            IndexBuild.latestStatus(c.read("site_status").unionByName(
+              a.select("site").distinct()
+                .select(col("site"), lit(IndexBuild.SiteStatus.Indexed).as("status"),
+                  lit(null).cast("string").as("error"), current_timestamp().as("ts"))))
+              .coalesce(1),
+            "site_status")
+        }
+
+        // lineage: REAL metrics — the index bytes this commit rewrote, and
+        // for a refresh the distinct terms of the new versions and their
+        // posting rows (both counted above); a delete records its touched
+        // terms
+        val rewritten = c.current.parts("index")
+          .filter(p => buckets.contains(p.value("bucket").toInt)).map(_.bytes).sum
+        val termCount = if (added.isDefined) nNewTerms else nTouched
+        // corpus stats from the delta (refresh replaces by doc_id, so
+        // n_distinct tracks n_docs exactly)
+        val n = stats.n_docs + nAdded - nOld
+        val tokens = stats.total_tokens + addedTokens - oldTokens
+        c.update(m => m.copy(
+          stats = Some(stats.copy(n_docs = n, n_distinct = n,
+            avgdl = if (n > 0) tokens.toDouble / n else 0.0, total_tokens = tokens,
+            next_ord = stats.next_ord + nNew)),
+          batch = batch,
+          asOf = batch,
+          lineage = m.lineage :+ Lineage(batch, label(batch), rewritten, termCount,
+            addedPostings, "COMPLETE", None, new java.sql.Timestamp(System.currentTimeMillis()))))
+      } finally old.unpersist()
     }
   }
 

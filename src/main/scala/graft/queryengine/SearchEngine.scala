@@ -99,16 +99,17 @@ final class SearchEngine(
   private def load(): IndexState = {
     val m = store.manifest.getOrElse(Manifest.empty)
     val stats = IndexBuild.statsOf(m, indexDir)
-    // norms: one two-column read of `docs`, planned before the dim is
-    // cache-marked (so it reads the two columns, not the whole cache) and
-    // collected while the rest of the load runs
+    // norms: one two-column read of `docs`, collected while the rest of
+    // the load runs
     val normsRead = if (!scorer.usesDocLength) None else {
       require(stats.next_ord <= Int.MaxValue - 8, s"$indexDir: ${stats.next_ord} doc ordinals " +
         "exceed what driver-side norms (an int per ordinal) can hold")
       Some(store.readAt(m, "docs").select("ord", "dl").queryExecution.toRdd
         .map(r => (r.getLong(0), r.getLong(1))).collectAsync())
     }
-    val docsDf = store.readAt(m, "docs").cache()
+    // the docs columns the url join, the site filter and the site count
+    // read — never the terms refresh and delete keep with each doc
+    val docsDf = store.readAt(m, "docs").select("ord", "url", "site").cache()
     val lemmaStatsDf = store.readAt(m, "lemma_stats").cache()
     val index = store.readAt(m, "index")
     val segmentsDf = if (m.bytes("index") <= indexCacheLimit) index.cache() else index
@@ -445,7 +446,7 @@ final class SearchEngine(
         // hit ids are doc ordinals, resolved to urls through `docs.ord`
         val hitsDf = hits.map(h => (h.docId, h.score, h.tfSum)).toSeq
           .toDF("ord", "score", "tf_sum")
-        val joined = hitsDf.join(docsDf.select("ord", "url", "site"), Seq("ord"))
+        val joined = hitsDf.join(docsDf, Seq("ord"))
         val filtered = site.fold(joined)(s => joined.filter(col("site") === s))
         val rows = filtered.select("url", "site", "score", "tf_sum")
           .as[(String, String, Double, Double)].collect()
@@ -478,7 +479,7 @@ final class SearchEngine(
         // all computed executor-side; ONLY the page slice is collected.
         lastRanked = Seq.empty
         val joined = hitsDs.toDF("ord", "score", "tf_sum")
-          .join(docsDf.select("ord", "url", "site"), Seq("ord"))
+          .join(docsDf, Seq("ord"))
         val filtered = site.fold(joined)(s => joined.filter(col("site") === s))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val agg = filtered

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * One store instance is rooted at a directory, and a root is one of two
   * kinds:
   *  - an INDEX root holds `_manifest/v<N>.json` files. Every index table
-  *    (`docs`, `doc_terms`, `lemma_stats`, `index`, `segments`,
-  *    `head_terms`, `mid_terms`, `site_status`) is read
+  *    (`docs`, `lemma_stats`, `index`, `segments`, `head_terms`,
+  *    `mid_terms`, `site_status`) is read
   *    through the latest manifest with its stored schema, and every
   *    change is a copy-on-write [[commit]]: the op stages new
   *    directories under fresh names (`docs/db=3/c=<id>`), then the

@@ -448,6 +448,21 @@ class EngineSpec extends AnyFunSuite {
       "mid_terms must be exactly the top-df non-head terms in (df desc, term) order")
   }
 
+  test("the engine caches only the docs columns it reads: ord, url, site") {
+    val store = graft.store.TableStore.open(spark, indexDir)
+    // a site-scoped search: the engine is on the latest manifest, and its
+    // url join and site count read the cached relation
+    engineBm.search(s"$commonForm $midLemma", 0, 10, Some("https://site1.test"))
+    val m = store.manifest.get
+    def cached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
+      .map(_.cachedRepresentation.output.map(_.name))
+    assert(cached(store.readAt(m, "docs").select("ord", "url", "site")) == Some(Seq("ord", "url", "site")),
+      "the engine must cache the ord/url/site projection of docs")
+    assert(cached(store.readAt(m, "docs")).isEmpty,
+      "the whole docs table, terms included, must not be cached")
+  }
+
   test("bounded-files layout: index and dim writes emit O(partitions) files, not tasks x buckets") {
     built
     def parquetFiles(table: String): Long = {
@@ -462,7 +477,7 @@ class EngineSpec extends AnyFunSuite {
     // the pre-fix dynamic writes emitted up to width x buckets (128)
     // per table (and per BATCH for the 3-batch index)
     val bound = 8 + idxCfg.buckets + 8 // width + buckets + slack
-    for (t <- Seq("index", "docs", "doc_terms", "lemma_stats")) {
+    for (t <- Seq("index", "docs", "lemma_stats")) {
       val n = parquetFiles(t)
       assert(n > 0 && n <= bound, s"$t holds $n parquet files (bound $bound)")
     }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -163,7 +164,7 @@ class RefreshSpec extends AnyFunSuite {
     val targetUrl = spark.read.parquet(s"$work/idx/docs")
       .filter(col("dl") > 0).orderBy("url")
       .select("url").as[String].head()
-    val oldTerms = spark.read.parquet(s"$work/idx/doc_terms")
+    val oldTerms = spark.read.parquet(s"$work/idx/docs")
       .filter(col("doc_id") === IndexBuild.stableDocId(targetUrl))
       .select(explode(col("terms"))).as[String].collect().toSet
     assert(oldTerms.nonEmpty)
@@ -209,7 +210,7 @@ class RefreshSpec extends AnyFunSuite {
     assert(engine.search(l(190), 0, 30, None).data.exists(i => i.site + i.uri == targetUrl))
   }
 
-  test("one-page refresh rewrites ONLY touched dim partitions: docs/doc_terms/lemma_stats stay byte-identical elsewhere") {
+  test("one-page refresh rewrites ONLY touched dim partitions: docs/lemma_stats stay byte-identical elsewhere") {
     spark.sparkContext.setLogLevel("WARN")
     val work = Files.createTempDirectory("graft-refresh-dims").toString
     val cfgP = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 1, buckets = 256)
@@ -229,7 +230,7 @@ class RefreshSpec extends AnyFunSuite {
           java.nio.file.Files.readAllBytes(f.toPath).toSeq)
         .toMap
     }
-    val dims = Seq("docs", "doc_terms", "lemma_stats")
+    val dims = Seq("docs", "lemma_stats")
     val before = dims.map(t => t -> tableFiles(t)).toMap
 
     import org.apache.spark.sql.functions.{col, explode}
@@ -237,7 +238,7 @@ class RefreshSpec extends AnyFunSuite {
       .filter(col("dl") > 0).orderBy("url")
       .select("url").as[String].head()
     val targetId = IndexBuild.stableDocId(targetUrl)
-    val oldTerms = spark.read.parquet(s"$work/idx/doc_terms")
+    val oldTerms = spark.read.parquet(s"$work/idx/docs")
       .filter(col("doc_id") === targetId)
       .select(explode(col("terms"))).as[String].collect().toSet
     assert(oldTerms.nonEmpty)
@@ -245,7 +246,7 @@ class RefreshSpec extends AnyFunSuite {
     val newPage = page(targetUrl, html(s"${l(190)}", s"${l(190)} ${l(191)} ${l(192)}"))
     Refresh.refreshPages(spark, s"$work/idx", spark.createDataset(Seq(newPage)), cfgP)
 
-    // touched partitions: the target's doc bucket (docs/doc_terms) and
+    // touched partitions: the target's doc bucket (docs) and
     // the old∪new terms' buckets (lemma_stats)
     val touchedDb = Set(IndexBuild.docBucketOf(targetId, cfgP.buckets))
     val newTerms = graft.core.Lemmatizer.lemmaCountsFromHtml(newPage.html).keySet
@@ -311,11 +312,11 @@ class RefreshSpec extends AnyFunSuite {
       cancel("chattr +i unsupported on this filesystem")
     try intercept[Throwable] { Refresh.refreshPages(spark, idx, ds, cfgP) }
     finally { Seq("chattr", "-i", s"$idx/lemma_stats").! : Unit }
-    // the crashed commit left nothing visible: doc_terms does not carry
-    // the NEW terms and lemma_stats is the pre-refresh table
+    // the crashed commit left nothing visible: docs does not carry the
+    // NEW terms and lemma_stats is the pre-refresh table
     val targetId = IndexBuild.stableDocId(targetUrl)
     val store = graft.store.TableStore.open(spark, idx)
-    assert(!store.read("doc_terms")
+    assert(!store.read("docs")
       .filter(col("doc_id") === targetId)
       .select(explode(col("terms"))).as[String].collect().toSet
       .contains(l(191)), "a crashed commit must leave the dims as they were")
@@ -327,10 +328,9 @@ class RefreshSpec extends AnyFunSuite {
     // version: it must apply the TRUE delta exactly once
     Refresh.refreshPages(spark, idx, ds, cfgP)
 
-    // converged: lemma_stats equals a fresh recomputation from the dims
-    val expect = spark.read.parquet(s"$idx/doc_terms")
-      .select(col("doc_id"), explode(col("terms")).as("term"))
-      .join(spark.read.parquet(s"$idx/docs").select("doc_id", "site"), Seq("doc_id"))
+    // converged: lemma_stats equals a fresh recomputation from docs
+    val expect = spark.read.parquet(s"$idx/docs")
+      .select(col("site"), explode(col("terms")).as("term"))
       .groupBy("term", "site").agg(count(lit(1)).as("df"))
       .as[(String, String, Long)].collect().toSet
     val got = spark.read.parquet(s"$idx/lemma_stats")
@@ -374,9 +374,8 @@ class RefreshSpec extends AnyFunSuite {
       IndexBuild.Config())
 
     // dims stayed exact under the persisted layout
-    val expect = spark.read.parquet(s"$idx/doc_terms")
-      .select(col("doc_id"), explode(col("terms")).as("term"))
-      .join(spark.read.parquet(s"$idx/docs").select("doc_id", "site"), Seq("doc_id"))
+    val expect = spark.read.parquet(s"$idx/docs")
+      .select(col("site"), explode(col("terms")).as("term"))
       .groupBy("term", "site").agg(count(lit(1)).as("df"))
       .as[(String, String, Long)].collect().toSet
     val got = spark.read.parquet(s"$idx/lemma_stats")
@@ -462,7 +461,7 @@ class RefreshSpec extends AnyFunSuite {
   }
 
   /** lemma_stats as (term, site, df), and the same recomputed from the
-    * docs / doc_terms dims. */
+    * docs dim's terms. */
   private def lemmaStatsAndFresh(idx: String)
       : (Set[(String, String, Long)], Set[(String, String, Long)]) = {
     import org.apache.spark.sql.functions.{col, count, explode, lit}
@@ -470,9 +469,8 @@ class RefreshSpec extends AnyFunSuite {
     val store = graft.store.TableStore.open(spark, idx)
     val got = store.read("lemma_stats")
       .select("term", "site", "df").as[(String, String, Long)].collect().toSet
-    val fresh = store.read("doc_terms")
-      .select(col("doc_id"), explode(col("terms")).as("term"))
-      .join(store.read("docs").select("doc_id", "site"), Seq("doc_id"))
+    val fresh = store.read("docs")
+      .select(col("site"), explode(col("terms")).as("term"))
       .groupBy("term", "site").agg(count(lit(1)).as("df"))
       .as[(String, String, Long)].collect().toSet
     (got, fresh)
@@ -598,11 +596,11 @@ class RefreshSpec extends AnyFunSuite {
       .map { case (t, s, n, m, p) => (t, s) -> (n, m, p.toSeq) }.toMap
   }
 
-  /** The distinct terms doc_terms holds for `url`. */
+  /** The distinct terms docs holds for `url`. */
   private def termsOf(idx: String, url: String): Set[String] = {
     import org.apache.spark.sql.functions.{col, explode}
     import spark.implicits._
-    graft.store.TableStore.open(spark, idx).read("doc_terms")
+    graft.store.TableStore.open(spark, idx).read("docs")
       .filter(col("doc_id") === IndexBuild.stableDocId(url))
       .select(explode(col("terms"))).as[String].collect().toSet
   }
@@ -719,6 +717,64 @@ class RefreshSpec extends AnyFunSuite {
     assert(!all.exists(_.partitionSpec.isEmpty),
       s"an unpartitioned window ran: ${all.filter(_.partitionSpec.isEmpty).map(_.simpleString(200))}")
     assert(nextOrdOf(idx) == pages.size + 2L)
+  }
+
+  /** Scans of the `docs` files of `idx` in the executed plans of the
+    * queries `body` runs; a cached relation's own plan counts once, for
+    * the job that builds the cache. */
+  private def docsScans(idx: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        qe.logical match {
+          case r: org.apache.spark.sql.catalyst.plans.logical.Range if r.end == 7907 => drained.countDown()
+          case _ => plans.add(qe.executedPlan)
+        }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(7907).collect()
+      assert(drained.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener not drained")
+    } finally spark.listenerManager.unregister(listener)
+    val docs = new java.io.File(s"$idx/docs").toURI.toString
+    val caches = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def scans(p: SparkPlan): Int = p match {
+      case f: FileSourceScanExec =>
+        if (f.relation.location.rootPaths.exists(_.toString.startsWith(docs))) 1 else 0
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case c: CommandResultExec => scans(c.commandPhysicalPlan)
+      case _: ReusedExchangeExec => 0
+      case m: InMemoryTableScanExec =>
+        if (caches.add(m.relation.cacheBuilder)) scans(m.relation.cachedPlan) else 0
+      case other => other.children.map(scans).sum
+    }
+    plans.asScala.toSeq.map(scans).sum
+  }
+
+  test("a one-page refresh scans the docs files at most twice: the old versions and the rewrite's kept rows") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-refresh-docs-scans").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    val l = RuDict.contentLemmas
+    val target = pages.map(_.url).sorted.find(termsOf(idx, _).nonEmpty).get
+    val n = docsScans(idx)(Refresh.refreshPages(spark, idx,
+      spark.createDataset(Seq(page(target, html(l(190), s"${l(190)} ${l(2)}")))), idxCfg))
+    info(s"docs scans $n")
+    assert(n > 0, "fixture: the listener must see the commit's docs reads")
+    assert(n <= 2, s"a one-page refresh scanned the docs files $n times")
   }
 
   /** url → doc ordinal, from the docs dim. */
@@ -1067,6 +1123,62 @@ class RefreshSpec extends AnyFunSuite {
       Refresh.deletePages(spark, idx, Seq(pages.head.url), idxCfg))
     assert(delete.getMessage.contains("rebuild"), delete.getMessage)
     assert(filesUnder(idx) == before, "a refused operation must not touch the index dir")
+  }
+
+  test("a manifest that names a doc_terms table fails open, refresh, delete and a resumed build with rebuild, touching no file") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-doc-terms-manifest").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    // the fixture: the latest manifest as a version that kept the docs'
+    // terms in their own table published it
+    val v = graft.store.TableStore.open(spark, idx).version
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val json = mapper.readTree(Files.readAllBytes(java.nio.file.Paths.get(s"$idx/_manifest/v$v.json")))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    json.put("version", v + 1)
+    val tables = json.get("tables").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    tables.set[com.fasterxml.jackson.databind.JsonNode]("doc_terms", tables.get("docs").deepCopy())
+    Files.write(java.nio.file.Paths.get(s"$idx/_manifest/v${v + 1}.json"), mapper.writeValueAsBytes(json))
+    val before = filesUnder(idx)
+
+    val open = intercept[IllegalStateException](
+      new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum))
+    assert(open.getMessage.contains("rebuild"), open.getMessage)
+    val refresh = intercept[IllegalStateException](
+      Refresh.refreshPages(spark, idx, spark.createDataset(pages.take(1)), idxCfg))
+    assert(refresh.getMessage.contains("rebuild"), refresh.getMessage)
+    val delete = intercept[IllegalStateException](
+      Refresh.deletePages(spark, idx, Seq(pages.head.url), idxCfg))
+    assert(delete.getMessage.contains("rebuild"), delete.getMessage)
+    val resume = intercept[IllegalStateException](
+      IndexBuild.run(spark, spark.createDataset(pages), idx, idxCfg))
+    assert(resume.getMessage.contains("rebuild"), resume.getMessage)
+    assert(filesUnder(idx) == before, "a refused operation must not touch the index dir")
+  }
+
+  test("refresh and delete lineage rows count the new versions' terms and postings, and the touched terms") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-refresh-lineage").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    val l = RuDict.contentLemmas
+    val urls = pages.map(_.url).sorted.filter(termsOf(idx, _).nonEmpty)
+    val fresh = Seq(page(urls(0), html(l(190), s"${l(190)} ${l(191)} ${l(2)}")),
+      page("https://site1.test/p/new-lineage", html(l(192), s"${l(192)} ${l(2)} ${l(3)}")))
+    Refresh.refreshPages(spark, idx, spark.createDataset(fresh), idxCfg)
+    val perDoc = fresh.map(p => graft.core.Lemmatizer.lemmaCountsFromHtml(p.html).keySet)
+    val gone = termsOf(idx, urls(1))
+    Refresh.deletePages(spark, idx, Seq(urls(1)), idxCfg)
+
+    val rows = graft.store.TableStore.open(spark, idx).manifest.get.lineage
+    val refresh = rows.filter(_.doc_range.startsWith("refresh"))
+    assert(refresh.map(r => (r.term_count, r.posting_count)) ==
+      Seq((perDoc.reduce(_ ++ _).size.toLong, perDoc.map(_.size.toLong).sum)))
+    val delete = rows.filter(_.doc_range.startsWith("delete"))
+    assert(delete.map(r => (r.term_count, r.posting_count)) == Seq((gone.size.toLong, 0L)))
   }
 
   test("GC leaves no empty directory: after a 2-batch build and merge, and after a delete that empties a bucket") {

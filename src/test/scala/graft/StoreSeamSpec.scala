@@ -28,7 +28,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.graft.*` conf keys only, and a third holds those keys to the
   * ones README's options table documents. A fourth keeps the build one
   * step: `IndexBuild.run` folds its batches, so no other main file calls
-  * `mergeSegments` after it.
+  * `mergeSegments` after it. A fifth holds README's index-format table
+  * to the tables a finished build publishes.
   */
 class StoreSeamSpec extends AnyFunSuite {
 
@@ -94,6 +95,28 @@ class StoreSeamSpec extends AnyFunSuite {
     val documented = Files.readAllLines(Paths.get("README.md")).asScala
       .flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
     assert(documented == expected, s"spark.graft.* keys in README's options table: $documented")
+  }
+
+  test("README's index-format table names the tables a finished build publishes, and segments") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    val idx = Files.createTempDirectory("graft-readme-tables").resolve("idx").toString
+    graft.index.IndexBuild.run(spark, graft.corpus.CorpusGen.generate(spark, graft.corpus.CorpusGen.Config(2, 10)),
+      idx, graft.index.IndexBuild.Config(shards = 4, nBatches = 2, buckets = 4))
+    val built = graft.store.TableStore.open(spark, idx).manifest.get.tables.keySet
+    // the table's rows: the backticked names of each first cell, from
+    // the `### Index format` heading to the end of its table
+    val section = Files.readAllLines(Paths.get("README.md")).asScala
+      .dropWhile(_ != "### Index format").drop(1)
+      .dropWhile(!_.startsWith("|")).takeWhile(_.startsWith("|")).drop(2)
+    val documented = section.flatMap(r => "`(\\w+)`".r.findAllMatchIn(r.split('|')(1)).map(_.group(1))).toSet
+    // `segments` lives only while a multi-batch build runs: its fold drops it
+    assert(documented == built + "segments",
+      s"README's index-format table lists $documented; a finished build publishes $built")
   }
 
   test("a build folds its own batches: no main caller runs mergeSegments as a second step") {
