@@ -80,11 +80,7 @@ class IndexStreamSpec extends AnyFunSuite {
       val dupA = page(dupUrl, html("дубль старый", s"$markerDupOld ${l(6)}"))
       val dupB = page(dupUrl, html("дубль новый", s"$markerDupNew ${l(6)}"),
         tsOffset = 60000L)
-      // one file, so the live stream sees the four rows at once: a
-      // multi-file append lands file by file and can split over two
-      // micro-batches
-      spark.createDataset(Seq(v2, fresh, dupA, dupB)).coalesce(1)
-        .write.mode("append").parquet(feed)
+      spark.createDataset(Seq(v2, fresh, dupA, dupB)).write.mode("append").parquet(feed)
       q.processAllAvailable()
 
       val nAfterDelta = store.read("stats").collect()(0).getAs[Long]("n_docs")

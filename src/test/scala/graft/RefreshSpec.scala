@@ -683,36 +683,44 @@ class RefreshSpec extends AnyFunSuite {
       s"a one-page delete shuffled $records records against $postings postings")
   }
 
+  /** The executed plans of the queries `body` runs; a sentinel query
+    * drains the listener bus before they are returned. */
+  private def executedPlans(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val sentinel = 7919L
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical match {
+          case r: org.apache.spark.sql.catalyst.plans.logical.Range if r.end == sentinel =>
+            drained.countDown()
+          case _ => plans.add(qe.executedPlan)
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(sentinel).collect()
+      assert(drained.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener not drained")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
   test("a refresh numbers its new urls with no unpartitioned window") {
     spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.window.WindowExec
     import spark.implicits._
     val work = Files.createTempDirectory("graft-refresh-window").toString
     val idx = s"$work/idx"
     val pages = buildSmall(work, idxCfg, 20)
     val l = RuDict.contentLemmas
-    val windows = new java.util.concurrent.ConcurrentLinkedQueue[WindowExec]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
     object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = {
-        Plans.collect(qe.executedPlan) { case w: WindowExec => w }.foreach(windows.add)
-        if (qe.logical.toString.contains("7919")) drained.countDown()
-      }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val added = Seq("https://site0.test/p/new-w1", "https://site1.test/p/new-w2")
-      Refresh.refreshPages(spark, idx, spark.createDataset(
-        (pages.head.url +: added).map(u => page(u, html(l(190), s"${l(190)} ${l(2)}")))), idxCfg)
-      spark.range(7919).collect()
-      assert(drained.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener not drained")
-    } finally spark.listenerManager.unregister(listener)
-    val all = windows.toArray(Array.empty[WindowExec]).toSeq
+    val added = Seq("https://site0.test/p/new-w1", "https://site1.test/p/new-w2")
+    val all = executedPlans(Refresh.refreshPages(spark, idx, spark.createDataset(
+      (pages.head.url +: added).map(u => page(u, html(l(190), s"${l(190)} ${l(2)}")))), idxCfg))
+      .flatMap(Plans.collect(_) { case w: WindowExec => w })
     assert(all.exists(_.partitionSpec.nonEmpty), "fixture: the listener must see the commit's windows")
     assert(!all.exists(_.partitionSpec.isEmpty),
       s"an unpartitioned window ran: ${all.filter(_.partitionSpec.isEmpty).map(_.simpleString(200))}")
@@ -727,24 +735,6 @@ class RefreshSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit =
-        qe.logical match {
-          case r: org.apache.spark.sql.catalyst.plans.logical.Range if r.end == 7907 => drained.countDown()
-          case _ => plans.add(qe.executedPlan)
-        }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.range(7907).collect()
-      assert(drained.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener not drained")
-    } finally spark.listenerManager.unregister(listener)
     val docs = new java.io.File(s"$idx/docs").toURI.toString
     val caches = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
@@ -759,7 +749,7 @@ class RefreshSpec extends AnyFunSuite {
         if (caches.add(m.relation.cacheBuilder)) scans(m.relation.cachedPlan) else 0
       case other => other.children.map(scans).sum
     }
-    plans.asScala.toSeq.map(scans).sum
+    executedPlans(body).map(scans).sum
   }
 
   test("a one-page refresh scans the docs files at most twice: the old versions and the rewrite's kept rows") {
