@@ -115,18 +115,25 @@ object IndexBuild {
 
   /** One analyzed row per valid page (F1: non-200/308 never indexed):
     * (doc_id, url, site, lang, dl, terms = lemma → tf), lemmatized from
-    * the raw html. Shared by the build and the refresh delta. */
+    * the raw html. The build's pass; a refresh analyzes its pages with
+    * [[analyzeOne]] on the way to the driver. */
   def analyze(pages: Dataset[PageRow]): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
     filterValidCode(pages)
       .select(col("url"), col("html"), col("lang"))
       .as[(String, Array[Byte], String)]
-      .map { case (url, html, lang) =>
-        val counts = Lemmatizer.lemmaCountsFromHtml(html)
-        (stableDocId(url), url, siteOf(url), lang, counts.valuesIterator.sum, counts)
-      }
-      .toDF("doc_id", "url", "site", "lang", "dl", "terms")
+      .map { case (url, html, lang) => analyzeOne(url, html, lang) }
+      .toDF()
+  }
+
+  /** One page's analyzed row. */
+  final case class Analyzed(doc_id: Long, url: String, site: String, lang: String,
+      dl: Long, terms: Map[String, Long])
+
+  def analyzeOne(url: String, html: Array[Byte], lang: String): Analyzed = {
+    val counts = Lemmatizer.lemmaCountsFromHtml(html)
+    Analyzed(stableDocId(url), url, siteOf(url), lang, counts.valuesIterator.sum, counts)
   }
 
   /** Deterministic 63-bit doc id from url: Catalyst's xxhash64(url)
@@ -234,6 +241,16 @@ object IndexBuild {
             pmod(xxhash64(col("ord")), lit(cfg.docSubshards))).cast("int"))
           .otherwise(lit(-1)))
       .select("term", "shard", "ord", "tf")
+
+  /** Driver form of [[saltedPostings]]'s shard — MUST stay in lockstep
+    * with it: the shard of a posting of doc `ord` on `site` for a head
+    * term (`head`) or a tail one. */
+  def shardOf(head: Boolean, site: String, ord: Long, cfg: Config): Int =
+    if (!head) -1
+    else siteGroupOf(site, cfg.siteGroups) * cfg.docSubshards + Math.floorMod(
+      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+        ord, org.apache.spark.sql.types.LongType, 42L),
+      cfg.docSubshards.toLong).toInt
 
   /** Map-side combiner over InternalRows with schema exactly
     * (term STRING, shard INT, ord LONG, tf LONG): groups the
@@ -411,7 +428,8 @@ object IndexBuild {
 
   /** Dense doc ordinals in doc_id order without a global sort, in two
     * steps around an aggregation the caller runs: the build numbers its
-    * docs 0..n-1 this way, a refresh its new urls upward from `next_ord`.
+    * docs 0..n-1 this way (a refresh numbers its few new urls upward from
+    * `next_ord` on the driver, in the same order).
     * This step splits the id space into ranges by the id's top bits (ids
     * are uniform hashes, so ranges balance; ~8 ranges per partition keep
     * their hash placement even) and ranks each range locally: columns
@@ -473,7 +491,7 @@ object IndexBuild {
   def docBucketCol(buckets: Int): org.apache.spark.sql.Column =
     pmod(col("doc_id"), lit(buckets)).cast("int")
 
-  def docBucketOf(docId: Long, buckets: Int): Int = (docId % buckets).toInt
+  def docBucketOf(docId: Long, buckets: Int): Int = Math.floorMod(docId, buckets.toLong).toInt
 
   /** The `docs` rows of analyzed docs that carry their `ord`: one row per
     * url, with its `db` partition. `terms` (the doc's distinct terms) is

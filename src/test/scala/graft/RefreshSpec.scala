@@ -26,6 +26,9 @@ class RefreshSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val corpusCfg = CorpusGen.Config(2, 100)
+  // the jobs of a one-page refresh and a one-url delete on `buildSmall`
+  private val RefreshJobCeiling = 12
+  private val DeleteJobCeiling = 9
   private val idxCfg = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 2, buckets = 16)
 
   private def html(title: String, body: String): Array[Byte] =
@@ -718,13 +721,55 @@ class RefreshSpec extends AnyFunSuite {
     val l = RuDict.contentLemmas
     object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val added = Seq("https://site0.test/p/new-w1", "https://site1.test/p/new-w2")
-    val all = executedPlans(Refresh.refreshPages(spark, idx, spark.createDataset(
+    val plans = executedPlans(Refresh.refreshPages(spark, idx, spark.createDataset(
       (pages.head.url +: added).map(u => page(u, html(l(190), s"${l(190)} ${l(2)}")))), idxCfg))
-      .flatMap(Plans.collect(_) { case w: WindowExec => w })
-    assert(all.exists(_.partitionSpec.nonEmpty), "fixture: the listener must see the commit's windows")
-    assert(!all.exists(_.partitionSpec.isEmpty),
-      s"an unpartitioned window ran: ${all.filter(_.partitionSpec.isEmpty).map(_.simpleString(200))}")
+    assert(plans.nonEmpty, "fixture: the listener must see the commit's queries")
+    val windows = plans.flatMap(Plans.collect(_) { case w: WindowExec => w })
+    assert(windows.isEmpty, s"a window ran: ${windows.map(_.simpleString(200))}")
     assert(nextOrdOf(idx) == pages.size + 2L)
+  }
+
+  test("a one-page refresh and a one-url delete each run a bounded number of Spark jobs") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-refresh-jobs").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    val l = RuDict.contentLemmas
+    val urls = pages.map(_.url).sorted.filter(termsOf(idx, _).nonEmpty)
+    val (_, refreshJobs) = JobCount(spark, "refresh-jobs")(Refresh.refreshPages(spark, idx,
+      spark.createDataset(Seq(page(urls(0), html(l(190), s"${l(190)} ${l(2)}")))), idxCfg))
+    val (_, deleteJobs) = JobCount(spark, "delete-jobs")(
+      Refresh.deletePages(spark, idx, Seq(urls(1)), idxCfg))
+    info(s"refresh $refreshJobs jobs, delete $deleteJobs jobs")
+    assert(refreshJobs <= RefreshJobCeiling, s"a one-page refresh ran $refreshJobs jobs")
+    assert(deleteJobs <= DeleteJobCeiling, s"a one-url delete ran $deleteJobs jobs")
+  }
+
+  test("a commit that changes nothing publishes nothing, and a live engine stays warm") {
+    spark.sparkContext.setLogLevel("WARN")
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-refresh-noop").toString
+    val idx = s"$work/idx"
+    val pages = buildSmall(work, idxCfg, 20)
+    val store = graft.store.TableStore.open(spark, idx)
+    val engine = new SearchEngine(spark, idx, s"$work/pages", ReferenceTfSum)
+    val q = RuDict.contentLemmas(5)
+    val top = engine.topK(q, 10)
+    assert(top.nonEmpty, "fixture: the query must match")
+    val v0 = store.version
+
+    Refresh.deletePages(spark, idx, Seq("https://site0.test/p/never-indexed"), idxCfg)
+    assert(store.version == v0, "a delete of an unknown url published a version")
+    val invalid = spark.createDataset(Seq(page(pages.head.url, html("x", RuDict.contentLemmas(190)))))
+      .withColumn("code", lit(404)).as[PageRow]
+    Refresh.refreshPages(spark, idx, invalid, idxCfg)
+    assert(store.version == v0, "a refresh of pages with an invalid code published a version")
+
+    val (again, jobs) = JobCount(spark, "warm-topk")(engine.topK(q, 10))
+    assert(again == top)
+    assert(jobs == 0, s"the live engine's warm topK ran $jobs jobs after a commit of nothing")
   }
 
   /** Scans of the `docs` files of `idx` in the executed plans of the
