@@ -128,8 +128,7 @@ object BenchExtra {
             val (n, b) = census(t)
             s""""$t":{"files":$n,"bytes":$b}"""
           }.mkString(",")
-          val headTerms = graft.store.TableStore.open(spark, idxDir)
-            .read("head_terms").count()
+          val headTerms = graft.store.TableStore.open(spark, idxDir).manifest.fold(0)(_.heads.size)
           // latency, same methodology as the frozen bench's section 3:
           // cold = first execution per fixture query (segment fetch jobs
           // included), warm = 4 repeated rounds (posting-cache hits)

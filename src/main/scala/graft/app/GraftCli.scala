@@ -104,7 +104,8 @@ object GraftCli {
       case "stats" :: indexDir :: Nil =>
         val m = graft.store.TableStore.open(spark, indexDir).manifest.getOrElse(
           sys.error(s"$indexDir holds no index commit manifest: rebuild it with `GraftCli build`"))
-        println(s"manifest v${m.version}: as_of batch ${m.asOf}")
+        println(s"manifest v${m.version}: as_of batch ${m.asOf}, ${m.heads.size} head terms, " +
+          s"prefetch hint of ${m.mids.size} terms")
         m.tables.toSeq.sortBy(_._1).foreach { case (t, meta) =>
           println(f"  $t%-12s ${meta.bytes}%,12d bytes live in ${meta.parts.size} parts")
         }

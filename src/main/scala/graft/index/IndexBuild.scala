@@ -114,26 +114,27 @@ object IndexBuild {
     else pages
 
   /** One analyzed row per valid page (F1: non-200/308 never indexed):
-    * (doc_id, url, site, lang, dl, terms = lemma → tf), lemmatized from
-    * the raw html. The build's pass; a refresh analyzes its pages with
-    * [[analyzeOne]] on the way to the driver. */
+    * (doc_id, url, site, lang, dl, terms = lemma → tf, warc_ts), lemmatized
+    * from the raw html. The build's pass; a refresh analyzes its pages
+    * with [[analyzeOne]] on the way to the driver. */
   def analyze(pages: Dataset[PageRow]): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
     filterValidCode(pages)
-      .select(col("url"), col("html"), col("lang"))
-      .as[(String, Array[Byte], String)]
-      .map { case (url, html, lang) => analyzeOne(url, html, lang) }
+      .select(col("url"), col("html"), col("lang"), unix_micros(col("warc_ts")))
+      .as[(String, Array[Byte], String, Option[Long])]
+      .map { case (url, html, lang, ts) => analyzeOne(url, html, lang, ts) }
       .toDF()
   }
 
-  /** One page's analyzed row. */
+  /** One page's analyzed row; `warc_ts` is its crawl time in epoch
+    * microseconds, None when the page carries none. */
   final case class Analyzed(doc_id: Long, url: String, site: String, lang: String,
-      dl: Long, terms: Map[String, Long])
+      dl: Long, terms: Map[String, Long], warc_ts: Option[Long])
 
-  def analyzeOne(url: String, html: Array[Byte], lang: String): Analyzed = {
+  def analyzeOne(url: String, html: Array[Byte], lang: String, warcTs: Option[Long]): Analyzed = {
     val counts = Lemmatizer.lemmaCountsFromHtml(html)
-    Analyzed(stableDocId(url), url, siteOf(url), lang, counts.valuesIterator.sum, counts)
+    Analyzed(stableDocId(url), url, siteOf(url), lang, counts.valuesIterator.sum, counts, warcTs)
   }
 
   /** Deterministic 63-bit doc id from url: Catalyst's xxhash64(url)
@@ -494,7 +495,9 @@ object IndexBuild {
   def docBucketOf(docId: Long, buckets: Int): Int = Math.floorMod(docId, buckets.toLong).toInt
 
   /** The `docs` rows of analyzed docs that carry their `ord`: one row per
-    * url, with its `db` partition. `terms` (the doc's distinct terms) is
+    * url, with its `db` partition and the crawl time of the indexed
+    * version (`warc_ts`, which a refresh compares against so an older
+    * crawl never replaces a newer one). `terms` (the doc's distinct terms) is
     * the FORWARD index that makes a later refresh/delete O(doc) instead
     * of O(corpus) — it names exactly the term buckets the doc's postings
     * live in, so a refresh rewrites only those partitions
@@ -504,53 +507,58 @@ object IndexBuild {
     * per-doc term vectors). */
   def docRows(analyzed: DataFrame, buckets: Int): DataFrame =
     analyzed.select(col("doc_id"), col("ord"), col("url"), col("site"), col("lang"),
-        col("dl"), map_keys(col("terms")).as("terms"))
+        timestamp_micros(col("warc_ts")).as("warc_ts"), col("dl"), map_keys(col("terms")).as("terms"))
       .withColumn("db", docBucketCol(buckets))
+
+  /** Tables of older layouts: `doc_terms` (now `docs.terms`), and
+    * `head_terms` and `mid_terms` (now manifest fields; their layout's
+    * `docs` has no `warc_ts`). */
+  private val RetiredTables = Seq("doc_terms", "head_terms", "mid_terms")
 
   /** The stats of manifest `m`, present once a build committed a
     * batch: an index dir without them (no manifest at all, or one written
     * before manifests existed), with posting lists in another
-    * [[PostingCodec.Format]] or with its docs' terms in a separate
-    * `doc_terms` table must be rebuilt. */
+    * [[PostingCodec.Format]] or naming a table of an older layout must be
+    * rebuilt. */
   def statsOf(m: Manifest, root: String): Stats = {
     val s = m.stats.getOrElse(throw new IllegalStateException(
       s"$root holds no index commit manifest: rebuild it with `GraftCli build`"))
     if (s.posting_format != PostingCodec.Format) throw new IllegalStateException(
       s"$root: manifest v${m.version} holds posting format ${s.posting_format}, " +
         s"this version reads ${PostingCodec.Format}: rebuild it with `GraftCli build`")
-    if (m.has("doc_terms")) throw new IllegalStateException(
-      s"$root: manifest v${m.version} keeps the docs' terms in a doc_terms table, " +
-        "this version reads them from docs: rebuild it with `GraftCli build`")
+    RetiredTables.find(m.has).foreach(t => throw new IllegalStateException(
+      s"$root: manifest v${m.version} names a $t table of an older layout: " +
+        "rebuild it with `GraftCli build`"))
     s
   }
 
-  /** Width of the persisted mid_terms prefetch-hint table: the number of
+  /** Width of the manifest's prefetch hint (`mids`): the number of
     * next-hottest non-head terms the engine prefetches after the head
     * terms at every load. */
   val MidTermsWidth = 256
 
-  /** Persist the top [[MidTermsWidth]] mid-df terms (hottest NON-head
-    * terms — heads are excluded by a broadcast anti-join against the
-    * persisted head set, so this stays correct whatever salt threshold a
-    * later refresh was configured with) as the engine's cold-start
-    * prefetch hint table. A bounded TakeOrdered over the tiny lemma_stats
-    * table as `c` has staged it so far — run on a refresh cadence, so
-    * engine reloads never aggregate the vocabulary. The stored df is an
-    * ORDERING hint only (the engine re-reads current dfs exactly). */
-  def writeMidTerms(c: Commit): Unit =
-    c.put(
-      c.store.readAt(c.current, "lemma_stats")
-        .groupBy("term").agg(sum(col("df")).as("df"))
-        .join(broadcast(c.read("head_terms").select("term")), Seq("term"), "left_anti")
-        .orderBy(col("df").desc, col("term"))
-        .limit(MidTermsWidth),
-      "mid_terms")
+  /** Set the manifest's prefetch hint to the top [[MidTermsWidth]] non-head
+    * terms by global df (heads are the manifest's head set, so this stays
+    * correct whatever salt threshold a later refresh was configured
+    * with). A bounded TakeOrdered over the lemma_stats `c` has staged so
+    * far — run on a refresh cadence, so engine reloads never aggregate the
+    * vocabulary. An ORDERING hint only: the engine re-reads current dfs
+    * exactly. */
+  def writeMidTerms(c: Commit): Unit = {
+    val mids = c.store.readAt(c.current, "lemma_stats")
+      .filter(!col("term").isin(c.base.heads: _*))
+      .groupBy("term").agg(sum(col("df")).as("df"))
+      .orderBy(col("df").desc, col("term"))
+      .limit(MidTermsWidth)
+      .collect().map(_.getString(0)).toSeq
+    c.update(_.copy(mids = mids))
+  }
 
   /** Full resumable build to `outDir`: one commit per batch — its
     * segments (`segments` at `batch=i`, or `index` for a single-batch
     * build), its sites' status rows and its lineage row, plus, with the
-    * first batch a run commits, the dims {docs, lemma_stats, head_terms,
-    * mid_terms} and the stats. Restart-safe: a batch whose
+    * first batch a run commits, the dims {docs, lemma_stats}, the stats
+    * and the manifest's head set and prefetch hint. Restart-safe: a batch whose
     * lineage row says COMPLETE is skipped, and a crashed batch left
     * nothing visible (SURVEY.md §7 H5). Before it returns — after every
     * batch, a stop or a resume with nothing left to build — the run folds
@@ -719,7 +727,7 @@ object IndexBuild {
     // 10^12 docs), and shipping it as a literal local relation makes the
     // salting join a broadcast with no extra scan or read-back job.
     // per-term global df, shared by the head/counts collect AND the
-    // mid_terms TakeOrdered below — cached so lemma_stats is scanned and
+    // prefetch-hint TakeOrdered below — cached so lemma_stats is scanned and
     // re-aggregated once, not once per consumer. Vocabulary-sized
     // (term, df) pairs: a few MB here, a few GB across a cluster at
     // 10^12 docs — well inside executor storage either way.
@@ -732,7 +740,7 @@ object IndexBuild {
         collect_list(when(col("df") > cfg.saltThresholdDf, col("term")))
           .as("head_terms"))
       .collect()(0)
-    val headArr: Seq[String] = headAgg.getSeq[String](2)
+    val headArr: Seq[String] = headAgg.getSeq[String](2).sorted
     val headDf = headArr.toDF("term")
 
     /** Stage the dims into `c`, each from its own thread. */
@@ -751,21 +759,20 @@ object IndexBuild {
         "docs", Seq("db"))),
       Future(c.put(lemmaStats.repartition(cfg.buckets, col("bucket")),
         "lemma_stats", Seq("bucket"))),
-      // head_terms is read by the query engine / refresh path; the build
-      // itself salts from the in-memory literal
-      Future(c.put(headDf, "head_terms")),
-      // mid_terms: the next-hottest terms below the salt threshold,
-      // persisted as a PREFETCH HINT so the engine's cold-start warm
-      // never runs an O(vocabulary) aggregation per reload. Ordering
-      // hint only — the engine re-derives the terms' CURRENT dfs through
-      // its exact lookup path. At build time the head set IS
+      // the head set goes into the manifest for the engine and refresh
+      // (the build itself salts from the in-memory literal), with the
+      // prefetch hint: the next-hottest terms below the salt threshold,
+      // so the engine's cold-start warm never runs an O(vocabulary)
+      // aggregation per reload. At build time the head set IS
       // `df > saltThresholdDf` over this very termDf, so the filter is
-      // exactly writeMidTerms's anti-join against the head table (that
-      // function remains the refresh-cadence path).
-      Future(c.put(
-        termDf.filter(col("df") <= cfg.saltThresholdDf)
-          .orderBy(col("df").desc, col("term")).limit(MidTermsWidth),
-        "mid_terms")))
+      // exactly writeMidTerms's exclusion of the head set (that function
+      // remains the refresh-cadence path).
+      Future {
+        val mids = termDf.filter(col("df") <= cfg.saltThresholdDf)
+          .orderBy(col("df").desc, col("term")).limit(MidTermsWidth)
+          .select("term").as[String].collect().toSeq
+        c.update(_.copy(heads = headArr, mids = mids))
+      })
 
     // ── per-site status lifecycle (reference site.status / status_time /
     // last_error; Site.java:16-34, SiteServiceImpl.java:83-91): a batch's

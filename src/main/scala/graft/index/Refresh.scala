@@ -92,13 +92,15 @@ object Refresh {
       .as[PageRow](Encoders.product[PageRow])
   }
 
-  /** An old version: the fields of its `docs` row a commit reads. */
+  /** An old version: the fields of its `docs` row a commit reads, its
+    * `warc_ts` in epoch microseconds. */
   final case class OldVersion(doc_id: Long, ord: Long, site: String, dl: Long,
-      terms: Seq[String])
+      terms: Seq[String], warc_ts: Option[Long])
 
-  /** A `docs` row ([[IndexBuild.docRows]]). */
+  /** A `docs` row ([[IndexBuild.docRows]]), its `warc_ts` in epoch
+    * microseconds. */
   final case class DocRow(doc_id: Long, ord: Long, url: String, site: String,
-      lang: String, dl: Long, terms: Seq[String], db: Int)
+      lang: String, warc_ts: Option[Long], dl: Long, terms: Seq[String], db: Int)
 
   /** A `lemma_stats` row. */
   final case class LemmaStat(term: String, site: String, df: Long, bucket: Int)
@@ -123,13 +125,13 @@ object Refresh {
       .select(col("url"), col("html"), col("lang"), unix_micros(col("warc_ts")), valid)
       .as[(String, Array[Byte], String, Option[Long], Boolean)]
       .map { case (url, html, lang, ts, ok) =>
-        (IndexBuild.analyzeOne(url, if (ok) html else null, lang), ts.getOrElse(Long.MinValue),
+        (IndexBuild.analyzeOne(url, if (ok) html else null, lang, ts),
           Option(html).fold(-1)(_.length), ok)
       }
       .collect()
     val latest = versions.groupBy(_._1.url).values
-      .map(_.maxBy { case (_, ts, bytes, _) => (ts, bytes) })
-      .collect { case (v, _, _, true) => v }.toSeq
+      .map(_.maxBy { case (v, bytes, _) => (crawled(v.warc_ts), bytes) })
+      .collect { case (v, _, true) => v }.toSeq
     commitDelta(spark, outDir, cfg0, latest.map(_.doc_id), Some(latest),
       batch => s"refresh batch $batch")
   }
@@ -140,11 +142,17 @@ object Refresh {
     commitDelta(spark, outDir, cfg0, urls.map(IndexBuild.stableDocId).distinct, None,
       batch => s"delete batch $batch (${urls.size} urls)")
 
+  /** A crawl time for ordering versions: a missing one sorts oldest. */
+  private def crawled(warcTs: Option[Long]): Long = warcTs.getOrElse(Long.MinValue)
+
   /** The one commit behind refresh and delete. `ids` are the doc ids (url
     * hashes) whose indexed version dies; `added` holds the new versions
     * (a refresh — its `ids` are exactly their doc ids) or is None (a
-    * delete). Every read is of the commit's base version. A commit that
-    * finds no old version and adds none publishes nothing. */
+    * delete). A new version crawled strictly before the indexed one is
+    * dropped with it, so that url is neither replaced nor deleted: an
+    * older crawl arriving in a later batch never replaces a newer one.
+    * Every read is of the commit's base version. A commit that finds no
+    * old version and adds none publishes nothing. */
   private def commitDelta(spark: SparkSession, outDir: String,
       cfg0: IndexBuild.Config, ids: Seq[Long], added: Option[Seq[IndexBuild.Analyzed]],
       label: Int => String): Unit = {
@@ -158,9 +166,17 @@ object Refresh {
         else c.read("docs")
           .filter(col("db").isin(ids.map(IndexBuild.docBucketOf(_, cfg.buckets)).distinct: _*) &&
             col("doc_id").isin(ids: _*))
-          .select("doc_id", "ord", "site", "dl", "terms").as[OldVersion].collect().toSeq
-      if (old.nonEmpty || added.exists(_.nonEmpty))
-        applyDelta(c, stats, cfg, old, added, label)
+          .select(col("doc_id"), col("ord"), col("site"), col("dl"), col("terms"),
+            unix_micros(col("warc_ts")).as("warc_ts"))
+          .as[OldVersion].collect().toSeq
+      val indexed = old.map(o => o.doc_id -> crawled(o.warc_ts)).toMap
+      val news = added.map(_.filter(v => indexed.get(v.doc_id).forall(_ <= crawled(v.warc_ts))))
+      val dying = news.fold(old) { vs =>
+        val ids = vs.map(_.doc_id).toSet
+        old.filter(o => ids(o.doc_id))
+      }
+      if (dying.nonEmpty || news.exists(_.nonEmpty))
+        applyDelta(c, stats, cfg, dying, news, label)
     }
   }
 
@@ -194,7 +210,7 @@ object Refresh {
     // so is a bucket whose lists all died), and a list only the new
     // versions hold is created
     if (buckets.nonEmpty) {
-      val heads = c.read("head_terms").select("term").as[String].collect().toSet
+      val heads = c.base.heads.toSet
       def listOf(term: String, site: String, ord: Long) =
         (term, IndexBuild.shardOf(heads(term), site, ord, cfg))
       val dead = old.flatMap(o => o.terms.map(t => listOf(t, o.site, o.ord) -> o.ord))
@@ -244,7 +260,8 @@ object Refresh {
     c.overwrite(
       (if (gone.isEmpty) kept else kept.filter(!col("doc_id").isin(gone: _*)))
         .unionByName(news.map(v => DocRow(v.doc_id, ordOf(v.doc_id), v.url, v.site, v.lang,
-          v.dl, v.terms.keys.toSeq, IndexBuild.docBucketOf(v.doc_id, cfg.buckets))).toDF())
+          v.warc_ts, v.dl, v.terms.keys.toSeq, IndexBuild.docBucketOf(v.doc_id, cfg.buckets))).toDF()
+          .withColumn("warc_ts", timestamp_micros(col("warc_ts"))))
         .repartition(col("db")),
       "docs", Seq("db"), dbs.map(b => s"db=$b"))
 
@@ -327,6 +344,7 @@ object Refresh {
     finally bc.destroy()
   }
 
-  /** Prefetch-hint (mid_terms) refresh cadence, in ingest batches. */
+  /** Prefetch-hint (the manifest's `mids`) refresh cadence, in ingest
+    * batches. */
   private val HintEvery = 8
 }

@@ -120,7 +120,7 @@ final class SearchEngine(
       siteGroups = stats.site_groups,
       buckets = stats.buckets,
       docsDf = docsDf, lemmaStatsDf = lemmaStatsDf, segmentsDf = segmentsDf,
-      headTerms = store.readAt(m, "head_terms").as[String].collect().toSet,
+      headTerms = m.heads.toSet,
       nextOrd = stats.next_ord.toInt,
       normsRead = normsRead,
       manifest = m)
@@ -172,75 +172,50 @@ final class SearchEngine(
     * never collects more than it can cache — at full scale a single
     * mega-term's segments can exceed the whole budget and must stay on
     * the distributed path. After the heads, the REMAINING budget is
-    * filled with the next-hottest MID terms by global df, read from the
-    * persisted `mid_terms` hint table (maintained at build/refresh
-    * cadence — cold-query tails are dominated by high-df terms, so this
-    * is the principled generalization of "prefetch what cold queries
-    * will touch", not a fixture-specific tune; and reading a hint table
-    * keeps every reload O(bounded) instead of O(vocabulary)). About
-    * five load-time jobs total. */
+    * filled with the next-hottest MID terms by global df, named by the
+    * manifest's prefetch hint (maintained at build/refresh cadence —
+    * cold-query tails are dominated by high-df terms, so this is the
+    * principled generalization of "prefetch what cold queries will
+    * touch", not a fixture-specific tune; and a hint in the manifest
+    * keeps every reload O(bounded) instead of O(vocabulary)). Heads and
+    * mids share one df lookup, one sizes aggregation and one fetch:
+    * three load-time queries in all. */
   private def prefetchHot(): Unit =
     if (headTerms.nonEmpty) {
       val hs = headTerms.toSeq.sorted
-      globalDf(hs) // df warm: one aggregation job
-
-      /** Fetch the given terms' segments into the posting cache, largest
-        * prefix (by ascending size) that fits `budget`; terms with no
-        * segment rows cache as empty iff `cacheAbsent`. Returns the bytes
-        * actually consumed. */
-      def fetchInto(terms: Seq[String], budget: Long, cacheAbsent: Boolean): Long = {
-        if (terms.isEmpty || budget <= 0) return 0L
+      val mids = state.manifest.mids
+      val terms = hs ++ mids
+      // exact current dfs: the hint is an ordering only, so its staleness
+      // between rewrites cannot touch scoring
+      globalDf(terms)
+      if (postingCache.budget > 0) {
         val buckets = terms.map(IndexBuild.termBucket(_, bucketCount)).distinct
         val segs = segmentsDf
           .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
         val sizes = segs
           .groupBy("term").agg(sum(length(col("postings"))).as("bytes"))
-          .as[(String, Long)].collect().sortBy(_._2)
-        var left = budget
-        val chosen = sizes.takeWhile { case (_, b) =>
-          left -= b; left >= 0
+          .as[(String, Long)].collect().toMap
+        /** The largest prefix of `ts` by ascending size that fits `budget`. */
+        def fit(ts: Seq[String], budget: Long): Seq[(String, Long)] = {
+          var left = budget
+          ts.flatMap(t => sizes.get(t).map(t -> _)).sortBy(_._2)
+            .takeWhile { case (_, b) => left -= b; left >= 0 }
         }
-        if (chosen.nonEmpty) {
-          val cs = chosen.map(_._1)
-          val rows = segs
-            .filter(col("term").isin(cs: _*))
+        val heads = fit(hs, postingCache.budget)
+        val budgetLeft = postingCache.budget - heads.map(_._2).sum
+        val midsIn = if (budgetLeft > (1L << 20)) fit(mids, budgetLeft) else Nil
+        val chosen = heads ++ midsIn
+        val rows =
+          if (chosen.isEmpty) Map.empty[String, Seq[(String, Int, Array[Byte])]]
+          else segs.filter(col("term").isin(chosen.map(_._1): _*))
             .select("term", "shard", "postings")
-            .as[(String, Int, Array[Byte])].collect().toSeq
-          rows.groupBy(_._1).foreach { case (t, rs) =>
-            postingCache.put(t, rs.map(r => (r._2, r._3)))
-          }
-        }
-        if (cacheAbsent) {
-          val present = sizes.map(_._1).toSet
-          terms.filterNot(present.contains)
-            .foreach(t => postingCache.put(t, Seq.empty))
-        }
-        chosen.map(_._2).sum
-      }
-
-      // heads first (absent heads — all postings deleted — cache empty)
-      val usedByHeads = fetchInto(hs, postingCache.budget, cacheAbsent = true)
-
-      // mid-term extension: the IndexBuild.MidTermsWidth next-hottest
-      // terms by global df, into whatever prefetch budget the heads left
-      // over. The term LIST comes from the persisted `mid_terms` hint
-      // table (maintained by IndexBuild.writeMidTerms at build +
-      // refresh cadence) — a bounded tiny-table read, so engine reloads
-      // never run an O(vocabulary) aggregation (round-5 ADVICE: the former
-      // sweep shuffled the whole vocabulary on every refresh-triggered
-      // reload). Their dfs are re-derived through globalDf's exact
-      // bucket-pruned lookups, so hint staleness between rewrites
-      // cannot touch scoring.
-      val budgetLeft = postingCache.budget - usedByHeads
-      if (budgetLeft > (1L << 20)) {
-        val mids = store.readAt(state.manifest, "mid_terms")
-          .orderBy(col("df").desc, col("term")).limit(IndexBuild.MidTermsWidth)
-          .select("term").as[String].collect().toSeq
-        if (mids.nonEmpty) {
-          globalDf(mids) // exact current dfs — one bucket-pruned agg, cached
-          fetchInto(mids, budgetLeft, cacheAbsent = false)
-          ()
-        }
+            .as[(String, Int, Array[Byte])].collect().toSeq.groupBy(_._1)
+        def put(ts: Seq[(String, Long)]): Unit =
+          ts.foreach { case (t, _) => postingCache.put(t, rows(t).map(r => (r._2, r._3))) }
+        // heads first; absent heads — all postings deleted — cache empty
+        put(heads)
+        hs.filterNot(sizes.contains).foreach(t => postingCache.put(t, Seq.empty))
+        put(midsIn)
       }
     }
 

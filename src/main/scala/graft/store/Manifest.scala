@@ -5,7 +5,7 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** One live directory of a table, relative to the store root:
   * `<table>/<partition path>/c=<id>` (`docs/db=3/c=k0f…`,
-  * `segments/batch=5/bucket=2/c=k1a…`, `head_terms/c=k9b…`). A commit
+  * `segments/batch=5/bucket=2/c=k1a…`, `site_status/c=k9b…`). A commit
   * never writes into a published directory; it stages a new one. */
 final case class Part(dir: String, bytes: Long) {
   /** The partition path inside the table (`db=3`, `batch=5/bucket=2`),
@@ -49,14 +49,21 @@ final case class Lineage(
   * sees is what one manifest names: the live directories and schema of
   * each table, the stats, `asOf` (the batch of the last commit that
   * changed `index`, -1 before any), `batch` (the highest batch id a
-  * commit has used) and the lineage rows. */
+  * commit has used), the lineage rows and two bounded term lists:
+  * `heads`, the salted head terms (sorted; set with the stats by the
+  * build's first commit and carried unchanged by every later one), and
+  * `mids`, the engine's prefetch hint — at most `IndexBuild.MidTermsWidth`
+  * non-head terms in (df desc, term) order, as of the commit that last
+  * wrote it. */
 final case class Manifest(
     version: Long,
     tables: Map[String, TableMeta],
     stats: Option[Stats],
     asOf: Int,
     batch: Int,
-    lineage: Seq[Lineage]) {
+    lineage: Seq[Lineage],
+    heads: Seq[String],
+    mids: Seq[String]) {
 
   def has(table: String): Boolean = table match {
     case "stats" => stats.isDefined
@@ -70,11 +77,15 @@ final case class Manifest(
 }
 
 object Manifest {
-  val empty: Manifest = Manifest(0L, Map.empty, None, -1, -1, Nil)
+  val empty: Manifest = Manifest(0L, Map.empty, None, -1, -1, Nil, Nil, Nil)
 
   private val mapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
 
   def toJson(m: Manifest): String = mapper.writeValueAsString(m)
 
-  def fromJson(json: String): Manifest = mapper.readValue(json, classOf[Manifest])
+  /** A list the JSON does not carry reads as empty. */
+  def fromJson(json: String): Manifest = {
+    val m = mapper.readValue(json, classOf[Manifest])
+    m.copy(heads = Option(m.heads).getOrElse(Nil), mids = Option(m.mids).getOrElse(Nil))
+  }
 }

@@ -13,9 +13,8 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * One store instance is rooted at a directory, and a root is one of two
   * kinds:
   *  - an INDEX root holds `_manifest/v<N>.json` files. Every index table
-  *    (`docs`, `lemma_stats`, `index`, `segments`, `head_terms`,
-  *    `mid_terms`, `site_status`) is read
-  *    through the latest manifest with its stored schema, and every
+  *    (`docs`, `lemma_stats`, `index`, `segments`, `site_status`) is
+  *    read through the latest manifest with its stored schema, and every
   *    change is a copy-on-write [[commit]]: the op stages new
   *    directories under fresh names (`docs/db=3/c=<id>`), then the
   *    manifest naming them is published put-if-absent under a per-root
@@ -23,7 +22,8 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   *    superseded directories, older manifests beyond a few, and anything
   *    a crashed commit staged. A commit that loses the publish race
   *    re-runs its op from the new version. `stats` and `lineage` live in
-  *    the manifest itself and read as tables;
+  *    the manifest itself and read as tables, and the bounded head-term
+  *    set and prefetch hint live there as fields (`heads`, `mids`);
   *  - a CORPUS root (`table = ""` is the root itself) is plain parquet:
   *    `replace` stages aside and promotes with two renames, and reads
   *    converge a crashed replace.
@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   *    the next version, which fails if it exists);
   *  - a `Part` directory → a data file of a manifest list entry; the
   *    per-table schema → the table schema; `stats`/`lineage` → snapshot
-  *    summary properties;
+  *    summary properties; `heads`/`mids` → table properties;
   *  - `commit` → one snapshot commit; its retry on a lost race →
   *    Iceberg's optimistic retry (`commit.retry.num-retries`);
   *  - GC → `expire_snapshots` + `remove_orphan_files`;

@@ -61,7 +61,9 @@ object IndexStream {
     *
     * A url appearing in SEVERAL feed files of one trigger (rapid
     * re-crawl) resolves to its latest `warc_ts` version
-    * (`Refresh.latestPerUrl`, which the refresh path applies itself). */
+    * (`Refresh.latestPerUrl`, which the refresh path applies itself); a
+    * version older than the indexed one, arriving in a later trigger,
+    * is dropped by the refresh commit. */
   def ingestBatch(spark: SparkSession, indexDir: String,
       batch: Dataset[PageRow], cfg: IndexBuild.Config): Unit = {
     if (batch.isEmpty) return // empty trigger — nothing to commit

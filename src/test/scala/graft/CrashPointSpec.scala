@@ -114,7 +114,8 @@ class CrashPointSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def page(url: String, body: String): PageRow = {
     val h = s"<html><head><title>t</title></head><body><p>$body</p></body></html>"
       .getBytes(StandardCharsets.UTF_8)
-    PageRow(url, new java.sql.Timestamp(CorpusGen.Epoch), h,
+    // a re-crawl, a day after the generated pages' crawl times
+    PageRow(url, new java.sql.Timestamp(CorpusGen.Epoch + 86400000L), h,
       HtmlText.cleanToText(new String(h, StandardCharsets.UTF_8)), "ru")
   }
 
@@ -126,7 +127,8 @@ class CrashPointSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Every table of the latest manifest except the lineage and status
-    * logs (they carry timestamps), as sorted row hashes, plus the stats. */
+    * logs (they carry timestamps), as sorted row hashes, plus the stats,
+    * the head set and the prefetch hint in its order. */
   private def tables(dir: String): Map[String, Seq[Long]] = {
     import spark.implicits._
     val store = TableStore.open(spark, dir)
@@ -135,7 +137,8 @@ class CrashPointSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hashes = names.map(t => store.readAt(m, t).selectExpr(s"'$t'", "xxhash64(*)"))
       .reduce(_ union _).as[(String, Long)].collect().groupBy(_._1)
     names.map(t => t -> hashes.get(t).fold(Seq.empty[Long])(_.map(_._2).toSeq.sorted)).toMap +
-      ("stats" -> m.stats.toSeq.map(_.hashCode.toLong))
+      ("stats" -> m.stats.toSeq.map(_.hashCode.toLong)) +
+      ("heads" -> m.heads.map(_.hashCode.toLong)) + ("mids" -> m.mids.map(_.hashCode.toLong))
   }
 
   private val queries = {

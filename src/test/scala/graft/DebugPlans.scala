@@ -32,7 +32,8 @@ object DebugPlans {
     segs.explain("formatted")
 
     println("===== segments build (expect ONE Exchange) =====")
-    val head = spark.read.parquet(s"$work/idx/head_terms")
+    import spark.implicits._
+    val head = graft.store.TableStore.open(spark, s"$work/idx").manifest.get.heads.toDF("term")
     val post = IndexBuild.analyze(ds)
       .select(col("doc_id").as("ord"), col("site"), col("dl"), explode(col("terms")).as(Seq("term", "tf")))
     val plan = IndexBuild.buildSegments(post, head, IndexBuild.Config(), 8)

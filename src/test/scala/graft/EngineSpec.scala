@@ -242,7 +242,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("salted head terms exist and shard-local conjunction still matches the oracle") {
     built
-    val heads = spark.read.parquet(s"$indexDir/head_terms").collect().map(_.getString(0))
+    val heads = IndexDir.heads(spark, indexDir)
     assert(heads.nonEmpty, "fixture should produce salted head terms")
     // two salted-but-not-pruned head terms ⇒ multi-shard grouping with
     // two salted cursors per shard (the hardest conjunction layout)
@@ -322,8 +322,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("prefetch: first-ever head-term query on a fresh engine runs ZERO Spark jobs") {
     built
-    val heads = spark.read.parquet(s"$indexDir/head_terms")
-      .collect().map(_.getString(0))
+    val heads = IndexDir.heads(spark, indexDir)
     // survive the 80% stop-lemma prune so the conjunction actually runs,
     // and lemmatize to themselves (a head term whose SURFACE form maps to
     // a different lemma would be a legitimate cache miss, not a prefetch
@@ -428,24 +427,22 @@ class EngineSpec extends AnyFunSuite {
   test("mid_terms prefetch hint: written at build, excludes every head term, top-df ordered, bounded") {
     built
     import org.apache.spark.sql.functions.{col, sum}
-    val heads = spark.read.parquet(s"$indexDir/head_terms")
-      .collect().map(_.getString(0)).toSet
-    val mid = spark.read.parquet(s"$indexDir/mid_terms")
-      .orderBy(col("df").desc, col("term"))
-      .collect().map(r => (r.getAs[String]("term"), r.getAs[Long]("df")))
+    val m = graft.store.TableStore.open(spark, indexDir).manifest.get
+    val heads = m.heads.toSet
+    val mid = m.mids
     assert(mid.nonEmpty && mid.length <= IndexBuild.MidTermsWidth,
       s"hint width out of bounds: ${mid.length}")
-    assert(mid.forall { case (t, _) => !heads.contains(t) },
-      "the hint table must exclude salted head terms (the engine prefetches those separately)")
+    assert(mid.forall(t => !heads.contains(t)),
+      "the hint must exclude salted head terms (the engine prefetches those separately)")
     // the hint IS the global-df top of the non-head vocabulary
     val expected = spark.read.parquet(s"$indexDir/lemma_stats")
       .groupBy("term").agg(sum(col("df")).as("df"))
       .filter(!col("term").isin(heads.toSeq: _*))
       .orderBy(col("df").desc, col("term"))
       .limit(mid.length)
-      .collect().map(r => (r.getAs[String]("term"), r.getAs[Long]("df")))
-    assert(mid.toSeq == expected.toSeq,
-      "mid_terms must be exactly the top-df non-head terms in (df desc, term) order")
+      .collect().map(_.getAs[String]("term"))
+    assert(mid == expected.toSeq,
+      "the hint must be exactly the top-df non-head terms in (df desc, term) order")
   }
 
   test("the engine caches only the docs columns it reads: ord, url, site") {

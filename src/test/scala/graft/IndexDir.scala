@@ -14,6 +14,10 @@ object IndexDir {
   def stats(spark: SparkSession, root: String): Row =
     TableStore.open(spark, root).read("stats").collect()(0)
 
+  /** The salted head terms the latest manifest carries. */
+  def heads(spark: SparkSession, root: String): Seq[String] =
+    TableStore.open(spark, root).manifest.get.heads
+
   /** Every regular file under `root` that the latest manifest does not
     * reference; manifest files and other `_`-prefixed root entries
     * (checkpoints, markers) aside. */

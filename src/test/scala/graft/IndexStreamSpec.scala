@@ -146,9 +146,11 @@ class IndexStreamSpec extends AnyFunSuite {
     val l = RuDict.contentLemmas
     val base = CorpusGen.generate(spark, CorpusGen.Config(2, 30)).collect().toSeq
     IndexStream.ingestBatch(spark, idx, spark.createDataset(base), cfg)
-    // a re-crawl of a known url and a url the index has not seen
+    // a re-crawl of a known url (a day after the generated crawl) and a
+    // url the index has not seen
     val batch = Seq(
-      page(base.map(_.url).sorted.apply(3), html("снова", s"${l(190)} ${l(0)} ${l(2)}")),
+      page(base.map(_.url).sorted.apply(3), html("снова", s"${l(190)} ${l(0)} ${l(2)}"),
+        tsOffset = 86400000L),
       page("https://site1.test/p/replayed", html("новая", s"${l(191)} ${l(0)} ${l(0)}")))
 
     val store = TableStore.open(spark, idx)
@@ -175,6 +177,7 @@ class IndexStreamSpec extends AnyFunSuite {
 
   test("the HintEvery-th refresh rewrites mid_terms, and the new hint excludes every head term") {
     spark.sparkContext.setLogLevel("WARN")
+    import org.apache.spark.sql.functions.{col, sum}
     import spark.implicits._
     val work = Files.createTempDirectory("graft-stream-hint").toString
     val idx = s"$work/idx"
@@ -183,8 +186,8 @@ class IndexStreamSpec extends AnyFunSuite {
     val base = CorpusGen.generate(spark, CorpusGen.Config(2, 30)).collect().toSeq
     IndexStream.ingestBatch(spark, idx, spark.createDataset(base), cfg) // batch 0
     val store = TableStore.open(spark, idx)
-    def hintParts() = store.manifest.get.parts("mid_terms")
-    val bootHint = hintParts()
+    def hint() = store.manifest.get.mids
+    val bootHint = hint()
     // a lemma no page holds yet: it enters the hint only with a rewrite
     val used = store.read("lemma_stats").select("term").as[String].collect().toSet
     val fresh = (150 until 200).map(l).find(t => !used(t))
@@ -195,15 +198,56 @@ class IndexStreamSpec extends AnyFunSuite {
     // batches 1-7 stay inside the first HintEvery = 8 window
     for (i <- 1 to 7) {
       ingest(i)
-      assert(hintParts() == bootHint, s"refresh batch $i must not rewrite the hint")
+      assert(hint() == bootHint, s"refresh batch $i must not rewrite the hint")
+      assert(!hint().contains(fresh), s"refresh batch $i: the unrewritten hint holds $fresh")
     }
     ingest(8)
-    assert(hintParts() != bootHint, "the 8th refresh batch must rewrite the hint")
-    val hint = store.read("mid_terms").select("term", "df").as[(String, Long)].collect().toMap
-    val heads = store.read("head_terms").as[String].collect().toSet
+    assert(hint() != bootHint, "the 8th refresh batch must rewrite the hint")
+    val m = store.manifest.get
+    val heads = m.heads.toSet
     assert(heads.nonEmpty, "fixture: the index must have head terms")
-    assert(hint.keySet.intersect(heads).isEmpty, s"head terms in the hint: ${hint.keySet.intersect(heads)}")
-    assert(hint.get(fresh).contains(8L),
-      s"the hint must carry the df of its own commit's lemma_stats: ${hint.get(fresh)}")
+    assert(m.mids.toSet.intersect(heads).isEmpty, s"head terms in the hint: ${m.mids.toSet.intersect(heads)}")
+    // the hint is its own commit's lemma_stats: the top non-head terms in
+    // (df desc, term) order, `fresh` where its df of 8 puts it
+    val top = store.readAt(m, "lemma_stats").groupBy("term").agg(sum(col("df")).as("df"))
+      .filter(!col("term").isin(heads.toSeq: _*))
+      .orderBy(col("df").desc, col("term")).limit(IndexBuild.MidTermsWidth)
+      .as[(String, Long)].collect().toSeq
+    assert(top.find(_._1 == fresh).map(_._2).contains(8L),
+      s"fixture: $fresh must rank in its commit's top non-head terms with df 8")
+    assert(m.mids == top.map(_._1),
+      "the hint must be the top non-head terms of its own commit's lemma_stats")
+  }
+
+  test("an older crawl of a url ingested in a later batch never replaces the newer indexed one") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-stream-order").toString
+    val idx = s"$work/idx"
+    val cfg = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, buckets = 16)
+    val l = RuDict.contentLemmas
+    val base = CorpusGen.generate(spark, CorpusGen.Config(2, 20)).collect().toSeq
+    IndexStream.ingestBatch(spark, idx, spark.createDataset(base), cfg)
+    val url = "https://site0.test/p/reordered"
+    val (markerOld, markerNew) = (l(185), l(187))
+    val older = page(url, html("старая", s"$markerOld ${l(6)}"))
+    val newer = page(url, html("новая", s"$markerNew ${l(6)}"), tsOffset = 60000L)
+    IndexStream.ingestBatch(spark, idx, spark.createDataset(Seq(newer)), cfg)
+    val store = TableStore.open(spark, idx)
+    val v = store.version
+    IndexStream.ingestBatch(spark, idx, spark.createDataset(Seq(older)), cfg)
+    assert(store.version == v, "an older crawl of an indexed url must publish nothing")
+
+    def indexed() = store.read("docs").filter($"url" === url)
+      .select("warc_ts", "terms").as[(java.sql.Timestamp, Seq[String])].collect().toSeq
+    assert(indexed().map { case (ts, terms) => (ts, terms.contains(markerNew), terms.contains(markerOld)) } ==
+      Seq((newer.warc_ts, true, false)), s"the newer version must stay indexed: ${indexed()}")
+
+    // an equal crawl time replaces: a re-crawl at the indexed time
+    val again = page(url, html("снова", s"$markerOld ${l(6)}"), tsOffset = 60000L)
+    IndexStream.ingestBatch(spark, idx, spark.createDataset(Seq(again)), cfg)
+    assert(indexed().map { case (_, terms) => (terms.contains(markerNew), terms.contains(markerOld)) } ==
+      Seq((false, true)),
+      s"a version crawled at the indexed time must replace it: ${indexed()}")
   }
 }

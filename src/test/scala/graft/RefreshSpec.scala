@@ -29,14 +29,22 @@ class RefreshSpec extends AnyFunSuite {
   // the jobs of a one-page refresh and a one-url delete on `buildSmall`
   private val RefreshJobCeiling = 12
   private val DeleteJobCeiling = 9
+  // the jobs of an engine open and of a live engine's first search after
+  // a one-page refresh, on `buildSmall`
+  private val OpenJobCeiling = 8
+  private val FirstSearchJobCeiling = 12
   private val idxCfg = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 2, buckets = 16)
 
   private def html(title: String, body: String): Array[Byte] =
     s"<html><head><title>$title</title></head><body><p>$body</p></body></html>"
       .getBytes(StandardCharsets.UTF_8)
 
+  // a re-crawl: a day after the generated pages' crawl times, so a
+  // refresh replaces their versions (an older crawl would not)
+  private val Recrawl = CorpusGen.Epoch + 86400000L
+
   private def page(url: String, h: Array[Byte]): PageRow =
-    PageRow(url, new java.sql.Timestamp(CorpusGen.Epoch), h,
+    PageRow(url, new java.sql.Timestamp(Recrawl), h,
       HtmlText.cleanToText(new String(h, StandardCharsets.UTF_8)), "ru")
 
   test("refresh + delete keep the engine rank-identical to the modified-corpus oracle") {
@@ -499,7 +507,7 @@ class RefreshSpec extends AnyFunSuite {
       .filter(col("dl") > 0).orderBy("url").select("url").as[String].head()
     val older = page(targetUrl, html(oldTerm, s"$oldTerm $oldTerm ${l(2)}"))
     val newer = page(targetUrl, html(newTerm, s"$newTerm $newTerm ${l(2)}"))
-      .copy(warc_ts = new java.sql.Timestamp(CorpusGen.Epoch + 60000L))
+      .copy(warc_ts = new java.sql.Timestamp(Recrawl + 60000L))
     Refresh.refreshPages(spark, idx, spark.createDataset(Seq(newer, older)), cfgP)
 
     val st = IndexDir.stats(spark, idx)
@@ -744,6 +752,28 @@ class RefreshSpec extends AnyFunSuite {
     info(s"refresh $refreshJobs jobs, delete $deleteJobs jobs")
     assert(refreshJobs <= RefreshJobCeiling, s"a one-page refresh ran $refreshJobs jobs")
     assert(deleteJobs <= DeleteJobCeiling, s"a one-url delete ran $deleteJobs jobs")
+  }
+
+  test("an engine open and a live engine's first search after a one-page refresh each run a bounded number of Spark jobs") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-engine-jobs").toString
+    val idx = s"$work/idx"
+    // a salt threshold low enough for head terms: the load prefetches them
+    val cfg = idxCfg.copy(saltThresholdDf = 10L)
+    val pages = buildSmall(work, cfg, 20)
+    assert(IndexDir.heads(spark, idx).nonEmpty, "fixture: the index must have head terms")
+    val l = RuDict.contentLemmas
+    val (engine, openJobs) = JobCount(spark, "engine-open")(
+      new SearchEngine(spark, idx, s"$work/pages", graft.core.Bm25()))
+    val q = s"${l(1)} ${l(30)}"
+    assert(engine.search(q, 0, 10).count > 0, "fixture: the query must match")
+    Refresh.refreshPages(spark, idx, spark.createDataset(Seq(
+      page(pages.map(_.url).min, html(l(190), s"${l(190)} ${l(2)}")))), cfg)
+    val (_, searchJobs) = JobCount(spark, "first-search")(engine.search(q, 0, 10))
+    info(s"engine open $openJobs jobs, first search after a refresh $searchJobs jobs")
+    assert(openJobs <= OpenJobCeiling, s"an engine open ran $openJobs jobs")
+    assert(searchJobs <= FirstSearchJobCeiling, s"the first search after a refresh ran $searchJobs jobs")
   }
 
   test("a commit that changes nothing publishes nothing, and a live engine stays warm") {
@@ -1160,21 +1190,23 @@ class RefreshSpec extends AnyFunSuite {
     assert(filesUnder(idx) == before, "a refused operation must not touch the index dir")
   }
 
-  test("a manifest that names a doc_terms table fails open, refresh, delete and a resumed build with rebuild, touching no file") {
+  /** Publish the latest manifest of a fresh index again with `edit`
+    * applied, as an older layout would have written it; open, refresh,
+    * delete and a resumed build must all refuse it with "rebuild" and
+    * touch no file. */
+  private def refusesOldLayout(name: String)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-doc-terms-manifest").toString
+    val work = Files.createTempDirectory(s"graft-$name-manifest").toString
     val idx = s"$work/idx"
     val pages = buildSmall(work, idxCfg, 20)
-    // the fixture: the latest manifest as a version that kept the docs'
-    // terms in their own table published it
     val v = graft.store.TableStore.open(spark, idx).version
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val json = mapper.readTree(Files.readAllBytes(java.nio.file.Paths.get(s"$idx/_manifest/v$v.json")))
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     json.put("version", v + 1)
-    val tables = json.get("tables").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    tables.set[com.fasterxml.jackson.databind.JsonNode]("doc_terms", tables.get("docs").deepCopy())
+    edit(json)
     Files.write(java.nio.file.Paths.get(s"$idx/_manifest/v${v + 1}.json"), mapper.writeValueAsBytes(json))
     val before = filesUnder(idx)
 
@@ -1191,6 +1223,35 @@ class RefreshSpec extends AnyFunSuite {
       IndexBuild.run(spark, spark.createDataset(pages), idx, idxCfg))
     assert(resume.getMessage.contains("rebuild"), resume.getMessage)
     assert(filesUnder(idx) == before, "a refused operation must not touch the index dir")
+  }
+
+  test("a manifest that names a doc_terms table fails open, refresh, delete and a resumed build with rebuild, touching no file") {
+    // the fixture: the latest manifest as a version that kept the docs'
+    // terms in their own table published it
+    refusesOldLayout("doc-terms") { json =>
+      val tables = json.get("tables").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      tables.set[com.fasterxml.jackson.databind.JsonNode]("doc_terms", tables.get("docs").deepCopy())
+    }
+  }
+
+  test("a manifest that names a head_terms table fails open, refresh, delete and a resumed build with rebuild, touching no file") {
+    // the fixture: the latest manifest as a version that kept the head
+    // terms and the prefetch hint in tables, and no warc_ts in docs,
+    // published it: no `heads` or `mids` field, a `head_terms` table
+    refusesOldLayout("head-terms") { json =>
+      json.remove("heads")
+      json.remove("mids")
+      val tables = json.get("tables").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      tables.set[com.fasterxml.jackson.databind.JsonNode]("head_terms", tables.get("site_status").deepCopy())
+    }
+  }
+
+  test("a manifest without the head set or the prefetch hint reads them as empty lists") {
+    val json = graft.store.Manifest.toJson(graft.store.Manifest.empty)
+      .replace(""","heads":[]""", "").replace(""","mids":[]""", "")
+    assert(!json.contains("heads") && !json.contains("mids"), s"fixture: $json")
+    val m = graft.store.Manifest.fromJson(json)
+    assert(m.heads == Nil && m.mids == Nil, s"heads ${m.heads}, mids ${m.mids}")
   }
 
   test("refresh and delete lineage rows count the new versions' terms and postings, and the touched terms") {
