@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{HtmlText, Lemmatizer, Scorer, PostingCodec, ReferenceTfSum, Snippet}
 import graft.index.IndexBuild
-import graft.store.{Manifest, TableStore}
+import graft.store.{Manifest, Stats, TableStore}
 
 /** API row (reference SearchItemData.java:9-16). */
 final case class SearchItem(
@@ -50,7 +50,10 @@ final case class SearchResponse(result: Boolean, count: Long, data: Seq[SearchIt
   * query — one directory listing, zero Spark jobs, and every commit
   * moves it; a Refresh.refreshPages/deletePages under a live engine
   * invalidates every driver-side cache (df cache, hot-posting LRU,
-  * pagination cache, corpus stats) and reloads automatically.
+  * site counts, pagination cache, norms) and reloads automatically.
+  * Those driver caches are the only ones: the engine caches no Spark
+  * relation, so a reload re-caches nothing and two engines on one index
+  * share no state.
   */
 final class SearchEngine(
     spark: SparkSession,
@@ -65,37 +68,28 @@ final class SearchEngine(
 
   // ── reloadable index state (rebuilt when the manifest version moves) ──
   private final case class IndexState(
-      nDocs: Long, avgdl: Double, shards: Int, siteGroups: Int,
-      buckets: Int,
+      stats: Stats,
       docsDf: DataFrame, lemmaStatsDf: DataFrame, segmentsDf: DataFrame,
-      headTerms: Set[String],
-      nextOrd: Int,
       normsRead: Option[FutureAction[Seq[(Long, Long)]]],
       // the manifest every table above was read from: a commit that
       // lands while load() runs moves the latest version past it, so the
       // next ensureFresh() reloads
       manifest: Manifest) {
+    val headTerms: Set[String] = manifest.heads.toSet
     /** `docs.dl` by `docs.ord` (0 in the holes deletes leave): the BM25
       * length norm of every doc, 4 B per ordinal; null for a scorer that
       * does not read it. */
     lazy val norms: Array[Int] = normsRead.map { read =>
-      val a = new Array[Int](nextOrd)
+      val a = new Array[Int](stats.next_ord.toInt)
       Await.result(read, Duration.Inf).foreach { case (ord, dl) => a(ord.toInt) = Math.toIntExact(dl) }
       a
     }.orNull
   }
 
-  /** Cache budget for the merged index (`spark.graft.indexCacheBytes`,
-    * default 8 GiB): within it the index is `.cache`d at load (in-sandbox
-    * it always fits); past it — 0 turns caching off — queries read
-    * uncached parquet with bucket partition pruning + executor page
-    * cache, the 100 TB shape (the same gate pattern as the head-term
-    * prefetch). */
-  private val indexCacheLimit: Long =
-    spark.conf.getOption("spark.graft.indexCacheBytes")
-      .map(_.toLong).getOrElse(8L * 1024 * 1024 * 1024)
-
-  /** The latest manifest's tables; an index without one must be rebuilt. */
+  /** The latest manifest's tables; an index without one must be rebuilt.
+    * Nothing is cached in Spark: every query reads the manifest's parquet
+    * (`index` and `lemma_stats` pruned to its terms' buckets), and the
+    * driver caches below hold what repeats. */
   private def load(): IndexState = {
     val m = store.manifest.getOrElse(Manifest.empty)
     val stats = IndexBuild.statsOf(m, indexDir)
@@ -107,21 +101,12 @@ final class SearchEngine(
       Some(store.readAt(m, "docs").select("ord", "dl").queryExecution.toRdd
         .map(r => (r.getLong(0), r.getLong(1))).collectAsync())
     }
-    // the docs columns the url join, the site filter and the site count
-    // read — never the terms refresh and delete keep with each doc
-    val docsDf = store.readAt(m, "docs").select("ord", "url", "site").cache()
-    val lemmaStatsDf = store.readAt(m, "lemma_stats").cache()
-    val index = store.readAt(m, "index")
-    val segmentsDf = if (m.bytes("index") <= indexCacheLimit) index.cache() else index
-    IndexState(
-      nDocs = stats.n_docs,
-      avgdl = stats.avgdl,
-      shards = stats.shards,
-      siteGroups = stats.site_groups,
-      buckets = stats.buckets,
-      docsDf = docsDf, lemmaStatsDf = lemmaStatsDf, segmentsDf = segmentsDf,
-      headTerms = m.heads.toSet,
-      nextOrd = stats.next_ord.toInt,
+    IndexState(stats,
+      // the docs columns the url join, the site filter and the site count
+      // read — never the terms refresh and delete keep with each doc
+      docsDf = store.readAt(m, "docs").select("ord", "url", "site"),
+      lemmaStatsDf = store.readAt(m, "lemma_stats"),
+      segmentsDf = store.readAt(m, "index"),
       normsRead = normsRead,
       manifest = m)
   }
@@ -143,9 +128,6 @@ final class SearchEngine(
     * driver-side cache and reload. One directory listing, no Spark job. */
   private def ensureFresh(): Unit =
     if (store.version != state.manifest.version) {
-      state.docsDf.unpersist()
-      state.lemmaStatsDf.unpersist()
-      state.segmentsDf.unpersist()
       dfCache.clear()
       siteCountCache.clear()
       postingCache.clear()
@@ -163,10 +145,9 @@ final class SearchEngine(
     * segments into the posting LRU and their dfs into the df cache.
     * Head terms are the bounded skew set (df > saltThreshold — a few
     * thousand terms even at 10^12 docs) and by construction the terms
-    * most likely in real queries; prefetching them also materializes the
-    * lemma_stats/segments block caches, so even a first-ever query pays
-    * only its own tail-term point lookups instead of the whole cache
-    * build. The segment fetch is SIZE-GATED: a metadata aggregation
+    * most likely in real queries, so a first-ever query on them runs no
+    * Spark job and other queries pay only their own tail-term point
+    * lookups. The segment fetch is SIZE-GATED: a metadata aggregation
     * (sum of encoded bytes per term — no posting decode) picks the
     * largest prefix of terms that fits the cache budget, so the driver
     * never collects more than it can cache — at full scale a single
@@ -219,15 +200,10 @@ final class SearchEngine(
       }
     }
 
-  /** Whether the merged index plan is marked for caching (test hook for
-    * the `spark.graft.indexCacheBytes` size gate). */
-  private[graft] def indexCached: Boolean =
-    state.segmentsDf.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-
-  def nDocs: Long = state.nDocs
-  def avgdl: Double = state.avgdl
-  def shards: Int = state.shards
-  def siteGroups: Int = state.siteGroups
+  def nDocs: Long = state.stats.n_docs
+  def avgdl: Double = state.stats.avgdl
+  def shards: Int = state.stats.shards
+  def siteGroups: Int = state.stats.site_groups
   private def docsDf: DataFrame = state.docsDf
   private def lemmaStatsDf: DataFrame = state.lemmaStatsDf
   private def segmentsDf: DataFrame = state.segmentsDf
@@ -573,7 +549,7 @@ final class SearchEngine(
       else missing.map { t =>
         val df = dfMap.getOrElse(t, 0L)
         if (siteShards.isDefined && headTerms.contains(t))
-          df / math.max(1, state.siteGroups) else df
+          df / math.max(1, siteGroups) else df
       }.sum
     val s = shards
     val termsArr = ordered.toArray
@@ -657,7 +633,7 @@ final class SearchEngine(
 
   // the index's OWN bucket layout (persisted in stats) — partition
   // pruning with any other count silently prunes to the wrong dirs
-  private def bucketCount: Int = state.buckets
+  private def bucketCount: Int = state.stats.buckets
 
   /** Presentation for a driver-resident ranked list: slice + items. */
   private def present(ranked: Seq[RankedHit], queryLemmas: Seq[String],

@@ -4,8 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -103,14 +101,6 @@ class CrashPointSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def pages =
     spark.read.parquet(pagesDir).as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
 
-  private def copyDir(from: String, to: String): Unit = {
-    val src = Paths.get(from)
-    val s = Files.walk(src)
-    try s.iterator().asScala.toSeq.foreach { f =>
-      Files.copy(f, Paths.get(to).resolve(src.relativize(f).toString))
-    } finally s.close()
-  }
-
   private def page(url: String, body: String): PageRow = {
     val h = s"<html><head><title>t</title></head><body><p>$body</p></body></html>"
       .getBytes(StandardCharsets.UTF_8)
@@ -166,7 +156,7 @@ class CrashPointSpec extends AnyFunSuite with BeforeAndAfterAll {
     def fresh(tag: String): String = {
       val dir = s"$work/$name-$tag"
       base match {
-        case Some(b) => copyDir(b, dir)
+        case Some(b) => IndexDir.copy(b, dir)
         case None => Files.createDirectories(Paths.get(dir))
       }
       dir

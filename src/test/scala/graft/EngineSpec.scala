@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
 import graft.corpus.{CorpusGen, PageRow}
-import graft.index.IndexBuild
+import graft.index.{IndexBuild, Refresh}
 import graft.queryengine.{SearchEngine, SearchResponse, Statistics}
 
 /** End-to-end engine vs reference-oracle rank-identity on the fixture
@@ -288,38 +288,6 @@ class EngineSpec extends AnyFunSuite {
       .foreach(r => assert(r.getAs[String]("status") == "INDEXED"))
   }
 
-  test("index-cache gate: spark.graft.indexCacheBytes=0 serves rank-identical results through the uncached read path") {
-    built
-    // distinct physical copy of the index: the shared-session CacheManager
-    // matches by plan, so an engine over the ORIGINAL path could silently
-    // serve another engine's cached data even with the gate on
-    val copyRoot = Files.createTempDirectory("graft-nocache").toString
-    val copy = s"$copyRoot/idx"
-    import java.nio.file.{Path => JPath, Paths, StandardCopyOption}
-    val src = Paths.get(indexDir)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(src).iterator().asScala.foreach { p: JPath =>
-      val dst = Paths.get(copy).resolve(src.relativize(p))
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
-    }
-    spark.conf.set("spark.graft.indexCacheBytes", "0")
-    try {
-      val uncached = new SearchEngine(spark, copy, pagesPath, Bm25())
-      assert(!uncached.indexCached, "gate on: the index plan must not be cache-marked")
-      for ((q, site) <- queries.take(4)) {
-        val exp = engineBm.search(q, 0, 20, site)
-        val got = uncached.search(q, 0, 20, site)
-        assert(got.count == exp.count, s"count mismatch uncached vs cached for '$q'")
-        assert(got.data.map(i => (i.site + i.uri, i.relevance)) ==
-          exp.data.map(i => (i.site + i.uri, i.relevance)),
-          s"uncached read path must be rank- and score-identical for '$q'")
-      }
-    } finally spark.conf.unset("spark.graft.indexCacheBytes")
-    // and the default (in-budget) path really does cache
-    assert(engineBm.indexCached, "default path must cache the in-budget index")
-  }
-
   test("prefetch: first-ever head-term query on a fresh engine runs ZERO Spark jobs") {
     built
     val heads = IndexDir.heads(spark, indexDir)
@@ -445,19 +413,50 @@ class EngineSpec extends AnyFunSuite {
       "the hint must be exactly the top-df non-head terms in (df desc, term) order")
   }
 
-  test("the engine caches only the docs columns it reads: ord, url, site") {
-    val store = graft.store.TableStore.open(spark, indexDir)
-    // a site-scoped search: the engine is on the latest manifest, and its
-    // url join and site count read the cached relation
-    engineBm.search(s"$commonForm $midLemma", 0, 10, Some("https://site1.test"))
-    val m = store.manifest.get
-    def cached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
-      .map(_.cachedRepresentation.output.map(_.name))
-    assert(cached(store.readAt(m, "docs").select("ord", "url", "site")) == Some(Seq("ord", "url", "site")),
-      "the engine must cache the ord/url/site projection of docs")
-    assert(cached(store.readAt(m, "docs")).isEmpty,
-      "the whole docs table, terms included, must not be cached")
+  test("the engine caches no relation of its index: a second engine on it answers as a fresh one after a refresh") {
+    built
+    import spark.implicits._
+    // a private copy: the refresh below must not move the shared index
+    val copy = s"${Files.createTempDirectory("graft-no-relation-cache")}/idx"
+    IndexDir.copy(indexDir, copy)
+    val q = s"$commonForm $midLemma"
+    val site = Some("https://site1.test")
+    def answers(e: SearchEngine): Seq[SearchResponse] =
+      Seq(e.search(q, 0, 10), e.search(q, 10, 10), e.search(q, 0, 10, site))
+    val first = new SearchEngine(spark, copy, pagesPath, Bm25())
+    val second = new SearchEngine(spark, copy, pagesPath, Bm25())
+    val before = answers(first)
+    assert(answers(second) == before)
+
+    // Spark's CacheManager matches entries by plan: look up exactly the
+    // relations the engine reads (other suites cache their own frames)
+    val store = graft.store.TableStore.open(spark, copy)
+    def assertNothingCached(): Unit = {
+      val m = store.manifest.get
+      val docs = store.readAt(m, "docs")
+      Seq("docs" -> docs, "docs (ord, url, site)" -> docs.select("ord", "url", "site"),
+        "lemma_stats" -> store.readAt(m, "lemma_stats"), "index" -> store.readAt(m, "index"))
+        .foreach { case (name, df) =>
+          val entry = spark.sharedState.cacheManager
+            .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
+          assert(entry.isEmpty, s"the engine cached $name of manifest v${m.version}")
+        }
+    }
+    assertNothingCached()
+
+    // a one-page refresh adds a new page to site1 that matches q; the
+    // first engine's next search reloads it, the second stays on the old
+    // manifest until its own next search
+    val h = s"<html><head><title>$midLemma</title></head><body><p>$commonForm $midLemma</p></body></html>"
+    Refresh.refreshPages(spark, copy, spark.createDataset(Seq(PageRow("https://site1.test/p/refreshed",
+      new java.sql.Timestamp(CorpusGen.Epoch), h.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      HtmlText.cleanToText(h), "ru"))), idxCfg)
+    first.search(q, 0, 10)
+    val expected = answers(new SearchEngine(spark, copy, pagesPath, Bm25()))
+    assert(expected.head.count == before.head.count + 1, "the refresh must add a match")
+    assert(answers(second) == expected, "the second engine must answer as a freshly opened one")
+    assert(answers(first) == expected)
+    assertNothingCached()
   }
 
   test("bounded-files layout: index and dim writes emit O(partitions) files, not tasks x buckets") {

@@ -18,6 +18,16 @@ object IndexDir {
   def heads(spark: SparkSession, root: String): Seq[String] =
     TableStore.open(spark, root).manifest.get.heads
 
+  /** A file-by-file copy of the index directory `from` at `to`, whose
+    * parent must exist. */
+  def copy(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    val s = Files.walk(src)
+    try s.iterator().asScala.toSeq.foreach { f =>
+      Files.copy(f, Paths.get(to).resolve(src.relativize(f).toString))
+    } finally s.close()
+  }
+
   /** Every regular file under `root` that the latest manifest does not
     * reference; manifest files and other `_`-prefixed root entries
     * (checkpoints, markers) aside. */

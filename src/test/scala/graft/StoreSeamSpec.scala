@@ -29,7 +29,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * ones README's options table documents. A fourth keeps the build one
   * step: `IndexBuild.run` folds its batches, so no other main file calls
   * `mergeSegments` after it. A fifth holds README's index-format table
-  * to the tables a finished build publishes.
+  * to the tables a finished build publishes. A sixth keeps the query
+  * engine at one cache layer, the driver's: it caches no Spark relation.
   */
 class StoreSeamSpec extends AnyFunSuite {
 
@@ -85,7 +86,7 @@ class StoreSeamSpec extends AnyFunSuite {
   }
 
   test("main reads exactly the spark.graft.* keys README's options table lists") {
-    val expected = Set("indexCacheBytes", "postingCacheBytes", "tableFormat")
+    val expected = Set("postingCacheBytes", "tableFormat")
     val key = "\"spark\\.graft\\.(\\w+)\"".r
     val read = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
       .flatMap(p => key.findAllMatchIn(new String(Files.readAllBytes(p))).map(_.group(1)))
@@ -125,6 +126,22 @@ class StoreSeamSpec extends AnyFunSuite {
     val hits = offenders(Set("index/IndexBuild.scala", "Bench.scala", "BenchBuild.scala"),
       "mergeSegments(")
     assert(hits.isEmpty, "mergeSegments called after IndexBuild.run:\n" + hits.mkString("\n"))
+  }
+
+  test("the query engine caches no Spark relation: its one persist is the distributed pagination base") {
+    val engine = (h: String) => h.startsWith("queryengine/")
+    val cached = offenders(Set.empty, ".cache()").filter(engine)
+    assert(cached.isEmpty, "relation caches in the query engine:\n" + cached.mkString("\n"))
+    val persisted = offenders(Set.empty, ".persist(").filter(engine)
+    assert(persisted.size == 1, "persists in the query engine:\n" + persisted.mkString("\n"))
+    // the persisted frame is the one kept as the pagination base
+    val lines = Files.readAllLines(root.resolve("queryengine/SearchEngine.scala")).asScala
+    val at = lines.indexWhere(_.contains(".persist("))
+    val frame = lines.take(at + 1).reverse.collectFirst {
+      case l if l.trim.startsWith("val ") => l.trim.stripPrefix("val ").takeWhile(_.isLetterOrDigit)
+    }
+    assert(frame.exists(f => lines.exists(_.contains(s"lastRankedDf = Some($f)"))),
+      s"the persisted frame ${frame.getOrElse("?")} must be the pagination base lastRankedDf")
   }
 
   test("only process entry points read environment variables") {
