@@ -20,10 +20,6 @@ sealed trait Scorer extends Serializable {
     * avgdl = mean doc length. Doc score = Σ over query terms. */
   def termScore(tf: Double, df: Long, n: Long, dl: Double, avgdl: Double): Double
 
-  /** Whether [[termScore]] reads `dl`: an engine loads the doc lengths
-    * (its norms) only for a scorer that does. */
-  def usesDocLength: Boolean
-
   /** Upper bound of termScore over any doc, for block-max WAND pruning:
     * monotone in tf, so the block max tf bounds the block score. */
   def upperBound(maxTf: Double, df: Long, n: Long, minDl: Double, avgdl: Double): Double =
@@ -35,7 +31,6 @@ sealed trait Scorer extends Serializable {
   * unpartitioned window, SURVEY.md §2.5). */
 case object ReferenceTfSum extends Scorer {
   val name = "tfsum"
-  val usesDocLength = false
   def termScore(tf: Double, df: Long, n: Long, dl: Double, avgdl: Double): Double = tf
 }
 
@@ -44,7 +39,6 @@ case object ReferenceTfSum extends Scorer {
   * Lucene's BM25Similarity docs). */
 final case class Bm25(k1: Double = 1.2, b: Double = 0.75) extends Scorer {
   val name = "bm25"
-  val usesDocLength = true
   def idf(df: Long, n: Long): Double =
     math.max(0.0, math.log((n - df + 0.5) / (df + 0.5) + 1.0))
   def termScore(tf: Double, df: Long, n: Long, dl: Double, avgdl: Double): Double = {

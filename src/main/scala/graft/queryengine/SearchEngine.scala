@@ -28,9 +28,12 @@ final case class SearchResponse(result: Boolean, count: Long, data: Seq[SearchIt
   *   query terms only (partition-prunable point lookups) → 80% stop-lemma
   *   pruning (F5) → rarest-first order (O1, ties pinned (df ASC, term
   *   ASC)) → distributed shard-local conjunctive WAND over compressed
-  *   segments (J1) → top-k merge (O2, ties pinned (score DESC, url ASC))
-  *   → presentation join for the page slice only (title U2 + snippet U3)
-  *   → offset/limit slice with pre-slice total (O3).
+  *   segments (J1) → site filter and tf-sum normalization on the driver,
+  *   from per-ordinal site ids → ranking by relevance, with urls read
+  *   only for the tie groups that overlap the page (ties pinned
+  *   (score DESC, url ASC), O2) → presentation fetch for the page slice
+  *   only (title U2 + snippet U3) → offset/limit slice with pre-slice
+  *   total (O3).
   *
   * Scale notes: the only per-query distributed work is the segment scan,
   * pruned to the query terms' buckets; unsalted (tail) term segments are
@@ -50,7 +53,8 @@ final case class SearchResponse(result: Boolean, count: Long, data: Seq[SearchIt
   * query — one directory listing, zero Spark jobs, and every commit
   * moves it; a Refresh.refreshPages/deletePages under a live engine
   * invalidates every driver-side cache (df cache, hot-posting LRU,
-  * site counts, pagination cache, norms) and reloads automatically.
+  * pagination cache, the per-ordinal doc columns) and reloads
+  * automatically.
   * Those driver caches are the only ones: the engine caches no Spark
   * relation, so a reload re-caches nothing and two engines on one index
   * share no state.
@@ -69,21 +73,15 @@ final class SearchEngine(
   // ── reloadable index state (rebuilt when the manifest version moves) ──
   private final case class IndexState(
       stats: Stats,
-      docsDf: DataFrame, lemmaStatsDf: DataFrame, segmentsDf: DataFrame,
-      normsRead: Option[FutureAction[Seq[(Long, Long)]]],
+      lemmaStatsDf: DataFrame, segmentsDf: DataFrame,
+      docsRead: FutureAction[Seq[(Long, Long, String, Int)]],
       // the manifest every table above was read from: a commit that
       // lands while load() runs moves the latest version past it, so the
       // next ensureFresh() reloads
       manifest: Manifest) {
     val headTerms: Set[String] = manifest.heads.toSet
-    /** `docs.dl` by `docs.ord` (0 in the holes deletes leave): the BM25
-      * length norm of every doc, 4 B per ordinal; null for a scorer that
-      * does not read it. */
-    lazy val norms: Array[Int] = normsRead.map { read =>
-      val a = new Array[Int](stats.next_ord.toInt)
-      Await.result(read, Duration.Inf).foreach { case (ord, dl) => a(ord.toInt) = Math.toIntExact(dl) }
-      a
-    }.orNull
+    /** The per-ordinal doc columns, awaited on first use. */
+    lazy val docs = new SearchEngine.DocColumns(stats.next_ord.toInt, Await.result(docsRead, Duration.Inf))
   }
 
   /** The latest manifest's tables; an index without one must be rebuilt.
@@ -93,21 +91,17 @@ final class SearchEngine(
   private def load(): IndexState = {
     val m = store.manifest.getOrElse(Manifest.empty)
     val stats = IndexBuild.statsOf(m, indexDir)
-    // norms: one two-column read of `docs`, collected while the rest of
-    // the load runs
-    val normsRead = if (!scorer.usesDocLength) None else {
-      require(stats.next_ord <= Int.MaxValue - 8, s"$indexDir: ${stats.next_ord} doc ordinals " +
-        "exceed what driver-side norms (an int per ordinal) can hold")
-      Some(store.readAt(m, "docs").select("ord", "dl").queryExecution.toRdd
-        .map(r => (r.getLong(0), r.getLong(1))).collectAsync())
-    }
+    require(stats.next_ord <= Int.MaxValue - 8 && stats.buckets <= Short.MaxValue,
+      s"$indexDir: ${stats.next_ord} doc ordinals in ${stats.buckets} doc buckets exceed what " +
+        "the driver-side doc columns (an int per ordinal, a short per bucket) can hold")
+    // the per-ordinal doc columns: one four-column read of `docs`,
+    // collected while the rest of the load runs
+    val docsRead = store.readAt(m, "docs").select("ord", "dl", "site", "db").queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getLong(1), r.getUTF8String(2).toString, r.getInt(3))).collectAsync()
     IndexState(stats,
-      // the docs columns the url join, the site filter and the site count
-      // read — never the terms refresh and delete keep with each doc
-      docsDf = store.readAt(m, "docs").select("ord", "url", "site"),
       lemmaStatsDf = store.readAt(m, "lemma_stats"),
       segmentsDf = store.readAt(m, "index"),
-      normsRead = normsRead,
+      docsRead = docsRead,
       manifest = m)
   }
 
@@ -117,7 +111,7 @@ final class SearchEngine(
     * first use, destroyed on reload. */
   private var normsBroadcast: Option[Broadcast[Array[Int]]] = None
   private def normsBc: Broadcast[Array[Int]] = normsBroadcast.getOrElse {
-    val b = spark.sparkContext.broadcast(state.norms)
+    val b = spark.sparkContext.broadcast(state.docs.norms)
     normsBroadcast = Some(b)
     b
   }
@@ -129,10 +123,9 @@ final class SearchEngine(
   private def ensureFresh(): Unit =
     if (store.version != state.manifest.version) {
       dfCache.clear()
-      siteCountCache.clear()
       postingCache.clear()
       lastQuery = ""
-      lastRanked = Seq.empty
+      lastRanked = IndexedSeq.empty
       lastSurviving = Seq.empty
       dropRankedDf()
       normsBroadcast.foreach(_.destroy())
@@ -204,21 +197,9 @@ final class SearchEngine(
   def avgdl: Double = state.stats.avgdl
   def shards: Int = state.stats.shards
   def siteGroups: Int = state.stats.site_groups
-  private def docsDf: DataFrame = state.docsDf
   private def lemmaStatsDf: DataFrame = state.lemmaStatsDf
   private def segmentsDf: DataFrame = state.segmentsDf
   private def headTerms: Set[String] = state.headTerms
-
-  // Scoped page count, one point-aggregation per site on first use —
-  // cached like the df cache, cleared on reload. (The previous design
-  // collected docs.groupBy(site).count() into a driver Map at every
-  // load: unbounded driver memory on a Common-Crawl-scale site universe
-  // and an O(corpus) job per reload; the per-site count is only ever
-  // read by scoped queries, which name their site.)
-  private val siteCountCache = new SearchEngine.BoundedLruLong(1 << 16)
-  private def docCountOfSite(s: String): Long =
-    siteCountCache.getOrElseUpdate(s,
-      docsDf.filter(col("site") === s).count())
 
   // Driver-side term-stats cache (valid for one manifest version —
   // cleared on reload). Saves one Spark job per repeated query term —
@@ -274,28 +255,33 @@ final class SearchEngine(
   private def globalDf(terms: Seq[String]): Map[String, Long] = {
     val misses = terms.filterNot(dfCache.contains)
     if (misses.nonEmpty) {
-      val fetched = lemmaStatsPruned(misses)
-        .filter(col("term").isin(misses: _*))
-        .groupBy("term").agg(sum("df").as("df"))
-        .as[(String, Long)].collect().toMap
-      misses.foreach(t => dfCache.update(t, fetched.getOrElse(t, 0L)))
+      val fetched = dfOf(misses, None)
+      misses.foreach(t => dfCache.update(t, fetched(t)))
     }
     terms.map(t => t -> dfCache(t)).toMap
   }
 
-  /** lemma_stats restricted to the terms' storage buckets — partition
-    * pruning for the point lookups. */
-  private def lemmaStatsPruned(terms: Seq[String]): DataFrame =
-    lemmaStatsDf.filter(col("bucket")
-      .isin(terms.map(IndexBuild.termBucket(_, bucketCount)).distinct: _*))
+  /** df of `terms`, in `site` when given, summed over their lemma_stats
+    * rows in ONE scan pruned to the terms' storage buckets (partition
+    * pruning for the point lookups); a term absent from the scope reads 0. */
+  private def dfOf(terms: Seq[String], site: Option[String]): Map[String, Long] = {
+    val rows = lemmaStatsDf.filter(col("bucket")
+      .isin(terms.map(IndexBuild.termBucket(_, bucketCount)).distinct: _*) &&
+      col("term").isin(terms: _*))
+    site.fold(rows)(s => rows.filter(col("site") === s))
+      .groupBy("term").agg(sum("df").as("df"))
+      .as[(String, Long)].collect().toMap.withDefaultValue(0L)
+  }
 
   // Reference query-result cache: previous query's full ranked result is
   // reused when the SAME query paginates with offset != 0
   // (SearchServiceImpl.java:35-36, 53-57; quirk preserved per §7 H6).
-  // Small results cache as a driver Seq; large (distributed) results
-  // cache as a PERSISTED DataFrame re-sliced distributed per offset.
+  // Small results cache as driver (ordinal, relevance) pairs ordered by
+  // relevance, whose page tie groups each replay resolves by url; large
+  // (distributed) results cache as a PERSISTED DataFrame re-sliced
+  // distributed per offset.
   private var lastQuery: String = ""
-  private var lastRanked: Seq[RankedHit] = Seq.empty
+  private var lastRanked: IndexedSeq[(Int, Double)] = IndexedSeq.empty
   private var lastSurviving: Seq[String] = Seq.empty
   private var lastRankedDf: Option[DataFrame] = None
   private var lastCount: Long = 0L
@@ -306,6 +292,28 @@ final class SearchEngine(
   }
 
   private final case class RankedHit(url: String, site: String, relevance: Double)
+
+  /** The query front half `search` and `topK` share: analyze the query
+    * (MorphologyServiceImpl.java:212-240), df per term — scoped to `site`
+    * when given (SearchServiceImpl.java:354-361) — 80% stop-lemma pruning
+    * against the scoped page count (SearchServiceImpl.java:66, 329-344)
+    * and rarest-first order, ties pinned (df ASC, term ASC) (O1/O4).
+    * Returns the ordered terms with the GLOBAL dfs scoring reads (idf is a
+    * corpus statistic; BM25 does not exist in the reference, so the spec
+    * pins it to corpus-global), or no terms when none survive or one has
+    * no postings in scope: the reference then intersects with an empty
+    * page list. */
+  private def plan(query: String, site: Option[String]): (Seq[String], Map[String, Long]) = {
+    val qLemmas = Lemmatizer.lemmaCounts(query).keys.toSeq.sorted
+    if (qLemmas.isEmpty) return (Nil, Map.empty)
+    val df = if (site.isEmpty) globalDf(qLemmas) else dfOf(qLemmas, site)
+    val pageCount = site.fold(nDocs)(state.docs.docsOfSite)
+    val ordered = qLemmas
+      .filter(t => pageCount > 0 && df(t).toDouble / pageCount * 100.0 <= 80.0)
+      .sortBy(t => (df(t), t))
+    if (ordered.exists(df(_) == 0L)) (Nil, Map.empty)
+    else (ordered, if (site.isEmpty) df else globalDf(ordered))
+  }
 
   def search(query: String, offset: Int, limit: Int,
       siteUrl: Option[String] = None): SearchResponse = {
@@ -323,114 +331,60 @@ final class SearchEngine(
       }
     }
     lastQuery = query
+    lastRanked = IndexedSeq.empty
     dropRankedDf()
 
     val site = siteUrl.map(IndexBuild.siteOf)
-    // 1. analyze the query string (MorphologyServiceImpl.java:212-240)
-    val qLemmas = Lemmatizer.lemmaCounts(query).keys.toSeq.sorted
-    if (qLemmas.isEmpty) {
-      lastRanked = Seq.empty; lastSurviving = Seq.empty
-      return SearchResponse(true, 0L, Seq.empty)
-    }
-
-    // 2. df per query term — scoped sum over lemma rows
-    //    (SearchServiceImpl.java:354-361)
-    val dfMap: Map[String, Long] = site match {
-      case None => globalDf(qLemmas)
-      case Some(s) => lemmaStatsPruned(qLemmas).filter(col("site") === s)
-        .filter(col("term").isin(qLemmas: _*))
-        .groupBy("term").agg(sum("df").as("df"))
-        .as[(String, Long)].collect().toMap
-    }
-
-    // 3. 80% stop-lemma pruning against the scoped page count
-    //    (SearchServiceImpl.java:66, 329-344)
-    val pageCount = site.fold(nDocs)(docCountOfSite)
-    val surviving = qLemmas.filter { t =>
-      pageCount > 0 && dfMap.getOrElse(t, 0L).toDouble / pageCount * 100.0 <= 80.0
-    }
-    // 4. rarest-first order, ties pinned (df ASC, term ASC) — O1/O4
-    val ordered = surviving.sortBy(t => (dfMap.getOrElse(t, 0L), t))
+    val (ordered, dfMap) = plan(query, site)
     lastSurviving = ordered
+    if (ordered.isEmpty) return SearchResponse(true, 0L, Seq.empty)
 
-    if (ordered.isEmpty) {
-      lastRanked = Seq.empty
-      return SearchResponse(true, 0L, Seq.empty)
-    }
-    if (ordered.exists(dfMap.getOrElse(_, 0L) == 0L)) {
-      // a term with no postings ⇒ conjunction is empty
-      // (reference intersects with an empty page list)
-      lastRanked = Seq.empty
-      return SearchResponse(true, 0L, Seq.empty)
-    }
-
-    // 5. distributed conjunctive WAND over segments. Parity path: the
-    //    reference materializes the FULL ranked list (it needs the exact
-    //    pre-pagination total, the global max for normalization, and the
-    //    pagination cache) — so search() runs exact with unbounded k;
-    //    topK() below is the pruned scale path.
-    // Scoring df is GLOBAL (idf is a corpus statistic) even when the
-    // pruning/ordering df above is site-scoped (the reference's pruning
-    // reads scoped df, SearchServiceImpl.java:329-344; BM25 idf does not
-    // exist in the reference, so the spec pins it to corpus-global).
-    val scoreDfMap: Map[String, Long] =
-      if (site.isEmpty) dfMap else globalDf(ordered)
-
-    // site routing (build shard scheme: shard = group × subshards + docHash):
-    // a scoped query evaluates ONLY its site group's shard range — salted
-    // postings of other groups are never fetched or scored. Residual
-    // same-group sites are removed by the docs join below.
+    // Distributed conjunctive WAND over segments. Parity path: the
+    // reference materializes the FULL ranked list (it needs the exact
+    // pre-pagination total, the global max for normalization, and the
+    // pagination cache) — so search() runs exact with unbounded k;
+    // topK() below is the pruned scale path.
+    // Site routing (build shard scheme: shard = group × subshards +
+    // docHash): a scoped query evaluates ONLY its site group's shard
+    // range — salted postings of other groups are never fetched or
+    // scored. Hits of other sites (same-group salted ones, and the tail
+    // segments' hits, which reach every site) are dropped by site id.
     val siteShards: Option[Seq[Int]] = site.map { s =>
       val sub = shards / siteGroups
       val g = IndexBuild.siteGroupOf(s, siteGroups)
       (g * sub until (g + 1) * sub).toSeq
     }
 
-    runWand(ordered, scoreDfMap, Int.MaxValue, exact = true, siteShards) match {
-      case LocalHits(hits, _) if hits.isEmpty =>
-        // empty conjunction: no docs join, no job, the same "0 results"
-        lastRanked = Seq.empty
-        SearchResponse(true, 0L, Seq.empty)
-
-      case LocalHits(hits, totalCount) =>
-        // small/moderate result: driver ranking (data already local);
-        // hit ids are doc ordinals, resolved to urls through `docs.ord`
-        val hitsDf = hits.map(h => (h.docId, h.score, h.tfSum)).toSeq
-          .toDF("ord", "score", "tf_sum")
-        val joined = hitsDf.join(docsDf, Seq("ord"))
-        val filtered = site.fold(joined)(s => joined.filter(col("site") === s))
-        val rows = filtered.select("url", "site", "score", "tf_sum")
-          .as[(String, String, Double, Double)].collect()
-
-        val count = rows.length.toLong
-        assert(site.isDefined || count == totalCount,
-          s"hit-count mismatch: joined $count vs WAND $totalCount")
-        if (rows.isEmpty) {
-          lastRanked = Seq.empty
-          return SearchResponse(true, 0L, Seq.empty)
+    runWand(ordered, dfMap, Int.MaxValue, exact = true, siteShards) match {
+      case LocalHits(hits) =>
+        // small/moderate result: ranked on the driver by ordinal; a hit
+        // on an ordinal `docs` does not hold means the index and `docs`
+        // disagree
+        val d = state.docs
+        hits.find(h => h.docId >= d.site.length || d.site(h.docId.toInt) < 0).foreach(h =>
+          throw new IllegalStateException(s"$indexDir: a posting names ordinal ${h.docId}, " +
+            s"which docs of manifest v${state.manifest.version} does not hold"))
+        val kept = site.fold(hits) { s =>
+          val id = d.siteId.getOrElse(s, -1)
+          hits.filter(h => d.site(h.docId.toInt) == id)
         }
-
         // relevance: tf-sum normalizes by the max abs relevance over the
         // (scoped) result set (SearchServiceImpl.java:251-255); BM25 is
         // reported absolute.
-        val ranked = scorer match {
+        val relevance: Wand.Hit => Double = scorer match {
           case ReferenceTfSum =>
-            val maxAbs = rows.map(_._4).max
-            rows.map(r => RankedHit(r._1, r._2, r._4 / maxAbs))
-          case _ =>
-            rows.map(r => RankedHit(r._1, r._2, r._3))
+            val maxAbs = kept.map(_.tfSum).maxOption.getOrElse(1.0)
+            _.tfSum / maxAbs
+          case _ => _.score
         }
-        val sortedHits = ranked.sortBy(h => (-h.relevance, h.url)).toSeq
-        lastRanked = sortedHits
-        SearchResponse(true, count,
-          present(sortedHits, ordered, offset, limit).data)
+        lastRanked = kept.map(h => (h.docId.toInt, relevance(h))).sortBy(-_._2).toIndexedSeq
+        present(lastRanked, ordered, offset, limit)
 
       case DistributedHits(hitsDs) =>
         // large result: count / normalization max / top-(offset+limit)
         // all computed executor-side; ONLY the page slice is collected.
-        lastRanked = Seq.empty
         val joined = hitsDs.toDF("ord", "score", "tf_sum")
-          .join(docsDf, Seq("ord"))
+          .join(store.readAt(state.manifest, "docs").select("ord", "url", "site"), Seq("ord"))
         val filtered = site.fold(joined)(s => joined.filter(col("site") === s))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val agg = filtered
@@ -485,15 +439,10 @@ final class SearchEngine(
     * (url hash) order. */
   def topK(query: String, k: Int, pruned: Boolean = true): Seq[(Long, Double)] = {
     ensureFresh()
-    val qLemmas = Lemmatizer.lemmaCounts(query).keys.toSeq.sorted
-    if (qLemmas.isEmpty) return Seq.empty
-    val dfMap: Map[String, Long] = globalDf(qLemmas)
-    val surviving = qLemmas.filter(t =>
-      dfMap.getOrElse(t, 0L).toDouble / nDocs * 100.0 <= 80.0)
-    val ordered = surviving.sortBy(t => (dfMap.getOrElse(t, 0L), t))
-    if (ordered.isEmpty || ordered.exists(dfMap.getOrElse(_, 0L) == 0L)) return Seq.empty
+    val (ordered, dfMap) = plan(query, None)
+    if (ordered.isEmpty) return Seq.empty
     val hits = runWand(ordered, dfMap, k, exact = !pruned) match {
-      case LocalHits(hs, _) => hs
+      case LocalHits(hs) => hs
       case DistributedHits(ds) => // unbounded-k distributed never happens here
         ds.collect()
     }
@@ -501,7 +450,7 @@ final class SearchEngine(
   }
 
   private sealed trait WandOutcome
-  private final case class LocalHits(hits: Array[Wand.Hit], count: Long)
+  private final case class LocalHits(hits: Array[Wand.Hit])
       extends WandOutcome
   private final case class DistributedHits(hits: Dataset[Wand.Hit])
       extends WandOutcome
@@ -594,7 +543,7 @@ final class SearchEngine(
           .foreach(t => postingCache.put(t, Seq.empty))
       }
       val rows = cachedRows(cachedTerms) ++ fetched
-      val norms = state.norms
+      val norms = state.docs.norms
       val results: Array[Wand.ShardResult] =
         if (!anySalted) Array(evalGroup(rows.map(r => (r._1, r._3)), norms))
         else evalShards.map { g =>
@@ -602,7 +551,7 @@ final class SearchEngine(
             case (t, sh, bytes) if sh == g || sh < 0 => (t, bytes)
           }, norms)
         }.toArray
-      LocalHits(results.flatMap(_.hits), results.map(_.matchCount).sum)
+      LocalHits(results.flatMap(_.hits))
     } else {
       // Large query: shard-local distributed WAND. Salted segments
       // stay on their doc shard; unsalted ones replicate to each
@@ -610,7 +559,7 @@ final class SearchEngine(
       // can't feed a distributed evaluation. Norms reach the executors
       // as a broadcast.
       val groupsArr = evalShards.toArray
-      val norms = Option(state.norms).map(_ => normsBc)
+      val norms = normsBc
       val shardRows = segmentRows(ordered)
         .flatMap { case (t, sh, bytes) =>
           if (sh < 0) groupsArr.map(g => (g, t, bytes)).toSeq else Seq((sh, t, bytes))
@@ -619,14 +568,14 @@ final class SearchEngine(
       if (exact && k == Int.MaxValue) {
         // unbounded exact (the parity search path): hits STAY distributed
         DistributedHits(shardRows.flatMapGroups { (_, rows) =>
-          evalGroup(rows.toSeq.map(r => (r._2, r._3)), norms.map(_.value).orNull).hits.iterator
+          evalGroup(rows.toSeq.map(r => (r._2, r._3)), norms.value).hits.iterator
         })
       } else {
         // finite k: per-shard top-k (+ties) only — bounded driver merge
         val results = shardRows
-          .mapGroups((_, rows) => evalGroup(rows.toSeq.map(r => (r._2, r._3)), norms.map(_.value).orNull))
+          .mapGroups((_, rows) => evalGroup(rows.toSeq.map(r => (r._2, r._3)), norms.value))
           .collect()
-        LocalHits(results.flatMap(_.hits), results.map(_.matchCount).sum)
+        LocalHits(results.flatMap(_.hits))
       }
     }
   }
@@ -635,11 +584,34 @@ final class SearchEngine(
   // pruning with any other count silently prunes to the wrong dirs
   private def bucketCount: Int = state.stats.buckets
 
-  /** Presentation for a driver-resident ranked list: slice + items. */
-  private def present(ranked: Seq[RankedHit], queryLemmas: Seq[String],
-      offset: Int, limit: Int): SearchResponse = {
-    val slice = ranked.slice(offset, offset + limit)
-    SearchResponse(true, ranked.length.toLong, presentItems(slice, queryLemmas))
+  /** Presentation for a driver-resident ranked list: its pre-slice count
+    * and the items of [offset, offset + limit). */
+  private def present(ranked: IndexedSeq[(Int, Double)], queryLemmas: Seq[String],
+      offset: Int, limit: Int): SearchResponse =
+    SearchResponse(true, ranked.length.toLong, presentItems(page(ranked, offset, limit), queryLemmas))
+
+  /** Rows [offset, offset + limit) of `ranked` (relevance desc) in the
+    * exact (relevance desc, url asc) order. Ties order by url, so urls are
+    * read for the tie groups that overlap the page and no other rows:
+    * one `docs` lookup, pruned to those ordinals' `db` partitions. */
+  private def page(ranked: IndexedSeq[(Int, Double)], offset: Int, limit: Int): Seq[RankedHit] = {
+    val lo = math.max(0, offset)
+    val hi = math.min(ranked.length.toLong, offset.toLong + limit).toInt
+    if (lo >= hi) return Seq.empty
+    val from = ranked.lastIndexWhere(_._2 != ranked(lo)._2, lo) + 1
+    val to = ranked.indexWhere(_._2 != ranked(hi - 1)._2, hi) match {
+      case -1 => ranked.length
+      case i => i
+    }
+    val window = ranked.slice(from, to)
+    val d = state.docs
+    val url = store.readAt(state.manifest, "docs")
+      .filter(col("db").isin(window.map(h => d.db(h._1).toInt).distinct: _*) &&
+        col("ord").isin(window.map(_._1.toLong): _*))
+      .select("ord", "url").as[(Long, String)].collect().toMap
+    window.map { case (ord, r) => RankedHit(url(ord.toLong), d.siteNames(d.site(ord)), r) }
+      .sortBy(h => (-h.relevance, h.url))
+      .slice(lo - from, hi - from)
   }
 
   /** Corpus page-bucket count, when the corpus was written bucketed by
@@ -779,11 +751,35 @@ object SearchEngine {
     * [[graft.store.TableStore.wrap]] is. */
   @volatile private[graft] var localEvalLimit: Long = 2000000L
 
+  /** `docs` by ordinal, from one read per snapshot: the BM25 length norm
+    * (`dl`; 0 in the holes deletes leave), the site id (−1 in holes) and
+    * the `db` partition of every doc, plus the site dictionary and each
+    * site's doc count (the scoped page count). 4 + 4 + 2 B per ordinal;
+    * the dictionary is O(sites) ≤ O(ordinals). */
+  private[queryengine] final class DocColumns(size: Int, rows: Seq[(Long, Long, String, Int)]) {
+    val norms = new Array[Int](size)
+    val site: Array[Int] = Array.fill(size)(-1)
+    val db = new Array[Short](size)
+    val siteId = scala.collection.mutable.HashMap.empty[String, Int]
+    private val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val docs = scala.collection.mutable.ArrayBuffer.empty[Int]
+    rows.foreach { case (ord, dl, s, b) =>
+      val id = siteId.getOrElseUpdate(s, { names += s; docs += 0; names.length - 1 })
+      val o = ord.toInt
+      norms(o) = Math.toIntExact(dl)
+      site(o) = id
+      db(o) = b.toShort
+      docs(id) += 1
+    }
+    val siteNames: IndexedSeq[String] = names.toIndexedSeq
+    def docsOfSite(s: String): Long = siteId.get(s).fold(0L)(docs(_).toLong)
+  }
+
   /** Bounded access-ordered LRU over tiny (String -> Long) point lookups
-    * (term dfs, per-site doc counts). Entries are ~100 bytes so the cap
+    * (term dfs). Entries are ~100 bytes so the cap
     * bounds a long-lived engine serving an unbounded distinct-key stream
     * (a 10^12-doc vocabulary) to tens of MB; the byte-budgeted posting
-    * cache next to it already evicts, these must too. */
+    * cache next to it already evicts, this must too. */
   private[queryengine] final class BoundedLruLong(maxEntries: Int) {
     private val map =
       new java.util.LinkedHashMap[String, java.lang.Long](64, 0.75f, true) {
@@ -803,11 +799,6 @@ object SearchEngine {
       v.longValue
     }
     def update(k: String, v: Long): Unit = { map.put(k, v); () }
-    def getOrElseUpdate(k: String, v: => Long): Long = {
-      val cur = map.get(k)
-      if (cur != null) cur.longValue
-      else { val x = v; map.put(k, x); x }
-    }
     def clear(): Unit = map.clear()
   }
 }

@@ -71,6 +71,7 @@ class EngineSpec extends AnyFunSuite {
     (rareForm, None), // single word, inflected
     (s"$ultraRare1 $ultraRare2", None), // likely zero-result conjunction
     (s"$commonForm $midLemma", Some("https://site1.test")), // site-scoped
+    (rareForm, Some("https://site0.test")), // site-scoped, tail-only: its segments reach every site
     ("the quick brown fox", None), // latin-only ⇒ zero lemmas
     (s"и на $midLemma", None), // short particles destroyed by len filter
     (s"ёж $midLemma", None), // ё-word destroyed (F4) ⇒ single-term query
@@ -98,6 +99,11 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("tf-sum ranking is rank-identical to the reference oracle on the query set") {
+    // fixture: the tail-only scoped query's lemma is unsalted and matches
+    // pages of both sites, so the site filter is what drops site1's hits
+    val rare = Lemmatizer.lemmaCounts(rareForm).keySet
+    assert(rare.intersect(IndexDir.heads(spark, indexDir).toSet).isEmpty)
+    assert(RefOracle.search(oracle, rareForm, None).results.exists(_.url.startsWith("https://site1.test/")))
     for ((q, site) <- queries) {
       val exp = RefOracle.search(oracle, q, site.map(IndexBuild.siteOf), ReferenceTfSum)
       val got = engineTf.search(q, 0, 50, site)
@@ -128,10 +134,15 @@ class EngineSpec extends AnyFunSuite {
     val q = s"$commonForm $midLemma"
     val exp = RefOracle.search(oracle, q, None, ReferenceTfSum)
     val first = engineTf.search(q, 0, 10, None)
+    // fixture: a tie group straddles offset 10, so each page must order
+    // its own ties by url
+    assert(exp.results(9).relevance == exp.results(10).relevance)
     val second = engineTf.search(q, 10, 10, None) // served from the cache
     assert(first.count == exp.count.toLong && second.count == exp.count.toLong)
     assert(second.data.map(i => i.site + i.uri) ==
       exp.results.slice(10, 20).map(_.url))
+    val middle = engineTf.search(q, 5, 5, None) // served from the cache
+    assert(middle.data.map(i => i.site + i.uri) == exp.results.slice(5, 10).map(_.url))
   }
 
   test("snippets: keyword wrapped in <b>, built from body text") {
@@ -316,7 +327,8 @@ class EngineSpec extends AnyFunSuite {
       def answers(e: SearchEngine): Seq[Any] =
         Seq(q, s"$commonForm $midLemma $rareForm").flatMap(query => Seq(
           e.search(query, 0, 10), e.search(query, 10, 10), e.search(query, 0, 10, site),
-          e.topK(query, 10, pruned = true), e.topK(query, 10, pruned = false)))
+          e.topK(query, 10, pruned = true), e.topK(query, 10, pruned = false))) :+
+          e.search(rareForm, 0, 10, Some("https://site0.test"))
       val local = new SearchEngine(spark, indexDir, pagesPath, scorer)
       val expected = answers(local)
       assert(local.search(q, 0, 10).count > 10, "fixture: page 2 must hold hits")
@@ -373,11 +385,28 @@ class EngineSpec extends AnyFunSuite {
     engineBm.search(q, 0, 10) // warms the df and posting caches
     val (resp, jobs) = jobsOf("empty-conjunction-query")(engineBm.search(q, 0, 10))
     assert(resp == SearchResponse(true, 0L, Seq.empty))
-    assert(jobs == 0, s"an empty conjunction must not join docs (saw $jobs jobs)")
-    // the optimizer folds the empty join away without a job, so only the
-    // rule counter shows whether the join was planned at all
+    assert(jobs == 0, s"an empty conjunction must not look up urls (saw $jobs jobs)")
+    // a lookup of no urls could be folded away without a job, so only the
+    // rule counter shows whether it was planned at all
     val rules = ruleRuns(engineBm.search(q, 0, 10))
-    assert(rules == 0, s"an empty conjunction must not plan the docs join ($rules rule runs)")
+    assert(rules == 0, s"an empty conjunction must not plan the url lookup ($rules rule runs)")
+  }
+
+  test("a warm search runs at most 2 Spark jobs and a warm site-scoped one at most 4") {
+    built
+    val q = s"$commonForm $midLemma"
+    val site = Some("https://site1.test")
+    // warms the df and posting caches
+    engineTf.search(q, 0, 10)
+    engineTf.search(q, 0, 10, site)
+    // the url lookup of the page's tie groups and the page's html fetch;
+    // a scoped search adds its scoped df lookup
+    val (resp, jobs) = jobsOf("warm-search")(engineTf.search(q, 0, 10))
+    val (scoped, scopedJobs) = jobsOf("warm-scoped-search")(engineTf.search(q, 0, 10, site))
+    assert(resp.data.nonEmpty && scoped.data.nonEmpty, "fixture: both searches must match")
+    info(s"warm search $jobs jobs, warm site-scoped search $scopedJobs jobs")
+    assert(jobs <= 2, s"a warm search ran $jobs jobs")
+    assert(scopedJobs <= 4, s"a warm site-scoped search ran $scopedJobs jobs")
   }
 
   /** Catalyst rule executions (analyzer, optimizer, planner batches) run

@@ -32,7 +32,7 @@ class RefreshSpec extends AnyFunSuite {
   // the jobs of an engine open and of a live engine's first search after
   // a one-page refresh, on `buildSmall`
   private val OpenJobCeiling = 6
-  private val FirstSearchJobCeiling = 9
+  private val FirstSearchJobCeiling = 8
   private val idxCfg = IndexBuild.Config(shards = 4, saltThresholdDf = 60L, nBatches = 2, buckets = 16)
 
   private def html(title: String, body: String): Array[Byte] =

@@ -2,7 +2,7 @@ package graft.queryengine
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The df/site-count LRU must treat `contains` as an access: globalDf
+/** The df LRU must treat `contains` as an access: globalDf
   * probes its hit terms via contains and THEN inserts this query's
   * misses — if contains didn't touch, a full cache could evict a hit
   * term during the miss inserts and the final apply() would throw. */

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Which Spark jobs did a run launch, from where, and what did they cost?
 
-    python3 tools/eventlog_jobs.py <event log> [--op cycle.3] [--no-jobs]
+    python3 tools/eventlog_jobs.py <event log>... [--op cycle.3] [--no-jobs]
 
 Reads a Spark event log: a plain JSON-lines file, a `.zstd` one, which
 is decompressed through the `zstd` command when it is on the PATH, or a
@@ -17,7 +17,10 @@ rolling log's directory (`eventlog_v2_<app>`, Spark's default), whose
   call site's outermost `graft.` method, e.g. `Refresh$.refreshPages`),
   with the number of distinct SQL executions.
 
-`--op` keeps only the jobs of ops whose name contains the text. Only the
+Given more than one log (a first benchmark run in a checkout writes two:
+the base build's JVM and the workload's), it prints each log's tables
+under a `== <path>` header. `--op` keeps only the jobs of ops whose name
+contains the text. Only the
 Python standard library is used. A benchmark run writes an event log
 with no change to the benchmark, since SparkConf reads `spark.*` system
 properties:
@@ -119,21 +122,16 @@ def read_log(path):
     return jobs, sql_details
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("log")
-    ap.add_argument("--op", default="", help="keep ops whose name contains this text")
-    ap.add_argument("--no-jobs", action="store_true", help="print only the per-op totals")
-    args = ap.parse_args()
-
-    jobs, sql_details = read_log(args.log)
-    jobs = [j for j in jobs if args.op in j.op]
-    if not args.no_jobs:
+def report(path, op, no_jobs):
+    """Print the jobs and totals tables of one log."""
+    jobs, sql_details = read_log(path)
+    jobs = [j for j in jobs if op in j.op]
+    if not no_jobs:
         print(f"{'job':>5} {'sql':>5} {'tasks':>5} {'cpu_ms':>8} {'run_ms':>8}  {'op':<12} frame")
     totals = collections.OrderedDict()
     for j in jobs:
         frames = graft_frames(sql_details.get(j.sql) if j.sql is not None else j.stage_details)
-        if not args.no_jobs:
+        if not no_jobs:
             print(f"{j.id:>5} {j.sql or '-':>5} {j.tasks:>5} {j.cpu_ms:>8.1f} {j.run_ms:>8.0f}  "
                   f"{j.op:<12} {frame_of(frames)}")
         for key in (j.op, f"{j.op} {entry_of(frames)}"):
@@ -149,6 +147,19 @@ def main():
     for key, t in totals.items():
         print(f"{key:<56} {t['jobs']:>5} {len(t['sql']):>5} {t['tasks']:>6} "
               f"{t['cpu_ms']:>9.1f} {t['run_ms']:>9.0f}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("logs", nargs="+", metavar="log")
+    ap.add_argument("--op", default="", help="keep ops whose name contains this text")
+    ap.add_argument("--no-jobs", action="store_true", help="print only the per-op totals")
+    args = ap.parse_args()
+
+    for i, path in enumerate(args.logs):
+        if len(args.logs) > 1:
+            print(f"\n== {path}" if i else f"== {path}")
+        report(path, args.op, args.no_jobs)
 
 
 if __name__ == "__main__":
